@@ -42,11 +42,13 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .writer import SNAPSHOT_COL, SnapshotWriter
+from .writer import HIVE_NULL, SNAPSHOT_COL, SnapshotWriter, append_log
 
 
 def _snapshot_dir(w: SnapshotWriter, snapshot_id: str) -> str:
@@ -114,11 +116,9 @@ def sweep_trash(w: SnapshotWriter) -> list[str]:
     return restored
 
 
-def _log(w: SnapshotWriter, spark: SparkSession, name: str, rows: list[dict]) -> None:
-    path = os.path.join(w.root, name)
-    spark.createDataFrame(
-        [tuple(r.values()) for r in rows], schema=list(rows[0].keys())
-    ).coalesce(1).write.mode("append").parquet(path)
+def _log(w: SnapshotWriter, name: str, rows: list[dict]) -> None:
+    # one file per call: the same snapshot can be compacted more than once
+    append_log(os.path.join(w.root, name), uuid.uuid4().hex, pa.Table.from_pylist(rows))
 
 
 def _read_log(w: SnapshotWriter, spark: SparkSession, name: str) -> DataFrame | None:
@@ -209,9 +209,8 @@ def compact(
                     seg.split("=", 1)[1] for seg in rel.split(os.sep) if "=" in seg
                 )
                 part_bytes[vals] = part_bytes.get(vals, 0) + os.path.getsize(f)
-            hive_null = "__HIVE_DEFAULT_PARTITION__"
             bins_rows = [
-                (*[None if v == hive_null else v for v in vals],
+                (*[None if v == HIVE_NULL else v for v in vals],
                  max(1, round(b / target_bytes_per_file)))
                 for vals, b in sorted(part_bytes.items())
             ]
@@ -298,7 +297,7 @@ def compact(
         "bytes_after": int(sum(os.path.getsize(f) for f in after_files)),
         "at_unix": float(time.time()),
     }
-    _log(w, spark, "_maintenance", [stats])
+    _log(w, "_maintenance", [stats])
     return stats
 
 
@@ -329,7 +328,7 @@ def expire_snapshots(
     if not to_expire:
         return []
     _log(
-        w, spark, "_expired",
+        w, "_expired",
         [{SNAPSHOT_COL: s, "expired_at_unix": float(time.time())} for s in to_expire],
     )
     return to_expire
@@ -394,7 +393,7 @@ def remove_orphans(
             removed.append(sid)
     if removed:
         _log(
-            w, spark, "_maintenance",
+            w, "_maintenance",
             [{
                 "op": "remove_orphans",
                 SNAPSHOT_COL: s,

@@ -13,6 +13,25 @@ snapshot id:
   * the manifest (``root/_manifest``, itself parquet) records per-partition
     lineage: snapshot id, partition values, row count, write latency.
 
+A commit runs exactly one Spark action, the data write; everything else
+is driver-side file work, as Iceberg and Delta write commit metadata on
+the driver. A small micro-batch commit would otherwise pay more for its
+bookkeeping jobs than for its data:
+
+  * the committed check reads the ``snapshot_id`` column of
+    ``_manifest/`` with pyarrow;
+  * per-partition row counts are the ``num_rows`` sums of the parquet
+    footers under ``data/snapshot_id=<id>/`` — the files just written;
+  * each log row set (schema log, manifest) is one parquet file, written
+    to a dot-prefixed temp name (which Spark and pyarrow readers skip)
+    and renamed into place as ``part-<id>.parquet``, so a crash leaves
+    the whole file or none of it;
+  * the order is schema row, manifest row (the commit point), then the
+    ``_schema_latest.json`` pointer.
+
+The log files have the columns and types the Spark-appended logs had, so
+tables written either way read, replay and accept commits alike.
+
 This is the Iceberg-snapshot emulation per SURVEY.md §7.4 (no Iceberg jar
 offline); the API is format-agnostic so an Iceberg catalog can slot in.
 """
@@ -23,11 +42,81 @@ import os
 import time
 import uuid
 from collections.abc import Sequence
+from datetime import datetime, timezone, tzinfo
+from urllib.parse import unquote
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
+import pyarrow as pa
+import pyarrow.dataset as pds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 SNAPSHOT_COL = "snapshot_id"
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def append_log(directory: str, stem: str, table: pa.Table) -> None:
+    """Append ``table`` to the parquet log at ``directory`` as the single
+    file ``part-<stem>.parquet``. It is written under a dot-prefixed temp
+    name that every reader skips and then renamed into place, so a reader
+    sees all of its rows or none. Statistics and the Arrow schema blob are
+    left out: log files are read whole, and those bytes would make each
+    small file larger than the rows it holds."""
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{stem}.parquet.tmp")
+    pq.write_table(table, tmp, store_schema=False, write_statistics=False)
+    os.replace(tmp, os.path.join(directory, f"part-{stem}.parquet"))
+
+
+def _footer_counts(snap_dir: str) -> dict[tuple[str, ...], int]:
+    """Rows per partition-directory value tuple under one snapshot,
+    summed from parquet footers. Partitions holding no rows are absent,
+    as they would be from a ``groupBy().count()`` over the files."""
+    counts: dict[tuple[str, ...], int] = {}
+    for d, dirs, files in os.walk(snap_dir):
+        dirs[:] = [e for e in dirs if "=" in e]
+        # skip what Spark's reader skips: _SUCCESS and .crc sidecars
+        rows = sum(pq.read_metadata(os.path.join(d, f)).num_rows
+                   for f in files if not f.startswith(("_", ".")))
+        if rows:
+            rel = os.path.relpath(d, snap_dir)
+            vals = () if rel == "." else tuple(
+                seg.split("=", 1)[1] for seg in rel.split(os.sep))
+            counts[vals] = counts.get(vals, 0) + rows
+    return counts
+
+
+def _zone(name: str) -> tzinfo:
+    """``spark.sql.session.timeZone`` as a tzinfo: a region id, or a fixed
+    offset such as ``+08:00``."""
+    try:
+        return ZoneInfo(name)
+    except (ValueError, ZoneInfoNotFoundError):
+        return datetime.strptime(name, "%z").tzinfo
+
+
+def _partition_array(values: list[str | None], dtype: T.DataType,
+                     session_tz: str) -> pa.Array:
+    """Partition directory values typed as Spark's read-back types them:
+    ``%XX`` escapes decoded, the Hive default partition as NULL, then cast
+    to the column's type. Spark writes a TIMESTAMP value as session-zone
+    wall time with no offset; it is localized with fold=0, which maps a
+    wall time repeated by a DST change to its earlier instant, as Spark's
+    cast does."""
+    target = to_arrow_type(dtype)
+    raw = [None if v is None or v == HIVE_NULL else unquote(v) for v in values]
+    if not pa.types.is_timestamp(target):
+        return pa.array(raw, pa.string()).cast(target)
+    stamps = [None if v is None else datetime.fromisoformat(v) for v in raw]
+    if target.tz is not None:
+        zone = _zone(session_tz)
+        stamps = [None if t is None
+                  else t.replace(tzinfo=zone).astimezone(timezone.utc)
+                  for t in stamps]
+    return pa.array(stamps, target)
 
 
 class SnapshotWriter:
@@ -40,11 +129,16 @@ class SnapshotWriter:
     # -- manifest -----------------------------------------------------------
 
     def committed_snapshots(self, spark: SparkSession) -> set[str]:
-        try:
-            mdf = spark.read.parquet(self.manifest_path)
-        except Exception:
+        """Snapshot ids with a manifest row, read on the driver (no Spark
+        job). ``spark`` is unused; it keeps the signature every caller
+        uses."""
+        if not os.path.isdir(self.manifest_path):
             return set()
-        return {r[0] for r in mdf.select(SNAPSHOT_COL).distinct().collect()}
+        ids = pds.dataset(
+            self.manifest_path, format="parquet",
+            schema=pa.schema([(SNAPSHOT_COL, pa.string())]),
+        ).to_table()[SNAPSHOT_COL]
+        return set(ids.unique().to_pylist())
 
     def manifest(self, spark: SparkSession) -> DataFrame | None:
         try:
@@ -107,6 +201,7 @@ class SnapshotWriter:
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
 
+        # The data write: the commit's only Spark job.
         t0 = time.monotonic()
         (
             out.write.mode("overwrite")
@@ -115,64 +210,50 @@ class SnapshotWriter:
             .parquet(self.data_path)
         )
         latency = time.monotonic() - t0
-
-        # per-partition lineage from the files just written (pruned scan).
-        # Explicit schema, never inference: a ZERO-ROW snapshot on a fresh
-        # table writes no data files, and schema inference over the empty
-        # root would throw UNABLE_TO_INFER_SCHEMA (streaming sinks commit
-        # empty micro-batch slices routinely — e.g. a dedup batch with no
-        # candidates).
+        # A zero-row snapshot on a fresh table writes no files; readers
+        # still expect the data root.
         os.makedirs(self.data_path, exist_ok=True)
-        # Read back ONLY this snapshot's subtree (basePath keeps the
-        # partition columns): listing-level pruning, and whole-root
-        # discovery would break once partition specs have evolved.
-        snap_dir = os.path.join(self.data_path, f"{SNAPSHOT_COL}={snapshot_id}")
-        if os.path.isdir(snap_dir):
-            written = (
-                spark.read.schema(out.schema)
-                .option("basePath", self.data_path)
-                .parquet(snap_dir)
-            )
-        else:  # zero-row snapshot: no files, no directory
-            written = spark.createDataFrame([], out.schema)
-        group = [SNAPSHOT_COL, *partition_cols] if partition_cols else [SNAPSHOT_COL]
-        stats = written.groupBy(*group).agg(F.count(F.lit(1)).alias("row_count"))
-        stats = stats.withColumn("write_latency_sec", F.lit(float(latency)))
         committed_at = float(time.time())
-        stats = stats.withColumn("committed_at_unix", F.lit(committed_at))
-        # Materialize the (tiny: one row per partition of one snapshot)
-        # lineage ONCE — the manifest append below would otherwise
-        # re-execute the read-back scan + aggregation as a second job on
-        # every commit. A zero-row snapshot still needs its manifest row
-        # — the manifest IS the commit record; without it the snapshot
-        # never becomes a replay no-op and committed_snapshots/read()
-        # never see it.
-        rows = stats.collect()
-        if not rows:
-            rows = [(snapshot_id, *([None] * len(partition_cols)), 0,
-                     float(latency), committed_at)]
-        stats = spark.createDataFrame(rows, schema=stats.schema)
+
+        # Per-partition lineage from the footers of the files just written
+        # (this snapshot's subtree only). A zero-row snapshot has no files
+        # and no directory, yet still needs its manifest row — the manifest
+        # IS the commit record; without it the snapshot never becomes a
+        # replay no-op and committed_snapshots/read() never see it.
+        snap_dir = os.path.join(self.data_path, f"{SNAPSHOT_COL}={snapshot_id}")
+        counts = _footer_counts(snap_dir) or {(None,) * len(partition_cols): 0}
+        keys = sorted(counts)
+        # partitionBy resolved the names case-insensitively; the manifest
+        # columns take the frame's spelling, as the read-back's did
+        by_name = {f.name.lower(): f for f in out.schema}
+        session_tz = spark.conf.get("spark.sql.session.timeZone")
+        columns = {SNAPSHOT_COL: pa.array([snapshot_id] * len(keys), pa.string())}
+        for i, c in enumerate(partition_cols):
+            field = by_name[c.lower()]
+            columns[field.name] = _partition_array(
+                [k[i] for k in keys], field.dataType, session_tz)
+        columns["row_count"] = pa.array([counts[k] for k in keys], pa.int64())
+        columns["write_latency_sec"] = pa.array([latency] * len(keys), pa.float64())
+        columns["committed_at_unix"] = pa.array([committed_at] * len(keys), pa.float64())
+
         # schema-as-of-snapshot (Iceberg keeps schema in table metadata,
         # never by merging data-file footers): one row per commit with the
         # dataframe's schema JSON. read()/read_at() resolve the schema
         # from here in O(1) instead of option("mergeSchema") footer sweeps
         # — and time travel reads the OLD schema, matching VERSION AS OF.
-        # Written BEFORE the manifest row: the manifest append is the
-        # commit point (Iceberg commits schema atomically with the
+        # Written BEFORE the manifest row: the manifest file's rename is
+        # the commit point (Iceberg commits schema atomically with the
         # snapshot), so ordering schema-first guarantees every committed
         # snapshot has a schema entry. A crash after the schema row but
         # before the manifest row leaves only an orphan schema row for an
-        # uncommitted (invisible) snapshot; the retry re-appends an
-        # identical-schema row, so readers are unaffected either way.
-        spark.createDataFrame(
-            [(snapshot_id, committed_at, out.schema.json())],
-            schema=f"{SNAPSHOT_COL} string, committed_at_unix double, schema_json string",
-        ).coalesce(1).write.mode("append").parquet(self.schema_path)
-        (
-            stats.coalesce(1)
-            .write.mode("append")
-            .parquet(self.manifest_path)
-        )
+        # uncommitted (invisible) snapshot; the retry replaces that file
+        # with an identical-schema row, so readers are unaffected.
+        append_log(self.schema_path, snapshot_id, pa.table({
+            SNAPSHOT_COL: pa.array([snapshot_id], pa.string()),
+            "committed_at_unix": pa.array([committed_at], pa.float64()),
+            "schema_json": pa.array([out.schema.json()], pa.string()),
+        }))
+        append_log(self.manifest_path, snapshot_id, pa.table(columns))
         # O(1) current-schema pointer: the streaming sink commits once per
         # micro-batch, so the append log grows unboundedly; read() must
         # not scan it all per call. Written last, so it always describes a
@@ -212,8 +293,6 @@ class SnapshotWriter:
         inference). The no-cutoff path reads the O(1) latest-pointer file;
         only time travel scans the append log."""
         import json as _json
-
-        from pyspark.sql import types as T
 
         if cutoff is None:
             latest = os.path.join(self.root, "_schema_latest.json")

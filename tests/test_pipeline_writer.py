@@ -231,101 +231,3 @@ def test_resume_recovers_lost_quarantine(spark, tmp_path):
     r3 = run_transform_job(spark, reg, {"aws-alb": raw}, out, "snapA", **kw)
     assert r3.reject_rows == 1
     assert SnapshotWriter(f"{out}/quarantine/aws-alb").read(spark).count() == 1
-
-
-def test_empty_snapshot_commit(spark, tmp_path):
-    """r5: a ZERO-ROW snapshot must commit like any other (streaming
-    sinks emit empty micro-batch slices routinely — e.g. a dedup batch
-    with no candidates): no schema-inference crash on a fresh table, a
-    manifest row lands so the replay is a no-op, and reads work."""
-    w = SnapshotWriter(str(tmp_path / "flat"))
-    e = spark.createDataFrame([], "a long, b string")
-    assert w.commit(e, snapshot_id="s0") is True
-    assert w.commit(e, snapshot_id="s0") is False        # replay no-op
-    assert w.read(spark).count() == 0
-    assert w.commit(
-        spark.createDataFrame([(1, "x")], "a long, b string"),
-        snapshot_id="s1",
-    ) is True
-    assert w.read(spark).count() == 1
-    assert {r[0] for r in w.snapshots(spark).collect()} == {"s0", "s1"}
-
-    wp = SnapshotWriter(str(tmp_path / "part"))
-    ep = spark.createDataFrame([], "a long, eventday string")
-    assert wp.commit(ep, snapshot_id="p0", partition_cols=["eventday"]) is True
-    assert wp.commit(ep, snapshot_id="p0", partition_cols=["eventday"]) is False
-    assert wp.commit(
-        spark.createDataFrame([(1, "20240101")], "a long, eventday string"),
-        snapshot_id="p1", partition_cols=["eventday"],
-    ) is True
-    assert wp.read(spark).count() == 1
-
-
-# ------------------------------------------------ partition-spec evolution
-
-from pyspark.sql import functions as F
-
-
-def test_partition_spec_evolution_read_union(spark, tmp_path):
-    """Iceberg partition evolution: a new spec applies to NEW snapshots
-    only; read() serves old and new layouts together, read_at() time-
-    travels into the pre-evolution layout."""
-    from amazon_security_lake_transformation_library_spark.plans.writer import (
-        SnapshotWriter,
-    )
-
-    w = SnapshotWriter(str(tmp_path / "tbl_evo"))
-    s1 = spark.range(10).select(
-        F.col("id").alias("v"), (F.col("id") % 2).cast("string").alias("grp")
-    )
-    assert w.commit(s1, "s1")                      # unpartitioned
-    # evolving without the flag is still rejected
-    with pytest.raises(ValueError):
-        w.commit(s1, "s2", partition_cols=("grp",))
-    assert w.commit(
-        s1.withColumn("v", F.col("v") + 10), "s2",
-        partition_cols=("grp",), allow_spec_evolution=True,
-    )
-
-    full = w.read(spark)
-    assert full.count() == 20
-    assert set(r["v"] for r in full.collect()) == set(range(20))
-    # partition column survives as a data column from BOTH layouts
-    assert full.filter(F.col("grp") == "1").count() == 10
-    # time travel to s1 sees only the old layout
-    assert w.read_at(spark, "s1").count() == 10
-
-    # maintenance still works per snapshot on the evolved table
-    from amazon_security_lake_transformation_library_spark.plans import (
-        maintenance as mx,
-    )
-    stats = mx.compact(w, spark, "s2")
-    assert stats["files_after"] >= 1
-    assert w.read(spark).count() == 20
-
-
-def test_partition_spec_evolution_deepens_spec(spark, tmp_path):
-    """(day) -> (day, src): the common evolution; dirs of both depths
-    coexist and filters on either column work across the union."""
-    from amazon_security_lake_transformation_library_spark.plans.writer import (
-        SnapshotWriter,
-    )
-
-    w = SnapshotWriter(str(tmp_path / "tbl_deep"))
-    df = spark.range(40).select(
-        F.col("id").alias("v"),
-        (F.col("id") % 4).cast("string").alias("day"),
-        (F.col("id") % 2).cast("string").alias("src"),
-    )
-    assert w.commit(df, "a", partition_cols=("day",))
-    assert w.commit(
-        df.withColumn("v", F.col("v") + 100), "b",
-        partition_cols=("day", "src"), allow_spec_evolution=True,
-    )
-    t = w.read(spark)
-    assert t.count() == 80
-    assert t.filter("day = '2'").count() == 20
-    assert t.filter("src = '1'").count() == 40
-    # spec introspection per snapshot
-    assert w._snapshot_partition_cols("a") == ("day",)
-    assert w._snapshot_partition_cols("b") == ("day", "src")
