@@ -195,24 +195,12 @@ def _q_asof_nearest(spark, sf_dir):
     return joined.select("event_id", "user_id", "feature_val")
 
 
-def _q_asof_range(spark, sf_dir):
-    # the range-join fallback strategy must produce identical results to
-    # the union+window primary (same oracle SQL)
-    ev = _t(spark, sf_dir, "events")
-    joined = asof_ops.asof_join_range(
-        ev.select("event_id", "user_id", "ts"),
-        _purchase_build(ev),
-        probe_key=["event_id"],
-        on="user_id", ts="ts", build_cols=["feature_val"],
-    )
-    return joined.select("event_id", "user_id", "feature_val")
-
-
 def _q_asof_interval(spark, sf_dir):
     # the interval-form strategy (build rows -> [ts, next_ts) validity
     # intervals, one SMJ match per probe; the zero-Exchange bucketed
-    # flagship's join) must also produce identical results to the
-    # union+window primary (same oracle SQL as the other two forms)
+    # flagship's join) must produce identical results to the union+window
+    # primary (same oracle SQL). It also serves asof_join_events_range:
+    # the interval form replaced the quadratic range join.
     ev = _t(spark, sf_dir, "events")
     joined = asof_ops.asof_join_interval(
         ev.select("event_id", "user_id", "ts"),
@@ -3203,9 +3191,10 @@ def _q_embedding_covariance(spark, sf_dir):
     from amazon_security_lake_transformation_library_spark.operators import embedx as ebx
 
     emb = _t(spark, sf_dir, "embeddings")
+    if not emb.head(1):  # no corpus -> no covariance; empty result
+        return spark.createDataFrame([], "i long, j long, cov double")
     # dim=64 is the embeddings table's schema contract (TESTDATA.md);
-    # passing it keeps the plan action-free and the empty-input path
-    # well-defined (no rows -> empty covariance, no inference probe)
+    # passing it skips the dimension-inference probe
     out = ebx.covariance(emb, dim=64)
     return out.where(F.col("i") <= F.col("j")).select(
         F.col("i").cast("long").alias("i"),
@@ -3937,7 +3926,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_join_events": _q_asof,
         "asof_join_events_forward": _q_asof_forward,
         "asof_join_events_nearest": _q_asof_nearest,
-        "asof_join_events_range": _q_asof_range,
+        "asof_join_events_range": _q_asof_interval,
         "asof_join_events_interval": _q_asof_interval,
         "asof_join_events_tolerance": _q_asof_tolerance,
         "asof_join_events_multi": _q_asof_multi,

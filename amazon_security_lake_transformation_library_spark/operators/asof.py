@@ -9,8 +9,8 @@ largest ``build.ts`` such that ``build.ts <= probe.ts`` (``strict=True``
 uses ``<``). Leakage-free by construction: no probe row can observe a build
 row with a strictly greater timestamp; ties resolve per the strict flag.
 
-Two physical strategies
------------------------
+Physical strategies
+-------------------
 1. :func:`asof_join` (primary) — **union + last-non-null window**.
    Tag both sides, union by aligned schema, forward-fill the build payload
    struct over ``(entity) ORDER BY (ts, side, tiebreak)``, keep probe rows.
@@ -22,17 +22,18 @@ Two physical strategies
    bucketed pair — what plans/bucketed.flagship_bucketed pins) and
    :func:`asof_join_skinny_intervals` (probe-side zero Exchange/Sort,
    shuffle proportional to the feature log).
-2. :func:`asof_join_range` (fallback) — bounded **range join** + pick
-   latest per probe key. Needs a match horizon; useful when the build side
-   is tiny or when a range-join-optimized engine executes it.
+2. :func:`asof_join_interval` — build rows become ``[ts, next_ts)``
+   validity intervals and a sort-merge join matches each probe row to
+   exactly one of them. Linear in the input (a range join that keeps the
+   latest of every earlier build row is per-entity quadratic), and the
+   only form whose join consumes a bucketed layout directly.
 
-Spark has no native ASOF JOIN (as of 4.1); both strategies are plain
-DataFrame rewrites — Catalyst still gets full pushdown/pruning on inputs.
+Spark has no native ASOF JOIN (as of 4.1); every strategy is a plain
+DataFrame rewrite — Catalyst still gets full pushdown/pruning on inputs.
 
 Scale notes: the window partitions by entity only, so a pathologically hot
-entity serializes in one task — pair with
-:mod:`amazon_security_lake_transformation_library_spark.operators.salted`
-(chunked forward-fill) when single entities exceed task-sized row counts.
+entity serializes in one task — the flagship block routes such entities
+through chunk-and-carry (``fused.asof_turn_features_hybrid``).
 """
 
 from __future__ import annotations
@@ -288,13 +289,14 @@ def asof_join_interval(
     Exchange and NO Sort — and the sort-merge join then matches each probe
     row to EXACTLY ONE interval.
 
-    Why this exists: :func:`asof_join_range` enumerates every
-    (probe row x earlier build row) pair per entity and dedups with a
-    ``row_number`` window afterwards — per-entity QUADRATIC. Measured on a
-    10.15M-turn input with a 3.54M-row build side, the range form pushed
-    226.9M intermediate rows (22x the probe count) through its dedup
-    window; the interval form emits 10.15M, one per probe, and needs no
-    dedup pass at all. Same answer, linear not quadratic.
+    Why this exists: a range join (``build.ts <= probe.ts``, then keep the
+    latest per probe row) enumerates every (probe row x earlier build row)
+    pair per entity and dedups with a ``row_number`` window afterwards —
+    per-entity QUADRATIC. Measured on a 10.15M-turn input with a 3.54M-row
+    build side, the range form pushed 226.9M intermediate rows (22x the
+    probe count) through its dedup window; the interval form emits 10.15M,
+    one per probe, and needs no dedup pass at all. Same answer, linear not
+    quadratic.
 
     Precondition: ``build`` must be unique per ``(on, ts)`` (apply
     :func:`latest_per_key` upstream otherwise); with duplicates, ``lead``
@@ -322,62 +324,6 @@ def asof_join_interval(
             F.col("__next_ts").isNull() | (F.col(ts) < F.col("__next_ts"))
         )
     return probe.join(b, cond, "left").drop(f"__b_{on}", "__next_ts")
-
-
-def asof_join_range(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_key: Sequence[str],
-    on: str | Sequence[str] = "conv_id",
-    ts: str = "ts",
-    build_cols: Sequence[str] | None = None,
-    strict: bool = False,
-    horizon_seconds: float | None = None,
-    asof_ts_col: str = "asof_ts",
-    broadcast_build: bool = False,
-) -> DataFrame:
-    """Range-join fallback: left join on entity + ``build.ts (<|<=) probe.ts``
-    (optionally bounded below by ``horizon_seconds``), then keep the latest
-    build row per probe row (``row_number() == 1``).
-
-    ``probe_key`` must uniquely identify probe rows (e.g. ``["conv_id",
-    "turn_idx"]``). With ``broadcast_build=True`` the build side is
-    broadcast — zero shuffle on the probe side (use for small dims).
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    if build_cols is None:
-        build_cols = [c for c in build.columns if c not in {*keys, ts}]
-
-    b = build.select(
-        *[F.col(k).alias(f"__b_{k}") for k in keys],
-        F.col(ts).alias(asof_ts_col),
-        *build_cols,
-    )
-    if broadcast_build:
-        b = F.broadcast(b)
-
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"__b_{k}"))
-    cond = cond & (
-        (F.col(asof_ts_col) < F.col(ts)) if strict
-        else (F.col(asof_ts_col) <= F.col(ts))
-    )
-    if horizon_seconds is not None:
-        cond = cond & (
-            epoch_seconds(F.col(asof_ts_col))
-            >= epoch_seconds(F.col(ts)) - float(horizon_seconds)
-        )
-
-    joined = probe.join(b, cond, "left")
-    w = Window.partitionBy(*[F.col(c) for c in probe_key]).orderBy(
-        F.col(asof_ts_col).desc_nulls_last()
-    )
-    return (
-        joined.select("*", F.row_number().over(w).alias("__rn"))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", *[f"__b_{k}" for k in keys])
-    )
 
 
 def asof_join_stacked(

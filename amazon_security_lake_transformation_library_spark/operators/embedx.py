@@ -57,6 +57,12 @@ def _dim_of(df: DataFrame, vec_col: str) -> int:
     return int(row[0]["d"])
 
 
+def _valid(df: DataFrame, vec_col: str, d: int) -> DataFrame:
+    return df.where(
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(d))
+    ).select(vec_col)
+
+
 def gram_partials(
     df: DataFrame, vec_col: str = "embedding", dim: int | None = None
 ) -> DataFrame:
@@ -79,18 +85,24 @@ def gram_partials(
                 "v": np.concatenate([G.ravel(), s, [float(len(pdf))]]),
             })
 
-    src = df.where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(d))
-    ).select(vec_col)
-    parts = src.mapInPandas(gen, schema="i int, j int, v double")
+    parts = _valid(df, vec_col, d).mapInPandas(gen, schema="i int, j int, v double")
     return parts.groupBy("i", "j").agg(F.sum("v").alias("v"))
 
 
 def covariance(
     df: DataFrame, vec_col: str = "embedding", dim: int | None = None
 ) -> DataFrame:
-    """Sample covariance matrix as a ``(i, j, cov)`` DataFrame (d² rows)."""
-    g = gram_partials(df, vec_col, dim)
+    """Sample covariance matrix as a ``(i, j, cov)`` DataFrame (d² rows).
+    Raises ValueError when ``df`` holds fewer than 2 valid vectors (one
+    bounded ``limit(2)`` probe; the matrix itself stays lazy)."""
+    d = dim if dim is not None else _dim_of(df, vec_col)
+    n_probe = _valid(df, vec_col, d).limit(2).count()
+    if n_probe < 2:
+        raise ValueError(
+            f"covariance: {n_probe} valid vector(s); the sample covariance "
+            f"needs at least 2"
+        )
+    g = gram_partials(df, vec_col, d)
     n = g.where((F.col("i") == -1) & (F.col("j") == -1)).select(
         F.col("v").alias("n"))
     means = (
@@ -122,10 +134,6 @@ def pca_components(
     embedding dimension, not the corpus — the justified-collect class)."""
     d = dim if dim is not None else _dim_of(df, vec_col)
     rows = gram_partials(df, vec_col, d).collect()
-    if not rows:
-        raise ValueError("pca_components: no rows to fit (callers should "
-                         "guard empty corpora — there is no covariance to "
-                         "decompose)")
     n = 0.0
     s = np.zeros(d)
     G = np.zeros((d, d))
@@ -136,6 +144,12 @@ def pca_components(
             s[r["i"]] = r["v"]
         else:
             G[r["i"], r["j"]] = r["v"]
+    if n < 2:
+        raise ValueError(
+            f"pca_components: {int(n)} valid vector(s); the sample "
+            f"covariance needs at least 2 (callers should guard empty and "
+            f"single-row corpora)"
+        )
     mu = s / n
     C = (G - n * np.outer(mu, mu)) / (n - 1.0)
     C = 0.5 * (C + C.T)  # exact symmetry for eigh

@@ -29,12 +29,14 @@ Equality with the modular composition is property-tested
 sort work, which is exactly the term that dominated the N->4N scaling gap
 (BASELINE.md §4.2 finding 2: sort-bound WindowExec).
 
-The salted variant extends the chunk-and-carry decomposition of
-``salted_features`` to the union frame, so even the as-of fill of a hot
-conversation (10% of all rows) spreads across tasks; the hybrid router
-sends hot entities (pre-pass hash count) down the salted path and the long
-tail down the plain path — skew-proof without paying the salted constant
-factor on unskewed data.
+The salted variant applies the chunk-and-carry decomposition
+(``salted`` module docstring) to the union frame, so even the as-of fill
+of a hot conversation (10% of all rows) spreads across tasks.
+:func:`asof_turn_features_hybrid` is the block's one front door: a
+pre-pass hash count finds the hot entities; with none it returns the
+plain plan, otherwise it routes hot entities down the salted chunks and
+the long tail down one constant chunk — skew-proof without paying the
+salted constant factor on unskewed data.
 
 Reference analog: none — the reference has no joins or windows at all
 (SURVEY.md §2.B); this is the north-rule engine core.
@@ -434,12 +436,15 @@ def asof_turn_features_hybrid(
     build_cols: Sequence[str] = ("feature_val",),
     **kw,
 ) -> DataFrame:
-    """Skew router: entities above ``hot_threshold_rows`` get time-chunked
-    (chunk-and-carry spreads them across tasks), the long tail gets a
-    single constant chunk — for which the chunk machinery degenerates to
-    the plain fused semantics (one chunk == one window partition, empty
-    carries). One extra hash-agg pre-pass over the probe side (map-side
-    partials, tiny result, broadcast).
+    """The flagship block's front door. Entities above
+    ``hot_threshold_rows`` get time-chunked (chunk-and-carry spreads them
+    across tasks), the long tail gets a single constant chunk — for which
+    the chunk machinery degenerates to the plain fused semantics (one
+    chunk == one window partition, empty carries). One extra hash-agg
+    pre-pass over the probe side (map-side partials, tiny result,
+    broadcast) picks the plan: when it finds no hot entity the block is
+    :func:`asof_turn_features` itself (1 Exchange + 1 Sort instead of the
+    routed plan's chunk-and-carry machinery).
 
     r3 one-pipeline form: the r2 router split rows into TWO full pipelines
     (plain on the tail + salted on the hot slice + union), which scanned
@@ -455,6 +460,10 @@ def asof_turn_features_hybrid(
     hot = hot_entities(transcripts, entity, hot_threshold_rows).select(
         entity, F.lit(True).alias("__hot")
     )
+    if not hot.take(1):
+        return asof_turn_features(
+            transcripts, conv_features, gap_seconds, entity, ts, build_cols, **kw
+        )
     t = transcripts.join(F.broadcast(hot), entity, "left")
     cf = conv_features.join(F.broadcast(hot), entity, "left")
     cond_chunk = (

@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["overlap_join", "sessions_to_intervals"]
@@ -63,7 +63,7 @@ def sessions_to_intervals(
     )
 
 
-def _epoch(col):
+def _epoch(c: Column) -> Column:
     # microsecond-exact epoch seconds as double: unix_timestamp truncates
     # sub-second parts, which would make two intervals that only touch in
     # the fractional part disagree with the SQL oracle's epoch comparison.
@@ -71,7 +71,7 @@ def _epoch(col):
     # (ulp of an epoch-seconds double ≈ 0.5 µs), so comparisons are exact.
     # NTZ columns need the intermediate timestamp cast (NTZ → DOUBLE is
     # not a legal direct cast).
-    return F.col(col).cast("timestamp").cast("double")
+    return c.cast("timestamp").cast("double")
 
 
 def overlap_join(
@@ -89,8 +89,9 @@ def overlap_join(
     (``l_start <= r_end AND r_start <= l_end``), optionally restricted to
     equal ``keys``. Exact for any ``bin_seconds`` (see module docstring);
     each overlapping pair is emitted exactly once (first-common-bin rule,
-    no post-join distinct). Left/right column names must be disjoint
-    apart from ``keys`` — rename before calling.
+    no post-join distinct). Left and right may share column names (the
+    defaults do); the output then holds both sides' copies, so rename
+    before calling if later code selects them by name.
 
     ``anti=True`` returns the LEFT rows with no overlapping right
     interval (temporal decontamination form): the matched left keys are
@@ -101,7 +102,7 @@ def overlap_join(
     w = float(bin_seconds)
 
     def binned(df: DataFrame, start: str, end: str) -> DataFrame:
-        s, e = _epoch(start), _epoch(end)
+        s, e = _epoch(df[start]), _epoch(df[end])
         return df.withColumn(
             "__bin",
             F.explode(
@@ -119,15 +120,12 @@ def overlap_join(
         cond = cond & (lb[k] == rb[k])
 
     joined = lb.join(rb, cond)
-    # residual exact-overlap predicate + first-common-bin dedup
-    first_bin = F.floor(
-        F.greatest(_epoch(l_start), _epoch(r_start)) / F.lit(w)
-    ).cast("long")
-    pairs = joined.where(
-        (_epoch(l_start) <= _epoch(r_end))
-        & (_epoch(r_start) <= _epoch(l_end))
-        & (lb["__bin"] == first_bin)
-    )
+    # residual exact-overlap predicate + first-common-bin dedup; every ref
+    # is side-qualified, since the default names are equal on both sides
+    ls, le = _epoch(lb[l_start]), _epoch(lb[l_end])
+    rs, re_ = _epoch(rb[r_start]), _epoch(rb[r_end])
+    first_bin = F.floor(F.greatest(ls, rs) / F.lit(w)).cast("long")
+    pairs = joined.where((ls <= re_) & (rs <= le) & (lb["__bin"] == first_bin))
     if anti:
         # left rows whose (keys + interval) matched nothing; the hit set
         # is one row per matched left interval (semi-style), tiny vs pairs

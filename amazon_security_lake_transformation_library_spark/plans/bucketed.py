@@ -164,7 +164,7 @@ def flagship_bucketed(
     same rows (column-for-column; pinned by tests/test_fused.py and
     test_plans_quality.py).
 
-    History: this path originally used asof_join_range, whose per-entity
+    History: this path originally used a range join, whose per-entity
     (probe x earlier-builds) enumeration materialized 22x the probe rows
     on a 10M-turn input (226.9M intermediate rows) and went per-entity
     QUADRATIC on hot conversations (a 10%-hot 9k-turn conversation turned

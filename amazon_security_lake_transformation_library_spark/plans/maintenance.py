@@ -48,7 +48,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .writer import HIVE_NULL, SNAPSHOT_COL, SnapshotWriter, append_log
+from .writer import (
+    HIVE_NULL,
+    SNAPSHOT_COL,
+    SnapshotWriter,
+    append_log,
+    snapshot_partition_cols,
+)
 
 
 def _snapshot_dir(w: SnapshotWriter, snapshot_id: str) -> str:
@@ -60,23 +66,6 @@ def _parquet_files(path: str) -> list[str]:
     for root, _dirs, files in os.walk(path):
         out.extend(os.path.join(root, f) for f in files if f.endswith(".parquet"))
     return out
-
-
-def _partition_cols(snap_dir: str) -> list[str]:
-    """Inner (non-snapshot) partition columns of ONE snapshot, read from
-    its directory structure (`col=value` path segments) — ground truth
-    per snapshot, unlike the manifest schema, which is the UNION of every
-    snapshot's partition columns and misleads on tables whose snapshots
-    were committed with different partition_cols."""
-    cols: list[str] = []
-    d = snap_dir
-    while True:
-        subdirs = [e for e in os.listdir(d)
-                   if "=" in e and os.path.isdir(os.path.join(d, e))]
-        if not subdirs:
-            return cols
-        cols.append(subdirs[0].split("=", 1)[0])
-        d = os.path.join(d, subdirs[0])
 
 
 def _recover_trash(w: SnapshotWriter, snapshot_id: str) -> bool:
@@ -170,7 +159,7 @@ def compact(
             "bytes_before": 0, "bytes_after": 0, "at_unix": float(time.time()),
         }
 
-    parts = _partition_cols(snap_dir)
+    parts = snapshot_partition_cols(snap_dir)
     stage = os.path.join(w.root, "_compact_stage", snapshot_id)
     shutil.rmtree(stage, ignore_errors=True)
 

@@ -71,6 +71,23 @@ def append_log(directory: str, stem: str, table: pa.Table) -> None:
     os.replace(tmp, os.path.join(directory, f"part-{stem}.parquet"))
 
 
+def snapshot_partition_cols(snap_dir: str) -> tuple[str, ...]:
+    """Inner (non-snapshot) partition columns of ONE snapshot, read from
+    its ``col=value`` directory path — the per-snapshot ground truth
+    partition evolution needs (the manifest schema is the UNION of every
+    snapshot's columns). ``()`` for an unpartitioned or absent snapshot."""
+    cols: list[str] = []
+    d = snap_dir
+    while os.path.isdir(d):
+        subdirs = [e for e in os.listdir(d)
+                   if "=" in e and os.path.isdir(os.path.join(d, e))]
+        if not subdirs:
+            break
+        cols.append(subdirs[0].split("=", 1)[0])
+        d = os.path.join(d, subdirs[0])
+    return tuple(cols)
+
+
 def _footer_counts(snap_dir: str) -> dict[tuple[str, ...], int]:
     """Rows per partition-directory value tuple under one snapshot,
     summed from parquet footers. Partitions holding no rows are absent,
@@ -273,17 +290,8 @@ class SnapshotWriter:
         if not os.path.isdir(self.data_path):
             return None
         for entry in sorted(os.listdir(self.data_path)):
-            if not entry.startswith(f"{SNAPSHOT_COL}="):
-                continue
-            cols: list[str] = []
-            d = os.path.join(self.data_path, entry)
-            while True:
-                subdirs = [e for e in os.listdir(d)
-                           if "=" in e and os.path.isdir(os.path.join(d, e))]
-                if not subdirs:
-                    return cols
-                cols.append(subdirs[0].split("=", 1)[0])
-                d = os.path.join(d, subdirs[0])
+            if entry.startswith(f"{SNAPSHOT_COL}="):
+                return list(snapshot_partition_cols(os.path.join(self.data_path, entry)))
         return None
 
     def _schema_asof(self, spark: SparkSession, cutoff: tuple | None = None):
@@ -309,7 +317,7 @@ class SnapshotWriter:
             rows = [r for r in rows if (r[0], r[1]) <= cutoff]
         if not rows:
             return None
-        return T.StructType.fromJson(__import__("json").loads(rows[-1][2]))
+        return T.StructType.fromJson(_json.loads(rows[-1][2]))
 
     def _restore_trashed_snapshots(self) -> None:
         """Crash healing on the read path: a compact() that died between
@@ -325,22 +333,6 @@ class SnapshotWriter:
             snap_dir = os.path.join(self.data_path, f"{SNAPSHOT_COL}={sid}")
             if not os.path.exists(snap_dir):
                 os.rename(os.path.join(trash_root, sid), snap_dir)
-
-    def _snapshot_partition_cols(self, snapshot_id: str) -> tuple[str, ...]:
-        """One snapshot's partition spec, from its directory subtree —
-        the per-snapshot source of truth partition evolution needs (and
-        backward-compatible: tables written before evolution existed
-        derive the same answer from their layout)."""
-        d = os.path.join(self.data_path, f"{SNAPSHOT_COL}={snapshot_id}")
-        cols: list[str] = []
-        while os.path.isdir(d):
-            subdirs = [e for e in os.listdir(d)
-                       if "=" in e and os.path.isdir(os.path.join(d, e))]
-            if not subdirs:
-                break
-            cols.append(subdirs[0].split("=", 1)[0])
-            d = os.path.join(d, subdirs[0])
-        return tuple(cols)
 
     def _read_snapshots(self, spark: SparkSession, ids, schema) -> DataFrame:
         """Scan exactly the given committed snapshots, grouping them by
@@ -360,7 +352,8 @@ class SnapshotWriter:
             return spark.read.parquet(self.data_path).filter(F.lit(False))
         groups: dict[tuple[str, ...], list[str]] = {}
         for sid in ids:
-            groups.setdefault(self._snapshot_partition_cols(sid), []).append(sid)
+            snap_dir = os.path.join(self.data_path, f"{SNAPSHOT_COL}={sid}")
+            groups.setdefault(snapshot_partition_cols(snap_dir), []).append(sid)
         frames = []
         for _spec, sids in sorted(groups.items()):
             reader = (

@@ -9,6 +9,11 @@ Usage (cluster):
 Sandbox stand-in for N vs 4N executors: run identical input with
 --master local[8] vs local[32] (see tools/bench_scaling.py).
 
+With --features the feature+as-of block runs through
+``fused.asof_turn_features_hybrid``, which plans the plain single-Exchange
+block unless some conversation holds more than 1M turns, and routes those
+through chunk-and-carry.
+
 With --synth N_CONVS the job generates the deterministic synthetic
 transcripts table instead of reading --input (bench/demo path, no
 external data).
@@ -41,29 +46,15 @@ def parse_args(argv=None):
                    help="explicit snapshot id (idempotent re-runs reuse it)")
     p.add_argument("--buckets", type=int, default=0,
                    help="repartition output into N conv_id buckets before write")
-    p.add_argument("--strategy", default="hybrid",
-                   choices=["hybrid", "fused", "fused_salted", "modular",
-                            "bucketed"],
-                   help="physical strategy for the feature+as-of block "
-                        "(hybrid = hot entities salted, tail plain — the "
-                        "skew-safe default; bucketed = rewrite inputs as "
-                        "conv_id-bucketed sorted tables once, then run the "
-                        "whole block with zero Exchange)")
-    p.add_argument("--hot-threshold", type=int, default=1_000_000,
-                   help="rows per entity above which the hybrid router "
-                        "takes the salted path")
     return p.parse_args(argv)
 
 
 def main(argv=None) -> int:
     args = parse_args(argv)
 
-    from amazon_security_lake_transformation_library_spark.operators.asof import asof_join
     from amazon_security_lake_transformation_library_spark.operators.features import build_turn_features
     from amazon_security_lake_transformation_library_spark.operators.fused import (
-        asof_turn_features,
         asof_turn_features_hybrid,
-        asof_turn_features_salted,
     )
     from amazon_security_lake_transformation_library_spark.operators.salted import time_chunk
     from amazon_security_lake_transformation_library_spark.plans.writer import SnapshotWriter
@@ -90,44 +81,10 @@ def main(argv=None) -> int:
     transcripts = spark.read.parquet(args.input)
     if args.features:
         build = spark.read.parquet(args.features)
-        chunk = time_chunk(chunk_seconds=6 * 3600)
-        if args.strategy == "hybrid":
-            featd = asof_turn_features_hybrid(
-                transcripts, build, chunk,
-                hot_threshold_rows=args.hot_threshold,
-                gap_seconds=args.gap_seconds,
-            )
-        elif args.strategy == "fused":
-            featd = asof_turn_features(
-                transcripts, build, gap_seconds=args.gap_seconds
-            )
-        elif args.strategy == "fused_salted":
-            featd = asof_turn_features_salted(
-                transcripts, build, chunk, gap_seconds=args.gap_seconds
-            )
-        elif args.strategy == "bucketed":
-            # storage-partitioned: pay one bucketed-sorted rewrite of the
-            # inputs, then the window block + as-of SMJ plan with ZERO
-            # Exchange (plans/bucketed.py; wall below includes the rewrite
-            # — on a standing lakehouse table it is already paid)
-            from amazon_security_lake_transformation_library_spark.plans import (
-                bucketed as bk,
-            )
-
-            root = tempfile.mkdtemp(prefix="bucketed_tables_")
-            bk.ensure_flagship_tables(
-                spark, transcripts, build,
-                "transcripts_job_bk", "conv_features_job_bk", path_root=root,
-            )
-            featd = bk.flagship_bucketed(
-                spark, "transcripts_job_bk", "conv_features_job_bk",
-                gap_seconds=args.gap_seconds,
-            )
-        else:  # modular: two window passes — kept for plan comparison
-            featd = asof_join(
-                build_turn_features(transcripts, gap_seconds=args.gap_seconds),
-                build, on="conv_id", ts="ts", build_cols=["feature_val"],
-            )
+        featd = asof_turn_features_hybrid(
+            transcripts, build, time_chunk(chunk_seconds=6 * 3600),
+            gap_seconds=args.gap_seconds,
+        )
     else:
         featd = build_turn_features(transcripts, gap_seconds=args.gap_seconds)
 

@@ -1,4 +1,4 @@
-"""As-of join: Spark (both physical strategies) vs pandas merge_asof oracle,
+"""As-of join: Spark (every physical strategy) vs pandas merge_asof oracle,
 <= vs < tie semantics, tolerance, and zero-leakage properties.
 """
 
@@ -9,7 +9,7 @@ import pytest
 from amazon_security_lake_transformation_library_spark.operators.asof import (
     asof_join,
     asof_join_directional,
-    asof_join_range,
+    asof_join_interval,
     latest_per_key,
 )
 from amazon_security_lake_transformation_library_spark.oracle import pandas_oracle as ora
@@ -53,14 +53,15 @@ def test_asof_union_window_matches_merge_asof(
 def test_asof_range_fallback_matches(
     spark, transcripts_df, conv_features_df, transcripts_pdf, conv_features_pdf, strict
 ):
-    got = asof_join_range(
+    # the interval form (build rows -> [ts, next_ts) validity intervals)
+    # replaced the range-join fallback; same merge_asof check, both ties
+    got = asof_join_interval(
         transcripts_df,
         conv_features_df,
-        probe_key=KEYS,
         on="conv_id",
         ts="ts",
+        build_cols=["feature_val"],
         strict=strict,
-        broadcast_build=True,
     ).toPandas()
     _check(got, transcripts_pdf, conv_features_pdf, strict)
 

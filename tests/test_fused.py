@@ -1,5 +1,6 @@
 """Fused as-of+feature block == modular composition, for all three
-physical strategies (plain / salted chunk-and-carry / hybrid router).
+physical strategies (plain / salted chunk-and-carry / the hybrid front
+door), and the front door's plan choice.
 
 The fused operator exists purely as a physical optimization (one
 Exchange+Sort instead of two); these tests pin that it is semantically
@@ -9,9 +10,12 @@ and across chunk sizes that split sessions/ffill runs mid-chunk.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from pandas.testing import assert_frame_equal
+from pyspark.sql import functions as F
 
 from amazon_security_lake_transformation_library_spark.operators.asof import asof_join
 from amazon_security_lake_transformation_library_spark.operators.features import (
@@ -96,16 +100,56 @@ def test_fused_strict_matches_modular_strict(spark, transcripts_df, conv_feature
     assert not a["feature_val"].equals(b["feature_val"])
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _n_sorts(plan: str) -> int:
+    return len(re.findall(r"\bSort\b", plan))
+
+
+def _assert_single_exchange(plan: str) -> None:
+    assert plan.count("Exchange") == 1, plan
+    assert _n_sorts(plan) == 1, plan
+    assert "unboundedfollowing" not in plan.lower().replace(" ", ""), plan
+
+
 def test_fused_single_exchange_on_big_table(spark, transcripts_df, conv_features_df):
     """The point of the fusion: exactly ONE Exchange and ONE Sort (the
     modular plan has two of each), and no O(partition^2)
     unbounded-FOLLOWING frame — next_role is a lead() after the probe
     filter that reuses the existing partitioning+ordering."""
-    import re
+    _assert_single_exchange(_plan(asof_turn_features(transcripts_df, conv_features_df)))
 
-    plan = asof_turn_features(
-        transcripts_df, conv_features_df
-    )._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert len(re.findall(r"\bSort\b", plan)) == 1, plan
-    assert "unboundedfollowing" not in plan.lower().replace(" ", ""), plan
+
+def test_hybrid_no_hot_plans_single_exchange(spark, transcripts_df, conv_features_df):
+    """The front door with no entity over its threshold is the plain
+    block itself, not the routed chunk-and-carry plan."""
+    _assert_single_exchange(_plan(asof_turn_features_hybrid(
+        transcripts_df, conv_features_df, time_chunk(chunk_seconds=3600),
+        hot_threshold_rows=10**9,
+    )))
+
+
+def test_hybrid_routes_when_hot(spark, transcripts_df, conv_features_df):
+    """With a hot entity the front door keeps the routed chunk-and-carry
+    plan: the broadcast hot set, and more than the plain block's one
+    Exchange and one Sort."""
+    plan = _plan(asof_turn_features_hybrid(
+        transcripts_df, conv_features_df, time_chunk(chunk_seconds=3600),
+        hot_threshold_rows=50,
+    ))
+    assert "__salt_chunk" in plan and "BroadcastHashJoin" in plan, plan
+    assert plan.count("Exchange") > 1, plan
+    assert _n_sorts(plan) > 1, plan
+
+
+def test_fused_salted_single_chunk_degenerates(
+    spark, transcripts_df, conv_features_df
+):
+    # one constant chunk (what the front door gives every tail entity):
+    # the boundary and carry logic must be a no-op, not a corruption
+    _cmp(
+        asof_turn_features_salted(transcripts_df, conv_features_df, F.lit(0)),
+        asof_turn_features(transcripts_df, conv_features_df),
+    )

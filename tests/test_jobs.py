@@ -13,8 +13,7 @@ def test_build_features_job_runs(spark, tmp_path, capsys):
     from jobs.build_features import main
 
     rc = main([
-        "--synth", "30", "--output", str(tmp_path / "bf"),
-        "--strategy", "fused", "--snapshot-id", "s1",
+        "--synth", "30", "--output", str(tmp_path / "bf"), "--snapshot-id", "s1",
     ])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])

@@ -81,6 +81,29 @@ def test_overlap_join_keyed_and_anti(spark):
     assert {r["l_id"] for r in anti} == set(lp["l_id"]) - matched_left
 
 
+def test_overlap_join_default_column_names(spark):
+    """Both sides carry the default start_ts/end_ts names: the residual
+    and first-common-bin predicates must still read each side's own
+    columns (bare names are ambiguous after the join)."""
+    def std(df, name):
+        return df.withColumnRenamed(f"{name}_start", "start_ts").withColumnRenamed(
+            f"{name}_end", "end_ts")
+
+    left, lp = _mk_intervals(spark, 5, 60, "l")
+    right, rp = _mk_intervals(spark, 6, 50, "r")
+    left, right = std(left, "l"), std(right.drop("key"), "r")
+    got = iv.overlap_join(left, right, bin_seconds=3600).select(
+        "l_id", "r_id").collect()
+    got_pairs = {(r["l_id"], r["r_id"]) for r in got}
+    expect = _brute_pairs(lp, rp.assign(key=0), keyed=False)
+    assert len(got) == len(got_pairs)
+    assert got_pairs == expect
+
+    anti = iv.overlap_join(left, right, bin_seconds=3600, anti=True)
+    matched_left = {a for a, _ in expect}
+    assert {r["l_id"] for r in anti.collect()} == set(lp["l_id"]) - matched_left
+
+
 def test_sessions_to_intervals(spark):
     pdf = pd.DataFrame({
         "user_id": [1, 1, 1, 2],
@@ -129,6 +152,21 @@ def test_pca_components_invariants_and_determinism(spark):
     mu2, comps2, eig2 = ex.pca_components(df.repartition(7), p=4)
     np.testing.assert_allclose(comps, comps2, atol=1e-7)
     np.testing.assert_allclose(eig, eig2, rtol=1e-9)
+
+
+@pytest.mark.parametrize("fn", [
+    ex.covariance, lambda df: ex.pca_components(df, p=1),
+], ids=["covariance", "pca_components"])
+def test_single_vector_raises_named_error(spark, fn):
+    """One valid vector has no sample covariance (n - 1 == 0): a named
+    ValueError, not a division by zero. A NULL and a ragged vector do not
+    count as valid."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, None), (2, [1.0, 2.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="1 valid vector"):
+        fn(df)
 
 
 def test_pca_project_matches_numpy(spark):

@@ -17,6 +17,7 @@ from amazon_security_lake_transformation_library_spark.plans import maintenance 
 from amazon_security_lake_transformation_library_spark.plans.writer import (
     SNAPSHOT_COL,
     SnapshotWriter,
+    snapshot_partition_cols,
 )
 
 
@@ -101,8 +102,10 @@ def test_partition_spec_evolution_deepens_spec(spark, tmp_path):
     assert t.filter("day = '2'").count() == 20
     assert t.filter("src = '1'").count() == 40
     # spec introspection per snapshot
-    assert w._snapshot_partition_cols("a") == ("day",)
-    assert w._snapshot_partition_cols("b") == ("day", "src")
+    snap = os.path.join(w.data_path, "snapshot_id={}").format
+    assert snapshot_partition_cols(snap("a")) == ("day",)
+    assert snapshot_partition_cols(snap("b")) == ("day", "src")
+    assert snapshot_partition_cols(snap("missing")) == ()
 
 
 # ------------------------------------------------ manifest parity

@@ -7,11 +7,17 @@ Each parallelism level runs in its own subprocess (fresh JVM — no config
 bleed between masters). Within a worker the job runs ``--runs`` times and
 the fastest wall is kept (amortizes JIT/shuffle-service warmup).
 
-Covers both window strategies:
-  * plain   — Window.partitionBy(conv_id): the hot conversation (~10% of
-              rows) serializes into one task and caps scaling;
-  * salted  — chunk-and-carry fused block (salted_features): the hot
-              conversation spreads across tasks.
+Strategies (``--strategies``, comma-separated):
+  * fused        — the plain one-Exchange flagship block: the hot
+                   conversation (~10% of rows) serializes into one task
+                   and caps scaling;
+  * fused_salted — chunk-and-carry over the fused union: the hot
+                   conversation spreads across tasks;
+  * hybrid       — the flagship front door: salted chunks for entities
+                   above ``--hot-threshold``, one plain chunk for the tail;
+  * bucketed     — the zero-Exchange block over bucketed-sorted tables;
+  * modular      — feature window then a separate as-of union window
+                   (two Exchanges; kept for plan comparison).
 Plus `--strategies curation`: the r4 curation/encoder pipeline (group
 z-score + frequency encode + forward-horizon label + ordered target
 encoding) — one shared conv_id Exchange/Sort for both windows, two
@@ -47,9 +53,6 @@ def worker(args) -> None:
         asof_turn_features_salted,
     )
     from amazon_security_lake_transformation_library_spark.operators.salted import time_chunk
-    from amazon_security_lake_transformation_library_spark.operators.salted_features import (
-        build_turn_features_salted,
-    )
     from amazon_security_lake_transformation_library_spark.session import get_spark
 
     # local-cluster[W,4,4096]: W separate 4-core executor JVM processes —
@@ -163,17 +166,11 @@ def worker(args) -> None:
             out = asof_turn_features_hybrid(
                 t, f, chunk, hot_threshold_rows=args.hot_threshold
             )
-        else:
-            if args.strategy == "salted":
-                # persist=True materializes the pass-1 frame; the nopersist
-                # variant recomputes it per consumer (BASELINE.md §4.2
-                # compares the two — they must execute DIFFERENT plans)
-                featd = build_turn_features_salted(t, chunk, persist=True)
-            elif args.strategy == "salted_nopersist":
-                featd = build_turn_features_salted(t, chunk, persist=False)
-            else:
-                featd = build_turn_features(t)
-            out = asof_join(featd, f, on="conv_id", ts="ts", build_cols=["feature_val"])
+        else:  # modular
+            out = asof_join(
+                build_turn_features(t), f,
+                on="conv_id", ts="ts", build_cols=["feature_val"],
+            )
         if args.sink == "parquet":
             out.write.mode("overwrite").parquet(f"{args.data}/out_{args.cpus}.parquet")
             return spark.read.parquet(f"{args.data}/out_{args.cpus}.parquet").count()
@@ -185,9 +182,8 @@ def worker(args) -> None:
 
     walls, rows = [], 0
     for _ in range(args.runs):
-        # fair timing across runs: the salted path persists its pass-1
-        # frame and Spark's CacheManager would satisfy the next run's
-        # identical canonical plan from cache
+        # fair timing across runs: nothing cached by one run may serve
+        # the next run's identical canonical plan
         spark.catalog.clearCache()
         t0 = time.time()
         rows = job()
@@ -204,8 +200,9 @@ def main() -> None:
     p.add_argument("--text-repeat", type=int, default=1,
                    help="widen each turn's text payload (x the ~100B "
                         "default) toward realistic KB-scale rows; the "
-                        "salted/hybrid narrow pre-pass is width-invariant "
-                        "so their premium over plain shrinks as this grows")
+                        "fused_salted/hybrid narrow pre-pass is width-"
+                        "invariant so their premium over fused shrinks as "
+                        "this grows")
     p.add_argument("--runs", type=int, default=2)
     p.add_argument("--levels", default="4,16",
                    help="total cores per level; each level runs cores/4 "
