@@ -18,4 +18,11 @@ synth       deterministic synthetic transcripts generator (FIXTURES.md)
 oracle      pure pandas/numpy reference implementations (test oracles)
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+if _sys.version_info < (3, 12):
+    # pyspark workers import this package to unpickle the engine's UDFs;
+    # from then on a task's start no longer re-reads pyspark.zip
+    from . import _zipimport_cache  # noqa: F401

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..caching import persist_tracked
 
@@ -548,5 +549,8 @@ def kcore(
             )
             return deg_final
         if n_after == 0:
-            return spark.createDataFrame([], "node long, core_deg long")
+            return spark.createDataFrame([], T.StructType([
+                T.StructField("node", e.schema["a"].dataType),
+                T.StructField("core_deg", T.LongType(), False),
+            ]))
     raise RuntimeError(f"kcore did not converge in {max_iters} rounds")

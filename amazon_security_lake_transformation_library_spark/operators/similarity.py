@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
+from .embedx import _dim_of
 
 
 def _as_double(col: Column) -> Column:
@@ -513,11 +514,14 @@ def srp_topk(
     final top-k is the same query-partitioned window as cosine_topk.
     Expected candidate fraction per probe ≈ 2^-bits of the corpus.
     """
-    dim_row = df.select(F.size(vec_col).alias("d")).head(1)
-    if not dim_row:
+    try:
+        dim = _dim_of(df, vec_col)
+    except ValueError:  # no non-NULL vector
         return df.sparkSession.createDataFrame(
             [], "query_id long, rank long, neighbor_id long, cos_sim double")
-    planes = srp_planes(n_band_bits, int(dim_row[0]["d"]), seed)
+    # a NULL or ragged vector has no well-defined bucket or cosine
+    df = df.where(F.size(vec_col) == F.lit(dim))
+    planes = srp_planes(n_band_bits, dim, seed)
 
     corpus = df.select(
         F.col(id_col).alias("neighbor_id"),

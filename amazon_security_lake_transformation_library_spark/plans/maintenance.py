@@ -4,13 +4,15 @@ expiry, orphan-file removal — the Iceberg ``rewrite_data_files`` /
 emulation (plans/writer.py; SURVEY.md §7.4 — no Iceberg jar offline).
 
 Why this is first-class at 100 TB: the streaming sink and CDC merge paths
-append a snapshot per micro-batch / per merge, each with
-``shuffle.partitions``-many files. A year of 1-minute batches is ~500k
-snapshots and tens of millions of small files — scan task-launch overhead
-and NameNode/S3-LIST pressure grow linearly with file count while data
-volume doesn't. Compaction bin-packs a snapshot's files back to
-target size WITHOUT changing a single row (verified by row count against
-the manifest before the swap); expiry bounds the time-travel horizon;
+append a snapshot per micro-batch / per merge, each with up to one
+file per output partition and partition value (a streaming batch has
+``spark.sql.shuffle.partitions`` output partitions, one per core by
+default). A year of 1-minute batches is ~500k snapshots and tens of
+millions of small files — scan task-launch overhead and NameNode/S3-LIST
+pressure grow linearly with file count while data volume doesn't.
+Compaction bin-packs a snapshot's files back to target size WITHOUT
+changing a single row (verified by row count against the manifest
+before the swap); expiry bounds the time-travel horizon;
 orphan removal reclaims half-written data from crashed jobs (which
 snapshot isolation already made invisible — this is space, not
 correctness).

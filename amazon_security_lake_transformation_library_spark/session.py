@@ -44,9 +44,26 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else ``*``).
-    ``shuffle_partitions`` defaults to 2x the local parallelism — small
-    enough to avoid tiny-task overhead at test scale; AQE coalesces further.
-    On a real cluster pass ``shuffle_partitions ~= 2-3x total cores``.
+
+    Two partition counts, because batch and streaming plans read different
+    ones:
+
+    * ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` is
+      ``shuffle_partitions``, default 2x the local parallelism (at least
+      8). With AQE and coalescing on, every batch Exchange is planned this
+      wide, and AQE coalesces small partitions at runtime. On a real
+      cluster pass ``shuffle_partitions ~= 2-3x total cores``.
+    * ``spark.sql.shuffle.partitions`` is the session's default
+      parallelism, one task per core. Streaming runs without AQE, so this
+      is the width of every stateful operator: one wave of Python tasks
+      per micro-batch, each paying its worker's fixed cost once, and
+      fewer, larger files per streaming commit. A checkpoint records the
+      count it started with, and a restarted query keeps it.
+
+    An explicit ``spark.sql.shuffle.partitions`` in ``extra_conf`` wins. On
+    a cluster, the default parallelism counts only the executor cores
+    registered when the session starts, so a streaming job there should
+    pass its count explicitly.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -59,9 +76,17 @@ def get_spark(
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = str(
+        shuffle_partitions
+    )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
+        )
+    return spark

@@ -206,10 +206,13 @@ def stateful_turn_features(
 ) -> DataFrame:
     """Streaming per-turn features via ``applyInPandasWithState``.
 
-    Note: the per-row Python loop here is bounded by the micro-batch size
-    of HOT conversations only (state is O(1)); the batch path remains the
-    vectorized window block. This operator exists for live-tail latency,
-    not bulk throughput.
+    Each conversation's micro-batch rows go through one vectorized numpy
+    pass with O(1) carried state (:func:`_turn_features_with_state`); the
+    batch path remains the window block. This operator exists for
+    live-tail latency, not bulk throughput: a warm micro-batch is
+    dominated by per-task fixed cost, so its state has one partition per
+    core (``spark.sql.shuffle.partitions``, see ``session.get_spark``),
+    one wave of Python tasks per batch.
     """
     return (
         turns.withWatermark("ts", watermark)

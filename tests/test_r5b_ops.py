@@ -537,6 +537,24 @@ def test_kcore_all_peeled_returns_empty(spark, tmp_path):
     assert out == []
 
 
+def test_kcore_string_ids_keep_node_type(spark, tmp_path):
+    """Both exits type ``node`` from the edge schema: the converged core
+    and the fully peeled (empty) result of string-id edges are strings."""
+    from amazon_security_lake_transformation_library_spark.operators import graph as g
+
+    tri = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
+    df = spark.createDataFrame(pd.DataFrame(tri, columns=["src", "dst"]))
+    core = g.kcore(df, 2, work_dir=str(tmp_path / "c"))
+    assert dict(core.dtypes) == {"node": "string", "core_deg": "bigint"}
+    assert {r["node"]: r["core_deg"] for r in core.collect()} == {
+        "a": 2, "b": 2, "c": 2}
+
+    peeled = g.kcore(df, 3, work_dir=str(tmp_path / "p"))
+    assert dict(peeled.dtypes) == {"node": "string", "core_deg": "bigint"}
+    assert peeled.collect() == []
+    assert core.unionByName(peeled).count() == 3
+
+
 # ------------------------------------------------------- data-quality gate
 
 def test_check_constraints_counts_violations(spark):
@@ -617,6 +635,26 @@ def test_srp_topk_planted_clusters_high_recall(spark):
     # pair angle ~5 deg => per-bit agreement ~0.97, so P(<=1 flip of 8
     # bits) ~ 0.97^8 + 8*0.97^7*0.03 ~ 0.98 — floor set with margin
     assert rec[True] >= 0.85, rec
+
+
+def test_srp_topk_skips_null_and_ragged_vectors(spark):
+    """The dimension comes from the first non-NULL vector, and NULL or
+    ragged vectors neither query nor answer: the result equals the one on
+    the corpus without them."""
+    from amazon_security_lake_transformation_library_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(79)
+    good = [(i, rng.normal(size=8).astype("float32").tolist())
+            for i in range(1, 40)]
+    bad = [(0, None), (99, [1.0, 0.5, -0.25])]
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame(bad[:1] + good + bad[1:], schema).coalesce(1)
+    clean = spark.createDataFrame(good, schema).coalesce(1)
+    got = sim.srp_topk(df, [0, 1, 2, 99], k=3, n_band_bits=3).collect()
+    want = sim.srp_topk(clean, [1, 2], k=3, n_band_bits=3).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(want) > 0
+    assert not {0, 99} & {r["neighbor_id"] for r in got}
 
 
 def test_srp_bucket_is_pure_function_of_vector(spark):

@@ -5,7 +5,10 @@ REAL multi-micro-batch execution (state must carry across batches)."""
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import shutil
 
 import pandas as pd
 import pytest
@@ -75,6 +78,94 @@ def test_stateful_features_match_batch(spark, stream_input, tmp_path):
             batch[col].reset_index(drop=True),
             check_names=False, check_dtype=False,
         )
+
+
+def _offset_conf(ckpt: str, batch_id: int) -> dict:
+    """The session conf a checkpoint's offset log recorded for a batch."""
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def _state_partitions(ckpt: str) -> int:
+    return sum(n.isdigit() for n in os.listdir(os.path.join(ckpt, "state", "0")))
+
+
+def test_stream_state_one_partition_per_core(spark, stream_input, tmp_path):
+    """Streaming runs without AQE at ``spark.sql.shuffle.partitions``, which
+    get_spark sets to one partition per core: one wave of stateful Python
+    tasks per micro-batch. Batch plans keep the wider
+    ``initialPartitionNum``."""
+    root, pdf = stream_input
+    cores = spark.sparkContext.defaultParallelism
+    wide = int(spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
+    assert wide > cores  # the test session: local[4], shuffle_partitions=8
+
+    stream = sp.read_turn_stream(spark, root)
+    _run_to_memory(sp.stateful_turn_features(stream, watermark="100 days"),
+                   "per_core", str(tmp_path))
+    ckpt = str(tmp_path / "per_core")
+    assert _offset_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == str(cores)
+    assert _state_partitions(ckpt) == cores
+
+    plan = (spark.createDataFrame(pdf).groupBy("conv_id").count()
+            ._jdf.queryExecution().executedPlan().toString())
+    widths = re.findall(r"hashpartitioning\(conv_id#\d+L?, (\d+)\)", plan)
+    assert widths == [str(wide)], plan
+
+
+def test_stream_restart_keeps_recorded_partitions(spark, stream_input, tmp_path):
+    """A live-tail checkpoint written with 8 state partitions resumes with 8
+    under a session that starts a fresh query with one per core, and it
+    commits the same stateful features as a fresh run over the same files."""
+    from amazon_security_lake_transformation_library_spark.plans.writer import SnapshotWriter
+
+    root, _ = stream_input
+    files = sorted(os.listdir(root))
+    inp = tmp_path / "restart_in"
+    inp.mkdir()
+
+    def release(names):
+        for name in names:
+            shutil.copy(os.path.join(root, name), inp)
+            t = 1_700_000_000 + files.index(name)  # the source orders by mtime
+            os.utime(inp / name, (t, t))
+
+    def run(src, name):
+        feats = sp.stateful_turn_features(sp.read_turn_stream(spark, src),
+                                          watermark="100 days")
+        q = sp.incremental_feature_job(
+            feats, str(tmp_path / name / "table"), str(tmp_path / name / "ckpt")
+        ).trigger(availableNow=True).start()
+        q.awaitTermination(120)
+        return str(tmp_path / name / "ckpt")
+
+    release(files[:1])
+    cores = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        run(str(inp), "resumed")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", cores)
+    release(files[1:])
+    ckpt = run(str(inp), "resumed")
+    assert [_offset_conf(ckpt, b)["spark.sql.shuffle.partitions"]
+            for b in range(len(files))] == ["8"] * len(files)
+    assert _state_partitions(ckpt) == 8
+
+    fresh_ckpt = run(root, "fresh")
+    assert _state_partitions(fresh_ckpt) == int(cores) < 8
+
+    def committed(name):
+        cols = [f.name for f in sp.STATEFUL_OUT_SCHEMA.fields]
+        return (SnapshotWriter(str(tmp_path / name / "table")).read(spark)
+                .select(*cols).toPandas()
+                .sort_values(["conv_id", "turn_idx"], kind="mergesort")
+                .reset_index(drop=True))
+
+    resumed, fresh = committed("resumed"), committed("fresh")
+    assert len(fresh) > 0
+    pd.testing.assert_frame_equal(resumed, fresh)
 
 
 def test_stateful_features_drop_late_rows(spark, tmp_path):

@@ -28,7 +28,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SPAN_S = 30 * 86_400
 
@@ -102,11 +103,11 @@ def _probe() -> dict:
     the ALU probe while DRAM bandwidth is degraded, which is exactly the
     state that inflates multi-JVM shuffle walls."""
     alu = subprocess.run(
-        [sys.executable, "/root/repo/tools/cpu_probe.py", "--dur", "2.0"],
+        [sys.executable, os.path.join(ROOT, "tools", "cpu_probe.py"), "--dur", "2.0"],
         capture_output=True, text=True, timeout=120,
     )
     bw = subprocess.run(
-        [sys.executable, "/root/repo/tools/membw_probe.py"],
+        [sys.executable, os.path.join(ROOT, "tools", "membw_probe.py")],
         capture_output=True, text=True, timeout=300,
     )
     return {"alu": json.loads(alu.stdout.strip().splitlines()[-1]),

@@ -19,7 +19,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from amazon_security_lake_transformation_library_spark.session import get_spark  # noqa: E402
@@ -55,7 +56,7 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: {msg}")
 
-    out = os.environ.get("SPARK_GRAFT_EMPTY_JSON", "/root/repo/EMPTYCHECK.json")
+    out = os.environ.get("SPARK_GRAFT_EMPTY_JSON", os.path.join(ROOT, "EMPTYCHECK.json"))
     with open(out, "w") as f:
         json.dump(results, f, indent=1)
     print(f"\n{len(results) - len(failures)}/{len(results)} queries "

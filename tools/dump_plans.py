@@ -5,9 +5,11 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from amazon_security_lake_transformation_library_spark.session import get_spark
@@ -155,7 +157,7 @@ def main() -> None:
         df = qs[name](spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(mode).strip()
         sections.append(f"## {name}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(sections))
     print(f"PLANS.md: {len(sections) - 1} plans")
 
