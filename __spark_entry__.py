@@ -45,12 +45,12 @@ from amazon_security_lake_transformation_library_spark.synth import transcripts 
 
 GAP_S = 1800
 QUERY_VEC_IDS = list(range(10))
-# hybrid router threshold for the synthesized flagship fixture: the hot
-# conversation holds ~10% of rows (>500 at every bench scale), the Pareto
-# tail stays under it -> both paths exercised. TEST THRESHOLD ONLY — the
-# library default (fused.asof_turn_features_hybrid hot_threshold_rows=1M)
-# is the scale-sane per-task row budget; 500 exists so the sf0.01 gate
-# covers both router branches.
+# hybrid router threshold for the synthesized flagship fixture. The
+# hottest conversation has 80 turns at sf0.001 and 831 at sf0.01, so the
+# sf0.01 gate routes it (both paths exercised) while sf0.001 plans the
+# unrouted block. TEST THRESHOLD ONLY — the library default
+# (fused.asof_turn_features_hybrid hot_threshold_rows=1M) is the
+# scale-sane per-task row budget.
 HYBRID_HOT_ROWS = 500
 
 
@@ -172,7 +172,7 @@ def _q_asof_forward(spark, sf_dir):
     # ("next outcome observed after this turn"); DuckDB oracles it
     # natively with ASOF ... ON e.ts <= b.ts
     ev = _t(spark, sf_dir, "events")
-    joined = asof_ops.asof_join_directional(
+    joined = asof_ops.asof_join(
         ev.select("event_id", "user_id", "ts"),
         _purchase_build(ev),
         on="user_id", ts="ts", build_cols=["feature_val"],
@@ -186,7 +186,7 @@ def _q_asof_nearest(spark, sf_dir):
     # exact-distance ties backward (pandas-compatible); oracle rebuilds
     # the same union + two-frame window choice in DuckDB SQL
     ev = _t(spark, sf_dir, "events")
-    joined = asof_ops.asof_join_directional(
+    joined = asof_ops.asof_join(
         ev.select("event_id", "user_id", "ts"),
         _purchase_build(ev),
         on="user_id", ts="ts", build_cols=["feature_val"],
@@ -1045,9 +1045,10 @@ def _q_flagship_bucketed(spark, sf_dir):
         spark, t, cf, tt, ct, path_root=f"/tmp/spark_graft_bucketed/{tag}"
     )
     # hot_threshold_rows=HYBRID_HOT_ROWS (test threshold, see its comment):
-    # the fixture's ~10%-hot conversation exceeds it at every bench scale,
-    # so the driver gate verifies the ROUTED plan (cold zero-Exchange SMJ
-    # unioned with the salted hot slice) against the same DuckDB oracle.
+    # the hottest conversation (831 turns) exceeds it at sf0.01, so that
+    # gate verifies the ROUTED plan (cold zero-Exchange SMJ unioned with
+    # the salted hot slice) against the same DuckDB oracle; at sf0.001
+    # (80 turns) it verifies the unrouted zero-Exchange plan.
     return bucketed.flagship_bucketed(
         spark, tt, ct, gap_seconds=GAP_S, hot_threshold_rows=HYBRID_HOT_ROWS
     )
@@ -2805,7 +2806,11 @@ def _q_multihot_docs(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     vocab = vz.build_vocab(docs, top_v=128)
-    return vz.encode_multihot(docs, vocab).select("doc_id", "idxs", "n_oov")
+    # idxs as a comma-joined string: both sides compare the same sorted
+    # list, and a scalar column keeps the result hashable for comparison
+    return vz.encode_multihot(docs, vocab).select(
+        "doc_id", F.array_join("idxs", ",").alias("idxs"), "n_oov"
+    )
 
 
 def _q_pagerank(spark, sf_dir):
@@ -5300,9 +5305,10 @@ def oracle_sql() -> dict[str, str]:
               QUALIFY vocab_idx < 128
             )
             SELECT t.doc_id,
-                   coalesce(list_sort(list(v.vocab_idx)
-                              FILTER (WHERE v.vocab_idx IS NOT NULL)),
-                            []) AS idxs,
+                   array_to_string(
+                     coalesce(list_sort(list(v.vocab_idx)
+                                FILTER (WHERE v.vocab_idx IS NOT NULL)),
+                              []), ',') AS idxs,
                    count(*) FILTER (WHERE v.vocab_idx IS NULL)::BIGINT AS n_oov
             FROM toks t LEFT JOIN vocab v USING (token)
             GROUP BY t.doc_id

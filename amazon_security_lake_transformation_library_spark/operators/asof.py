@@ -12,8 +12,9 @@ row with a strictly greater timestamp; ties resolve per the strict flag.
 Physical strategies
 -------------------
 1. :func:`asof_join` (primary) — **union + last-non-null window**.
-   Tag both sides, union by aligned schema, forward-fill the build payload
-   struct over ``(entity) ORDER BY (ts, side, tiebreak)``, keep probe rows.
+   Tag both sides, union by name, forward-fill the build payload struct
+   over ``(entity) ORDER BY (ts, side)``, keep probe rows — one core
+   (``_union_fill``) under every union form, K-table and skinny included.
    Cost: ONE shuffle on entity + one sort over n_probe + n_build rows.
    Caveat (measured, BASELINE.md §7.12): that Exchange does NOT become a
    no-op over bucketed inputs — Spark does not propagate bucketing
@@ -27,6 +28,9 @@ Physical strategies
    exactly one of them. Linear in the input (a range join that keeps the
    latest of every earlier build row is per-entity quadratic), and the
    only form whose join consumes a bucketed layout directly.
+3. K-feature assembly from one skinny log: :func:`asof_join_skinny_auto`
+   picks single-pass union, interval or hot/tail-routed from row counts
+   and the log's hot change points.
 
 Spark has no native ASOF JOIN (as of 4.1); every strategy is a plain
 DataFrame rewrite — Catalyst still gets full pushdown/pruning on inputs.
@@ -40,9 +44,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..caching import persist_tracked
 from ..functions.timeops import epoch_seconds
 
 _B = "__asof_payload"
@@ -64,6 +69,41 @@ def latest_per_key(
     return agg.select(*keys, *[F.col(f"__w.{c}").alias(c) for c in [*order, *payload]])
 
 
+def _union_fill(
+    probe: DataFrame,
+    builds: Sequence[tuple[DataFrame, int]],
+    keys: Sequence[str],
+    ts: str,
+    back: Sequence[tuple[str, Column]] = (),
+    fwd: Sequence[tuple[str, Column]] = (),
+) -> DataFrame:
+    """The core every union-form as-of join shares: tag each build side
+    with its sort tag and the probe with 1, union by name (Spark fills
+    the columns a side lacks with typed NULLs), fill over ONE window
+    spec ``(keys) ORDER BY (ts, side)`` and keep the probe rows.
+
+    ``builds`` are ``(frame, tag)`` pairs already projected to keys, ts
+    and payload columns. ``back`` entries become ``last(expr,
+    ignorenulls) OVER (unboundedPreceding, currentRow)``; ``fwd`` entries
+    ``first(expr, ignorenulls) OVER (currentRow, unboundedFollowing)``.
+    Every fill shares the one partitioning and ordering, so the plan is
+    one Exchange + one Sort however many fills or build sides there are.
+    """
+    unioned = probe.withColumn(_SIDE, F.lit(1))
+    for b, tag in builds:
+        unioned = unioned.unionByName(
+            b.withColumn(_SIDE, F.lit(tag)), allowMissingColumns=True
+        )
+    base = Window.partitionBy(*keys).orderBy(ts, _SIDE)
+    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wf = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    return unioned.select(
+        "*",
+        *[F.last(e, ignorenulls=True).over(wb).alias(n) for n, e in back],
+        *[F.first(e, ignorenulls=True).over(wf).alias(n) for n, e in fwd],
+    ).filter(F.col(_SIDE) == 1)
+
+
 def asof_join(
     probe: DataFrame,
     build: DataFrame,
@@ -74,88 +114,14 @@ def asof_join(
     tolerance_seconds: float | None = None,
     asof_ts_col: str = "asof_ts",
     suffix: str = "",
+    direction: str = "backward",
 ) -> DataFrame:
     """Union + last-non-null-window as-of join (left outer: unmatched probe
-    rows keep NULL build columns).
-
-    ``build`` must be unique per ``(on, ts)`` — pre-shrink with
-    :func:`latest_per_key` otherwise (latest-wins matches the reference
-    oracle and pandas ``merge_asof``).
-
-    Ordering trick: rows sort by ``(ts, side)`` where build side=0 for
-    ``<=`` semantics (a build row at ts T is visible to probes at T) and
-    build side=2 for strict ``<`` (probes at T sort before it).
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    if build_cols is None:
-        build_cols = [c for c in build.columns if c not in {*keys, ts}]
-    out_names = {c: f"{c}{suffix}" for c in build_cols}
-
-    payload = F.struct(
-        F.col(ts).alias(asof_ts_col), *[F.col(c) for c in build_cols]
-    ).alias(_B)
-    build_side = build.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(2 if strict else 0).alias(_SIDE),
-        payload,
-        *[F.lit(None).cast(probe.schema[c].dataType).alias(c)
-          for c in probe.columns if c not in {*keys, ts}],
-    )
-    probe_side = probe.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast(
-            build_side.schema[_B].dataType
-        ).alias(_B),
-        *[F.col(c) for c in probe.columns if c not in {*keys, ts}],
-    )
-
-    unioned = build_side.unionByName(probe_side)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts, _SIDE)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.select(
-        "*", F.last(F.col(_B), ignorenulls=True).over(w).alias("__fill")
-    ).filter(F.col(_SIDE) == 1)
-
-    fill = F.col("__fill")
-    if tolerance_seconds is not None:
-        in_range = (
-            epoch_seconds(F.col(ts)) - epoch_seconds(fill[asof_ts_col])
-        ) <= float(tolerance_seconds)
-        fill = F.when(in_range, fill)
-
-    return filled.select(
-        *keys,
-        ts,
-        *[c for c in probe.columns if c not in {*keys, ts}],
-        fill[asof_ts_col].alias(asof_ts_col),
-        *[fill[c].alias(out_names[c]) for c in build_cols],
-    )
-
-
-def asof_join_directional(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str | Sequence[str] = "conv_id",
-    ts: str = "ts",
-    build_cols: Sequence[str] | None = None,
-    direction: str = "forward",
-    strict: bool = False,
-    tolerance_seconds: float | None = None,
-    asof_ts_col: str = "asof_ts",
-    suffix: str = "",
-) -> DataFrame:
-    """As-of join with a match *direction* — the pandas ``merge_asof``
-    ``direction=`` surface (``backward`` / ``forward`` / ``nearest``),
-    completing :func:`asof_join` (which is backward-only).
+    rows keep NULL build columns), with the pandas ``merge_asof``
+    ``direction=`` surface:
 
     * ``backward`` — latest build row with ``build.ts <= probe.ts``
-      (``<`` when ``strict``): identical semantics to :func:`asof_join`.
+      (``<`` when ``strict``).
     * ``forward`` — EARLIEST build row with ``build.ts >= probe.ts``
       (``>`` when ``strict``). The label-attachment direction: "first
       outcome observed at-or-after this turn".
@@ -164,32 +130,26 @@ def asof_join_directional(
       (the leakage-safe side). ``strict`` must be False — an equal-ts
       row is distance 0 by definition.
 
-    Physical shape: the same ONE union + ONE Exchange + ONE Sort as
-    :func:`asof_join`; ``forward`` uses a ``first(ignorenulls) OVER
-    (currentRow, unboundedFollowing)`` frame instead of the backward
-    ``last(...) OVER (unboundedPreceding, currentRow)``, and ``nearest``
-    evaluates both frames over the SAME window ordering — Catalyst
-    plans them as stacked Window nodes over one Exchange+Sort (pinned in
-    tests/test_asof.py::test_directional_plan_single_exchange_sort).
-    Like the other union forms, the Exchange does NOT vanish over
-    bucketed inputs (bucketing stops at the Union — see
-    :func:`asof_join_skinny_intervals` for the layout-exploiting
-    rewrite pattern).
-
-    ``tolerance_seconds`` bounds the match distance per direction
-    (backward: ``probe.ts - build.ts``; forward: ``build.ts -
-    probe.ts``; nearest: applied to each candidate before choosing).
     ``build`` must be unique per ``(on, ts)`` — pre-shrink with
-    :func:`latest_per_key`. Left-outer semantics throughout.
+    :func:`latest_per_key` otherwise (latest-wins matches the reference
+    oracle and pandas ``merge_asof``). ``tolerance_seconds`` bounds the
+    match distance per direction (backward: ``probe.ts - build.ts``;
+    forward: ``build.ts - probe.ts``; nearest: applied to each candidate
+    before choosing).
+
+    Physical shape: ONE union + ONE Exchange + ONE Sort; ``nearest``
+    evaluates both frames over the same window ordering, which Catalyst
+    plans as stacked Window nodes over that one Exchange + Sort (pinned
+    in tests/test_asof.py::test_directional_plan_single_exchange_sort).
 
     Sort-tag construction: rows order by ``(ts, side)`` with probe
-    side=1. Backward-visible build rows must sort BEFORE equal-ts
-    probes (side 0) to land in the backward frame; forward-visible
-    build rows must sort AFTER them (side 2). ``strict`` flips the tag
-    so equal-ts build rows fall OUTSIDE the direction's frame. For
-    ``nearest`` the tag is 0: the backward frame captures equal-ts
-    rows at distance 0, which win any comparison, so the forward frame
-    correctly sees only strictly-later rows.
+    side=1. Backward-visible build rows must sort BEFORE equal-ts probes
+    (side 0) to land in the backward frame; forward-visible build rows
+    must sort AFTER them (side 2). ``strict`` flips the tag so equal-ts
+    build rows fall OUTSIDE the direction's frame. For ``nearest`` the
+    tag is 0: the backward frame captures equal-ts rows at distance 0,
+    which win any comparison, so the forward frame correctly sees only
+    strictly-later rows.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown direction: {direction!r}")
@@ -198,7 +158,7 @@ def asof_join_directional(
     keys = [on] if isinstance(on, str) else list(on)
     if build_cols is None:
         build_cols = [c for c in build.columns if c not in {*keys, ts}]
-    out_names = {c: f"{c}{suffix}" for c in build_cols}
+    probe_extra = [c for c in probe.columns if c not in {*keys, ts}]
 
     side_tag = {
         "backward": 2 if strict else 0,
@@ -206,35 +166,15 @@ def asof_join_directional(
         "nearest": 0,
     }[direction]
     payload = F.struct(
-        F.col(ts).alias(asof_ts_col), *[F.col(c) for c in build_cols]
-    ).alias(_B)
-    build_side = build.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(side_tag).alias(_SIDE),
-        payload,
-        *[F.lit(None).cast(probe.schema[c].dataType).alias(c)
-          for c in probe.columns if c not in {*keys, ts}],
+        F.col(ts).alias(asof_ts_col),
+        *[F.col(c).alias(f"{c}{suffix}") for c in build_cols],
     )
-    probe_side = probe.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast(build_side.schema[_B].dataType).alias(_B),
-        *[F.col(c) for c in probe.columns if c not in {*keys, ts}],
+    build_side = build.select(*keys, ts, payload.alias(_B))
+    filled = _union_fill(
+        probe, [(build_side, side_tag)], keys, ts,
+        back=[("__fb", F.col(_B))] if direction != "forward" else (),
+        fwd=[("__ff", F.col(_B))] if direction != "backward" else (),
     )
-    unioned = build_side.unionByName(probe_side)
-
-    base = Window.partitionBy(*keys).orderBy(ts, _SIDE)
-    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wf = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    fills = []
-    if direction in ("backward", "nearest"):
-        fills.append(F.last(F.col(_B), ignorenulls=True).over(wb).alias("__fb"))
-    if direction in ("forward", "nearest"):
-        fills.append(F.first(F.col(_B), ignorenulls=True).over(wf).alias("__ff"))
-    filled = unioned.select("*", *fills).filter(F.col(_SIDE) == 1)
 
     def dist_back(f):
         return epoch_seconds(F.col(ts)) - epoch_seconds(f[asof_ts_col])
@@ -242,19 +182,15 @@ def asof_join_directional(
     def dist_fwd(f):
         return epoch_seconds(f[asof_ts_col]) - epoch_seconds(F.col(ts))
 
+    fb, ff = F.col("__fb"), F.col("__ff")
+    if tolerance_seconds is not None:
+        fb = F.when(dist_back(fb) <= float(tolerance_seconds), fb)
+        ff = F.when(dist_fwd(ff) <= float(tolerance_seconds), ff)
     if direction == "backward":
-        fill = F.col("__fb")
-        if tolerance_seconds is not None:
-            fill = F.when(dist_back(fill) <= float(tolerance_seconds), fill)
+        fill = fb
     elif direction == "forward":
-        fill = F.col("__ff")
-        if tolerance_seconds is not None:
-            fill = F.when(dist_fwd(fill) <= float(tolerance_seconds), fill)
+        fill = ff
     else:
-        fb, ff = F.col("__fb"), F.col("__ff")
-        if tolerance_seconds is not None:
-            fb = F.when(dist_back(fb) <= float(tolerance_seconds), fb)
-            ff = F.when(dist_fwd(ff) <= float(tolerance_seconds), ff)
         # closer candidate wins; equal distance -> backward; one-sided
         # NULLs fall through to the surviving side
         fill = (
@@ -264,12 +200,8 @@ def asof_join_directional(
             .otherwise(fb)
         )
 
-    return filled.select(
-        *keys,
-        ts,
-        *[c for c in probe.columns if c not in {*keys, ts}],
-        fill[asof_ts_col].alias(asof_ts_col),
-        *[fill[c].alias(out_names[c]) for c in build_cols],
+    return filled.withColumn("__fill", fill).select(
+        *keys, ts, *probe_extra, "__fill.*"
     )
 
 
@@ -306,24 +238,12 @@ def asof_join_interval(
     """
     if build_cols is None:
         build_cols = [c for c in build.columns if c not in {on, ts}]
-
-    wb = Window.partitionBy(F.col(f"__b_{on}")).orderBy(F.col(asof_ts_col))
-    b = build.select(
-        F.col(on).alias(f"__b_{on}"),
-        F.col(ts).alias(asof_ts_col),
-        *build_cols,
-    ).withColumn("__next_ts", F.lead(F.col(asof_ts_col)).over(wb))
-
-    cond = F.col(on) == F.col(f"__b_{on}")
-    if strict:
-        cond = cond & (F.col(asof_ts_col) < F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) <= F.col("__next_ts"))
-        )
-    else:
-        cond = cond & (F.col(asof_ts_col) <= F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) < F.col("__next_ts"))
-        )
-    return probe.join(b, cond, "left").drop(f"__b_{on}", "__next_ts")
+    w = Window.partitionBy(on).orderBy(ts)
+    iv = build.select(
+        on, ts, F.col(ts).alias(asof_ts_col), *build_cols,
+        F.lead(F.col(ts)).over(w).alias("__next_ts"),
+    )
+    return asof_join_over_intervals(probe, iv, on=on, ts=ts, strict=strict)
 
 
 def asof_join_stacked(
@@ -374,86 +294,24 @@ def asof_join_stacked(
     bucketed, ts-sorted partitions").
     """
     keys = [on] if isinstance(on, str) else list(on)
-    names = list(builds)
-    cols = {
-        s: (
-            list(build_cols[s]) if build_cols and s in build_cols
-            else [c for c in builds[s].columns if c not in {*keys, ts}]
-        )
-        for s in names
-    }
     probe_extra = [c for c in probe.columns if c not in {*keys, ts}]
-    stk = {s: f"__stk_{s}" for s in names}
-
-    def payload(s: str):
-        return F.struct(
-            F.col(ts).alias(f"{s}{asof_ts_suffix}"),
-            *[F.col(c).alias(f"{s}_{c}") for c in cols[s]],
-        )
-
-    # Build each side with the full aligned column set: keys, ts, side
-    # tag, one struct per source (typed NULL off-source), typed-NULL probe
-    # extras on build rows.
     sides = []
-    for s in names:
-        b = builds[s]
-        sides.append(
-            b.select(
-                *keys,
-                F.col(ts).alias(ts),
-                F.lit(2 if strict else 0).alias(_SIDE),
-                *[
-                    payload(s2).alias(stk[s2]) if s2 == s
-                    else F.lit(None).cast(
-                        # struct type as the source table would produce it
-                        builds[s2].select(payload(s2)).schema[0].dataType
-                    ).alias(stk[s2])
-                    for s2 in names
-                ],
-                *[
-                    F.lit(None).cast(probe.schema[c].dataType).alias(c)
-                    for c in probe_extra
-                ],
-            )
+    for s, b in builds.items():
+        cols = (
+            list(build_cols[s]) if build_cols and s in build_cols
+            else [c for c in b.columns if c not in {*keys, ts}]
         )
-    probe_struct_types = {
-        s: builds[s].select(payload(s)).schema[0].dataType for s in names
-    }
-    sides.append(
-        probe.select(
-            *keys,
-            F.col(ts).alias(ts),
-            F.lit(1).alias(_SIDE),
-            *[
-                F.lit(None).cast(probe_struct_types[s]).alias(stk[s])
-                for s in names
-            ],
-            *probe_extra,
+        payload = F.struct(
+            F.col(ts).alias(f"{s}{asof_ts_suffix}"),
+            *[F.col(c).alias(f"{s}_{c}") for c in cols],
         )
+        sides.append((b.select(*keys, ts, payload.alias(f"__stk_{s}")),
+                      2 if strict else 0))
+    filled = _union_fill(
+        probe, sides, keys, ts,
+        back=[(f"__f_{s}", F.col(f"__stk_{s}")) for s in builds],
     )
-    unioned = sides[0]
-    for sd in sides[1:]:
-        unioned = unioned.unionByName(sd)
-
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts, _SIDE)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.select(
-        "*",
-        *[
-            F.last(F.col(stk[s]), ignorenulls=True).over(w).alias(f"__f_{s}")
-            for s in names
-        ],
-    ).filter(F.col(_SIDE) == 1)
-
-    out_cols = [*keys, ts, *probe_extra]
-    for s in names:
-        f = F.col(f"__f_{s}")
-        out_cols.append(f[f"{s}{asof_ts_suffix}"].alias(f"{s}{asof_ts_suffix}"))
-        out_cols.extend(f[f"{s}_{c}"].alias(f"{s}_{c}") for c in cols[s])
-    return filled.select(*out_cols)
+    return filled.select(*keys, ts, *probe_extra, *[f"__f_{s}.*" for s in builds])
 
 
 def asof_join_skinny(
@@ -495,47 +353,19 @@ def asof_join_skinny(
     """
     keys = [on] if isinstance(on, str) else list(on)
     probe_extra = [c for c in probe.columns if c not in {*keys, ts}]
-
-    payload_t = build.select(
-        F.struct(
-            F.col(ts).alias("a"), F.col(value_col).alias("v")
-        )
-    ).schema[0].dataType
     build_side = build.filter(F.col(source_col).isin(list(sources))).select(
         *keys,
-        F.col(ts).alias(ts),
-        F.lit(2 if strict else 0).alias(_SIDE),
+        ts,
         F.col(source_col).alias("__src"),
         F.struct(F.col(ts).alias("a"), F.col(value_col).alias("v")).alias(_B),
-        *[
-            F.lit(None).cast(probe.schema[c].dataType).alias(c)
-            for c in probe_extra
-        ],
     )
-    probe_side = probe.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast("string").alias("__src"),
-        F.lit(None).cast(payload_t).alias(_B),
-        *probe_extra,
-    )
-    unioned = build_side.unionByName(probe_side)
-
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts, _SIDE)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.select(
-        "*",
-        *[
-            F.last(
-                F.when(F.col("__src") == s, F.col(_B)), ignorenulls=True
-            ).over(w).alias(f"__f_{i}")
+    filled = _union_fill(
+        probe, [(build_side, 2 if strict else 0)], keys, ts,
+        back=[
+            (f"__f_{i}", F.when(F.col("__src") == s, F.col(_B)))
             for i, s in enumerate(sources)
         ],
-    ).filter(F.col(_SIDE) == 1)
+    )
 
     out_cols = [*keys, ts, *probe_extra]
     for i, s in enumerate(sources):
@@ -647,18 +477,61 @@ def asof_join_over_intervals(
     iv = intervals.withColumnRenamed(on, f"__b_{on}").withColumnRenamed(
         ts, "__iv_ts"
     )
-    cond = F.col(on) == F.col(f"__b_{on}")
-    if strict:
-        cond = cond & (F.col("__iv_ts") < F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) <= F.col("__next_ts"))
-        )
-    else:
-        cond = cond & (F.col("__iv_ts") <= F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) < F.col("__next_ts"))
-        )
+    start, t, nxt = F.col("__iv_ts"), F.col(ts), F.col("__next_ts")
+    inside = (
+        (start < t) & (nxt.isNull() | (t <= nxt)) if strict
+        else (start <= t) & (nxt.isNull() | (t < nxt))
+    )
+    cond = (F.col(on) == F.col(f"__b_{on}")) & inside
     return probe.join(iv, cond, "left").drop(
         f"__b_{on}", "__iv_ts", "__next_ts"
     )
+
+
+# The chooser's rule, the job's ``--auto-ratio`` default since it landed
+# (BASELINE.md §7.14): the union form when the log holds at least a
+# quarter of the probe's rows. It reads §7.12's "interval form when the
+# probe is >> the log" as 4x; no measurement has tuned it.
+SINGLE_PASS_LOG_RATIO = 0.25
+# Change points from which the router sends an entity to the union form:
+# the job's ``--hot-threshold`` default, the value §7.15's harness ran.
+HOT_CHANGE_POINTS = 1024
+# Hot keys above which the router's splits shuffle instead of
+# broadcasting the key set (a guard against a driver-sized hot set).
+HOT_BROADCAST_LIMIT = 1_000_000
+
+
+def _skinny_routed(
+    probe: DataFrame,
+    log: DataFrame,
+    sources: Sequence[str],
+    hot_threshold_changes: int,
+    **kw,
+) -> tuple[DataFrame, str]:
+    """:func:`asof_join_skinny_routed`'s body; also names the plan it
+    took (``"intervals"`` or ``"routed"``) for the chooser. ``kw`` holds
+    every :func:`asof_join_skinny` keyword."""
+    on, ts = kw["on"], kw["ts"]
+    lg = log.filter(F.col(kw["source_col"]).isin(list(sources)))
+    hot_keys = persist_tracked(
+        lg.groupBy(on)
+        .agg(F.count_distinct(F.col(ts)).alias("__b"))
+        .filter(F.col("__b") >= F.lit(hot_threshold_changes))
+        .select(on)
+    )
+    n_hot = hot_keys.count()
+    if n_hot == 0:
+        return asof_join_skinny_intervals(probe, log, sources, **kw), "intervals"
+    hot = hot_keys if n_hot > HOT_BROADCAST_LIMIT else F.broadcast(hot_keys)
+    out_hot = asof_join_skinny(
+        probe.join(hot, on, "left_semi"), lg.join(hot, on, "left_semi"),
+        sources, **kw,
+    )
+    out_tail = asof_join_skinny_intervals(
+        probe.join(hot, on, "left_anti"), lg.join(hot, on, "left_anti"),
+        sources, **kw,
+    )
+    return out_tail.unionByName(out_hot), "routed"
 
 
 def asof_join_skinny_routed(
@@ -671,8 +544,7 @@ def asof_join_skinny_routed(
     ts: str = "ts",
     strict: bool = False,
     asof_ts_suffix: str = "_asof_ts",
-    hot_threshold_changes: int = 1024,
-    hot_broadcast_limit: int | None = 1_000_000,
+    hot_threshold_changes: int = HOT_CHANGE_POINTS,
 ) -> DataFrame:
     """Hot-entity-safe K-feature assembly: route each entity to the
     strategy whose cost model it fits, then union the (identically
@@ -688,49 +560,54 @@ def asof_join_skinny_routed(
     reaches ``hot_threshold_changes`` take the union path; the tail —
     virtually the whole corpus — keeps the interval path. The router's
     pre-pass aggregates the LOG only (b_e is the per-probe-row band
-    multiplier, observable without touching the probe table), and the
-    hot set is broadcast for the semi/anti splits, so the probe-side
-    cost of routing is two broadcast-filtered scans and no shuffle.
-    This is the same enforce-don't-document rule the flagship bucketed
-    path adopted in §7.4.
+    multiplier, observable without touching the probe table). This is
+    the same enforce-don't-document rule the flagship bucketed path
+    adopted in §7.4.
 
-    The broadcast assumes the hot set is SMALL — the designed regime
-    (hotness is the exception). A low ``hot_threshold_changes`` on a
-    broadly skewed corpus could make it driver-sized, so the key set is
-    counted first (one extra action over the persisted key set — log-agg
-    sized, cheap next to the assembly) and falls back to shuffle
-    semi/anti joins above ``hot_broadcast_limit`` keys. Pass
-    ``hot_broadcast_limit=None`` to skip the count and broadcast
-    unconditionally (the zero-extra-action fast path).
+    The hot-key set is persisted and counted once. No hot key: the
+    result is :func:`asof_join_skinny_intervals` on the unsplit inputs,
+    with no semi/anti joins. Otherwise the set is broadcast for the
+    semi/anti splits — the probe-side cost of routing is two
+    broadcast-filtered scans and no shuffle — unless it holds more than
+    ``HOT_BROADCAST_LIMIT`` keys, where the splits fall back to shuffle
+    joins.
     """
-    keys = [on] if isinstance(on, str) else list(on)
-    lg = log.filter(F.col(source_col).isin(list(sources)))
-    hot_keys = (
-        lg.groupBy(*keys)
-        .agg(F.count_distinct(F.col(ts)).alias("__b"))
-        .filter(F.col("__b") >= F.lit(hot_threshold_changes))
-        .select(*keys)
-    )
-    if hot_broadcast_limit is not None:
-        from ..caching import persist_tracked
+    return _skinny_routed(
+        probe, log, sources, hot_threshold_changes,
+        source_col=source_col, value_col=value_col, on=on, ts=ts,
+        strict=strict, asof_ts_suffix=asof_ts_suffix,
+    )[0]
 
-        hot_keys = persist_tracked(hot_keys)
-        n_hot = hot_keys.count()
-        hot = hot_keys if n_hot > hot_broadcast_limit else F.broadcast(hot_keys)
-    else:
-        hot = F.broadcast(hot_keys)
+
+def asof_join_skinny_auto(
+    probe: DataFrame,
+    log: DataFrame,
+    sources: Sequence[str],
+    source_col: str = "feature",
+    value_col: str = "value",
+    on: str = "conv_id",
+    ts: str = "ts",
+    strict: bool = False,
+    asof_ts_suffix: str = "_asof_ts",
+) -> tuple[DataFrame, str]:
+    """The K-feature assembly's one front door: pick the plan from row
+    counts and the log's hot change points, and return it with its name.
+
+    * ``"single_pass"`` — :func:`asof_join_skinny`, when the log holds at
+      least ``SINGLE_PASS_LOG_RATIO`` of the probe's rows. The union form
+      is already hot-safe: O((p + b) log) per entity.
+    * otherwise :func:`asof_join_skinny_routed` at ``HOT_CHANGE_POINTS``:
+      ``"intervals"`` when no entity reaches it (the plain
+      :func:`asof_join_skinny_intervals` plan), ``"routed"`` when some
+      do (BASELINE.md §7.15's 11x hot-shard fix).
+
+    Costs two row counts, plus the router's one log-sized pre-pass when
+    the log is the smaller side. Output as :func:`asof_join_skinny`.
+    """
     kw = dict(
-        sources=sources, source_col=source_col, value_col=value_col,
-        on=on, ts=ts, strict=strict, asof_ts_suffix=asof_ts_suffix,
+        source_col=source_col, value_col=value_col, on=on, ts=ts,
+        strict=strict, asof_ts_suffix=asof_ts_suffix,
     )
-    out_hot = asof_join_skinny(
-        probe.join(hot, keys, "left_semi"),
-        lg.join(hot, keys, "left_semi"),
-        **kw,
-    )
-    out_tail = asof_join_skinny_intervals(
-        probe.join(hot, keys, "left_anti"),
-        lg.join(hot, keys, "left_anti"),
-        **kw,
-    )
-    return out_tail.unionByName(out_hot)
+    if log.count() >= SINGLE_PASS_LOG_RATIO * probe.count():
+        return asof_join_skinny(probe, log, sources, **kw), "single_pass"
+    return _skinny_routed(probe, log, sources, HOT_CHANGE_POINTS, **kw)

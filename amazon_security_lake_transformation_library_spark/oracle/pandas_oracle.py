@@ -51,7 +51,7 @@ def asof(
     tolerance_seconds: float | None = None,
     direction: str = "backward",
 ) -> pd.DataFrame:
-    """Oracle for operators.asof.asof_join / asof_join_directional via
+    """Oracle for operators.asof.asof_join (every direction) via
     pd.merge_asof (build assumed unique per (on, ts); latest-wins
     semantics; pandas resolves nearest-distance ties backward, same as
     the Spark operator)."""

@@ -9,21 +9,19 @@ Usage (cluster):
         --input /path/transcripts --log /path/feature_log \
         --sources f0,f1,f2,f3 --output /path/assembled
 
-Strategies (operators/asof.py; BASELINE.md §7.9/§7.12/§7.13):
-  single_pass — asof_join_skinny: ONE Exchange + Sort + Window over
-      n_probe + n_log rows. Best when probe and log are comparably
-      sized and unbucketed.
-  intervals   — asof_join_skinny_intervals: widen the log once into
-      K-vector validity intervals (shuffle proportional to the LOG),
-      then a sort-merge interval join; the probe table is never
-      shuffled or sorted when it is bucketed. Best when the probe is
-      bucketed or much larger than the log — the 10^12-turn regime.
-  auto        — intervals when the log row count is < --auto-ratio of
-      the probe's (default 1/4), else single_pass.
-  routed      — asof_join_skinny_routed: hot entities (change points >=
-      --hot-threshold) take the union path, the tail keeps the interval
-      SMJ (BASELINE.md §7.15's 11x hot-shard fix). Use on skewed
-      corpora.
+Plan (operators/asof.asof_join_skinny_auto; BASELINE.md §7.12/§7.15/§9):
+the job has no strategy option. The chooser reads two row counts and
+the log's per-entity change points and takes one of
+  single_pass — asof_join_skinny (ONE Exchange + Sort + Window over
+      n_probe + n_log rows), when the log holds at least a quarter of
+      the probe's rows;
+  intervals   — asof_join_skinny_intervals (the log widened once into
+      K-vector validity intervals, then a sort-merge interval join),
+      when the log is smaller and no entity has 1024 change points;
+  routed      — asof_join_skinny_routed, when some entity does: hot
+      entities take the union path, the tail keeps the interval join
+      (§7.15's 11x hot-shard fix).
+The JSON line's "strategy" field names the plan taken.
 
 With --synth N_CONVS the job generates the deterministic synthetic
 transcripts table plus an EAV log derived from it (bench/demo path, no
@@ -55,13 +53,6 @@ def parse_args(argv=None):
                    help="comma-separated feature names to assemble "
                         "(default: every distinct value in --log's "
                         "feature column)")
-    p.add_argument("--strategy", default="auto",
-                   choices=["auto", "single_pass", "intervals", "routed"])
-    p.add_argument("--hot-threshold", type=int, default=1024,
-                   help="(routed) change points per entity above which "
-                        "the union path takes over from the interval SMJ")
-    p.add_argument("--auto-ratio", type=float, default=0.25,
-                   help="auto picks intervals when n_log < ratio * n_probe")
     p.add_argument("--strict", action="store_true",
                    help="exclude equal-ts feature updates (state strictly "
                         "before each probe ts)")
@@ -78,8 +69,7 @@ def main(argv=None) -> int:
     args = parse_args(argv)
 
     from amazon_security_lake_transformation_library_spark.operators.asof import (
-        asof_join_skinny,
-        asof_join_skinny_intervals,
+        asof_join_skinny_auto,
     )
     from amazon_security_lake_transformation_library_spark.session import get_spark
 
@@ -108,30 +98,7 @@ def main(argv=None) -> int:
         r[0] for r in sorted(log.select("feature").distinct().collect())
     ]
 
-    strategy = args.strategy
-    if strategy == "auto":
-        n_probe, n_log = probe.count(), log.count()
-        strategy = (
-            "intervals" if n_log < args.auto_ratio * n_probe else "single_pass"
-        )
-        print(f"auto: n_probe={n_probe} n_log={n_log} -> {strategy}",
-              file=sys.stderr)
-
-    if strategy == "routed":
-        from amazon_security_lake_transformation_library_spark.operators.asof import (
-            asof_join_skinny_routed,
-        )
-
-        out = asof_join_skinny_routed(
-            probe, log, sources, strict=args.strict,
-            hot_threshold_changes=args.hot_threshold,
-        )
-    else:
-        fn = (
-            asof_join_skinny_intervals if strategy == "intervals"
-            else asof_join_skinny
-        )
-        out = fn(probe, log, sources, strict=args.strict)
+    out, strategy = asof_join_skinny_auto(probe, log, sources, strict=args.strict)
 
     if args.output:
         from amazon_security_lake_transformation_library_spark.plans.writer import (

@@ -8,7 +8,6 @@ import pytest
 
 from amazon_security_lake_transformation_library_spark.operators.asof import (
     asof_join,
-    asof_join_directional,
     asof_join_interval,
     latest_per_key,
 )
@@ -160,7 +159,7 @@ def test_asof_directional_matches_merge_asof(
     spark, transcripts_df, conv_features_df, transcripts_pdf,
     conv_features_pdf, direction, strict
 ):
-    got = asof_join_directional(
+    got = asof_join(
         transcripts_df, conv_features_df, on="conv_id", ts="ts",
         direction=direction, strict=strict,
     ).toPandas()
@@ -172,7 +171,7 @@ def test_asof_directional_tolerance(
     spark, transcripts_df, conv_features_df, transcripts_pdf,
     conv_features_pdf, direction
 ):
-    got = asof_join_directional(
+    got = asof_join(
         transcripts_df, conv_features_df, direction=direction,
         tolerance_seconds=600.0,
     ).toPandas()
@@ -191,7 +190,7 @@ def test_asof_nearest_tie_resolves_backward(spark):
         "ts": pd.to_datetime(["2024-01-01 00:05:00", "2024-01-01 00:15:00"]),
         "feature_val": [1.0, 2.0],
     })
-    out = asof_join_directional(
+    out = asof_join(
         spark.createDataFrame(probe), spark.createDataFrame(build),
         direction="nearest",
     ).toPandas()
@@ -210,7 +209,7 @@ def test_asof_nearest_equal_ts_wins_at_distance_zero(spark):
         "ts": pd.to_datetime(["2024-01-01 00:10:00", "2024-01-01 00:11:00"]),
         "feature_val": [5.0, 9.0],
     })
-    out = asof_join_directional(
+    out = asof_join(
         spark.createDataFrame(probe), spark.createDataFrame(build),
         direction="nearest",
     ).toPandas()
@@ -219,17 +218,16 @@ def test_asof_nearest_equal_ts_wins_at_distance_zero(spark):
 
 def test_asof_directional_rejects_bad_args(spark, transcripts_df, conv_features_df):
     with pytest.raises(ValueError):
-        asof_join_directional(transcripts_df, conv_features_df,
-                              direction="sideways")
+        asof_join(transcripts_df, conv_features_df, direction="sideways")
     with pytest.raises(ValueError):
-        asof_join_directional(transcripts_df, conv_features_df,
-                              direction="nearest", strict=True)
+        asof_join(transcripts_df, conv_features_df,
+                  direction="nearest", strict=True)
 
 
 def test_directional_plan_single_exchange_sort(spark, transcripts_df, conv_features_df):
     """nearest evaluates BOTH frames but still plans over ONE Exchange +
     ONE Sort (the frames share the window partitioning/ordering)."""
-    df = asof_join_directional(
+    df = asof_join(
         transcripts_df, conv_features_df, direction="nearest"
     )
     plan = df._jdf.queryExecution().executedPlan().toString()

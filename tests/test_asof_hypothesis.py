@@ -109,7 +109,7 @@ def test_asof_matches_pandas_oracle(spark, fb):
 
 
 def _pandas_directional(probe, build, direction, strict):
-    """Brute-force per-row oracle for asof_join_directional: scan every
+    """Brute-force per-row oracle for asof_join's directions: scan every
     build candidate, apply the direction's visibility rule, pick by
     min/max ts (forward/backward) or min |distance| with backward ties
     (nearest)."""
@@ -162,10 +162,6 @@ def frames_directional(draw):
 )
 @given(fb=frames_directional())
 def test_asof_directional_matches_bruteforce(spark, fb):
-    from amazon_security_lake_transformation_library_spark.operators.asof import (
-        asof_join_directional,
-    )
-
     probe_pdf, build_pdf, direction, strict = fb
     probe = spark.createDataFrame(probe_pdf)
     if len(build_pdf):
@@ -180,7 +176,7 @@ def test_asof_directional_matches_bruteforce(spark, fb):
             [], schema="conv_id string, ts timestamp, feature_val double"
         )
     got = (
-        asof_join_directional(
+        asof_join(
             probe, build, on="conv_id", ts="ts",
             build_cols=["feature_val"], direction=direction, strict=strict,
         )

@@ -406,7 +406,7 @@ def test_skinny_routed_equals_skinny_on_skew(spark, strict):
         assert (gt.dropna() == wt.dropna()).all()
 
 
-def test_skinny_routed_threshold_boundary(spark):
+def test_skinny_routed_threshold_boundary(spark, monkeypatch):
     """Entities at exactly the threshold go hot; one below stays on the
     interval path — and an all-tail input equals plain intervals."""
     from amazon_security_lake_transformation_library_spark.operators.asof import (
@@ -442,26 +442,18 @@ def test_skinny_routed_threshold_boundary(spark):
     )
     np.testing.assert_allclose(got["f0_value"].to_numpy("float64"),
                                want["f0_value"].to_numpy("float64"))
-    # hot_broadcast_limit=0 forces the shuffle semi/anti fallback (the
-    # r4 ADVICE guard against a driver-sized hot set); same answer
+    # a zero broadcast limit forces the shuffle semi/anti fallback (the
+    # guard against a driver-sized hot set); same answer
+    from amazon_security_lake_transformation_library_spark.operators import asof
+
+    monkeypatch.setattr(asof, "HOT_BROADCAST_LIMIT", 0)
     shuf = (
         asof_join_skinny_routed(spark.createDataFrame(probe),
                                 spark.createDataFrame(log),
-                                hot_threshold_changes=4,
-                                hot_broadcast_limit=0, **kw)
+                                hot_threshold_changes=4, **kw)
         .toPandas().sort_values("probe_id").reset_index(drop=True)
     )
     np.testing.assert_allclose(shuf["f0_value"].to_numpy("float64"),
-                               want["f0_value"].to_numpy("float64"))
-    # and limit=None keeps the zero-extra-action unconditional broadcast
-    nb = (
-        asof_join_skinny_routed(spark.createDataFrame(probe),
-                                spark.createDataFrame(log),
-                                hot_threshold_changes=4,
-                                hot_broadcast_limit=None, **kw)
-        .toPandas().sort_values("probe_id").reset_index(drop=True)
-    )
-    np.testing.assert_allclose(nb["f0_value"].to_numpy("float64"),
                                want["f0_value"].to_numpy("float64"))
 
 
@@ -505,3 +497,78 @@ def test_skinny_forms_zero_leakage_mutation_audit(spark, form):
             mut.loc[sel, f"{s}_value"].to_numpy("float64"),
             base.loc[sel, f"{s}_value"].to_numpy("float64"),
         )
+
+
+# ------------------------------------------ the assembly chooser (auto)
+
+
+def _auto_inputs(branch):
+    """Inputs that steer asof_join_skinny_auto down one branch: a log at
+    least a quarter the probe's size (single_pass); a smaller log with no
+    entity at HOT_CHANGE_POINTS (intervals); the same plus one entity
+    with 1100 change points and a probe large enough to stay 4x the log
+    (routed)."""
+    probe, builds = _mk_inputs(seed=41, n_probe=240 if branch == "single_pass"
+                               else 1200)
+    log = _melt(builds)
+    if branch == "routed":
+        base = pd.Timestamp("2026-01-01")
+        log = pd.concat([log, pd.DataFrame({
+            "conv_id": "hot",
+            "ts": base + pd.to_timedelta(np.arange(1100) * 7, unit="s"),
+            "feature": [list(builds)[i % 3] for i in range(1100)],
+            "value": np.arange(1100, dtype="float64"),
+        })], ignore_index=True)
+        probe = pd.concat([probe, pd.DataFrame({
+            "conv_id": "hot",
+            "ts": base + pd.to_timedelta(np.arange(0, 7700, 1.5), unit="s"),
+            "probe_id": np.arange(10_000, 10_000 + 5134, dtype="int64"),
+        })], ignore_index=True)
+    return probe, log, list(builds)
+
+
+@pytest.mark.parametrize("strict", [False, True])
+@pytest.mark.parametrize("branch", ["single_pass", "intervals", "routed"])
+def test_skinny_auto_branch_equals_skinny(spark, branch, strict):
+    """Each chooser branch is taken on the input built for it, and its
+    answer equals asof_join_skinny row for row, both tie semantics. The
+    no-hot branch is the plain interval plan: no semi/anti split."""
+    from amazon_security_lake_transformation_library_spark.operators.asof import (
+        HOT_CHANGE_POINTS,
+        SINGLE_PASS_LOG_RATIO,
+        asof_join_skinny,
+        asof_join_skinny_auto,
+    )
+
+    probe, log, sources = _auto_inputs(branch)
+    assert (len(log) >= SINGLE_PASS_LOG_RATIO * len(probe)) == (
+        branch == "single_pass")
+    assert (log.groupby("conv_id")["ts"].nunique().max()
+            >= HOT_CHANGE_POINTS) == (branch == "routed")
+    kw = dict(sources=sources, on="conv_id", ts="ts", strict=strict)
+    out, plan = asof_join_skinny_auto(
+        spark.createDataFrame(probe), spark.createDataFrame(log), **kw)
+    assert plan == branch
+    physical = out._jdf.queryExecution().executedPlan().toString()
+    split = "LeftSemi" in physical or "LeftAnti" in physical
+    assert split == (branch == "routed"), physical
+
+    got = out.toPandas().sort_values("probe_id", kind="mergesort") \
+        .reset_index(drop=True)
+    want = (
+        asof_join_skinny(spark.createDataFrame(probe),
+                         spark.createDataFrame(log), **kw)
+        .toPandas().sort_values("probe_id", kind="mergesort")
+        .reset_index(drop=True)
+    )
+    assert len(got) == len(want) == len(probe)
+    assert list(got.columns) == list(want.columns)
+    for s in sources:
+        np.testing.assert_allclose(
+            got[f"{s}_value"].to_numpy("float64"),
+            want[f"{s}_value"].to_numpy("float64"),
+        )
+        gt = got[f"{s}_asof_ts"].astype("datetime64[us]")
+        wt = want[f"{s}_asof_ts"].astype("datetime64[us]")
+        assert (gt.isna() == wt.isna()).all()
+        assert (gt.dropna() == wt.dropna()).all()

@@ -1,6 +1,6 @@
 """spark-submit job entries run in-process end-to-end: synth input,
 SnapshotWriter output, manifest-read row counts, idempotent re-commit,
-and cross-strategy equality for the K-feature assembly job."""
+and the plan the K-feature assembly job's chooser takes."""
 
 from __future__ import annotations
 
@@ -20,24 +20,70 @@ def test_build_features_job_runs(spark, tmp_path, capsys):
     assert out["rows"] > 0 and out["turns_per_sec"] > 0
 
 
-@pytest.mark.parametrize("strategy", ["single_pass", "intervals"])
-def test_assemble_features_job_strategies_agree(spark, tmp_path, capsys, strategy):
+def _assemble_inputs(tmp_path, plan):
+    """Job input that steers the chooser to ``plan``: the synthetic
+    tables (log = a third of the turns) for single_pass; otherwise a
+    probe four times the size of a 12-conversation log, plus, for routed,
+    one conversation with 1100 change points. Returns the job's input
+    arguments and the (probe, log) parquet paths."""
+    import numpy as np
+    import pandas as pd
+
+    from amazon_security_lake_transformation_library_spark.synth.transcripts import (
+        gen_feature_log, gen_transcripts, write_parquet,
+    )
+
+    if plan == "single_pass":
+        pdf = gen_transcripts(n_convs=30, mean_turns=20)
+        probe, log = pdf, gen_feature_log(pdf)
+    else:
+        base = pd.Timestamp("2026-01-01")
+        n_hot = 1100 if plan == "routed" else 0
+        log = pd.DataFrame({
+            "conv_id": [f"c{i % 12}" for i in range(120)] + ["hot"] * n_hot,
+            "ts": list(base + pd.to_timedelta(np.arange(120) * 60, unit="s"))
+            + list(base + pd.to_timedelta(np.arange(n_hot) * 7, unit="s")),
+            "feature": [f"f{i % 4}" for i in range(120 + n_hot)],
+            "value": np.arange(120 + n_hot, dtype="float64"),
+        })
+        n_probe = 4 * len(log) + 1
+        probe = pd.DataFrame({
+            "conv_id": [f"c{i % 12}" if i % 2 else "hot"
+                        for i in range(n_probe)],
+            "ts": base + pd.to_timedelta(np.arange(n_probe) * 3, unit="s"),
+            "probe_id": np.arange(n_probe, dtype="int64"),
+        })
+        probe["ts"] = probe["ts"].astype("datetime64[us]")
+        log["ts"] = log["ts"].astype("datetime64[us]")
+    paths = (str(tmp_path / "probe.parquet"), str(tmp_path / "log.parquet"))
+    write_parquet(probe, paths[0])
+    write_parquet(log, paths[1])
+    if plan == "single_pass":
+        return ["--synth", "30"], paths
+    return ["--input", paths[0], "--log", paths[1]], paths
+
+
+@pytest.mark.parametrize("plan", ["single_pass", "intervals", "routed"])
+def test_assemble_features_job_default_plan(spark, tmp_path, capsys, plan):
+    """The job has no strategy option: on each input the chooser takes
+    the expected plan, reports it, and commits as many rows as
+    asof_join_skinny gives on the same input."""
+    from amazon_security_lake_transformation_library_spark.operators.asof import (
+        asof_join_skinny,
+    )
     from jobs.assemble_features import main
 
-    rc = main([
-        "--synth", "30", "--strategy", strategy,
-        "--output", str(tmp_path / f"af_{strategy}"), "--snapshot-id", "s1",
-    ])
+    job_args, (probe, log) = _assemble_inputs(tmp_path, plan)
+    rc = main([*job_args, "--output", str(tmp_path / "af"),
+               "--snapshot-id", "s1"])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["strategy"] == strategy
+    assert out["strategy"] == plan
     assert out["sources"] == ["f0", "f1", "f2", "f3"]
-    assert out["rows"] > 0
-    # strategies must agree on the row count for the same synth seed
-    if not hasattr(test_assemble_features_job_strategies_agree, "_rows"):
-        test_assemble_features_job_strategies_agree._rows = out["rows"]
-    else:
-        assert out["rows"] == test_assemble_features_job_strategies_agree._rows
+    want = asof_join_skinny(
+        spark.read.parquet(probe), spark.read.parquet(log), out["sources"]
+    ).count()
+    assert out["rows"] == want > 0
 
 
 def test_assemble_features_job_idempotent_recommit(spark, tmp_path, capsys):
@@ -46,7 +92,7 @@ def test_assemble_features_job_idempotent_recommit(spark, tmp_path, capsys):
     root = str(tmp_path / "af_idem")
     for _ in range(2):  # second commit with the same snapshot id is a no-op
         rc = main([
-            "--synth", "25", "--strategy", "intervals",
+            "--synth", "25",
             "--output", root, "--snapshot-id", "fixed-snap",
         ])
         assert rc == 0
@@ -59,18 +105,6 @@ def test_assemble_features_job_idempotent_recommit(spark, tmp_path, capsys):
         f"read_parquet('{root}/_manifest/part-*.parquet')"
     ).fetchone()[0]
     assert n == 1
-
-
-def test_assemble_features_routed_strategy(spark, tmp_path, capsys):
-    from jobs.assemble_features import main
-
-    rc = main([
-        "--synth", "30", "--strategy", "routed", "--hot-threshold", "5",
-        "--output", str(tmp_path / "af_routed"), "--snapshot-id", "s1",
-    ])
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["strategy"] == "routed" and out["rows"] > 0
 
 
 def _curate_fixture(spark, tmp_path):

@@ -5,6 +5,8 @@ order-insensitive value equality (floats compared exactly after the
 query-side rounding contract; both sides stringified identically).
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+Each query argument is an exact name or a shell-style pattern, e.g.
+``'asof_join_events*'`` runs the whole as-of family.
 Env: SPARK_GRAFT_ORACLE_JSON=<path> additionally writes a
 driver-CORRECTNESS-format JSON artifact ({name: {rows_match,
 schema_match, hash_match, spark_rows, oracle_rows, err}}) covering
@@ -14,6 +16,7 @@ EVERY checked entry — including the ones past the driver gate's
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import re
 import sys
@@ -55,7 +58,7 @@ def frame_sig(cols, rows):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
 
     # The fixture-backed oracles (flagship transcripts, BPE, lang-ID, …)
     # key their precomputed expected tables on $SPARK_GRAFT_ORACLE_SF
@@ -88,7 +91,7 @@ def main() -> int:
         }
 
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         t0 = time.time()
         try:
