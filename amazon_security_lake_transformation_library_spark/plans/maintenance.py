@@ -55,12 +55,9 @@ from .writer import (
     SNAPSHOT_COL,
     SnapshotWriter,
     append_log,
+    read_log,
     snapshot_partition_cols,
 )
-
-
-def _snapshot_dir(w: SnapshotWriter, snapshot_id: str) -> str:
-    return os.path.join(w.data_path, f"{SNAPSHOT_COL}={snapshot_id}")
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -70,53 +67,27 @@ def _parquet_files(path: str) -> list[str]:
     return out
 
 
-def _recover_trash(w: SnapshotWriter, snapshot_id: str) -> bool:
-    """Crash recovery for compact's swap: if a previous compact died
-    between the two renames, the snapshot directory is missing and the
-    original lives in ``_trash/<id>`` — restore it before doing anything
-    else. Returns True when a restore happened."""
-    snap_dir = _snapshot_dir(w, snapshot_id)
-    trash = os.path.join(w.root, "_trash", snapshot_id)
-    if not os.path.exists(snap_dir) and os.path.exists(trash):
-        os.rename(trash, snap_dir)
-        return True
-    return False
-
-
 def sweep_trash(w: SnapshotWriter) -> list[str]:
     """Heal ALL crashed compact swaps, not just a re-compacted id: every
     ``_trash/<id>`` whose snapshot directory is missing is restored
-    (crash landed between the two renames); every ``_trash/<id>`` whose
+    (crash landed between the two renames) by
+    ``SnapshotWriter._restore_trashed_snapshots``, the restore that
+    ``read()``/``read_at()`` also run; every ``_trash/<id>`` whose
     snapshot directory exists is a completed swap whose final cleanup
-    died — delete it. Runs at the start of every maintenance op, and
-    restore-only from SnapshotWriter.read()/read_at() (see
-    ``restore_missing_snapshot_dirs``), so a table never serves with a
+    died — delete it (never the only copy of a snapshot). Runs at the
+    start of every maintenance op, so a table never serves with a
     committed snapshot's rows silently absent. Returns restored ids."""
+    restored = w._restore_trashed_snapshots()
     trash_root = os.path.join(w.root, "_trash")
-    restored: list[str] = []
-    if not os.path.isdir(trash_root):
-        return restored
-    for sid in sorted(os.listdir(trash_root)):
-        snap_dir = _snapshot_dir(w, sid)
-        trash = os.path.join(trash_root, sid)
-        if not os.path.exists(snap_dir):
-            os.rename(trash, snap_dir)
-            restored.append(sid)
-        else:
-            shutil.rmtree(trash, ignore_errors=True)
+    for sid in os.listdir(trash_root) if os.path.isdir(trash_root) else ():
+        if os.path.exists(w.snapshot_dir(sid)):
+            shutil.rmtree(os.path.join(trash_root, sid), ignore_errors=True)
     return restored
 
 
 def _log(w: SnapshotWriter, name: str, rows: list[dict]) -> None:
     # one file per call: the same snapshot can be compacted more than once
     append_log(os.path.join(w.root, name), uuid.uuid4().hex, pa.Table.from_pylist(rows))
-
-
-def _read_log(w: SnapshotWriter, spark: SparkSession, name: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(os.path.join(w.root, name))
-    except Exception:
-        return None
 
 
 def compact(
@@ -151,7 +122,7 @@ def compact(
     if snapshot_id not in w.committed_snapshots(spark):
         raise KeyError(snapshot_id)
     sweep_trash(w)  # heal ANY crashed prior compact first, not just this id
-    snap_dir = _snapshot_dir(w, snapshot_id)
+    snap_dir = w.snapshot_dir(snapshot_id)
     before_files = _parquet_files(snap_dir)
     before_bytes = sum(os.path.getsize(f) for f in before_files)
     if not before_files:
@@ -258,12 +229,7 @@ def compact(
     finally:
         spark.conf.set(infer_key, infer_prev)
 
-    expected = int(
-        w.manifest(spark)
-        .filter(F.col(SNAPSHOT_COL) == snapshot_id)
-        .agg(F.sum("row_count"))
-        .collect()[0][0]
-    )
+    expected = w.row_count(snapshot_id)
     actual = spark.read.parquet(stage).count()
     if actual != expected:
         shutil.rmtree(stage, ignore_errors=True)
@@ -307,12 +273,7 @@ def expire_snapshots(
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     sweep_trash(w)
-    snaps = w.snapshots(spark)
-    if snaps is None:
-        return []
-    ordered = sorted(
-        ((r[1], r[0]) for r in snaps.select(SNAPSHOT_COL, "committed_at_unix").collect()),
-    )
+    ordered = sorted((t, s) for s, t in w.commit_times().items())
     already = expired_snapshots(w, spark)
     live = [s for _t, s in ordered if s not in already]
     to_expire = live[:-keep_last]
@@ -326,10 +287,10 @@ def expire_snapshots(
 
 
 def expired_snapshots(w: SnapshotWriter, spark: SparkSession) -> set[str]:
-    log = _read_log(w, spark, "_expired")
-    if log is None:
-        return set()
-    return {r[0] for r in log.select(SNAPSHOT_COL).distinct().collect()}
+    """Ids in the ``_expired`` tombstone log, read on the driver."""
+    log = read_log(os.path.join(w.root, "_expired"),
+                   pa.schema([(SNAPSHOT_COL, pa.string())]))
+    return set(log[SNAPSHOT_COL].to_pylist())
 
 
 def read_at_checked(w: SnapshotWriter, spark: SparkSession, snapshot_id: str) -> DataFrame:

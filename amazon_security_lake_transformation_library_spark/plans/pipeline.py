@@ -99,20 +99,12 @@ def run_transform_job(
             if n_rej:
                 qw.commit(rejects, snapshot_id)
         else:  # resume no-op: counts from manifest lineage, not recompute
-            mf = w.manifest(spark)
-            n_mapped = int(
-                mf.filter(F.col("snapshot_id") == snapshot_id)
-                .agg(F.sum("row_count")).collect()[0][0] or 0
-            )
+            n_mapped = w.row_count(snapshot_id)
             # A crash between the ext commit and the quarantine commit must
             # not lose rejects on retry: report n_rej from the quarantine
             # manifest when present, else recompute + commit them now.
             if snapshot_id in qw.committed_snapshots(spark):
-                n_rej = int(
-                    qw.manifest(spark)
-                    .filter(F.col("snapshot_id") == snapshot_id)
-                    .agg(F.sum("row_count")).collect()[0][0] or 0
-                )
+                n_rej = qw.row_count(snapshot_id)
             else:
                 n_rej = rejects.count()
                 if n_rej:

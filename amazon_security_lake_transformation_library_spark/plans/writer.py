@@ -19,7 +19,7 @@ the driver. A small micro-batch commit would otherwise pay more for its
 bookkeeping jobs than for its data:
 
   * the committed check reads the ``snapshot_id`` column of
-    ``_manifest/`` with pyarrow;
+    ``_manifest/`` with pyarrow (:func:`read_log`);
   * per-partition row counts are the ``num_rows`` sums of the parquet
     footers under ``data/snapshot_id=<id>/`` — the files just written;
   * each log row set (schema log, manifest) is one parquet file, written
@@ -32,12 +32,19 @@ bookkeeping jobs than for its data:
 The log files have the columns and types the Spark-appended logs had, so
 tables written either way read, replay and accept commits alike.
 
+Every metadata read is driver-side too, through :func:`read_log`: whether
+a snapshot is committed, its row count, the snapshots visible as of a
+time-travel cutoff, the schema as of that cutoff, and (in
+``plans/maintenance.py``) the expired snapshots. Only ``manifest()`` and
+``snapshots()`` build DataFrames, as the public views of the manifest.
+
 This is the Iceberg-snapshot emulation per SURVEY.md §7.4 (no Iceberg jar
 offline); the API is format-agnostic so an Iceberg catalog can slot in.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -47,6 +54,7 @@ from urllib.parse import unquote
 from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +77,18 @@ def append_log(directory: str, stem: str, table: pa.Table) -> None:
     tmp = os.path.join(directory, f".{stem}.parquet.tmp")
     pq.write_table(table, tmp, store_schema=False, write_statistics=False)
     os.replace(tmp, os.path.join(directory, f"part-{stem}.parquet"))
+
+
+def read_log(directory: str, schema: pa.Schema) -> pa.Table:
+    """The parquet log at ``directory``, read on the driver as ``schema``.
+    ``_``- and ``.``-prefixed files are skipped, as Spark skips them, so
+    logs appended by Spark (``_SUCCESS``, ``.crc``) and by
+    :func:`append_log` (temp files) read alike. An absent directory gives
+    an empty table."""
+    if not os.path.isdir(directory):
+        return schema.empty_table()
+    return pds.dataset(directory, format="parquet", schema=schema,
+                       ignore_prefixes=["_", "."]).to_table()
 
 
 def snapshot_partition_cols(snap_dir: str) -> tuple[str, ...]:
@@ -145,17 +165,35 @@ class SnapshotWriter:
 
     # -- manifest -----------------------------------------------------------
 
+    def snapshot_dir(self, snapshot_id: str) -> str:
+        return os.path.join(self.data_path, f"{SNAPSHOT_COL}={snapshot_id}")
+
+    def _manifest_log(self) -> pa.Table:
+        return read_log(self.manifest_path, pa.schema([
+            (SNAPSHOT_COL, pa.string()), ("committed_at_unix", pa.float64()),
+            ("row_count", pa.int64())]))
+
     def committed_snapshots(self, spark: SparkSession) -> set[str]:
         """Snapshot ids with a manifest row, read on the driver (no Spark
         job). ``spark`` is unused; it keeps the signature every caller
         uses."""
-        if not os.path.isdir(self.manifest_path):
-            return set()
-        ids = pds.dataset(
-            self.manifest_path, format="parquet",
-            schema=pa.schema([(SNAPSHOT_COL, pa.string())]),
-        ).to_table()[SNAPSHOT_COL]
-        return set(ids.unique().to_pylist())
+        return set(self.commit_times())
+
+    def row_count(self, snapshot_id: str) -> int:
+        """Rows committed by ``snapshot_id``: the sum of its manifest
+        rows' ``row_count``, read on the driver. 0 for a zero-row or an
+        uncommitted snapshot."""
+        log = self._manifest_log()
+        rows = log.filter(pc.equal(log[SNAPSHOT_COL], snapshot_id))["row_count"]
+        return int(pc.sum(rows).as_py() or 0)
+
+    def commit_times(self) -> dict[str, float]:
+        """Snapshot id -> ``committed_at_unix`` for every committed
+        snapshot, read on the driver. A commit stamps all of its manifest
+        rows with one time."""
+        log = self._manifest_log()
+        return dict(zip(log[SNAPSHOT_COL].to_pylist(),
+                        log["committed_at_unix"].to_pylist()))
 
     def manifest(self, spark: SparkSession) -> DataFrame | None:
         try:
@@ -237,7 +275,7 @@ class SnapshotWriter:
         # and no directory, yet still needs its manifest row — the manifest
         # IS the commit record; without it the snapshot never becomes a
         # replay no-op and committed_snapshots/read() never see it.
-        snap_dir = os.path.join(self.data_path, f"{SNAPSHOT_COL}={snapshot_id}")
+        snap_dir = self.snapshot_dir(snapshot_id)
         counts = _footer_counts(snap_dir) or {(None,) * len(partition_cols): 0}
         keys = sorted(counts)
         # partitionBy resolved the names case-insensitively; the manifest
@@ -294,45 +332,46 @@ class SnapshotWriter:
                 return list(snapshot_partition_cols(os.path.join(self.data_path, entry)))
         return None
 
-    def _schema_asof(self, spark: SparkSession, cutoff: tuple | None = None):
+    def _schema_asof(self, cutoff: tuple | None = None):
         """Latest recorded schema (or latest at/before ``cutoff`` =
         (committed_at, snapshot_id)); None when no schema log exists
         (tables written before schema tracking — fall back to footer
         inference). The no-cutoff path reads the O(1) latest-pointer file;
         only time travel scans the append log."""
-        import json as _json
-
         if cutoff is None:
             latest = os.path.join(self.root, "_schema_latest.json")
             if os.path.exists(latest):
                 with open(latest) as f:
-                    return T.StructType.fromJson(_json.loads(f.read()))
-        try:
-            log = spark.read.parquet(self.schema_path).collect()
-        except Exception:
-            return None
-        rows = sorted((r["committed_at_unix"], r[SNAPSHOT_COL], r["schema_json"])
-                      for r in log)
+                    return T.StructType.fromJson(json.loads(f.read()))
+        log = read_log(self.schema_path, pa.schema([
+            ("committed_at_unix", pa.float64()), (SNAPSHOT_COL, pa.string()),
+            ("schema_json", pa.string())]))
+        # (committed_at, snapshot_id, schema_json) in commit order
+        rows = sorted(zip(*log.to_pydict().values()))
         if cutoff is not None:
             rows = [r for r in rows if (r[0], r[1]) <= cutoff]
         if not rows:
             return None
-        return T.StructType.fromJson(_json.loads(rows[-1][2]))
+        return T.StructType.fromJson(json.loads(rows[-1][2]))
 
-    def _restore_trashed_snapshots(self) -> None:
+    def _restore_trashed_snapshots(self) -> list[str]:
         """Crash healing on the read path: a compact() that died between
         its two swap renames leaves ``_trash/<id>`` holding the ONLY copy
         of a committed snapshot while the manifest still lists it — serving
         the table then silently drops that snapshot's rows. Restore any
         such directory before reading (restore-only: completed-swap trash
-        is left for maintenance.sweep_trash to reclaim)."""
+        is left for maintenance.sweep_trash to reclaim). Returns the
+        restored ids."""
         trash_root = os.path.join(self.root, "_trash")
         if not os.path.isdir(trash_root):
-            return
-        for sid in os.listdir(trash_root):
-            snap_dir = os.path.join(self.data_path, f"{SNAPSHOT_COL}={sid}")
+            return []
+        restored = []
+        for sid in sorted(os.listdir(trash_root)):
+            snap_dir = self.snapshot_dir(sid)
             if not os.path.exists(snap_dir):
                 os.rename(os.path.join(trash_root, sid), snap_dir)
+                restored.append(sid)
+        return restored
 
     def _read_snapshots(self, spark: SparkSession, ids, schema) -> DataFrame:
         """Scan exactly the given committed snapshots, grouping them by
@@ -342,31 +381,20 @@ class SnapshotWriter:
         never evolved — this is a single scan, the pre-evolution plan."""
         # zero-row snapshots committed no files and have no directory —
         # they are manifest-only and contribute nothing to a scan
-        ids = sorted(
-            s for s in ids
-            if os.path.isdir(os.path.join(self.data_path, f"{SNAPSHOT_COL}={s}"))
-        )
+        ids = sorted(s for s in ids if os.path.isdir(self.snapshot_dir(s)))
         if not ids:
             if schema is not None:
                 return spark.createDataFrame([], schema)
             return spark.read.parquet(self.data_path).filter(F.lit(False))
         groups: dict[tuple[str, ...], list[str]] = {}
         for sid in ids:
-            snap_dir = os.path.join(self.data_path, f"{SNAPSHOT_COL}={sid}")
-            groups.setdefault(snapshot_partition_cols(snap_dir), []).append(sid)
+            spec = snapshot_partition_cols(self.snapshot_dir(sid))
+            groups.setdefault(spec, []).append(sid)
+        reader = spark.read.schema(schema) if schema is not None else spark.read
         frames = []
         for _spec, sids in sorted(groups.items()):
-            reader = (
-                spark.read.schema(schema) if schema is not None else spark.read
-            )
-            frames.append(
-                reader.option("basePath", self.data_path).parquet(
-                    *[
-                        os.path.join(self.data_path, f"{SNAPSHOT_COL}={s}")
-                        for s in sids
-                    ]
-                )
-            )
+            frames.append(reader.option("basePath", self.data_path).parquet(
+                *[self.snapshot_dir(s) for s in sids]))
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
@@ -380,9 +408,8 @@ class SnapshotWriter:
         under DIFFERENT partition specs (partition evolution) are scanned
         per spec group and unioned by name."""
         self._restore_trashed_snapshots()
-        schema = self._schema_asof(spark)
-        committed = self.committed_snapshots(spark)
-        return self._read_snapshots(spark, committed, schema)
+        schema = self._schema_asof()
+        return self._read_snapshots(spark, self.committed_snapshots(spark), schema)
 
     def snapshots(self, spark: SparkSession) -> DataFrame | None:
         """Snapshot log: (snapshot_id, committed_at_unix, n_rows) — the
@@ -403,17 +430,14 @@ class SnapshotWriter:
         same commit timestamp from observing each other ("future" data).
         Raises KeyError for an unknown/uncommitted snapshot id."""
         self._restore_trashed_snapshots()
-        snaps = self.snapshots(spark)
-        if snaps is None:
+        times = self.commit_times()
+        if snapshot_id not in times:
             raise KeyError(snapshot_id)
-        rows = {r[0]: r[1] for r in snaps.select(SNAPSHOT_COL, "committed_at_unix").collect()}
-        if snapshot_id not in rows:
-            raise KeyError(snapshot_id)
-        cutoff = (rows[snapshot_id], snapshot_id)
-        visible = [s for s, t in rows.items() if (t, s) <= cutoff]
+        cutoff = (times[snapshot_id], snapshot_id)
+        visible = [s for s, t in times.items() if (t, s) <= cutoff]
         # time travel reads the schema AS OF that snapshot: a column added
         # later does not exist in the past (Iceberg VERSION AS OF)
-        schema = self._schema_asof(spark, cutoff=cutoff)
+        schema = self._schema_asof(cutoff=cutoff)
         return self._read_snapshots(spark, visible, schema)
 
 

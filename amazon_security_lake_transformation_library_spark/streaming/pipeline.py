@@ -48,6 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.timeops import eventday
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
@@ -125,6 +127,10 @@ STATEFUL_OUT_SCHEMA = T.StructType(
 )
 
 
+# the batch feature block's default session gap (1,800 s), in microseconds
+SESSION_GAP_US = 1_800_000_000
+
+
 def _turn_features_with_state(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -163,13 +169,13 @@ def _turn_features_with_state(
         prev = np.empty_like(tus)
         prev[1:] = tus[:-1]
         prev[0] = tus[0]  # placeholder — flags[0] is set by the branch below
-        flags = (tus - prev > 1_800_000_000).astype("int64")
+        flags = (tus - prev > SESSION_GAP_US).astype("int64")
         # first row: new session iff no prior state, else gap vs carried
         # last_ts_us — explicit branch, not sentinel arithmetic (an int64-min
         # sentinel makes tus[0]-prev[0] wrap and only looked right because
         # flags[0] was then overwritten)
         flags[0] = 1 if last_ts_us is None else int(
-            tus[0] - last_ts_us > 1_800_000_000
+            tus[0] - last_ts_us > SESSION_GAP_US
         )
         sess = session_id + np.cumsum(flags)
         ucum = user_cum + np.cumsum((pdf["role"] == "user").to_numpy(dtype="int64"))
@@ -213,6 +219,9 @@ def stateful_turn_features(
     dominated by per-task fixed cost, so its state has one partition per
     core (``spark.sql.shuffle.partitions``, see ``session.get_spark``),
     one wave of Python tasks per batch.
+
+    The session gap is fixed at the batch block's default of 1,800 s
+    (``SESSION_GAP_US``); it is not a parameter.
     """
     return (
         turns.withWatermark("ts", watermark)
@@ -563,7 +572,6 @@ def incremental_feature_job(
     turns: DataFrame,
     writer_root: str,
     checkpoint_dir: str,
-    gap_seconds: int = 1800,
 ) -> Any:
     """foreachBatch bridge into the idempotent snapshot writer: batch id ==
     snapshot id, so a replayed micro-batch is a no-op commit (exactly-once
@@ -574,10 +582,8 @@ def incremental_feature_job(
     writer = SnapshotWriter(writer_root)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df.withColumn(
-            "eventday", F.date_format(F.col("ts").cast("timestamp"), "yyyyMMdd")
-        )
-        writer.commit(out, snapshot_id=f"batch-{batch_id:012d}",
+        writer.commit(batch_df.withColumn("eventday", eventday("ts")),
+                      snapshot_id=f"batch-{batch_id:012d}",
                       partition_cols=["eventday"])
 
     return (

@@ -215,7 +215,12 @@ def ensure_fixture(sf: float, mean_turns: int = 20, seed: int = 42) -> str:
 def write_parquet(df: pd.DataFrame, path: str, row_group_size: int = 100_000) -> None:
     """Small row groups on purpose: parquet scans parallelize at row-group
     granularity, and one giant row group serializes the whole scan stage
-    (pyarrow's 1M-row default caps a 3M-row file at ~3 scan tasks)."""
+    (pyarrow's 1M-row default caps a 3M-row file at ~3 scan tasks).
+
+    Timestamps are stored in microseconds: Spark refuses parquet
+    ``TIMESTAMP(NANOS)``, which a pandas ``datetime64[ns]`` column would
+    otherwise become. A value with sub-microsecond digits raises rather
+    than being truncated."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -223,6 +228,7 @@ def write_parquet(df: pd.DataFrame, path: str, row_group_size: int = 100_000) ->
         pa.Table.from_pandas(df, preserve_index=False),
         path,
         row_group_size=row_group_size,
+        coerce_timestamps="us",
     )
 
 

@@ -41,8 +41,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description=__doc__)
@@ -101,24 +99,20 @@ def main(argv=None) -> int:
     out, strategy = asof_join_skinny_auto(probe, log, sources, strict=args.strict)
 
     if args.output:
+        from amazon_security_lake_transformation_library_spark.functions.timeops import (
+            eventday,
+        )
         from amazon_security_lake_transformation_library_spark.plans.writer import (
             SnapshotWriter, new_snapshot_id,
         )
 
         writer = SnapshotWriter(args.output)
         snap = args.snapshot_id or new_snapshot_id()
-        stamped = out.withColumn(
-            "eventday", F.date_format(F.col("ts").cast("timestamp"), "yyyyMMdd")
-        )
         committed = writer.commit(
-            stamped, snapshot_id=snap, partition_cols=["eventday"]
+            out.withColumn("eventday", eventday("ts")), snapshot_id=snap,
+            partition_cols=["eventday"],
         )
-        mf = writer.manifest(spark)
-        n_rows = (
-            mf.filter(F.col("snapshot_id") == snap)
-            .agg(F.sum("row_count")).collect()[0][0]
-            or 0  # empty output commits no manifest rows -> sum is NULL
-        )
+        n_rows = writer.row_count(snap)
         print(f"snapshot={snap} committed={committed}", file=sys.stderr)
     else:
         n_rows = out.count()

@@ -6,8 +6,9 @@ Usage (cluster):
         --input /path/transcripts --features /path/conv_features \
         --output /path/turn_features --gap-seconds 1800
 
-Sandbox stand-in for N vs 4N executors: run identical input with
---master local[8] vs local[32] (see tools/bench_scaling.py).
+The job takes no --master option. For N vs 4N executors, run
+tools/bench_scaling.py: it launches the same feature build on identical
+input at local[8] and local[32], each level in its own process.
 
 With --features the feature+as-of block runs through
 ``fused.asof_turn_features_hybrid``, which plans the plain single-Exchange
@@ -30,8 +31,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description=__doc__)
@@ -52,12 +51,15 @@ def parse_args(argv=None):
 def main(argv=None) -> int:
     args = parse_args(argv)
 
+    from amazon_security_lake_transformation_library_spark.functions.timeops import eventday
     from amazon_security_lake_transformation_library_spark.operators.features import build_turn_features
     from amazon_security_lake_transformation_library_spark.operators.fused import (
         asof_turn_features_hybrid,
     )
     from amazon_security_lake_transformation_library_spark.operators.salted import time_chunk
-    from amazon_security_lake_transformation_library_spark.plans.writer import SnapshotWriter
+    from amazon_security_lake_transformation_library_spark.plans.writer import (
+        SnapshotWriter, new_snapshot_id,
+    )
     from amazon_security_lake_transformation_library_spark.session import get_spark
     from amazon_security_lake_transformation_library_spark.synth.transcripts import (
         gen_conv_features, gen_transcripts, write_parquet,
@@ -89,12 +91,9 @@ def main(argv=None) -> int:
         featd = build_turn_features(transcripts, gap_seconds=args.gap_seconds)
 
     if args.output:
-        from amazon_security_lake_transformation_library_spark.plans.writer import new_snapshot_id
         writer = SnapshotWriter(args.output)
         snap = args.snapshot_id or new_snapshot_id()
-        out = featd.withColumn(
-            "eventday", F.date_format(F.col("ts").cast("timestamp"), "yyyyMMdd")
-        )
+        out = featd.withColumn("eventday", eventday("ts"))
         committed = writer.commit(
             out,
             snapshot_id=snap,
@@ -103,12 +102,7 @@ def main(argv=None) -> int:
             n_buckets=args.buckets,
             sort_cols=["conv_id", "ts", "turn_idx"] if args.buckets else (),
         )
-        mf = writer.manifest(spark)
-        n_rows = (
-            mf.filter(F.col("snapshot_id") == snap)
-            .agg(F.sum("row_count")).collect()[0][0]
-            or 0  # empty output commits no manifest rows -> sum is NULL
-        )
+        n_rows = writer.row_count(snap)
         print(f"snapshot={snap} committed={committed}", file=sys.stderr)
     else:
         n_rows = featd.count()

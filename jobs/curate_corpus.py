@@ -158,11 +158,7 @@ def main(argv=None) -> int:
         out = w.read(spark).filter(F.col("snapshot_id") == run_id).drop(
             "snapshot_id"
         )
-        n = (
-            w.manifest(spark).filter(F.col("snapshot_id") == run_id)
-            .agg(F.sum("row_count")).collect()[0][0] or 0
-        )
-        metrics[name] = {"rows": int(n), "resumed": skipped}
+        metrics[name] = {"rows": w.row_count(run_id), "resumed": skipped}
         return out
 
     # ---- s1: exact dedup ------------------------------------------------

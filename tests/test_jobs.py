@@ -1,6 +1,7 @@
 """spark-submit job entries run in-process end-to-end: synth input,
-SnapshotWriter output, manifest-read row counts, idempotent re-commit,
-and the plan the K-feature assembly job's chooser takes."""
+SnapshotWriter output, row counts read from the manifest with
+``SnapshotWriter.row_count``, idempotent re-commit and resume, and the
+plan the K-feature assembly job's chooser takes."""
 
 from __future__ import annotations
 
@@ -18,6 +19,54 @@ def test_build_features_job_runs(spark, tmp_path, capsys):
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["rows"] > 0 and out["turns_per_sec"] > 0
+
+
+def test_build_features_job_resume_reports_committed_rows(spark, tmp_path, capsys):
+    """A re-run with the same --snapshot-id is a no-op commit: it reports
+    the rows the first run committed, read back from the manifest, and
+    writes no new manifest file."""
+    import os
+
+    from jobs.build_features import main
+
+    root = tmp_path / "bf"
+    runs = []
+    for _ in range(2):
+        assert main(["--synth", "30", "--output", str(root),
+                     "--snapshot-id", "s1"]) == 0
+        out, err = capsys.readouterr()
+        runs.append((json.loads(out.strip().splitlines()[-1])["rows"], err,
+                     sorted(os.listdir(root / "_manifest"))))
+    (rows1, err1, files1), (rows2, err2, files2) = runs
+    assert "committed=True" in err1 and "committed=False" in err2
+    assert rows2 == rows1 > 0
+    assert files2 == files1
+
+
+def test_write_parquet_nanosecond_frame_reads_in_spark(spark, tmp_path):
+    """pandas arithmetic gives datetime64[ns]; write_parquet stores it in
+    microseconds, which Spark reads (it refuses TIMESTAMP(NANOS)), and
+    raises instead of truncating a sub-microsecond value."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from amazon_security_lake_transformation_library_spark.synth.transcripts import (
+        write_parquet,
+    )
+
+    base = pd.Timestamp("2026-01-01")
+    pdf = pd.DataFrame({"k": [1, 2],
+                        "ts": base + pd.to_timedelta(np.arange(2) * 7, unit="s")})
+    assert pdf["ts"].dtype == "datetime64[ns]"
+    path = str(tmp_path / "ns.parquet")
+    write_parquet(pdf, path)
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, base.to_pydatetime()),
+                   (2, (base + pd.Timedelta(seconds=7)).to_pydatetime())]
+    with pytest.raises(pa.ArrowInvalid):
+        write_parquet(pdf.assign(ts=pdf["ts"] + pd.Timedelta(nanoseconds=1)),
+                      str(tmp_path / "sub_us.parquet"))
 
 
 def _assemble_inputs(tmp_path, plan):
@@ -53,8 +102,6 @@ def _assemble_inputs(tmp_path, plan):
             "ts": base + pd.to_timedelta(np.arange(n_probe) * 3, unit="s"),
             "probe_id": np.arange(n_probe, dtype="int64"),
         })
-        probe["ts"] = probe["ts"].astype("datetime64[us]")
-        log["ts"] = log["ts"].astype("datetime64[us]")
     paths = (str(tmp_path / "probe.parquet"), str(tmp_path / "log.parquet"))
     write_parquet(probe, paths[0])
     write_parquet(log, paths[1])

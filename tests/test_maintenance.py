@@ -10,11 +10,15 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from amazon_security_lake_transformation_library_spark.plans import maintenance as mx
-from amazon_security_lake_transformation_library_spark.plans.writer import SnapshotWriter
+from amazon_security_lake_transformation_library_spark.plans.writer import (
+    SnapshotWriter,
+    read_log,
+)
 
 
 def _writer_with(spark, tmp_path, n_files=16, partition_cols=()):
@@ -43,8 +47,8 @@ def test_compact_preserves_rows_and_shrinks_files(spark, tmp_path):
     assert w.committed_snapshots(spark) == {"s1"}
     assert w.read_at(spark, "s1").count() == 10_000
     # maintenance log records the rewrite
-    log = mx._read_log(w, spark, "_maintenance")
-    assert log.filter(F.col("op") == "compact").count() == 1
+    log = read_log(os.path.join(w.root, "_maintenance"), pa.schema([("op", pa.string())]))
+    assert log["op"].to_pylist().count("compact") == 1
 
 
 def test_compact_partitioned_packs_within_partitions(spark, tmp_path):
@@ -316,7 +320,7 @@ def test_compact_zorder_clusters_files(spark, tmp_path):
     stats = mx.compact(
         w, spark, "s1",
         target_bytes_per_file=os.path.getsize(
-            next(iter(mx._parquet_files(mx._snapshot_dir(w, "s1"))))
+            next(iter(mx._parquet_files(w.snapshot_dir("s1"))))
         ),  # ~16 output files -> ~16x16 Z tiles
         zorder_cols=("x", "y"), zorder_bits=6,
     )
@@ -365,7 +369,7 @@ def test_compact_zorder_partitioned_within_partitions(spark, tmp_path):
     after = spark.read.parquet(w.data_path)
     assert after.orderBy("v").collect() == before
     # hive partition dirs survive (pruning untouched)
-    snap = mx._snapshot_dir(w, "s1")
+    snap = w.snapshot_dir("s1")
     assert sorted(
         d for d in os.listdir(snap) if d.startswith("grp=")
     ) == ["grp=0", "grp=1"]

@@ -30,6 +30,7 @@ def test_empty_snapshot_commit(spark, tmp_path):
     e = spark.createDataFrame([], "a long, b string")
     assert w.commit(e, snapshot_id="s0") is True
     assert w.commit(e, snapshot_id="s0") is False        # replay no-op
+    assert w.row_count("s0") == 0
     assert w.read(spark).count() == 0
     assert w.commit(
         spark.createDataFrame([(1, "x")], "a long, b string"),
@@ -198,6 +199,32 @@ def test_commit_runs_only_the_data_write(spark, tmp_path):
     assert _jobs_run(spark, lambda: w.commit(df, "s2")) == (True, 1)
     assert _jobs_run(spark, lambda: w.commit(df, "s1")) == (False, 0)
     assert w.read(spark).count() == 20
+
+
+def test_metadata_reads_run_no_spark_job(spark, tmp_path):
+    """Row counts, the committed set, expiry and read_at's visibility and
+    schema are answered on the driver: none of them starts a Spark job.
+    row_count equals the manifest's sum for a partitioned, a zero-row and
+    a replayed (no-op) commit."""
+    w = SnapshotWriter(str(tmp_path / "tbl"))
+    df = spark.range(40).select(
+        F.col("id").alias("v"), (F.col("id") % 4).cast("string").alias("day"))
+    assert w.commit(df, "s1", partition_cols=["day"])
+    assert w.commit(df.filter(F.lit(False)), "s2", partition_cols=["day"])
+    assert w.commit(df.filter(F.col("v") < 10), "s3", partition_cols=["day"])
+    assert not w.commit(df.filter(F.col("v") < 5), "s1", partition_cols=["day"])
+    sums = {r[0]: r[1] for r in
+            w.manifest(spark).groupBy(SNAPSHOT_COL).sum("row_count").collect()}
+    assert sums == {"s1": 40, "s2": 0, "s3": 10}
+    for sid, n in sums.items():
+        assert _jobs_run(spark, lambda: w.row_count(sid)) == (n, 0)
+    assert _jobs_run(spark, lambda: w.committed_snapshots(spark)) == (set(sums), 0)
+    assert _jobs_run(spark, lambda: mx.expire_snapshots(w, spark, keep_last=2)) == (
+        ["s1"], 0)
+    assert _jobs_run(spark, lambda: mx.expired_snapshots(w, spark)) == ({"s1"}, 0)
+    at_s2, jobs = _jobs_run(spark, lambda: w.read_at(spark, "s2"))
+    assert jobs == 0
+    assert at_s2.count() == 40
 
 
 # ------------------------------------------------ crash safety and old tables
