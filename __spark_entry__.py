@@ -45,13 +45,6 @@ from amazon_security_lake_transformation_library_spark.synth import transcripts 
 
 GAP_S = 1800
 QUERY_VEC_IDS = list(range(10))
-# hybrid router threshold for the synthesized flagship fixture. The
-# hottest conversation has 80 turns at sf0.001 and 831 at sf0.01, so the
-# sf0.01 gate routes it (both paths exercised) while sf0.001 plans the
-# unrouted block. TEST THRESHOLD ONLY — the library default
-# (fused.asof_turn_features_hybrid hot_threshold_rows=1M) is the
-# scale-sane per-task row budget.
-HYBRID_HOT_ROWS = 500
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -341,11 +334,10 @@ def _q_asof_skinny_iv(spark, sf_dir):
 
 
 def _q_asof_skinny_routed(spark, sf_dir):
-    """Fourth physical strategy over the same oracle: the hot/tail
-    router (asof_join_skinny_routed, §7.15) — entities with many change
-    points take the union path, the tail keeps the interval SMJ. A low
-    threshold forces BOTH branches to carry rows at sf0.01, so the gate
-    exercises the split+union, not just one side."""
+    """Fourth physical strategy over the same oracle: the skinny
+    router's routed plan (§7.15). Per-user change points span 22-56,
+    median 39: naming the users with at least 39 puts ~half the entities
+    on EACH branch (union path, interval SMJ) at both scales."""
     ev = _t(spark, sf_dir, "events")
     probe = ev.select("event_id", "user_id", "ts")
     w = Window.partitionBy("event_type", "user_id", "ts").orderBy(
@@ -358,12 +350,12 @@ def _q_asof_skinny_routed(spark, sf_dir):
                 F.row_number().over(w).alias("__rn"))
         .filter(F.col("__rn") == 1).drop("__rn")
     )
-    out = asof_ops.asof_join_skinny_routed(
-        probe, log, sources=["purchase", "error", "click"],
+    b = log.groupBy("user_id").agg(F.count_distinct("ts").alias("b"))
+    hot = [r[0] for r in b.filter("b >= 39").collect()]
+    out, _ = asof_ops._skinny_routed(
+        probe, log, ["purchase", "error", "click"], hot,
         source_col="event_type", value_col="val", on="user_id", ts="ts",
-        # the fixture's per-user change-point counts span 22-56 with
-        # median 39: threshold 39 puts ~half the entities on EACH branch
-        hot_threshold_changes=39,
+        strict=False, asof_ts_suffix="_asof_ts",
     )
     return out.select(
         "event_id", "user_id",
@@ -1020,6 +1012,12 @@ def _flagship_inputs(spark, sf_dir):
     )
 
 
+def _hottest_conv(t: DataFrame) -> list:
+    # 80 turns at sf0.001, 831 at sf0.01: the routed queries name it
+    return [t.groupBy("conv_id").count()
+            .orderBy(F.desc("count"), "conv_id").first()["conv_id"]]
+
+
 def _q_flagship_transcripts(spark, sf_dir):
     # North-star flagship: the fused single-window block (ONE Exchange +
     # Sort for lag/lead, ffill, sessionize, cumsum AND the as-of join —
@@ -1044,13 +1042,10 @@ def _q_flagship_bucketed(spark, sf_dir):
     bucketed.ensure_flagship_tables(
         spark, t, cf, tt, ct, path_root=f"/tmp/spark_graft_bucketed/{tag}"
     )
-    # hot_threshold_rows=HYBRID_HOT_ROWS (test threshold, see its comment):
-    # the hottest conversation (831 turns) exceeds it at sf0.01, so that
-    # gate verifies the ROUTED plan (cold zero-Exchange SMJ unioned with
-    # the salted hot slice) against the same DuckDB oracle; at sf0.001
-    # (80 turns) it verifies the unrouted zero-Exchange plan.
-    return bucketed.flagship_bucketed(
-        spark, tt, ct, gap_seconds=GAP_S, hot_threshold_rows=HYBRID_HOT_ROWS
+    # The routed plan (zero-Exchange SMJ tail + salted hot slice), hottest
+    # conversation named; tests/test_plans_quality.py pins the unrouted one.
+    return bucketed._flagship_bucketed_routed(
+        spark, tt, ct, _hottest_conv(t), gap_seconds=GAP_S
     )
 
 
@@ -1064,13 +1059,12 @@ def _q_flagship_salted(spark, sf_dir):
 
 
 def _q_flagship_hybrid(spark, sf_dir):
-    # Skew router: hot conv_ids (pre-pass count) -> salted path, Pareto
-    # tail -> plain path; identical output, no salted constant factor on
-    # the tail, no single-task floor on the hot entity.
+    # Skew router's routed plan: the hottest conversation -> salted
+    # chunks, the tail -> one constant chunk; identical output.
     t, cf = _flagship_inputs(spark, sf_dir)
-    return fused_ops.asof_turn_features_hybrid(
-        t, cf, time_chunk(chunk_seconds=6 * 3600),
-        hot_threshold_rows=HYBRID_HOT_ROWS, gap_seconds=GAP_S,
+    return fused_ops._asof_turn_features_routed(
+        t, cf, time_chunk(chunk_seconds=6 * 3600), _hottest_conv(t),
+        gap_seconds=GAP_S,
     )
 
 
@@ -3497,7 +3491,8 @@ def _kcore_oracle_sql(rounds: int = 4, k: int = 4) -> str:
     pagerank unroll pattern): round i computes degrees of e{i-1} and
     keeps edges whose BOTH endpoints are strong. The fixture converges
     in 2 rounds at any N (simulated); ``rounds=4`` leaves margin and a
-    fixpoint-verification round."""
+    fixpoint-verification round. Every round is ``AS MATERIALIZED``:
+    inlined, each round re-evaluates all the rounds before it."""
     parts = ["""
         ids AS (SELECT doc_id FROM documents),
         core AS (SELECT doc_id FROM ids WHERE doc_id % 10 < 2),
@@ -3514,14 +3509,14 @@ def _kcore_oracle_sql(rounds: int = 4, k: int = 4) -> str:
           UNION ALL SELECT doc_id, doc_id - doc_id % 10 + 3 FROM ids
             WHERE doc_id % 10 >= 6
         ),
-        e0 AS (SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
+        e0 AS MATERIALIZED (SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
                FROM raw WHERE s <> t)"""]
     for i in range(1, rounds + 1):
         parts.append(f"""
-        d{i} AS (SELECT n, count(*) AS d FROM (
+        d{i} AS MATERIALIZED (SELECT n, count(*) AS d FROM (
             SELECT a AS n FROM e{i - 1} UNION ALL SELECT b FROM e{i - 1}
           ) GROUP BY 1),
-        e{i} AS (SELECT a, b FROM e{i - 1}
+        e{i} AS MATERIALIZED (SELECT a, b FROM e{i - 1}
                  WHERE a IN (SELECT n FROM d{i} WHERE d >= {k})
                    AND b IN (SELECT n FROM d{i} WHERE d >= {k}))""")
     final = rounds

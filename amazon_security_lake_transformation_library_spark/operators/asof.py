@@ -47,8 +47,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked
 from ..functions.timeops import epoch_seconds
+from .salted import UNION_FLOOR, hot_entities, in_hot
 
 _B = "__asof_payload"
 _SIDE = "__asof_side"
@@ -493,45 +493,38 @@ def asof_join_over_intervals(
 # quarter of the probe's rows. It reads §7.12's "interval form when the
 # probe is >> the log" as 4x; no measurement has tuned it.
 SINGLE_PASS_LOG_RATIO = 0.25
-# Change points from which the router sends an entity to the union form:
-# the job's ``--hot-threshold`` default, the value §7.15's harness ran.
-HOT_CHANGE_POINTS = 1024
-# Hot keys above which the router's splits shuffle instead of
-# broadcasting the key set (a guard against a driver-sized hot set).
-HOT_BROADCAST_LIMIT = 1_000_000
 
 
 def _skinny_routed(
     probe: DataFrame,
     log: DataFrame,
     sources: Sequence[str],
-    hot_threshold_changes: int,
+    hot: Sequence,
     **kw,
 ) -> tuple[DataFrame, str]:
-    """:func:`asof_join_skinny_routed`'s body; also names the plan it
-    took (``"intervals"`` or ``"routed"``) for the chooser. ``kw`` holds
-    every :func:`asof_join_skinny` keyword."""
-    on, ts = kw["on"], kw["ts"]
-    lg = log.filter(F.col(kw["source_col"]).isin(list(sources)))
-    hot_keys = persist_tracked(
-        lg.groupBy(on)
-        .agg(F.count_distinct(F.col(ts)).alias("__b"))
-        .filter(F.col("__b") >= F.lit(hot_threshold_changes))
-        .select(on)
-    )
-    n_hot = hot_keys.count()
-    if n_hot == 0:
+    """The routed plan for the named ``hot`` entities and its name:
+    ``"intervals"`` (none named: :func:`asof_join_skinny_intervals`) or
+    ``"routed"``, split by key-list filters (two filtered probe scans, no
+    shuffle). ``kw`` holds every :func:`asof_join_skinny` keyword."""
+    if not hot:
         return asof_join_skinny_intervals(probe, log, sources, **kw), "intervals"
-    hot = hot_keys if n_hot > HOT_BROADCAST_LIMIT else F.broadcast(hot_keys)
+    is_hot = in_hot(kw["on"], hot)
+    lg = log.filter(F.col(kw["source_col"]).isin(list(sources)))
     out_hot = asof_join_skinny(
-        probe.join(hot, on, "left_semi"), lg.join(hot, on, "left_semi"),
-        sources, **kw,
+        probe.filter(is_hot), lg.filter(is_hot), sources, **kw
     )
     out_tail = asof_join_skinny_intervals(
-        probe.join(hot, on, "left_anti"), lg.join(hot, on, "left_anti"),
-        sources, **kw,
+        probe.filter(~is_hot), lg.filter(~is_hot), sources, **kw
     )
     return out_tail.unionByName(out_hot), "routed"
+
+
+def _skinny_hot(probe_rows: int, log: DataFrame, sources, **kw) -> list:
+    """The pre-pass over the LOG only: ``n_e`` is the entity's change
+    points ``b_e``, and ``probe_rows`` spread over them estimate ``p_e``."""
+    lg = log.filter(F.col(kw["source_col"]).isin(list(sources)))
+    b = F.count_distinct(F.col(kw["ts"]))
+    return hot_entities(lg, kw["on"], UNION_FLOOR, b, probe_rows)
 
 
 def asof_join_skinny_routed(
@@ -544,39 +537,19 @@ def asof_join_skinny_routed(
     ts: str = "ts",
     strict: bool = False,
     asof_ts_suffix: str = "_asof_ts",
-    hot_threshold_changes: int = HOT_CHANGE_POINTS,
 ) -> DataFrame:
-    """Hot-entity-safe K-feature assembly: route each entity to the
-    strategy whose cost model it fits, then union the (identically
-    shaped) results.
-
-    The interval SMJ (:func:`asof_join_skinny_intervals`) keeps the
-    probe shuffle-free but pays O(p_e × b_e) band comparisons per
-    entity — measured catastrophic on hot conversations (BASELINE.md
-    §7.13: one 136k-probe × 45k-interval conversation ran its shard
-    10× longer than its peers). The union+window form
-    (:func:`asof_join_skinny`) is O((p_e + b_e) log) per entity but
-    shuffles the probe. So: entities whose CHANGE-POINT count ``b_e``
-    reaches ``hot_threshold_changes`` take the union path; the tail —
-    virtually the whole corpus — keeps the interval path. The router's
-    pre-pass aggregates the LOG only (b_e is the per-probe-row band
-    multiplier, observable without touching the probe table). This is
-    the same enforce-don't-document rule the flagship bucketed path
-    adopted in §7.4.
-
-    The hot-key set is persisted and counted once. No hot key: the
-    result is :func:`asof_join_skinny_intervals` on the unsplit inputs,
-    with no semi/anti joins. Otherwise the set is broadcast for the
-    semi/anti splits — the probe-side cost of routing is two
-    broadcast-filtered scans and no shuffle — unless it holds more than
-    ``HOT_BROADCAST_LIMIT`` keys, where the splits fall back to shuffle
-    joins.
-    """
-    return _skinny_routed(
-        probe, log, sources, hot_threshold_changes,
+    """Hot-entity-safe K-feature assembly: the entities that
+    ``salted.hot_entities`` calls hot take the union+window path
+    (:func:`asof_join_skinny`, O((p_e + b_e) log) per entity), the tail
+    keeps the shuffle-free interval SMJ (:func:`asof_join_skinny_intervals`,
+    O(p_e × b_e) per entity: BASELINE.md §7.13's 10× shard); with none,
+    the plain interval plan. Costs a probe count and a log pre-pass."""
+    kw = dict(
         source_col=source_col, value_col=value_col, on=on, ts=ts,
         strict=strict, asof_ts_suffix=asof_ts_suffix,
-    )[0]
+    )
+    hot = _skinny_hot(probe.count(), log, sources, **kw)
+    return _skinny_routed(probe, log, sources, hot, **kw)[0]
 
 
 def asof_join_skinny_auto(
@@ -591,15 +564,15 @@ def asof_join_skinny_auto(
     asof_ts_suffix: str = "_asof_ts",
 ) -> tuple[DataFrame, str]:
     """The K-feature assembly's one front door: pick the plan from row
-    counts and the log's hot change points, and return it with its name.
+    counts and the log's hot entities, and return it with its name.
 
     * ``"single_pass"`` — :func:`asof_join_skinny`, when the log holds at
       least ``SINGLE_PASS_LOG_RATIO`` of the probe's rows. The union form
       is already hot-safe: O((p + b) log) per entity.
-    * otherwise :func:`asof_join_skinny_routed` at ``HOT_CHANGE_POINTS``:
-      ``"intervals"`` when no entity reaches it (the plain
-      :func:`asof_join_skinny_intervals` plan), ``"routed"`` when some
-      do (BASELINE.md §7.15's 11x hot-shard fix).
+    * otherwise :func:`asof_join_skinny_routed`: ``"intervals"`` when the
+      hot-entity rule names no entity (the plain
+      :func:`asof_join_skinny_intervals` plan), ``"routed"`` when it
+      names some (BASELINE.md §7.15's 11x hot-shard fix).
 
     Costs two row counts, plus the router's one log-sized pre-pass when
     the log is the smaller side. Output as :func:`asof_join_skinny`.
@@ -608,6 +581,8 @@ def asof_join_skinny_auto(
         source_col=source_col, value_col=value_col, on=on, ts=ts,
         strict=strict, asof_ts_suffix=asof_ts_suffix,
     )
-    if log.count() >= SINGLE_PASS_LOG_RATIO * probe.count():
+    probe_rows = probe.count()
+    if log.count() >= SINGLE_PASS_LOG_RATIO * probe_rows:
         return asof_join_skinny(probe, log, sources, **kw), "single_pass"
-    return _skinny_routed(probe, log, sources, HOT_CHANGE_POINTS, **kw)
+    hot = _skinny_hot(probe_rows, log, sources, **kw)
+    return _skinny_routed(probe, log, sources, hot, **kw)

@@ -17,7 +17,7 @@ model.
 Skew: ``Window.partitionBy(conv_id)`` puts a whole hot conversation in one
 task and AQE cannot split it. :mod:`.salted` provides chunk-and-carry
 variants for cumulative features (forward-fill / running sums) that split
-a hot entity across tasks; use them when a single entity exceeds ~10^7 rows.
+a hot entity across tasks; its hot-entity rule decides when they pay.
 """
 
 from __future__ import annotations

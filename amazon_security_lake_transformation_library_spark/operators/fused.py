@@ -32,11 +32,9 @@ sort work, which is exactly the term that dominated the N->4N scaling gap
 The salted variant applies the chunk-and-carry decomposition
 (``salted`` module docstring) to the union frame, so even the as-of fill
 of a hot conversation (10% of all rows) spreads across tasks.
-:func:`asof_turn_features_hybrid` is the block's one front door: a
-pre-pass hash count finds the hot entities; with none it returns the
-plain plan, otherwise it routes hot entities down the salted chunks and
-the long tail down one constant chunk — skew-proof without paying the
-salted constant factor on unskewed data.
+:func:`asof_turn_features_hybrid` is the block's one front door: the
+entities ``salted.hot_entities`` names go down the salted chunks, the
+long tail down one constant chunk; with none, the plain plan.
 
 Reference analog: none — the reference has no joins or windows at all
 (SURVEY.md §2.B); this is the north-rule engine core.
@@ -50,7 +48,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.timeops import epoch_seconds
-from .salted import hot_entities
+from .salted import WINDOW_FLOOR, hot_entities, in_hot
 
 _SIDE = "__side"
 _B = "__asof_payload"
@@ -73,30 +71,19 @@ def _union_frame(
     build_cols: Sequence[str],
     strict: bool,
     asof_ts_col: str,
-    shared: Sequence[str] = (),
 ) -> DataFrame:
     """Tag-union both sides with aligned schemas. ``build`` must be unique
-    per (entity, ts) — same contract as ``asof.asof_join``. ``shared``
-    names probe columns that ``build`` ALSO carries (e.g. an entity-level
-    routing flag): they union through as real values on both sides instead
-    of being nulled on the build side — required when the chunk expression
-    reads them (build rows must land in the same chunk sequence as their
-    entity's probe rows or the as-of carry would read the future)."""
+    per (entity, ts) — same contract as ``asof.asof_join``."""
     payload = F.struct(
         F.col(ts).alias(asof_ts_col), *[F.col(c) for c in build_cols]
     ).alias(_B)
-    shared_set = set(shared)
     probe_rest = [c for c in probe.columns if c not in {entity, ts}]
     build_side = build.select(
         F.col(entity),
         F.col(ts),
         F.lit(2 if strict else 0).alias(_SIDE),
         payload,
-        *[
-            F.col(c) if c in shared_set
-            else F.lit(None).cast(probe.schema[c].dataType).alias(c)
-            for c in probe_rest
-        ],
+        *[F.lit(None).cast(probe.schema[c].dataType).alias(c) for c in probe_rest],
     )
     probe_side = probe.select(
         F.col(entity),
@@ -202,7 +189,6 @@ def asof_turn_features_salted(
     role_col: str = "role",
     tool_col: str = "tool",
     turn_col: str = "turn_idx",
-    shared_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Hot-entity-safe fused block: chunk-and-carry over the union frame,
     so lag/lead/ffill/sessionize AND the as-of fill of a hot conversation
@@ -214,13 +200,14 @@ def asof_turn_features_salted(
     ``chunk`` must be an order-respecting function of ``ts`` per entity
     (e.g. ``salted.time_chunk``, or a per-entity conditional over it — see
     the hybrid) so that equal-ts build/probe ties never split across
-    chunks; any non-ts columns it reads must be listed in ``shared_cols``
-    and be present on BOTH inputs.
+    chunks; besides ``ts`` it may read only the entity column, which both
+    inputs carry (a build row must land in its entity's chunk sequence or
+    the as-of carry would read the future).
     """
     u = (
         _union_frame(
             transcripts, conv_features, entity, ts, list(build_cols), strict,
-            asof_ts_col, shared=shared_cols,
+            asof_ts_col,
         )
         .withColumn(_CHUNK, chunk)
         .withColumn(_CK, F.xxhash64(F.col(entity)))
@@ -429,48 +416,56 @@ def asof_turn_features_hybrid(
     transcripts: DataFrame,
     conv_features: DataFrame,
     chunk: Column,
-    hot_threshold_rows: int = 1_000_000,
     gap_seconds: int = 1800,
     entity: str = "conv_id",
     ts: str = "ts",
     build_cols: Sequence[str] = ("feature_val",),
     **kw,
 ) -> DataFrame:
-    """The flagship block's front door. Entities above
-    ``hot_threshold_rows`` get time-chunked (chunk-and-carry spreads them
-    across tasks), the long tail gets a single constant chunk — for which
-    the chunk machinery degenerates to the plain fused semantics (one
-    chunk == one window partition, empty carries). One extra hash-agg
-    pre-pass over the probe side (map-side partials, tiny result,
-    broadcast) picks the plan: when it finds no hot entity the block is
-    :func:`asof_turn_features` itself (1 Exchange + 1 Sort instead of the
-    routed plan's chunk-and-carry machinery).
-
-    r3 one-pipeline form: the r2 router split rows into TWO full pipelines
-    (plain on the tail + salted on the hot slice + union), which scanned
-    and shuffled the big table twice — measured SLOWER than plain-with-
-    floor at sandbox scale (87s vs 43s at 1 executor). Routing at the
-    chunk EXPRESSION keeps one scan and one big-table shuffle; the hot
-    flag unions through both sides (``shared_cols``) so a hot entity's
-    build rows land in the same chunk sequence as its probe rows.
-
-    Output is identical to :func:`asof_turn_features` on the whole input
+    """The flagship block's front door: with no entity the window rule
+    calls hot (``salted.hot_entities``: more than ``WINDOW_FACTOR / cores``
+    of the turns and at least ``WINDOW_FLOOR``), the block is
+    :func:`asof_turn_features` itself (1 Exchange + 1 Sort), otherwise
+    :func:`_asof_turn_features_routed`; the same rows either way
     (property-tested).
     """
-    hot = hot_entities(transcripts, entity, hot_threshold_rows).select(
-        entity, F.lit(True).alias("__hot")
-    )
-    if not hot.take(1):
+    hot = hot_entities(transcripts, entity, WINDOW_FLOOR)
+    if not hot:
         return asof_turn_features(
             transcripts, conv_features, gap_seconds, entity, ts, build_cols, **kw
         )
-    t = transcripts.join(F.broadcast(hot), entity, "left")
-    cf = conv_features.join(F.broadcast(hot), entity, "left")
+    return _asof_turn_features_routed(
+        transcripts, conv_features, chunk, hot, gap_seconds=gap_seconds,
+        entity=entity, ts=ts, build_cols=build_cols, **kw
+    )
+
+
+def _asof_turn_features_routed(
+    transcripts: DataFrame,
+    conv_features: DataFrame,
+    chunk: Column,
+    hot: Sequence,
+    entity: str = "conv_id",
+    **kw,
+) -> DataFrame:
+    """The routed block for the named ``hot`` entities (``kw``: every
+    :func:`asof_turn_features_salted` keyword): they get time-chunked
+    (chunk-and-carry spreads them across tasks), the long tail gets a
+    single constant chunk — for which the chunk machinery degenerates to
+    the plain fused semantics (one chunk == one window partition, empty
+    carries).
+
+    One-pipeline form: the r2 router split rows into TWO full pipelines
+    (plain on the tail + salted on the hot slice + union), which scanned
+    and shuffled the big table twice — measured SLOWER than plain-with-
+    floor at 1 executor (87 s vs 43 s). Routing at the
+    chunk EXPRESSION keeps one scan and one big-table shuffle; the
+    expression reads only the entity, so a hot entity's build rows land
+    in the same chunk sequence as its probe rows.
+    """
     cond_chunk = (
-        F.when(F.col("__hot"), chunk).otherwise(F.lit(0)).cast("long")
+        F.when(in_hot(entity, hot), chunk).otherwise(F.lit(0)).cast("long")
     )
-    out = asof_turn_features_salted(
-        t, cf, cond_chunk, gap_seconds, entity, ts, build_cols,
-        shared_cols=("__hot",), **kw
+    return asof_turn_features_salted(
+        transcripts, conv_features, cond_chunk, entity=entity, **kw
     )
-    return out.drop("__hot")

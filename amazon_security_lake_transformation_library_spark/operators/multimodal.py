@@ -43,12 +43,6 @@ DECODE_META_SCHEMA = T.StructType(
 )
 
 
-def _meta_from_bytes(n: int) -> tuple[int, int, int]:
-    # Deterministic fake: metadata as a pure function of payload length so
-    # the differential SQL oracle can recompute it engine-independently.
-    return 64 + n % 512, 64 + (n * 7) % 512, 1 + n % 8
-
-
 def fake_decode_meta(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:

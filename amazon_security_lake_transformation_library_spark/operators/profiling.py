@@ -1,8 +1,8 @@
 """Key-distribution diagnostics: the skew profile a pipeline operator
 (shuffle-keyed join, window, groupBy) needs BEFORE it runs at 100 TB.
 
-Every skew mitigation in this engine (salted flagship, hybrid router,
-adaptive hot-entity threshold in plans/bucketed.py) needs an input
+Every skew mitigation in this engine (salted flagship, the skew routers'
+hot-entity rule in operators/salted.py) needs an input
 statistic to act on. ``key_skew_profile`` computes that statistic as a
 first-class operator: per-key row counts reduced to one summary row —
 total rows, distinct keys, the max/p99/median key mass, the share held

@@ -290,12 +290,11 @@ def heavy_hitters(
 
     Scope note vs the skew router: this wins when the threshold is a
     FRACTION of the corpus (k = 1/min_frac counters; the broadcast
-    candidate set is <= k keys after the global merge). The router's absolute
-    per-task budget (hot_threshold_rows ~ 10^5 at N ~ 10^12) would need
-    k = N/threshold ~ 10^7 counters per partition — there the exact
-    map-side-combined groupBy pre-pass (salted.hot_entities) remains the
-    right plan; :func:`heavy_hitters_abs` refuses such thresholds rather
-    than silently ballooning (``max_k``).
+    candidate set is <= k keys after the global merge). The skew routers'
+    rule compares WORK (``n_e^2`` for the band joins), which a row-count
+    sketch does not bound, so salted.hot_entities stays an exact groupBy;
+    :func:`heavy_hitters_abs` refuses thresholds needing too many counters
+    rather than silently ballooning (``max_k``).
     """
     if not (0.0 < min_frac <= 1.0):
         raise ValueError(f"min_frac must be in (0, 1], got {min_frac}")

@@ -87,28 +87,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(norm)
 
 
-def quality_score_bp(text: Column) -> Column:
-    """Cheap quality score in basis points [0, 10000]: rewards mid-length
-    docs, low punct density, healthy stopword ratio and mean token length.
-    Weights are arbitrary-but-fixed; the point is a deterministic, fully-JVM
-    scoring pass a curation pipeline can threshold on.
-
-    Integer basis points (floor(x*10000 + 0.5)) rather than a rounded
-    double: ``round(double, n)`` semantics differ across engines on
-    decimal-fraction boundaries, while floor over identical IEEE doubles is
-    bit-deterministic — keeps the DuckDB differential oracle exact."""
-    ntok = token_count(text)
-    len_score = F.least(ntok / F.lit(64.0), F.lit(1.0))
-    mean_tok = F.length(text) / F.greatest(ntok, F.lit(1))
-    tok_score = F.when((mean_tok >= 3) & (mean_tok <= 10), 1.0).otherwise(0.5)
-    stop_score = F.least(stopword_ratio(text) * 4, F.lit(1.0))
-    raw = (
-        0.4 * len_score + 0.2 * tok_score + 0.2 * stop_score
-        + 0.2 * (1 - punct_ratio(text))
-    )
-    return F.floor(raw * 10000 + 0.5).cast("long")
-
-
 # ---------------------------------------------------------------- PII scrub
 
 # Shared-dialect regexes: character classes + bounded quantifiers +

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..operators.asof import asof_join_interval
 from ..operators.features import build_turn_features
 from ..operators.fused import _out_columns, asof_turn_features_salted
-from ..operators.salted import hot_entities, time_chunk
+from ..operators.salted import CARRY_FLOOR, hot_entities, in_hot, time_chunk
 
 
 def write_bucketed_table(
@@ -150,10 +150,7 @@ def flagship_bucketed(
     t_table: str,
     cf_table: str,
     gap_seconds: int = 1800,
-    hot_threshold_rows: int | None | str = "auto",
     chunk_seconds: int = 6 * 3600,
-    comparisons_budget: int = 1 << 28,
-    min_hot_threshold: int = 4096,
 ) -> DataFrame:
     """The full flagship block over bucketed-sorted tables with ZERO
     Exchange: window feature block + interval-form sort-merge as-of
@@ -164,85 +161,69 @@ def flagship_bucketed(
     same rows (column-for-column; pinned by tests/test_fused.py and
     test_plans_quality.py).
 
-    History: this path originally used a range join, whose per-entity
-    (probe x earlier-builds) enumeration materialized 22x the probe rows
-    on a 10M-turn input (226.9M intermediate rows) and went per-entity
-    QUADRATIC on hot conversations (a 10%-hot 9k-turn conversation turned
-    a 2 s job into 200+ s). The interval join removes the materialized
-    blowup; the SMJ still evaluates candidate pairs per entity as cheap
-    narrow comparisons, and bucketing cannot split an entity — so hot
-    entities are now ROUTED, not just documented: a one-hash-agg pre-pass
-    (salted.hot_entities — Exchange-free, the bucketed scan already hash-
-    partitions on conv_id) finds entities above ``hot_threshold_rows``;
-    the tail keeps the zero-Exchange SMJ plan (broadcast anti-join
-    preserves the scan's partitioning AND ordering), the hot slice runs
-    the chunk-and-carry salted pipeline, and the two branches union.
-    ``hot_threshold_rows=None`` disables the pre-pass (pure cold plan).
-    With no hot entities present the returned plan is byte-identical to
-    the unrouted one — the common case pays one tiny agg job, zero plan
-    change.
+    The interval SMJ still makes ``p_e x b_e`` narrow comparisons per
+    entity, and bucketing cannot split one, so the hot-entity pre-pass
+    (``salted.hot_entities``, band form, Exchange-free over the bucketed
+    turns) names the entities :func:`_flagship_bucketed_routed` sends
+    through chunk-and-carry; with none, the plan is the unrouted one."""
+    t, cf = _bucketed_scans(spark, t_table, cf_table)
+    hot = hot_entities(t, "conv_id", CARRY_FLOOR, band_rows=cf.count())
+    if not hot:
+        return _cold(t, cf, gap_seconds)
+    return _flagship_bucketed_routed(
+        spark, t_table, cf_table, hot, gap_seconds, chunk_seconds
+    )
 
-    ``hot_threshold_rows="auto"`` (the default since r5) derives the
-    threshold from the join's COST MODEL instead of a row-count
-    constant. The r4 constant (1M rows) missed an 81,325-turn
-    conversation that still serialized its task for ~14 s (BASELINE.md
-    §7.17's 0.746 cell): the interval SMJ's per-entity cost is
-    p_e x b_e pair evaluations — QUADRATIC in the entity, since
-    b_e ~ rate x p_e where rate = |build| / |probe| — so the harmful
-    entity size depends on the build density, not on any fixed row
-    count. Auto solves rate x p_e^2 <= comparisons_budget:
-    ``threshold = sqrt(budget / rate)`` (two metadata-cheap counts; the
-    default 2^28 budget caps any entity's join work at ~1-2 s of one
-    core — at the 81M-turn layout's rate 1/3 that lands at ~28k rows and
-    catches the straggler, while mean-20-turn corpora stay untouched and
-    keep the byte-identical cold plan)."""
+
+def _bucketed_scans(
+    spark: SparkSession, t_table: str, cf_table: str
+) -> tuple[DataFrame, DataFrame]:
     # Expose the per-bucket sortBy order from the scan (off by default
     # since multi-file buckets cannot guarantee it; our writer guarantees
     # one file per bucket). Scoped to bucketed scans only — no effect on
     # non-bucketed plans in the session.
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    t = spark.table(t_table)
-    cf = spark.table(cf_table)
+    return spark.table(t_table), spark.table(cf_table)
 
-    def _cold(tc: DataFrame, cfc: DataFrame) -> DataFrame:
-        # merge hint: force the sort-merge join ON THIS JOIN ONLY (a
-        # broadcast would also be exchange-free here, but at 10^12 turns
-        # the build side is one row per conversation — far beyond
-        # broadcast; SMJ over co-bucketed scans is the plan that survives
-        # scale). A hint, not spark.sql.autoBroadcastJoinThreshold, so
-        # other joins in the session keep their auto-broadcast plans.
-        feats = build_turn_features(tc, gap_seconds=gap_seconds)
-        out = asof_join_interval(
-            feats,
-            cfc.hint("merge"),
-            on="conv_id",
-            ts="ts",
-            build_cols=["feature_val"],
-        )
-        return out.select(
-            *_out_columns(tc, "conv_id", "ts", "asof_ts", ["feature_val"])
-        )
 
-    if hot_threshold_rows is None:
-        return _cold(t, cf)
-    if hot_threshold_rows == "auto":
-        import math
-
-        rate = cf.count() / max(t.count(), 1)
-        hot_threshold_rows = max(
-            min_hot_threshold,
-            int(math.sqrt(comparisons_budget / max(rate, 1e-9))),
-        )
-    hot = hot_entities(t, "conv_id", hot_threshold_rows).select("conv_id")
-    if not hot.take(1):  # one Exchange-free agg job over the bucketed scan
-        return _cold(t, cf)
-    hot_b = F.broadcast(hot)
-    cold_out = _cold(
-        t.join(hot_b, "conv_id", "anti"), cf.join(hot_b, "conv_id", "anti")
+def _cold(t: DataFrame, cf: DataFrame, gap_seconds: int) -> DataFrame:
+    # merge hint: force the sort-merge join ON THIS JOIN ONLY (a
+    # broadcast would also be exchange-free here, but at 10^12 turns
+    # the build side is one row per conversation — far beyond
+    # broadcast; SMJ over co-bucketed scans is the plan that survives
+    # scale). A hint, not spark.sql.autoBroadcastJoinThreshold, so
+    # other joins in the session keep their auto-broadcast plans.
+    feats = build_turn_features(t, gap_seconds=gap_seconds)
+    out = asof_join_interval(
+        feats,
+        cf.hint("merge"),
+        on="conv_id",
+        ts="ts",
+        build_cols=["feature_val"],
     )
+    return out.select(
+        *_out_columns(t, "conv_id", "ts", "asof_ts", ["feature_val"])
+    )
+
+
+def _flagship_bucketed_routed(
+    spark: SparkSession,
+    t_table: str,
+    cf_table: str,
+    hot: list,
+    gap_seconds: int = 1800,
+    chunk_seconds: int = 6 * 3600,
+) -> DataFrame:
+    """The routed plan for the named ``hot`` conversations: the tail keeps
+    the zero-Exchange SMJ plan (a key-list filter preserves the scan's
+    partitioning AND ordering), the hot slice runs the chunk-and-carry
+    salted pipeline, and the two branches union."""
+    t, cf = _bucketed_scans(spark, t_table, cf_table)
+    is_hot = in_hot("conv_id", hot)
+    cold_out = _cold(t.filter(~is_hot), cf.filter(~is_hot), gap_seconds)
     hot_out = asof_turn_features_salted(
-        t.join(hot_b, "conv_id", "semi"),
-        cf.join(hot_b, "conv_id", "semi"),
+        t.filter(is_hot),
+        cf.filter(is_hot),
         time_chunk(chunk_seconds=chunk_seconds),
         gap_seconds=gap_seconds,
     )

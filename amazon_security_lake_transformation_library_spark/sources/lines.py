@@ -95,17 +95,6 @@ def decode_kinesis(df: DataFrame, data_col: str = "data") -> Column | DataFrame:
     return df.withColumn("payload", F.unbase64(F.col(data_col)).cast("string"))
 
 
-def extract_message(payload_struct: Column, schema: T.StructType) -> Column:
-    """``payload_json.get('message', payload_json)`` (app.py:347): prefer
-    the nested message field when present."""
-    if "message" in schema.fieldNames():
-        return F.coalesce(
-            payload_struct.getField("message"),
-            F.to_json(payload_struct).cast("string"),
-        )
-    return payload_struct
-
-
 def drop_control_events(df: DataFrame, event_col: str = "Event") -> DataFrame:
     """Skip s3:TestEvent control messages (app.py:262-264)."""
     if event_col not in df.columns:

@@ -17,8 +17,9 @@ the log's per-entity change points and takes one of
       the probe's rows;
   intervals   — asof_join_skinny_intervals (the log widened once into
       K-vector validity intervals, then a sort-merge interval join),
-      when the log is smaller and no entity has 1024 change points;
-  routed      — asof_join_skinny_routed, when some entity does: hot
+      when the log is smaller and the hot-entity rule (salted.py, band
+      comparisons over UNION_FLOOR) names no entity;
+  routed      — asof_join_skinny_routed, when it names some: hot
       entities take the union path, the tail keeps the interval join
       (§7.15's 11x hot-shard fix).
 The JSON line's "strategy" field names the plan taken.

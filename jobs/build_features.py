@@ -12,8 +12,9 @@ input at local[8] and local[32], each level in its own process.
 
 With --features the feature+as-of block runs through
 ``fused.asof_turn_features_hybrid``, which plans the plain single-Exchange
-block unless some conversation holds more than 1M turns, and routes those
-through chunk-and-carry.
+block unless the hot-entity rule (operators/salted.py) names a
+conversation: more than WINDOW_FACTOR / cores of the turns and at least
+WINDOW_FLOOR of them. Those route through chunk-and-carry.
 
 With --synth N_CONVS the job generates the deterministic synthetic
 transcripts table instead of reading --input (bench/demo path, no

@@ -3,6 +3,8 @@ per-source equivalence to pandas merge_asof, tie semantics, left-outer
 NULLs for sources with no visible row, and the one-Window plan shape.
 """
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -157,6 +159,17 @@ def _melt(builds):
             ]
         )
     return pd.concat(frames, ignore_index=True)
+
+
+def _routed(probe, log, hot, sources, **kw):
+    """The skinny router's routed plan with the ``hot`` entities named."""
+    from amazon_security_lake_transformation_library_spark.operators.asof import (
+        _skinny_routed,
+    )
+
+    kw = dict(source_col="feature", value_col="value", on="conv_id", ts="ts",
+              strict=False, asof_ts_suffix="_asof_ts") | kw
+    return _skinny_routed(probe, log, sources, hot, **kw)[0]
 
 
 @pytest.mark.parametrize("strict", [False, True])
@@ -354,17 +367,17 @@ def test_skinny_intervals_bucketed_probe_no_exchange(spark, tmp_path):
 
 @pytest.mark.parametrize("strict", [False, True])
 def test_skinny_routed_equals_skinny_on_skew(spark, strict):
-    """The hot/tail router must reproduce the single-strategy answer on
-    a skewed input where one entity holds most of the change points."""
+    """The hot/tail router's routed plan must reproduce the single-
+    strategy answer on a skewed input where one named entity holds most
+    of the change points."""
     from amazon_security_lake_transformation_library_spark.operators.asof import (
         asof_join_skinny,
-        asof_join_skinny_routed,
     )
 
     probe, builds = _mk_inputs(seed=31)
     log = _melt(builds)
     # graft a hot entity: one conversation with 600 change points across
-    # the three sources (>= the test threshold), plus matching probes
+    # the three sources, plus matching probes
     base = pd.Timestamp("2026-01-01")
     hot_log = pd.DataFrame({
         "conv_id": "hot",
@@ -388,9 +401,8 @@ def test_skinny_routed_equals_skinny_on_skew(spark, strict):
         .reset_index(drop=True)
     )
     got = (
-        asof_join_skinny_routed(spark.createDataFrame(probe),
-                                spark.createDataFrame(log),
-                                hot_threshold_changes=200, **kw)
+        _routed(spark.createDataFrame(probe), spark.createDataFrame(log),
+                ["hot"], **kw)
         .toPandas().sort_values("probe_id", kind="mergesort")
         .reset_index(drop=True)
     )
@@ -406,12 +418,13 @@ def test_skinny_routed_equals_skinny_on_skew(spark, strict):
         assert (gt.dropna() == wt.dropna()).all()
 
 
-def test_skinny_routed_threshold_boundary(spark, monkeypatch):
-    """Entities at exactly the threshold go hot; one below stays on the
-    interval path — and an all-tail input equals plain intervals."""
+def test_skinny_routed_named_keys(spark):
+    """The routed plan splits by the named keys: entity a (named) takes
+    the union path, b stays on the interval path, and the answer equals
+    plain intervals; naming no entity IS the plain interval plan (no
+    union, no split)."""
     from amazon_security_lake_transformation_library_spark.operators.asof import (
         asof_join_skinny_intervals,
-        asof_join_skinny_routed,
     )
 
     base = pd.Timestamp("2026-01-01")
@@ -433,28 +446,16 @@ def test_skinny_routed_threshold_boundary(spark, monkeypatch):
                                    spark.createDataFrame(log), **kw)
         .toPandas().sort_values("probe_id").reset_index(drop=True)
     )
-    # threshold 4: entity a (4 change points) goes hot, b stays tail
-    got = (
-        asof_join_skinny_routed(spark.createDataFrame(probe),
-                                spark.createDataFrame(log),
-                                hot_threshold_changes=4, **kw)
-        .toPandas().sort_values("probe_id").reset_index(drop=True)
-    )
+    routed = _routed(spark.createDataFrame(probe), spark.createDataFrame(log),
+                     ["a"], **kw)
+    # each skinny form plans one Union; the routed plan unions two of them
+    assert routed._jdf.queryExecution().executedPlan().toString().count("Union") == 3
+    got = routed.toPandas().sort_values("probe_id").reset_index(drop=True)
     np.testing.assert_allclose(got["f0_value"].to_numpy("float64"),
                                want["f0_value"].to_numpy("float64"))
-    # a zero broadcast limit forces the shuffle semi/anti fallback (the
-    # guard against a driver-sized hot set); same answer
-    from amazon_security_lake_transformation_library_spark.operators import asof
-
-    monkeypatch.setattr(asof, "HOT_BROADCAST_LIMIT", 0)
-    shuf = (
-        asof_join_skinny_routed(spark.createDataFrame(probe),
-                                spark.createDataFrame(log),
-                                hot_threshold_changes=4, **kw)
-        .toPandas().sort_values("probe_id").reset_index(drop=True)
-    )
-    np.testing.assert_allclose(shuf["f0_value"].to_numpy("float64"),
-                               want["f0_value"].to_numpy("float64"))
+    plain = _routed(spark.createDataFrame(probe), spark.createDataFrame(log),
+                    [], **kw)
+    assert plain._jdf.queryExecution().executedPlan().toString().count("Union") == 1
 
 
 @pytest.mark.parametrize("form", ["skinny", "intervals", "routed"])
@@ -465,18 +466,19 @@ def test_skinny_forms_zero_leakage_mutation_audit(spark, form):
     from amazon_security_lake_transformation_library_spark.operators.asof import (
         asof_join_skinny,
         asof_join_skinny_intervals,
-        asof_join_skinny_routed,
     )
 
+    probe, builds = _mk_inputs(seed=37)
+    log = _melt(builds)
+    # the routed plan with the entities of at least 15 (the median)
+    # change points named
+    hot = list(log.groupby("conv_id")["ts"].nunique().loc[lambda b: b >= 15].index)
+    assert 0 < len(hot) < log["conv_id"].nunique()
     fns = {
         "skinny": asof_join_skinny,
         "intervals": asof_join_skinny_intervals,
-        "routed": lambda p, l, **kw: asof_join_skinny_routed(
-            p, l, hot_threshold_changes=10, **kw
-        ),
+        "routed": lambda p, l, **kw: _routed(p, l, hot, **kw),
     }
-    probe, builds = _mk_inputs(seed=37)
-    log = _melt(builds)
     T = log["ts"].quantile(0.5)
     mutated = log.copy()
     mutated.loc[mutated["ts"] > T, "value"] = -9999.0
@@ -504,25 +506,32 @@ def test_skinny_forms_zero_leakage_mutation_audit(spark, form):
 
 def _auto_inputs(branch):
     """Inputs that steer asof_join_skinny_auto down one branch: a log at
-    least a quarter the probe's size (single_pass); a smaller log with no
-    entity at HOT_CHANGE_POINTS (intervals); the same plus one entity
-    with 1100 change points and a probe large enough to stay 4x the log
-    (routed)."""
+    least a quarter the probe's size (single_pass); a smaller log on which
+    the hot-entity rule names no entity (intervals); the same plus one
+    entity with sqrt(UNION_FLOOR) change points and a probe large enough
+    to stay 4x the log, so its estimated band comparisons pass
+    UNION_FLOOR (routed)."""
     probe, builds = _mk_inputs(seed=41, n_probe=240 if branch == "single_pass"
                                else 1200)
     log = _melt(builds)
     if branch == "routed":
+        from amazon_security_lake_transformation_library_spark.operators.salted import (
+            UNION_FLOOR,
+        )
+
+        n_hot = math.isqrt(UNION_FLOOR)
         base = pd.Timestamp("2026-01-01")
         log = pd.concat([log, pd.DataFrame({
             "conv_id": "hot",
-            "ts": base + pd.to_timedelta(np.arange(1100) * 7, unit="s"),
-            "feature": [list(builds)[i % 3] for i in range(1100)],
-            "value": np.arange(1100, dtype="float64"),
+            "ts": base + pd.to_timedelta(np.arange(n_hot) * 7, unit="s"),
+            "feature": [list(builds)[i % 3] for i in range(n_hot)],
+            "value": np.arange(n_hot, dtype="float64"),
         })], ignore_index=True)
+        hot_ts = np.arange(0, 7 * n_hot, 1.5)
         probe = pd.concat([probe, pd.DataFrame({
             "conv_id": "hot",
-            "ts": base + pd.to_timedelta(np.arange(0, 7700, 1.5), unit="s"),
-            "probe_id": np.arange(10_000, 10_000 + 5134, dtype="int64"),
+            "ts": base + pd.to_timedelta(hot_ts, unit="s"),
+            "probe_id": np.arange(10_000, 10_000 + len(hot_ts), dtype="int64"),
         })], ignore_index=True)
     return probe, log, list(builds)
 
@@ -534,24 +543,32 @@ def test_skinny_auto_branch_equals_skinny(spark, branch, strict):
     answer equals asof_join_skinny row for row, both tie semantics. The
     no-hot branch is the plain interval plan: no semi/anti split."""
     from amazon_security_lake_transformation_library_spark.operators.asof import (
-        HOT_CHANGE_POINTS,
         SINGLE_PASS_LOG_RATIO,
         asof_join_skinny,
         asof_join_skinny_auto,
+    )
+    from amazon_security_lake_transformation_library_spark.operators.salted import (
+        UNION_FLOOR,
+        hot_rule,
     )
 
     probe, log, sources = _auto_inputs(branch)
     assert (len(log) >= SINGLE_PASS_LOG_RATIO * len(probe)) == (
         branch == "single_pass")
-    assert (log.groupby("conv_id")["ts"].nunique().max()
-            >= HOT_CHANGE_POINTS) == (branch == "routed")
+    # the pre-pass's estimate: p_e x b_e = b_e^2 x |probe| / sum(b)
+    b = log.groupby("conv_id")["ts"].nunique().astype(float)
+    rate = len(probe) / b.sum()
+    hot = hot_rule(list((rate * b * b).items()), rate * (b * b).sum(),
+                   spark.sparkContext.defaultParallelism, UNION_FLOOR, band=True)
+    assert (hot == ["hot"]) == (branch == "routed")
     kw = dict(sources=sources, on="conv_id", ts="ts", strict=strict)
     out, plan = asof_join_skinny_auto(
         spark.createDataFrame(probe), spark.createDataFrame(log), **kw)
     assert plan == branch
     physical = out._jdf.queryExecution().executedPlan().toString()
-    split = "LeftSemi" in physical or "LeftAnti" in physical
-    assert split == (branch == "routed"), physical
+    # each skinny form plans one Union of its own; the routed plan adds
+    # the union of its two branches
+    assert (physical.count("Union") > 1) == (branch == "routed"), physical
 
     got = out.toPandas().sort_values("probe_id", kind="mergesort") \
         .reset_index(drop=True)

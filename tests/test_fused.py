@@ -10,7 +10,11 @@ and across chunk sizes that split sessions/ffill runs mid-chunk.
 
 from __future__ import annotations
 
+import json
+import os
 import re
+import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -22,15 +26,27 @@ from amazon_security_lake_transformation_library_spark.operators.features import
     build_turn_features,
 )
 from amazon_security_lake_transformation_library_spark.operators.fused import (
+    _asof_turn_features_routed,
     asof_turn_features,
     asof_turn_features_hybrid,
     asof_turn_features_salted,
 )
-from amazon_security_lake_transformation_library_spark.operators.salted import time_chunk
+from amazon_security_lake_transformation_library_spark.operators.salted import (
+    WINDOW_FACTOR,
+    WINDOW_FLOOR,
+    hot_entities,
+    hot_rule,
+    time_chunk,
+)
+from amazon_security_lake_transformation_library_spark.synth.transcripts import (
+    gen_conv_features,
+    gen_transcripts,
+)
 
 from conftest import spark_to_pandas_sorted
 
 KEYS = ["conv_id", "turn_idx"]
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _modular(transcripts_df, conv_features_df) -> pd.DataFrame:
@@ -67,16 +83,19 @@ def test_fused_salted_equals_plain(
     )
 
 
-@pytest.mark.parametrize("threshold", [0, 50, 10**9])
-def test_hybrid_equals_plain(spark, transcripts_df, conv_features_df, threshold):
-    # threshold 0: everything salted; 50: only hot convs salted; huge:
-    # everything plain — all three routings must agree
+@pytest.mark.parametrize("hot", ["all", "hot", "none"])
+def test_routed_equals_plain(spark, transcripts_df, conv_features_df, hot):
+    # every entity salted, only the planted hot conversation salted, or
+    # none (every entity on the one constant chunk): all three routings
+    # must agree
+    keys = {
+        "all": [r[0] for r in transcripts_df.select("conv_id").distinct().collect()],
+        "hot": ["conv_00000000"],
+        "none": [],
+    }[hot]
     _cmp(
-        asof_turn_features_hybrid(
-            transcripts_df,
-            conv_features_df,
-            time_chunk(chunk_seconds=3600),
-            hot_threshold_rows=threshold,
+        _asof_turn_features_routed(
+            transcripts_df, conv_features_df, time_chunk(chunk_seconds=3600), keys
         ),
         asof_turn_features(transcripts_df, conv_features_df),
     )
@@ -123,25 +142,82 @@ def test_fused_single_exchange_on_big_table(spark, transcripts_df, conv_features
 
 
 def test_hybrid_no_hot_plans_single_exchange(spark, transcripts_df, conv_features_df):
-    """The front door with no entity over its threshold is the plain
-    block itself, not the routed chunk-and-carry plan."""
+    """The front door with no hot entity is the plain block itself, not
+    the routed plan."""
     _assert_single_exchange(_plan(asof_turn_features_hybrid(
         transcripts_df, conv_features_df, time_chunk(chunk_seconds=3600),
-        hot_threshold_rows=10**9,
     )))
 
 
-def test_hybrid_routes_when_hot(spark, transcripts_df, conv_features_df):
-    """With a hot entity the front door keeps the routed chunk-and-carry
-    plan: the broadcast hot set, and more than the plain block's one
-    Exchange and one Sort."""
-    plan = _plan(asof_turn_features_hybrid(
-        transcripts_df, conv_features_df, time_chunk(chunk_seconds=3600),
-        hot_threshold_rows=50,
-    ))
-    assert "__salt_chunk" in plan and "BroadcastHashJoin" in plan, plan
-    assert plan.count("Exchange") > 1, plan
-    assert _n_sorts(plan) > 1, plan
+@pytest.mark.parametrize("seed", [1, 101])
+def test_feature_build_input_keeps_plain_plan(spark, seed):
+    """The feature_build benchmark's input (40k turns, 13-14% in the
+    hottest conversation) plans the 1-Exchange/1-Sort block at local[4],
+    and the rule keeps it plain on more cores too: its hottest conversation
+    is under WINDOW_FLOOR rows."""
+    pdf = gen_transcripts(n_convs=2400, seed=seed).iloc[:40_000]
+    sizes = list(pdf["conv_id"].value_counts().items())
+    assert 0.13 < sizes[0][1] / len(pdf) < 0.145
+    for cores in (8, 16, 1024):
+        assert hot_rule(sizes, len(pdf), cores, WINDOW_FLOOR) == []
+    t = spark.createDataFrame(pdf)
+    cf = spark.createDataFrame(gen_conv_features(pdf))
+    assert hot_entities(t, "conv_id", WINDOW_FLOOR) == []
+    _assert_single_exchange(_plan(asof_turn_features_hybrid(
+        t, cf, time_chunk(chunk_seconds=6 * 3600),
+    )))
+
+
+_ROUTES_WHEN_HOT = """
+import json, re
+from amazon_security_lake_transformation_library_spark.operators.fused import (
+    asof_turn_features, asof_turn_features_hybrid)
+from amazon_security_lake_transformation_library_spark.operators.salted import (
+    WINDOW_FACTOR, WINDOW_FLOOR, hot_entities, time_chunk)
+from amazon_security_lake_transformation_library_spark.session import get_spark
+from amazon_security_lake_transformation_library_spark.synth.transcripts import (
+    gen_conv_features, gen_transcripts)
+
+spark = get_spark("routes-when-hot", master="local[%d]")
+cores = spark.sparkContext.defaultParallelism
+pdf = gen_transcripts(n_convs=WINDOW_FLOOR // 30, seed=7, hot_frac=0.65)
+n_hot = int((pdf["conv_id"] == "conv_00000000").sum())
+t = spark.createDataFrame(pdf)
+cf = spark.createDataFrame(gen_conv_features(pdf))
+out = asof_turn_features_hybrid(t, cf, time_chunk(chunk_seconds=3600))
+plan = out._jdf.queryExecution().executedPlan().toString()
+ref = asof_turn_features(t, cf).select(*out.columns)
+print(json.dumps({
+    "hot_share_over_bar": n_hot / len(pdf) > WINDOW_FACTOR / cores,
+    "over_floor": n_hot >= WINDOW_FLOOR,
+    "hot": hot_entities(t, "conv_id", WINDOW_FLOOR),
+    "salt_chunk": "__salt_chunk" in plan,
+    "exchanges": plan.count("Exchange"),
+    "sorts": len(re.findall(r"\\bSort\\b", plan)),
+    "diff": out.exceptAll(ref).count() + ref.exceptAll(out).count(),
+}))
+"""
+
+
+def test_hybrid_routes_when_hot():
+    """One entity with more than WINDOW_FACTOR / cores of the turns and at
+    least WINDOW_FLOOR of them: the front door routes exactly that entity
+    (chunk-and-carry: more than the plain block's one Exchange and one
+    Sort), and the answer equals the plain block's. Runs in its own
+    local[8] session: at the suite's local[4] the window form is never
+    hot (cores <= WINDOW_FACTOR)."""
+    cores = 2 * int(WINDOW_FACTOR)
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    out = subprocess.run(
+        [sys.executable, "-c", _ROUTES_WHEN_HOT % cores],
+        capture_output=True, text=True, env=env, cwd=ROOT, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    rec = json.loads(out.stdout.strip().splitlines()[-1])
+    assert rec["hot_share_over_bar"] and rec["over_floor"], rec
+    assert rec["hot"] == ["conv_00000000"], rec
+    assert rec["salt_chunk"] and rec["exchanges"] > 1 and rec["sorts"] > 1, rec
+    assert rec["diff"] == 0, rec
 
 
 def test_fused_salted_single_chunk_degenerates(

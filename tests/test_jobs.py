@@ -73,10 +73,18 @@ def _assemble_inputs(tmp_path, plan):
     """Job input that steers the chooser to ``plan``: the synthetic
     tables (log = a third of the turns) for single_pass; otherwise a
     probe four times the size of a 12-conversation log, plus, for routed,
-    one conversation with 1100 change points. Returns the job's input
-    arguments and the (probe, log) parquet paths."""
+    one conversation with sqrt(UNION_FLOOR) change points and half the
+    probe: the rule's estimate b^2 x |probe| / sum(b) is about
+    4 x UNION_FLOOR, so it names that conversation at local[4]. Returns the job's input arguments and the
+    (probe, log) parquet paths."""
+    import math
+
     import numpy as np
     import pandas as pd
+
+    from amazon_security_lake_transformation_library_spark.operators.salted import (
+        UNION_FLOOR,
+    )
 
     from amazon_security_lake_transformation_library_spark.synth.transcripts import (
         gen_feature_log, gen_transcripts, write_parquet,
@@ -87,7 +95,7 @@ def _assemble_inputs(tmp_path, plan):
         probe, log = pdf, gen_feature_log(pdf)
     else:
         base = pd.Timestamp("2026-01-01")
-        n_hot = 1100 if plan == "routed" else 0
+        n_hot = math.isqrt(UNION_FLOOR) if plan == "routed" else 0
         log = pd.DataFrame({
             "conv_id": [f"c{i % 12}" for i in range(120)] + ["hot"] * n_hot,
             "ts": list(base + pd.to_timedelta(np.arange(120) * 60, unit="s"))

@@ -1,5 +1,9 @@
 """End-to-end transform pipeline + snapshot writer: partition layout,
 reject persistence, idempotent retry, resume planning.
+
+The ALB tests build their registry in-test (a one-source config and a
+minimal mapping); only the tests that read the reference's mapping files
+skip when those are absent.
 """
 
 import json
@@ -17,9 +21,32 @@ from amazon_security_lake_transformation_library_spark.sources.registry import S
 
 from test_mapping_golden import ALB_LINE, MAPPINGS_DIR
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(MAPPINGS_DIR), reason="reference mapping configs unavailable"
 )
+
+# One aws-alb source routed on the line's ``type`` token: an https line
+# maps, any other line is a no_mapping_for_value reject.
+_ALB_CONFIG = {"sources": [{
+    "name": "aws-alb",
+    "mapping_file": "aws_alb.json",
+    "input_paths": {"kinesis": {"enabled": True, "metadata_field": "source"}},
+}]}
+_ALB_MAPPING = {"custom_source_events": {
+    "source_name": "aws-alb",
+    "matched_field": "$.type",
+    "timestamp": {"field": "$.time", "format": "%Y-%m-%dT%H:%M:%S.%fZ"},
+    "ocsf_mapping": {"https": {
+        "schema": "http_activity",
+        "schema_mapping": {"activity_id": 1, "elb": "$.elb", "time": "$.time"},
+    }},
+}}
+
+
+def _alb_registry():
+    return SourceRegistry.from_config(
+        _ALB_CONFIG, mappings={"aws_alb.json": _ALB_MAPPING}
+    )
 
 
 def _registry():
@@ -34,7 +61,7 @@ def test_end_to_end_alb_job(spark, tmp_path):
     raw = spark.createDataFrame(lines, "value string")
     res = run_transform_job(
         spark,
-        _registry(),
+        _alb_registry(),
         {"aws-alb": raw},
         out,
         snapshot_id="snap1",
@@ -60,7 +87,7 @@ def test_end_to_end_alb_job(spark, tmp_path):
 def test_idempotent_retry_and_resume(spark, tmp_path):
     out = str(tmp_path / "lake2")
     raw = spark.createDataFrame([(ALB_LINE,)], "value string")
-    reg = _registry()
+    reg = _alb_registry()
     kw = dict(parsers={"aws-alb": parse_alb_lines})
     r1 = run_transform_job(spark, reg, {"aws-alb": raw}, out, "snapA", **kw)
     r2 = run_transform_job(spark, reg, {"aws-alb": raw}, out, "snapA", **kw)  # retry
@@ -83,7 +110,7 @@ def test_partial_write_invisible_then_overwritten(spark, tmp_path):
     invisible to readers; the re-run overwrites it without duplicates."""
     out = str(tmp_path / "lake3")
     raw = parse_alb_lines(spark.createDataFrame([(ALB_LINE,)], "value string"))
-    reg = _registry()
+    reg = _alb_registry()
     mapped = reg.sources["aws-alb"].compiler().transform(raw).mapped
 
     w = SnapshotWriter(f"{out}/t")
@@ -99,6 +126,7 @@ def test_partial_write_invisible_then_overwritten(spark, tmp_path):
     assert w.read(spark).count() == 1  # exactly once after recovery
 
 
+@needs_reference
 def test_end_to_end_nfw_job(spark, tmp_path):
     import json as _json
     from amazon_security_lake_transformation_library_spark.sources.nfw import parse_nfw_lines
@@ -123,6 +151,7 @@ def test_end_to_end_nfw_job(spark, tmp_path):
     assert len(data.loc[0, "eventDay"]) == 8
 
 
+@needs_reference
 def test_end_to_end_sysmon_job(spark, tmp_path):
     from amazon_security_lake_transformation_library_spark.sources.sysmon import preprocess_sysmon
     from test_mapping_golden import SYSMON_DESC, SYSMON_SCHEMA
@@ -147,6 +176,7 @@ def test_end_to_end_sysmon_job(spark, tmp_path):
     assert q.loc[0, "reject_reason"] == "no_mapping_for_value"
 
 
+@needs_reference
 def test_gzip_file_ingest_with_path_routing(spark, tmp_path):
     """A2+A5: real .log.gz files on disk, routed to their source by the
     registry's path-glob matcher, read via the gzip-codec line reader,
@@ -217,7 +247,7 @@ def test_resume_recovers_lost_quarantine(spark, tmp_path):
     raw = spark.createDataFrame(
         [(ALB_LINE,), ("garbage line only",)], "value string"
     )
-    reg = _registry()
+    reg = _alb_registry()
     kw = dict(parsers={"aws-alb": parse_alb_lines})
     r1 = run_transform_job(spark, reg, {"aws-alb": raw}, out, "snapA", **kw)
     assert r1.reject_rows == 1

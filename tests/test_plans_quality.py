@@ -8,6 +8,7 @@ analog over the manifest)."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -149,17 +150,19 @@ def test_bucketed_flagship_zero_exchange(spark, tmp_path):
 
 def test_bucketed_flagship_hot_router(spark, tmp_path):
     """§6.10 enforcement: flagship_bucketed ROUTES hot entities instead of
-    running the interval SMJ into them. On the 10%-hot fixture with a
-    threshold below the hot conversation's row count: (a) output is
-    row-identical to the fused in-memory flagship (same oracle contract),
-    (b) the plan is a union whose cold branch keeps the storage-
-    partitioned shape (the only Exchanges come from the salted hot slice,
-    whose (entity, chunk) repartition is the point), and (c) with no hot
-    entities above the threshold the returned plan is the unrouted
-    zero-Exchange one."""
+    running the interval SMJ into them. With the 10%-hot fixture's hot
+    conversation named: (a) output is row-identical to the fused
+    in-memory flagship (same oracle contract), (b) the plan is a union
+    whose cold branch keeps the storage-partitioned zero-Exchange shape
+    (key-list filters, no semi/anti joins; the only Exchanges come from
+    the salted hot slice, whose (entity, chunk) repartition is the
+    point), and (c) the front door, whose hot-entity rule names nothing
+    in this small corpus, returns the unrouted zero-Exchange plan."""
     from amazon_security_lake_transformation_library_spark.operators import fused
     from amazon_security_lake_transformation_library_spark.operators.salted import (
+        CARRY_FLOOR,
         hot_entities,
+        in_hot,
     )
     from amazon_security_lake_transformation_library_spark.plans import bucketed
     from amazon_security_lake_transformation_library_spark.synth.transcripts import (
@@ -177,53 +180,93 @@ def test_bucketed_flagship_hot_router(spark, tmp_path):
     bucketed.ensure_flagship_tables(
         spark, t, cf, "tb_router_test", "cfb_router_test", path_root=f"{d}/tables"
     )
-    hot_rows = hot_entities(t, "conv_id", 0).agg(
-        {"n_rows": "max"}
-    ).collect()[0][0]
-    threshold = hot_rows - 1  # only the hot conversation exceeds it
+    hot = ["conv_00000000"]
 
-    routed = bucketed.flagship_bucketed(
-        spark, "tb_router_test", "cfb_router_test", hot_threshold_rows=threshold
+    routed = bucketed._flagship_bucketed_routed(
+        spark, "tb_router_test", "cfb_router_test", hot
     )
     plan = _plan(routed)
     assert "Union" in plan, plan
+    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
     # the hot slice went salted: its (entity, chunk) repartition is the
     # only hashpartitioning Exchange that mentions the chunk column
     assert "__salt_chunk" in plan, plan
+    # the tail branch alone: zero Exchange, zero Sort over the filtered scans
+    tail = bucketed._cold(*(
+        x.filter(~in_hot("conv_id", hot))
+        for x in bucketed._bucketed_scans(spark, "tb_router_test", "cfb_router_test")
+    ), 1800)
+    assert _plan(tail).count("Exchange") == 0, _plan(tail)
+    assert len(re.findall(r"\bSort \[", _plan(tail))) == 0, _plan(tail)
     # oracle contract: identical rows to the fused in-memory flagship
     ref = fused.asof_turn_features(t, cf).select(*routed.columns)
     assert routed.exceptAll(ref).count() == 0
     assert ref.exceptAll(routed).count() == 0
 
-    # threshold above every entity -> the unrouted zero-Exchange plan
-    cold = bucketed.flagship_bucketed(
-        spark, "tb_router_test", "cfb_router_test",
-        hot_threshold_rows=hot_rows + 1,
-    )
+    # the front door: nothing is hot here -> the unrouted zero-Exchange plan
+    assert hot_entities(
+        spark.table("tb_router_test"), "conv_id", CARRY_FLOOR,
+        band_rows=spark.table("cfb_router_test").count(),
+    ) == []
+    cold = bucketed.flagship_bucketed(spark, "tb_router_test", "cfb_router_test")
     cold_plan = _plan(cold)
     assert cold_plan.count("Exchange") == 0, cold_plan
     assert "Union" not in cold_plan
 
-    # "auto" derives the threshold from the comparisons budget (the r5
-    # cost model: threshold = sqrt(budget / (|cf| / |t|))). A budget small
-    # enough that rate * hot_rows^2 exceeds it must route the hot conv...
-    rate = cf.count() / t.count()
-    small_budget = int(rate * (hot_rows - 1) ** 2)
-    auto_routed = bucketed.flagship_bucketed(
-        spark, "tb_router_test", "cfb_router_test",
-        hot_threshold_rows="auto", comparisons_budget=max(small_budget, 1),
-        min_hot_threshold=1,  # fixture's hot conv is below the 4096 floor
+
+def test_bucketed_front_door_routes_hot_entity(spark, tmp_path):
+    """flagship_bucketed itself routes a conversation that holds ~90% of
+    the turns and whose estimated band comparisons (n^2 x |cf| / |t|)
+    pass CARRY_FLOOR: the plan carries the salted hot slice, and the
+    answer equals the fused in-memory flagship's."""
+    from amazon_security_lake_transformation_library_spark.operators import fused
+    from amazon_security_lake_transformation_library_spark.operators.salted import (
+        CARRY_FLOOR,
     )
-    assert "__salt_chunk" in _plan(auto_routed)
-    assert auto_routed.exceptAll(ref).count() == 0
-    assert ref.exceptAll(auto_routed).count() == 0
-    # the default 2^28 budget leaves a mean-20-turn corpus unrouted:
-    # byte-identical cold plan, zero Exchange
-    auto_cold = bucketed.flagship_bucketed(
-        spark, "tb_router_test", "cfb_router_test",
+    from amazon_security_lake_transformation_library_spark.plans import bucketed
+    from amazon_security_lake_transformation_library_spark.synth.transcripts import (
+        gen_conv_features,
+        gen_transcripts,
+        write_parquet,
     )
-    assert _plan(auto_cold).count("Exchange") == 0
-    assert "Union" not in _plan(auto_cold)
+
+    d = str(tmp_path)
+    tp = gen_transcripts(200, hot_frac=0.9)
+    cfp = gen_conv_features(tp)
+    assert tp.groupby("conv_id").size().max() ** 2 * len(cfp) / len(tp) >= CARRY_FLOOR
+    write_parquet(tp, f"{d}/t.parquet")
+    write_parquet(cfp, f"{d}/cf.parquet")
+    t = spark.read.parquet(f"{d}/t.parquet")
+    cf = spark.read.parquet(f"{d}/cf.parquet")
+    bucketed.ensure_flagship_tables(
+        spark, t, cf, "tb_hot_front", "cfb_hot_front", path_root=f"{d}/tables"
+    )
+    out = bucketed.flagship_bucketed(spark, "tb_hot_front", "cfb_hot_front")
+    plan = _plan(out)
+    assert "__salt_chunk" in plan and "Union" in plan, plan
+    ref = fused.asof_turn_features(t, cf).select(*out.columns)
+    assert out.exceptAll(ref).count() == 0
+    assert ref.exceptAll(out).count() == 0
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_routed_driver_queries_plan_routed_shape(spark, sf):
+    """The three routed-plan driver queries name their hot entities (the
+    hottest conversation; the users with at least 39 change points), so
+    each plans the routed shape at both gate scales — at sf0.001 too,
+    where the hottest conversation has only 80 turns."""
+    qs = entrymod.queries()
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    # chunk-and-carry: the (entity, chunk) repartition, past the plain
+    # block's one Exchange
+    plan = _plan(qs["flagship_transcripts_hybrid"](spark, sf_dir))
+    assert "__salt_chunk" in plan and plan.count("Exchange") > 1, plan
+    # the zero-Exchange cold branch unioned with the salted hot slice
+    plan = _plan(qs["flagship_transcripts_bucketed"](spark, sf_dir))
+    assert "__salt_chunk" in plan and "Union" in plan, plan
+    # each skinny form plans one Union; the routed plan unions two of them
+    plan = _plan(qs["asof_join_events_skinny_routed"](spark, sf_dir))
+    assert plan.count("Union") == 3, plan
 
 
 def test_chained_bucketed_output_stays_exchange_free(spark, tmp_path):

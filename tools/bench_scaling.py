@@ -13,9 +13,12 @@ Strategies (``--strategies``, comma-separated):
                    and caps scaling;
   * fused_salted — chunk-and-carry over the fused union: the hot
                    conversation spreads across tasks;
-  * hybrid       — the flagship front door: salted chunks for entities
-                   above ``--hot-threshold``, one plain chunk for the tail;
+  * hybrid       — the flagship front door; ``routed`` forces its routed
+                   plan on the hottest conversation;
   * bucketed     — the zero-Exchange block over bucketed-sorted tables;
+                   ``bucketed_cold`` / ``bucketed_routed`` force its two plans;
+  * skinny_intervals / skinny_routed — the skinny router's two plans
+                   over synth.gen_feature_log's EAV log, likewise;
   * modular      — feature window then a separate as-of union window
                    (two Exchanges; kept for plan comparison).
 Plus `--strategies curation`: the r4 curation/encoder pipeline (group
@@ -27,6 +30,8 @@ the flagship's salted path exists to fix.
 
 Usage: python tools/bench_scaling.py [--n-convs 40000] [--runs 2]
 Prints one JSON line; paste the table into BASELINE.md.
+A level under 4 cores runs as one executor with that many cores:
+``--levels 1,2,4`` is the hot-entity rule's sweep, BASELINE.md §11.
 """
 
 from __future__ import annotations
@@ -44,11 +49,16 @@ sys.path.insert(0, ROOT)
 
 
 def worker(args) -> None:
-    from amazon_security_lake_transformation_library_spark.operators.asof import asof_join
+    from pyspark.sql import functions as F
+
+    from amazon_security_lake_transformation_library_spark.operators.asof import (
+        _skinny_routed, asof_join,
+    )
     from amazon_security_lake_transformation_library_spark.operators.features import (
         build_turn_features,
     )
     from amazon_security_lake_transformation_library_spark.operators.fused import (
+        _asof_turn_features_routed,
         asof_turn_features,
         asof_turn_features_hybrid,
         asof_turn_features_salted,
@@ -60,7 +70,7 @@ def worker(args) -> None:
     # the faithful sandbox stand-in for W executors (single-JVM local[N]
     # cannot scale here: the sandbox throttles per-PROCESS CPU to ~4-5
     # cores, measured in BASELINE.md §4; separate processes scale).
-    workers = args.cpus // 4
+    workers = max(args.cpus // 4, 1)
     extra = {
         "spark.executor.memory": "11g",
         "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
@@ -88,7 +98,7 @@ def worker(args) -> None:
         extra["spark.eventLog.compress"] = "false"
     spark = get_spark(
         f"scaling-{workers}w",
-        master=f"local-cluster[{workers},4,12288]",
+        master=f"local-cluster[{workers},{min(args.cpus, 4)},12288]",
         shuffle_partitions=2 * args.cpus,
         extra_conf=extra,
     )
@@ -96,7 +106,10 @@ def worker(args) -> None:
     f = spark.read.parquet(f"{args.data}/conv_features.parquet")
     t.count()  # warm scan + wait for executor registration
 
-    if args.strategy == "bucketed":
+    if args.strategy.startswith(("routed", "bucketed", "skinny")):
+        hottest = [t.groupBy("conv_id").count()
+                   .orderBy(F.desc("count")).first()["conv_id"]]
+    if args.strategy.startswith("bucketed"):
         # UNTIMED setup: the bucketed-sorted layout is paid once per table
         # lifetime (the lakehouse write), amortized over every feature
         # build after it — the timed job is the read-side block only.
@@ -104,6 +117,7 @@ def worker(args) -> None:
         # physical plan (32 one-file buckets = 32 scan tasks; parallelism
         # is the only variable).
         from amazon_security_lake_transformation_library_spark.plans.bucketed import (
+            _bucketed_scans, _cold, _flagship_bucketed_routed,
             ensure_flagship_tables, flagship_bucketed,
         )
         # dataset-scoped layout dir, SHARED across parallelism levels: the
@@ -132,8 +146,6 @@ def worker(args) -> None:
             # forward-horizon label and the ordered target encoding —
             # both Windows partition on conv_id and order on the same
             # micros key, so they share one Exchange + one Sort.
-            from pyspark.sql import functions as F
-
             from amazon_security_lake_transformation_library_spark.operators.curation import (
                 label_horizon,
             )
@@ -157,16 +169,27 @@ def worker(args) -> None:
             )
         elif args.strategy == "bucketed":
             out = flagship_bucketed(spark, "sc_t", "sc_cf")
+        elif args.strategy == "bucketed_cold":
+            out = _cold(*_bucketed_scans(spark, "sc_t", "sc_cf"), 1800)
+        elif args.strategy == "bucketed_routed":
+            out = _flagship_bucketed_routed(spark, "sc_t", "sc_cf", hottest)
+        elif args.strategy == "routed":
+            out = _asof_turn_features_routed(t, f, chunk, hottest)
+        elif args.strategy.startswith("skinny"):
+            # the production band join is a sort-merge join: no broadcast
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            out, _ = _skinny_routed(
+                t, spark.read.parquet(f"{args.data}/feature_log.parquet"),
+                ["f0", "f1", "f2", "f3"],
+                hottest if args.strategy == "skinny_routed" else [],
+                source_col="feature", value_col="value", on="conv_id",
+                ts="ts", strict=False, asof_ts_suffix="_asof_ts")
         elif args.strategy == "fused":
             out = asof_turn_features(t, f)
         elif args.strategy == "fused_salted":
             out = asof_turn_features_salted(t, f, chunk)
         elif args.strategy == "hybrid":
-            # threshold: anything above ~2 task-partitions' worth of rows
-            # routes to the salted path; the synthetic hot conv qualifies
-            out = asof_turn_features_hybrid(
-                t, f, chunk, hot_threshold_rows=args.hot_threshold
-            )
+            out = asof_turn_features_hybrid(t, f, chunk)
         else:  # modular
             out = asof_join(
                 build_turn_features(t), f,
@@ -190,7 +213,8 @@ def worker(args) -> None:
         rows = job()
         walls.append(time.time() - t0)
     print(json.dumps({"cpus": args.cpus, "rows": rows,
-                      "wall": round(min(walls), 3)}))
+                      "wall": round(min(walls), 3),
+                      "walls": [round(w, 3) for w in walls]}))
 
 
 def main() -> None:
@@ -209,7 +233,6 @@ def main() -> None:
                    help="total cores per level; each level runs cores/4 "
                         "four-core executor JVMs (N vs 4N executors)")
     p.add_argument("--strategies", default="fused,hybrid")
-    p.add_argument("--hot-threshold", type=int, default=200_000)
     p.add_argument("--n-buckets", type=int, default=32,
                    help="bucket count for --strategies bucketed (fixed "
                         "across levels: identical plan, parallelism is "
@@ -231,7 +254,7 @@ def main() -> None:
         return
 
     from amazon_security_lake_transformation_library_spark.synth.transcripts import (
-        gen_conv_features, gen_transcripts, write_parquet,
+        gen_conv_features, gen_feature_log, gen_transcripts, write_parquet,
     )
 
     data = (f"{tempfile.gettempdir()}/scaling_{args.n_convs}_{args.mean_turns}"
@@ -239,7 +262,7 @@ def main() -> None:
     if args.text_repeat != 1:
         data += f"_w{args.text_repeat}"
     meta_path = os.path.join(data, "meta.json")
-    if os.path.exists(meta_path):
+    if os.path.exists(meta_path) and os.path.exists(f"{data}/feature_log.parquet"):
         meta = json.load(open(meta_path))
         n_rows, hot = meta["n_rows"], meta["hot"]
     else:
@@ -249,6 +272,7 @@ def main() -> None:
                               text_repeat=args.text_repeat)
         write_parquet(pdf, f"{data}/transcripts.parquet")
         write_parquet(gen_conv_features(pdf), f"{data}/conv_features.parquet")
+        write_parquet(gen_feature_log(pdf), f"{data}/feature_log.parquet")
         n_rows = len(pdf)
         hot = int(pdf.groupby("conv_id").size().max())
         json.dump({"n_rows": int(n_rows), "hot": hot}, open(meta_path, "w"))
@@ -259,12 +283,11 @@ def main() -> None:
     result: dict = {"n_turns": int(n_rows), "hot_turns": int(hot),
                     "levels": levels, "strategies": {}}
     for strat in args.strategies.split(","):
-        walls = {}
+        walls, runs = {}, {}
         for cpus in levels:
             cmd = [sys.executable, os.path.abspath(__file__), "--worker",
                    "--cpus", str(cpus), "--data", data, "--strategy", strat,
                    "--runs", str(args.runs), "--sink", args.sink,
-                   "--hot-threshold", str(args.hot_threshold),
                    "--n-buckets", str(args.n_buckets)]
             if args.event_log:
                 cmd += ["--event-log",
@@ -277,6 +300,7 @@ def main() -> None:
                 out.check_returncode()
             rec = json.loads(out.stdout.strip().splitlines()[-1])
             walls[cpus] = rec["wall"]
+            runs[cpus] = rec["walls"]
             print(f"# {strat} local[{cpus}]: {rec['wall']}s "
                   f"({rec['rows'] / rec['wall']:.0f} turns/s)", file=sys.stderr)
         lo, hi = min(levels), max(levels)
@@ -284,6 +308,7 @@ def main() -> None:
         eff = speedup / (hi / lo)
         result["strategies"][strat] = {
             "wall_sec": walls,
+            "runs": runs,
             "turns_per_sec": {c: round(n_rows / w, 1) for c, w in walls.items()},
             "speedup": round(speedup, 3),
             "scaling_efficiency": round(eff, 3),

@@ -173,10 +173,7 @@ def worker(args) -> None:
         spark.catalog.clearCache()
         t0 = time.time()
         if args.plan == "bucketed":
-            ht = args.hot_threshold
-            ht = None if ht == "none" else (ht if ht == "auto" else int(ht))
-            out = flagship_bucketed(spark, "sh_t", "sh_cf",
-                                    hot_threshold_rows=ht)
+            out = flagship_bucketed(spark, "sh_t", "sh_cf")
         elif args.plan == "curation":
             out = _curation_job(spark, t, args, run_idx)
         elif args.plan == "curation_bucketed":
@@ -198,13 +195,12 @@ def worker(args) -> None:
             out = asof_join_skinny_intervals(
                 t, cf, sources=[f"f{i}" for i in range(8)])
         elif args.plan == "skinny_routed":
-            # hot/tail router: entities with >= threshold change points
-            # take the union path, the tail keeps the interval SMJ —
-            # the §7.13 hot-shard collapse, enforced in code
+            # hot/tail router: the hot-entity rule's entities take the
+            # union path, the tail keeps the interval SMJ — the §7.13
+            # hot-shard collapse, enforced in code
             from amazon_security_lake_transformation_library_spark.operators.asof import asof_join_skinny_routed
             out = asof_join_skinny_routed(
-                t, cf, sources=[f"f{i}" for i in range(8)],
-                hot_threshold_changes=1024)
+                t, cf, sources=[f"f{i}" for i in range(8)])
         else:
             out = asof_turn_features(t, cf)
         from pyspark.sql import Observation
@@ -555,7 +551,7 @@ def ensure_skinny_bucketed_layout(layout: str, procs: int) -> str:
 
 
 def run_level(layout: str, procs: int, cores: int, runs: int, heap: str,
-              plan: str, hot_threshold: str = "auto") -> dict:
+              plan: str) -> dict:
     t_map = bucket_files(os.path.join(layout, "sc_t"))
     cf_map = bucket_files(os.path.join(layout, "sc_cf"))
     assert set(t_map) == set(cf_map) and t_map, "layout missing bucket files"
@@ -601,7 +597,6 @@ def run_level(layout: str, procs: int, cores: int, runs: int, heap: str,
         cmd = [sys.executable, os.path.abspath(__file__), "--worker",
                "--shard", str(i), "--cores", str(cores), "--heap", heap,
                "--runs", str(runs), "--barrier", barrier, "--plan", plan,
-               "--hot-threshold", hot_threshold,
                "--n-buckets", str(nb), "--procs-total", str(procs),
                "--t-files", tf, "--cf-files", cff]
         children.append(subprocess.Popen(
@@ -655,10 +650,6 @@ def main() -> None:
                         "the curation plan's stage barrier waits for this "
                         "many partial-stats files")
     p.add_argument("--n-buckets", type=int, default=0)
-    p.add_argument("--hot-threshold", default="auto",
-                   help="bucketed plan's hot_threshold_rows: 'auto' (the "
-                        "r5 cost-model default), 'none' (unrouted cold "
-                        "plan — the r4 control), or an integer row count")
     p.add_argument("--worker", action="store_true")
     p.add_argument("--shard", type=int)
     p.add_argument("--t-files")
@@ -673,7 +664,7 @@ def main() -> None:
     cells = {}
     for procs in levels:
         cells[procs] = run_level(args.layout, procs, args.cores, args.runs,
-                                 args.heap, args.plan, args.hot_threshold)
+                                 args.heap, args.plan)
         print(f"# {procs} proc(s): wall_max={cells[procs]['wall_max']}s "
               f"rows={cells[procs]['rows_total']}", file=sys.stderr)
     lo, hi = min(levels), max(levels)
@@ -682,7 +673,6 @@ def main() -> None:
     speedup = cells[lo]["wall_max"] / cells[hi]["wall_max"]
     print(json.dumps({
         "mode": "storage_partitioned_driverless", "plan": args.plan,
-        "hot_threshold": args.hot_threshold,
         "rows": cells[lo]["rows_total"],
         "cells": {str(k): v for k, v in cells.items()},
         "speedup": round(speedup, 3),

@@ -3,6 +3,8 @@
 ``oracle_sql()`` via DuckDB — row count, column names, and
 order-insensitive value equality (floats compared exactly after the
 query-side rounding contract; both sides stringified identically).
+Each ``ok``/``FAIL`` line reports the Spark time (build + collect) and
+the DuckDB oracle time separately, so a slow oracle shows in a normal run.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 Each query argument is an exact name or a shell-style pattern, e.g.
@@ -98,6 +100,7 @@ def main() -> int:
             df = fn(spark, sf_dir)
             cols = df.columns
             rows = [tuple(r) for r in df.collect()]
+            spark_s = time.time() - t0
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             record(name, False, False, False, 0, 0,
@@ -106,16 +109,18 @@ def main() -> int:
             continue
         if name not in oracles:
             print(f"ok    {name}: rows-only ({len(rows)} rows, "
-                  f"{time.time()-t0:.1f}s)")
+                  f"spark {spark_s:.1f}s)")
             record(name, len(rows) > 0, True, None, len(rows), None)
             if len(rows) == 0:
                 failures.append(name)
                 print(f"FAIL  {name}: zero rows")
             continue
+        t1 = time.time()
         try:
             rel = con.sql(oracles[name])
             ocols = [c.lower() for c in rel.columns]
             orows = rel.fetchall()
+            oracle_s = time.time() - t1
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             record(name, False, False, False, len(rows), 0,
@@ -147,12 +152,12 @@ def main() -> int:
             len(orows),
             "; ".join(problems) or None,
         )
+        times = f"spark {spark_s:.1f}s, oracle {oracle_s:.1f}s"
         if problems:
             failures.append(name)
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name} ({times}): " + "; ".join(problems))
         else:
-            print(f"ok    {name}: {len(rows)} rows match "
-                  f"({time.time()-t0:.1f}s)")
+            print(f"ok    {name}: {len(rows)} rows match ({times})")
     print()
     out_json = os.environ.get("SPARK_GRAFT_ORACLE_JSON")
     if out_json:
