@@ -2282,29 +2282,25 @@ def _q_tool_chains(spark, sf_dir):
 
 
 def _q_decontaminate_bloom(spark, sf_dir):
-    """Decontamination through the COST-MODEL front end
-    (datasetops.decontaminate_auto, VERDICT r4 #4): on this single-node
-    bench it selects the plain fingerprint semi-join — the measured
-    winner at every locally reachable scale (BASELINE.md §8: the bloom
-    variant's map-side prefilter eliminates shuffle bytes that cost ~0
-    on one node, so it ran 1.9-2.2x plain with no crossover through a
-    16x eval blow-up). The Bloom path itself (decontaminate_bloom, a
-    512 KiB broadcast bitmap probed map-side before the exact join)
-    stays for network_shuffle=True cluster regimes; its correctness
-    carries an r4 driver-green row plus the tiny-bitmap pytest, and it
-    shares this oracle — the prefilter is output-transparent."""
+    """Decontamination as the curation job runs it: the plain fingerprint
+    semi-join (datasetops.decontaminate), the measured winner at every
+    locally reachable scale (BASELINE.md §8.1: the bloom variant's
+    map-side prefilter eliminates shuffle bytes that cost ~0 on one
+    node, so it ran 1.9-2.2x plain with no crossover through a 16x eval
+    blow-up). The Bloom path itself is pinned by
+    decontaminate_docs_bloom_forced, which shares this oracle — the
+    prefilter is output-transparent."""
     docs = _t(spark, sf_dir, "documents")
-    return dso.decontaminate_auto(
+    return dso.decontaminate(
         docs.filter(F.col("doc_id") % 2 == 0),
         docs.filter(F.col("doc_id") % 2 == 1),
     )
 
 
 def _q_decontaminate_bloom_forced(spark, sf_dir):
-    """The Bloom-prefilter decontamination plan ITSELF (r5: pinned
-    directly, not through the auto front end — decontaminate_auto picks
-    plain on a single node, which would leave the bloom plan's
-    correctness riding only on its r4 row + the tiny-bitmap pytest).
+    """The Bloom-prefilter decontamination plan ITSELF (datasetops.
+    decontaminate_bloom): no caller runs it on a single node, so this
+    query keeps its correctness gated beside the tiny-bitmap pytest.
     Runs the (word_idx, bits) distributed-bitmap build + k broadcast
     map-side probes + exact fingerprint semi-join; output-transparent
     vs the plain path, so it shares the oracle."""

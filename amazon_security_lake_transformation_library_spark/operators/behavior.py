@@ -23,8 +23,7 @@ Design for scale
   small per-entity tables, never the raw event stream; every raw-table
   scan is pre-filtered to one step's event type (predicate pushdown
   prunes it) and pre-shrunk by the partial min, and AQE broadcasts the
-  per-entity side when it fits. ``materialize_steps=True`` checkpoints
-  each step table to keep the lazy DAG linear for deep funnels.
+  per-entity side when it fits.
 
 * ``cohort_retention`` — first-seen-period cohort × offset activity
   matrix. One entity-keyed aggregate for the cohort assignment, one
@@ -73,7 +72,6 @@ def funnel_conversion(
     ts_col: str = "ts",
     type_col: str = "event_type",
     within_seconds: int | None = None,
-    materialize_steps: bool = False,
 ) -> DataFrame:
     """Per-entity ordered funnel: earliest completion time of each step,
     where step i must occur STRICTLY after the entity's step i-1 time.
@@ -101,10 +99,7 @@ def funnel_conversion(
     # pushdown makes the subtrees canonically distinct, so exchange reuse
     # cannot dedupe them): the static plan holds O(k^2) *step-filtered*
     # scans — fine for the typical k<=5 funnel where every scan prunes to
-    # one event type. For deep funnels over a 100-TB stream pass
-    # ``materialize_steps=True``: each tiny step table is eagerly
-    # localCheckpoint-ed once, making the DAG linear in k (the same
-    # per-round-cut trade graph.connected_components makes).
+    # one event type.
     s1 = (
         events.where(F.col(type_col) == steps[0])
         .groupBy(entity)
@@ -131,10 +126,7 @@ def funnel_conversion(
         aggs = [F.min("_cts").alias(f"step{i}_ts")]
         if within_seconds is not None and i < len(steps):
             aggs.append(F.min("step1_ts").alias("step1_ts"))
-        hit = cand.join(prev, cond, "inner").groupBy(entity).agg(*aggs)
-        if materialize_steps:
-            hit = hit.localCheckpoint(eager=True)
-        hits.append(hit)
+        hits.append(cand.join(prev, cond, "inner").groupBy(entity).agg(*aggs))
 
     acc = s1
     for i, hit in enumerate(hits[1:], start=2):

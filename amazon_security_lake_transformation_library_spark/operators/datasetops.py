@@ -406,7 +406,7 @@ def decontaminate_bloom(
     where the eval gram stream crosses the NETWORK to meet the train
     set: there the prefilter drops ~95% of those bytes map-side (fixture
     selectivity: 117k grams -> 5.8k survivors) for a fixed 512 KiB
-    broadcast. Use :func:`decontaminate_auto` to encode that choice; a
+    broadcast. Callers on one node use :func:`decontaminate`. A
     dense-literal probe (element_at on a 65k-long array literal) was also
     measured and REJECTED — 3x the two-join form, the giant literal falls
     out of whole-stage codegen.
@@ -427,46 +427,6 @@ def decontaminate_bloom(
         .groupBy(id_col)
         .agg(F.count_distinct("fp").alias("n_shared"))
     )
-
-
-def decontaminate_auto(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    m_bits: int = 1 << 22,
-    k: int = 2,
-    network_shuffle: bool = False,
-    eval_train_ratio: float = 4.0,
-) -> DataFrame:
-    """Cost-model front end for decontamination (VERDICT r4 #4): pick the
-    plain fingerprint semi-join or the Bloom-prefiltered variant from the
-    deployment regime instead of making the caller guess.
-
-    Decision rule, from the measured crossover sweep (BASELINE.md §8):
-
-    * ``network_shuffle=False`` (single node / co-located shuffle, the
-      default and this repo's bench environment): ALWAYS plain. Measured:
-      the exact join's shuffle is RAM-speed and costs less than the
-      bitmap build alone; the bloom variant ran 1.9-2.2x plain at every
-      eval size up to 16x the train corpus, with no crossover in sight
-      (its advantage scales with shuffle byte cost, which is ~0 here).
-    * ``network_shuffle=True`` (multi-node cluster): bloom when the eval
-      corpus is at least ``eval_train_ratio`` x the train corpus by row
-      count (two metadata-cheap counts) — the regime where the eval gram
-      stream dominates the join's network bytes and the ~95%-selective
-      map-side prefilter pays for its fixed 512 KiB broadcast many times
-      over; plain otherwise.
-    """
-    use_bloom = False
-    if network_shuffle:
-        use_bloom = eval_df.count() >= eval_train_ratio * train.count()
-    if use_bloom:
-        return decontaminate_bloom(
-            train, eval_df, text_col, id_col, n, m_bits=m_bits, k=k
-        )
-    return decontaminate(train, eval_df, text_col, id_col, n)
 
 
 def positive_pairs(

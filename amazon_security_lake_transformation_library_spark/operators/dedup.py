@@ -11,12 +11,13 @@ Scale design
   the cost is ``O(n_bands · n_docs)`` exchanged bytes and pairs are only
   materialized within a bucket — never the quadratic all-pairs. This is the
   standard shingle→minhash→band→bucket-join pipeline; at 100 TB you raise
-  ``n_hashes``/``bands`` and the plan shape does not change.
+  ``n_hashes``/``bands`` and the plan shape does not change. Each pair
+  comes once, from :func:`banded_pairs`: no pair-dedupe shuffle.
 * **n-gram Jaccard** verifies candidate pairs exactly — a self-join that is
   broadcast-able when the candidate set is small (it is, after LSH).
 * **SimHash**: per-row fold over token hashes into a 32-bit signature
   (``F.aggregate`` — pure Column expression, no Python); near-dups = equal
-  signature, or Hamming-adjacent via rotation tables.
+  signature, or Hamming <= k over the same band core (bit-slice bands).
 
 Hash choice: ``md5(seed || token)`` rather than xxhash64 so every stage is
 bit-reproducible in the ANSI-SQL DuckDB oracle (lexicographic MIN over hex
@@ -29,6 +30,8 @@ training-pipeline extension the rebuild adds.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -56,6 +59,57 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+# ------------------------------------------------------ banded LSH pairs
+
+def banded_pairs(
+    sig: DataFrame, id_col: str, bands: list[Column], payload: Sequence[str] = ()
+) -> DataFrame:
+    """The pair core under MinHash and SimHash LSH: each (doc_a, doc_b),
+    doc_a < doc_b, whose keys agree in at least one of the fixed
+    ``bands`` (Columns over ``sig``, one row per id), ONCE, with
+    ``n_shared`` agreeing bands and each ``payload`` column as
+    ``{name}_a`` / ``{name}_b``.
+
+    One persisted block table is self-joined on (band_id, key). A pair
+    sharing several bands meets once per band; instead of a shuffle to
+    drop the copies, a row is kept only at the FIRST band where the two
+    key arrays agree, position i against position i. NULL keys never
+    agree. The block table explodes an INLINE array: exploding an array
+    column lets Catalyst infer a ``size(col) > 0`` filter below
+    :func:`ensure_parallelism`'s round-robin, which runs the signature
+    pipeline twice (BASELINE.md §12)."""
+    n = len(bands)
+    keyed = sig.select(F.col(id_col), *payload, F.array(*bands).alias("__keys"))
+    blocks = persist_tracked(
+        keyed.select(
+            "*",
+            F.posexplode(F.array(*[F.col("__keys")[i] for i in range(n)]))
+            .alias("band_id", "key"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+
+    def side(s: str) -> DataFrame:
+        return blocks.select(
+            "band_id", "key",
+            F.col(id_col).alias(f"doc_{s}"),
+            F.col("__keys").alias(f"__keys_{s}"),
+            *[F.col(p).alias(f"{p}_{s}") for p in payload],
+        )
+
+    agree = [F.col("__keys_a")[i] == F.col("__keys_b")[i] for i in range(n)]
+    first = F.coalesce(*[F.when(a, F.lit(i)) for i, a in enumerate(agree)])
+    n_shared = sum(F.when(a, 1).otherwise(0) for a in agree)
+    return (
+        side("a").join(side("b"), ["band_id", "key"])
+        .filter((F.col("doc_a") < F.col("doc_b")) & (first == F.col("band_id")))
+        .select(
+            "doc_a", "doc_b", n_shared.cast("long").alias("n_shared"),
+            *[f"{p}_{s}" for s in "ab" for p in payload],
+        )
+    )
 
 
 # ---------------------------------------------------------------- exact
@@ -134,6 +188,18 @@ def minhash_signature(
     return hashed.select(F.col(id_col), *comps)
 
 
+def _minhash_bands(n_hashes: int, band_size: int) -> list[Column]:
+    """One bucket Column per band: the md5 of the band's signature slice.
+    F.concat (not concat_ws): NULL signature components must poison the
+    bucket so token-starved docs never collide on a sentinel hash."""
+    return [
+        F.md5(F.concat(*_intersperse(
+            [F.col(f"mh{b * band_size + j}") for j in range(band_size)]
+        )))
+        for b in range(n_hashes // band_size)
+    ]
+
+
 def minhash_band_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -141,31 +207,17 @@ def minhash_band_buckets(
     n_hashes: int = 8,
     band_size: int = 2,
 ) -> DataFrame:
-    """(band_id, bucket, doc_id) — one row per doc per band. Bucket is the
-    md5 of the band's signature slice. Downstream joins/groupBys shuffle on
-    (band_id, bucket): uniform keys, bounded fanout."""
+    """(band_id, bucket, doc_id) — one row per doc per band, bucketed as
+    :func:`minhash_candidate_pairs` does. Downstream joins/groupBys
+    shuffle on (band_id, bucket): uniform keys, bounded fanout."""
     sig = minhash_signature(
         ensure_parallelism(df), text_col, id_col, n_hashes
     )
-    n_bands = n_hashes // band_size
-    # F.concat (not concat_ws): NULL signature components must poison the
-    # bucket so token-starved docs never collide on a sentinel hash
-    bands = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat(
-                    *_intersperse(
-                        [F.col(f"mh{b * band_size + j}") for j in range(band_size)]
-                    )
-                )
-            ).alias("bucket"),
-        )
-        for b in range(n_bands)
-    ]
     return sig.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bb")
-    ).select(F.col("bb.band_id").alias("band_id"), F.col("bb.bucket").alias("bucket"), F.col(id_col))
+        F.posexplode(F.array(*_minhash_bands(n_hashes, band_size)))
+        .alias("band_id", "bucket"),
+        F.col(id_col),
+    )
 
 
 def minhash_candidate_pairs(
@@ -176,24 +228,16 @@ def minhash_candidate_pairs(
     band_size: int = 2,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing >=1 band bucket.
-    Returns (doc_a, doc_b, n_shared_bands), doc_a < doc_b. The self-join is
+    Returns (doc_a, doc_b, n_shared_bands), doc_a < doc_b, one row per
+    pair — :func:`banded_pairs` over the band buckets. The self-join is
     per-(band,bucket) — quadratic only inside a bucket, which LSH keeps
     small; AQE's skew-join splitter handles pathological buckets."""
-    # Materialize the bucket table: it is tiny (3 cols) next to the text it
-    # derives from, and the self-join would otherwise recompute the whole
-    # shingle+md5 pipeline for BOTH sides.
-    bb = persist_tracked(
-        minhash_band_buckets(df, text_col, id_col, n_hashes, band_size),
-        StorageLevel.MEMORY_AND_DISK,
+    sig = minhash_signature(
+        ensure_parallelism(df), text_col, id_col, n_hashes
     )
-    a = bb.select("band_id", "bucket", F.col(id_col).alias("doc_a"))
-    b = bb.select("band_id", "bucket", F.col(id_col).alias("doc_b"))
-    return (
-        a.join(b, ["band_id", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared_bands"))
-    )
+    return banded_pairs(
+        sig, id_col, _minhash_bands(n_hashes, band_size)
+    ).withColumnRenamed("n_shared", "n_shared_bands")
 
 
 def dedup_incremental(
@@ -379,9 +423,10 @@ def simhash_hamming_pairs(
     band trick: split each ``bits``-wide signature into ``n_bands``
     equal-width bands; pigeonhole guarantees any pair within Hamming
     ``n_bands - 1`` shares at least one identical band, so candidate
-    generation is a band-bucket equi-join (shuffle keyed by (band, slice)
-    — O(n_bands * n_docs) exchanged rows, never all-pairs), and the
-    popcount verify runs only on candidates. EXACT for ``k < n_bands``
+    generation is :func:`banded_pairs`' band-bucket equi-join (shuffle
+    keyed by (band, slice) — O(n_bands * n_docs) exchanged rows, never
+    all-pairs), and the popcount verify runs once per candidate pair.
+    EXACT for ``k < n_bands``
     (the default 3 < 4) — the DuckDB oracle is the brute-force Hamming
     scan and must agree pair-for-pair.
 
@@ -390,31 +435,18 @@ def simhash_hamming_pairs(
     assert k < n_bands, "band trick is only exact for k < n_bands"
     width = bits // n_bands
     mask = (1 << width) - 1
-    # persist: both sides of the band self-join scan `sig`; without it the
-    # md5+bit-vote fold runs twice per doc. (id, sh) is 2 longs per doc —
-    # negligible next to the text it summarizes.
-    sig = persist_tracked(ensure_parallelism(df).select(
+    sig = ensure_parallelism(df).select(
         F.col(id_col), simhash(F.col(text_col), bits).alias("sh")
-    ))
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.shiftright(F.col("sh"), b * width).bitwiseAND(F.lit(mask)).alias("slice"),
-        )
-        for b in range(n_bands)
-    ])
-    bb = sig.select(F.col(id_col), F.col("sh"), F.explode(bands).alias("b")).select(
-        id_col, "sh", F.col("b.band_id").alias("band_id"), F.col("b.slice").alias("slice")
     )
-    a = bb.select("band_id", "slice", F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = bb.select("band_id", "slice", F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
+    bands = [
+        F.shiftright(F.col("sh"), b * width).bitwiseAND(F.lit(mask))
+        for b in range(n_bands)
+    ]
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
-        a.join(b, ["band_id", "slice"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        banded_pairs(sig, id_col, bands, payload=("sh",))
         .select("doc_a", "doc_b", ham.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= k)
-        .distinct()
     )
 
 

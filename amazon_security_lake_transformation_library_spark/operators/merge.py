@@ -5,10 +5,8 @@ copy-on-write table rewrite.
 
 Scale design: the only join is ``base LEFT ANTI update-keys``. A CDC
 batch is small relative to the table, so the distinct update-key set is
-broadcast (``broadcast_updates=True``, the default) — the base table is
-NEVER shuffled, the merge pipelines inside the base scan, and the output
-unions the surviving updates on top. With ``broadcast_updates=False``
-the anti-join falls back to a shuffled SMJ for pathological batch sizes.
+broadcast — the base table is NEVER shuffled, the merge pipelines inside
+the base scan, and the output unions the surviving updates on top.
 Combined with a partitioned base table, Catalyst prunes untouched
 partitions via the key predicate pushdown — the same effect Iceberg's
 merge-on-read achieves with delete files.
@@ -34,7 +32,6 @@ def merge_upsert(
     updates: DataFrame,
     key_cols: str | Sequence[str],
     deleted_col: str | None = None,
-    broadcast_updates: bool = True,
 ) -> DataFrame:
     """Apply a CDC batch to ``base``: rows whose key appears in
     ``updates`` are replaced (matched-update) or, when
@@ -46,9 +43,7 @@ def merge_upsert(
     several update rows are all applied (callers wanting last-writer-wins
     should pre-reduce the batch with a row_number window)."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    upd_keys = updates.select(*keys).distinct()
-    if broadcast_updates:
-        upd_keys = F.broadcast(upd_keys)
+    upd_keys = F.broadcast(updates.select(*keys).distinct())
     kept = base.join(upd_keys, keys, "left_anti")
     if deleted_col is not None:
         live = updates.filter(
@@ -65,7 +60,6 @@ def incremental_refresh(
     delta: DataFrame,
     compute: Callable[[DataFrame], DataFrame],
     keys: str | Sequence[str] = "conv_id",
-    broadcast_affected: bool = True,
 ) -> DataFrame:
     """Incremental maintenance of a per-entity derived table: given the
     current snapshot ``base`` (one row per key, previously produced by
@@ -84,9 +78,8 @@ def incremental_refresh(
 
     Scale shape: ``affected = delta.keys.distinct()`` is a hash agg over
     the (small) delta; the recompute input is ``history LEFT SEMI
-    affected`` and the survivors are ``base LEFT ANTI affected`` — with
-    ``broadcast_affected`` (default) both joins broadcast the key set,
-    so neither the history scan nor the snapshot scan shuffles, and on a
+    affected`` and the survivors are ``base LEFT ANTI affected`` — both
+    joins broadcast the key set, so neither the history scan nor the snapshot scan shuffles, and on a
     conv-bucketed layout ``compute``'s own window/agg adds zero Exchange
     too. A day's delta touching D of C conversations costs
     O(scan(history of D convs) + scan(base)), not O(recompute(C)) —
@@ -95,9 +88,7 @@ def incremental_refresh(
     present in its input (true of every profile/feature rollup here).
     """
     kk = [keys] if isinstance(keys, str) else list(keys)
-    affected = delta.select(*kk).distinct()
-    if broadcast_affected:
-        affected = F.broadcast(affected)
+    affected = F.broadcast(delta.select(*kk).distinct())
     recomputed = compute(history.join(affected, kk, "left_semi"))
     untouched = base.join(affected, kk, "left_anti")
     return untouched.unionByName(recomputed)

@@ -311,7 +311,6 @@ def tf_idf_top_terms(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Top-k terms per document by smoothed TF-IDF:
     score = tf * (ln((N + 1) / (df + 1)) + 1), rounded to 4 decimals.
@@ -319,9 +318,8 @@ def tf_idf_top_terms(
     Shape: one explode -> groupBy (doc, term) with map-side combine for
     term frequencies; document frequencies and the corpus size N are
     aggregates OF that table (no second scan of the text); the df-side
-    join is broadcast when ``broadcast_vocab`` (right for bounded
-    vocabularies — natural language; flip to a shuffle join for
-    open-ended keys like URLs). Top-k per doc is a rank-filter window
+    join is broadcast (right for bounded vocabularies — natural
+    language). Top-k per doc is a rank-filter window
     partitioned by doc — Spark plans WindowGroupLimit, so only k rows
     per doc survive the window's sort buffer. Ties: term text asc.
     """
@@ -333,14 +331,12 @@ def tf_idf_top_terms(
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    docfreq = terms.groupBy("term").agg(
+    docfreq = F.broadcast(terms.groupBy("term").agg(
         F.count(F.lit(1)).alias("df_docs")
-    )
+    ))
     ndocs = df.select(
         F.count_distinct(F.col(id_col)).alias("n_docs")
     )
-    if broadcast_vocab:
-        docfreq = F.broadcast(docfreq)
     ndocs = F.broadcast(ndocs)
     scored = (
         terms.join(docfreq, "term")

@@ -360,18 +360,14 @@ def entropy_gate(
     id_col: str = "doc_id",
     min_bits: float = 2.0,
     max_bits: float = 6.0,
-    backend: str = "arrow",
 ) -> DataFrame:
     """Per-document entropy quality gate: emit id, entropy (4 dp), and
     keep/reject with the reject reason — the same persisted-reject
     discipline as corpus_filter / the mapping pipeline (rejects are
     routed, never silently dropped). Pure projection; scales with bytes.
-
-    ``backend="arrow"`` (default) uses the batch-flattened numpy
-    histogram path; ``backend="sql"`` the whole-stage-codegen lambda
-    fold — same float64 formula, equality-tested."""
-    fn = char_entropy_arrow if backend == "arrow" else char_entropy
-    h = fn(F.col(text_col))
+    Entropy comes from the batch-flattened numpy histogram,
+    :func:`char_entropy_arrow`."""
+    h = char_entropy_arrow(F.col(text_col))
     return df.select(
         F.col(id_col),
         F.round(h, 4).alias("entropy_bits"),

@@ -34,6 +34,7 @@ read back from the manifest, like build_features.py.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
@@ -66,7 +67,13 @@ def parse_args(argv=None):
 
 def main(argv=None) -> int:
     args = parse_args(argv)
+    # reads are lazy: the synth directory goes once _run's actions are done
+    with (tempfile.TemporaryDirectory(prefix="assemble_") if args.synth
+          else contextlib.nullcontext()) as tmp:
+        return _run(args, tmp)
 
+
+def _run(args, tmp) -> int:
     from amazon_security_lake_transformation_library_spark.operators.asof import (
         asof_join_skinny_auto,
     )
@@ -80,7 +87,6 @@ def main(argv=None) -> int:
             gen_feature_log, gen_transcripts, write_parquet,
         )
 
-        tmp = tempfile.mkdtemp(prefix="assemble_")
         pdf = gen_transcripts(n_convs=args.synth, mean_turns=args.mean_turns)
         write_parquet(pdf, f"{tmp}/transcripts.parquet")
         write_parquet(gen_feature_log(pdf), f"{tmp}/feature_log.parquet")

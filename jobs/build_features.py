@@ -24,6 +24,7 @@ external data).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
@@ -51,7 +52,13 @@ def parse_args(argv=None):
 
 def main(argv=None) -> int:
     args = parse_args(argv)
+    # reads are lazy: the synth directory goes once _run's actions are done
+    with (tempfile.TemporaryDirectory(prefix="transcripts_") if args.synth
+          else contextlib.nullcontext()) as tmp:
+        return _run(args, tmp)
 
+
+def _run(args, tmp) -> int:
     from amazon_security_lake_transformation_library_spark.functions.timeops import eventday
     from amazon_security_lake_transformation_library_spark.operators.features import build_turn_features
     from amazon_security_lake_transformation_library_spark.operators.fused import (
@@ -70,7 +77,6 @@ def main(argv=None) -> int:
     t0 = time.time()
 
     if args.synth:
-        tmp = tempfile.mkdtemp(prefix="transcripts_")
         pdf = gen_transcripts(n_convs=args.synth, mean_turns=args.mean_turns)
         write_parquet(pdf, f"{tmp}/transcripts.parquet")
         write_parquet(gen_conv_features(pdf), f"{tmp}/conv_features.parquet")

@@ -6,8 +6,8 @@ runs, composed from the library's operators:
     s2_neardup   MinHash+LSH candidates -> n-gram Jaccard verify ->
                  connected-component cluster resolution -> keep one
                  representative per near-dup cluster
-    s3_decon     eval-set decontamination (8-gram fingerprint semi-join
-                 through the decontaminate_auto cost-model front end)
+    s3_decon     eval-set decontamination (8-gram fingerprint semi-join,
+                 datasetops.decontaminate)
     s4_quality   vectorized doc-stats quality gate (quality_bp floor)
     s5_pack      concat-and-chunk sequence packing into fixed token
                  budgets, sharded
@@ -43,6 +43,7 @@ from the last committed stage instead of re-reading the corpus.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
@@ -82,18 +83,18 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
-def synth_docs(spark, n_convs: int) -> DataFrame:
+def synth_docs(spark, n_convs: int, tmp: str) -> DataFrame:
     """Deterministic demo corpus: one doc per synthetic transcript turn,
     one doc-unique token interleaved between every natural token pair
     (the raw ~30-word turn vocabulary is degenerately self-similar for
     LSH — BASELINE.md §8.4), ~5% full-text clones of the previous turn
-    injected for the dedup stages to find."""
+    injected for the dedup stages to find. The transcripts parquet is
+    written under ``tmp`` and read lazily."""
     from amazon_security_lake_transformation_library_spark.synth.transcripts import (
         gen_transcripts, write_parquet,
     )
     from pyspark.sql import Window
 
-    tmp = tempfile.mkdtemp(prefix="curate_synth_")
     write_parquet(gen_transcripts(n_convs=n_convs, mean_turns=20),
                   f"{tmp}/t.parquet")
     t = spark.read.parquet(f"{tmp}/t.parquet")
@@ -117,7 +118,13 @@ def synth_docs(spark, n_convs: int) -> DataFrame:
 
 def main(argv=None) -> int:
     args = parse_args(argv)
+    # reads are lazy: the synth directory goes once _run's actions are done
+    with (tempfile.TemporaryDirectory(prefix="curate_synth_") if args.synth
+          else contextlib.nullcontext()) as tmp:
+        return _run(args, tmp)
 
+
+def _run(args, tmp) -> int:
     from amazon_security_lake_transformation_library_spark.operators import (
         datasetops as dso,
         dedup as dd,
@@ -135,7 +142,7 @@ def main(argv=None) -> int:
     run_id = args.run_id or new_snapshot_id()
 
     if args.synth:
-        docs = synth_docs(spark, args.synth)
+        docs = synth_docs(spark, args.synth, tmp)
     elif args.input:
         docs = spark.read.parquet(args.input)
     else:
@@ -192,7 +199,7 @@ def main(argv=None) -> int:
             # with train; curation needs the other direction — which
             # CORPUS docs share grams with the benchmark — so the corpus
             # takes the eval seat
-            flagged = dso.decontaminate_auto(eval_df, docs2).select("doc_id")
+            flagged = dso.decontaminate(eval_df, docs2).select("doc_id")
             return docs2.join(flagged, "doc_id", "anti")
 
         docs3 = stage("s3_decon", s3)

@@ -93,14 +93,6 @@ def test_funnel_matches_brute_force(spark, events_df, events_pdf, within):
                 assert gt == t.to_pydatetime(), (uid, i)
 
 
-def test_funnel_materialized_steps_identical(spark, events_df):
-    steps = ["signup", "click", "purchase"]
-    lazy = bhv.funnel_conversion(events_df, steps).collect()
-    eager = bhv.funnel_conversion(events_df, steps, materialize_steps=True).collect()
-    key = lambda r: r["user_id"]  # noqa: E731
-    assert sorted(lazy, key=key) == sorted(eager, key=key)
-
-
 def test_funnel_counts_monotone_and_exact(spark, events_df, events_pdf):
     steps = ["signup", "view", "click", "purchase"]
     fd = bhv.funnel_conversion(events_df, steps)

@@ -302,10 +302,9 @@ def test_decontaminate_bloom_equals_exact(spark):
     assert set(exact) == {1000, 1001}
 
 
-def test_decontaminate_auto_strategy_selection(spark):
-    """The cost-model front end: single-node default -> the PLAIN plan
-    (no bloom operators anywhere in it); network_shuffle with a large
-    eval/train ratio -> the bloom plan; both produce the exact answer."""
+def test_decontaminate_plain_and_bloom_plans_agree(spark):
+    """The plain plan has no bloom operators, the Bloom plan has them,
+    and both produce the exact answer."""
     rng = np.random.default_rng(41)
     vocab = np.array([f"w{i}" for i in range(300)])
     rows = [(i, " ".join(rng.choice(vocab, size=30))) for i in range(40)]
@@ -313,25 +312,16 @@ def test_decontaminate_auto_strategy_selection(spark):
     ev = spark.createDataFrame(
         rows[10:] + [(999, rows[2][1])], "doc_id long, text string"
     )
-    exact = {r["doc_id"]: r["n_shared"]
-             for r in D.decontaminate(train, ev).collect()}
-
-    auto_plain = D.decontaminate_auto(train, ev)
-    plan = auto_plain._jdf.queryExecution().executedPlan().toString()
+    plain = D.decontaminate(train, ev)
+    plan = plain._jdf.queryExecution().executedPlan().toString()
     assert "word_idx" not in plan and "bit_or" not in plan
-    assert {r["doc_id"]: r["n_shared"] for r in auto_plain.collect()} == exact
+    exact = {r["doc_id"]: r["n_shared"] for r in plain.collect()}
+    assert 999 in exact
 
-    auto_bloom = D.decontaminate_auto(
-        train, ev, network_shuffle=True, eval_train_ratio=2.0
-    )
-    plan_b = auto_bloom._jdf.queryExecution().executedPlan().toString()
+    bloom = D.decontaminate_bloom(train, ev)
+    plan_b = bloom._jdf.queryExecution().executedPlan().toString()
     assert "word_idx" in plan_b
-    assert {r["doc_id"]: r["n_shared"] for r in auto_bloom.collect()} == exact
-    # ratio not met under network shuffle -> plain again
-    auto_p2 = D.decontaminate_auto(
-        train, ev, network_shuffle=True, eval_train_ratio=100.0
-    )
-    assert "word_idx" not in auto_p2._jdf.queryExecution().executedPlan().toString()
+    assert {r["doc_id"]: r["n_shared"] for r in bloom.collect()} == exact
 
 
 def test_bloom_bitmap_no_false_negatives(spark):

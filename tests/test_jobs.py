@@ -266,3 +266,33 @@ def test_curate_corpus_job_resume(spark, tmp_path, capsys):
     assert all(s["resumed"] for n, s in out["stages"].items()
                if "skipped_no_eval" not in s)
     assert _read_stage_ids(spark, root, "s4_quality") == set(range(60))
+
+
+def test_jobs_remove_their_synth_directories(spark, tmp_path, monkeypatch, capsys):
+    """Each job's --synth input directory is gone when the job returns,
+    and also when it raises after writing it."""
+    import tempfile
+
+    from amazon_security_lake_transformation_library_spark.plans.writer import (
+        SnapshotWriter,
+    )
+    from jobs import assemble_features, build_features, curate_corpus
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    assert build_features.main(["--synth", "10"]) == 0
+    assert assemble_features.main(["--synth", "10"]) == 0
+    assert curate_corpus.main(["--synth", "5", "--output", str(tmp_path / "cur"),
+                               "--stop-after", "s1_exact"]) == 0
+    capsys.readouterr()
+
+    def fail(*a, **k):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(SnapshotWriter, "commit", fail)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        build_features.main(["--synth", "10", "--output", str(tmp_path / "bf")])
+    left = [p.name for p in scratch.iterdir()
+            if p.name.startswith(("transcripts_", "assemble_", "curate_synth_"))]
+    assert left == []

@@ -529,3 +529,23 @@ def test_covariance_single_fold_aggregate(spark):
     plan = _plan(entrymod.queries()["embedding_covariance"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
+@pytest.mark.parametrize("query", ["dedup_minhash_lsh", "dedup_simhash_hamming"])
+def test_banded_pairs_no_aggregate_above_band_join(spark, query):
+    """The LSH pair queries emit each pair from its first shared band:
+    no aggregate above the band self-join, and no inferred ``size(``
+    filter (exploding an array column would push one below the
+    round-robin and run the signature pipeline twice)."""
+    from amazon_security_lake_transformation_library_spark import caching
+
+    df = entrymod.queries()[query](spark, SF_DIR)
+    df.write.format("noop").mode("overwrite").save()
+    plan = _plan(df)  # AQE-final after the action
+    caching.release_all()
+    assert "AdaptiveSparkPlan isFinalPlan=true" in plan, plan
+    join_pos = min(p for p in (plan.find("SortMergeJoin"),
+                               plan.find("ShuffledHashJoin"),
+                               plan.find("BroadcastHashJoin")) if p >= 0)
+    assert "Aggregate" not in plan[:join_pos], plan
+    assert not re.search(r"Filter [^\n]*size\(", plan), plan

@@ -137,3 +137,48 @@ def test_curriculum_total_ordered_nan_safe(spark, scores, n_buckets):
     vals = [v for _, v in real]
     if len(set(vals)) == len(vals) and len(vals) >= n_buckets:
         assert max(buckets) == n_buckets - 1
+
+
+@st.composite
+def band_tables(draw):
+    """(n_bands, rows) with few distinct keys, so pairs share anything
+    from one band to all of them; NULL keys, one row and the empty table
+    included. Ids are distinct but not in row order."""
+    n_bands = draw(st.integers(1, 4))
+    n = draw(st.integers(0, 10))
+    ids = draw(st.permutations(range(100, 100 + n)))
+    key = st.one_of(st.none(), st.integers(0, 2))
+    rows = [(i, *draw(st.lists(key, min_size=n_bands, max_size=n_bands)))
+            for i in ids]
+    return n_bands, rows
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(table=band_tables())
+def test_banded_pairs_matches_bruteforce(spark, table):
+    """Every id pair with at least one agreeing non-NULL band appears
+    exactly once, with the number of agreeing bands and both payloads."""
+    from amazon_security_lake_transformation_library_spark import caching
+
+    n_bands, rows = table
+    keys = [f"k{b}" for b in range(n_bands)]
+    sig = spark.createDataFrame(
+        rows, "id long, " + ", ".join(f"{k} long" for k in keys)
+    ).withColumn("p", F.col("id") * 10)
+    got = sorted(
+        tuple(r) for r in dd.banded_pairs(
+            sig, "id", [F.col(k) for k in keys], payload=("p",)
+        ).collect()
+    )
+    caching.release_all()
+    want = []
+    for a, *ka in rows:
+        for b, *kb in rows:
+            shared = sum(x is not None and x == y for x, y in zip(ka, kb))
+            if a < b and shared:
+                want.append((a, b, shared, a * 10, b * 10))
+    assert got == sorted(want)

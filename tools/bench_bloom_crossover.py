@@ -15,8 +15,9 @@ materialization, same session, warmed), report seconds + the ratio, and
 bracket the window with the ALU/membw probes (BASELINE.md §5.1 method).
 
 Output: one JSON line per E plus a summary line with the crossover ratio
-(the smallest eval/train gram ratio where bloom wins). Feeds the
-decontaminate_auto() threshold and BASELINE.md §8.
+(the smallest eval/train gram ratio where bloom wins). Feeds
+BASELINE.md §8.1, which found none on one node, so callers use the
+plain datasetops.decontaminate.
 """
 
 from __future__ import annotations

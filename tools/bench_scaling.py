@@ -4,8 +4,11 @@ IDENTICAL input at local[8] and local[32], report turns/sec at both and
 efficiency = (T_8 / T_32) / 4.
 
 Each parallelism level runs in its own subprocess (fresh JVM — no config
-bleed between masters). Within a worker the job runs ``--runs`` times and
-the fastest wall is kept (amortizes JIT/shuffle-service warmup).
+bleed between masters). Within a worker the job runs ``--runs`` times: the
+first run is reported as ``cold``, and ``wall`` is the median of the last
+half of the remaining (warm) runs — warm walls still fall run after run
+(BASELINE.md §11), so the fastest wall or the min-max spread would measure
+JIT/shuffle-service warm-up, not the plan. ``walls`` keeps every run.
 
 Strategies (``--strategies``, comma-separated):
   * fused        — the plain one-Exchange flagship block: the hot
@@ -39,6 +42,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -212,8 +216,10 @@ def worker(args) -> None:
         t0 = time.time()
         rows = job()
         walls.append(time.time() - t0)
+    warm = walls[1:] or walls
     print(json.dumps({"cpus": args.cpus, "rows": rows,
-                      "wall": round(min(walls), 3),
+                      "cold": round(walls[0], 3),
+                      "wall": round(statistics.median(warm[len(warm) // 2:]), 3),
                       "walls": [round(w, 3) for w in walls]}))
 
 
@@ -283,7 +289,7 @@ def main() -> None:
     result: dict = {"n_turns": int(n_rows), "hot_turns": int(hot),
                     "levels": levels, "strategies": {}}
     for strat in args.strategies.split(","):
-        walls, runs = {}, {}
+        walls, colds, runs = {}, {}, {}
         for cpus in levels:
             cmd = [sys.executable, os.path.abspath(__file__), "--worker",
                    "--cpus", str(cpus), "--data", data, "--strategy", strat,
@@ -300,6 +306,7 @@ def main() -> None:
                 out.check_returncode()
             rec = json.loads(out.stdout.strip().splitlines()[-1])
             walls[cpus] = rec["wall"]
+            colds[cpus] = rec["cold"]
             runs[cpus] = rec["walls"]
             print(f"# {strat} local[{cpus}]: {rec['wall']}s "
                   f"({rec['rows'] / rec['wall']:.0f} turns/s)", file=sys.stderr)
@@ -308,6 +315,7 @@ def main() -> None:
         eff = speedup / (hi / lo)
         result["strategies"][strat] = {
             "wall_sec": walls,
+            "cold_sec": colds,
             "runs": runs,
             "turns_per_sec": {c: round(n_rows / w, 1) for c, w in walls.items()},
             "speedup": round(speedup, 3),
