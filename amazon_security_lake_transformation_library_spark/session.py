@@ -2,12 +2,34 @@
 
 Every job/test goes through :func:`get_spark` so configs that matter at
 100 TB (AQE, UTC, Arrow, shuffle sizing, skew-join) are uniform.
+
+Local sessions also get a fork-free local filesystem. The pip pyspark
+wheel ships no native ``libhadoop``, and without it Hadoop's
+``RawLocalFileSystem`` starts a ``chmod`` process for every file, ``.crc``
+sidecar and directory it creates, and a ``readlink`` process for every
+FileContext status check and rename (streaming offsets, commits and
+state-store deltas). That was about 200 forks per eventday commit and
+about 140 per streaming micro-batch, most of a small commit's fixed cost
+(BASELINE.md §13). The classes in ``jvm/`` keep Hadoop's local filesystem,
+``.crc`` checksums and permission bits included, and make those two calls
+with ``java.nio`` instead. They are compiled once with ``javac`` into a
+user cache directory.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import sys
+import tempfile
+from importlib import resources
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
@@ -33,6 +55,93 @@ _DEFAULTS = {
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
+
+# Hadoop's two keys for the file:// scheme: FileSystem (batch reads and
+# writes) and AbstractFileSystem (FileContext: checkpoints, state store).
+_NIO_FS = {
+    "spark.hadoop.fs.file.impl": "aslspark.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "aslspark.fs.NioLocalFs",
+}
+_CLASSPATH_KEYS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
+
+
+@functools.lru_cache(maxsize=None)
+def _nio_fs_classes() -> str | None:
+    """Directory of the compiled ``jvm/`` classes, or None (said once on
+    stderr) when this host cannot build them.
+
+    The directory is keyed by the sources' hash and the Hadoop jar's name.
+    It is built in a temporary directory and renamed into place, so
+    sessions that start side by side never see a half-built one.
+    """
+    sources = sorted(
+        (f.name, f.read_bytes())
+        for f in (resources.files(__package__) / "jvm").iterdir()
+        if f.name.endswith(".java")
+    )
+    jars = [
+        jar for part in ("api", "runtime")
+        for jar in glob.glob(os.path.join(
+            _find_spark_home(), "jars", f"hadoop-client-{part}-*.jar"))
+    ]
+    java_home = os.environ.get("JAVA_HOME")
+    javac = (os.path.join(java_home, "bin", "javac") if java_home
+             else shutil.which("javac"))
+    if not (jars and javac and os.path.exists(javac)):
+        print("asl-spark: no javac or Hadoop client jar; local sessions keep "
+              "Hadoop's LocalFileSystem, which forks chmod/readlink per file",
+              file=sys.stderr)
+        return None
+    key = hashlib.sha256(repr((sources, [os.path.basename(j) for j in jars]))
+                         .encode()).hexdigest()[:16]
+    root = os.path.join(os.environ.get("XDG_CACHE_HOME")
+                        or os.path.expanduser("~/.cache"), "asl-spark")
+    out = os.path.join(root, f"nio-fs-{key}")
+    if os.path.isdir(out):
+        return out
+    try:
+        os.makedirs(root, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=root, prefix=".build-")
+        try:
+            for name, body in sources:
+                with open(os.path.join(tmp, name), "wb") as fh:
+                    fh.write(body)
+            subprocess.run(
+                [javac, "--release", "17", "-nowarn", "-d", tmp,
+                 "-cp", os.pathsep.join(jars),
+                 *(os.path.join(tmp, name) for name, _ in sources)],
+                check=True, capture_output=True,
+            )
+            os.rename(tmp, out)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)  # already gone if renamed
+    except (OSError, subprocess.CalledProcessError) as e:
+        if not os.path.isdir(out):  # else a side-by-side session built it
+            print(f"asl-spark: building the local filesystem classes failed "
+                  f"({e}); local sessions keep Hadoop's LocalFileSystem",
+                  file=sys.stderr)
+            return None
+    return out
+
+
+def _nio_fs_conf(master: str) -> dict:
+    """The conf that swaps in the fork-free local filesystem, or ``{}``.
+
+    Only a ``local[...]``/``local-cluster[...]`` master on a POSIX host
+    gets it: there the cache directory is on every executor's
+    host, and ``java.nio`` has POSIX permissions to set. The classes
+    must be on the JVM's class path when it starts, so only the call that
+    starts the JVM gets them; a JVM that is already up (a stopped
+    session's, or one ``spark-submit`` started) keeps Hadoop's classes.
+    """
+    if (not master.startswith("local") or os.name != "posix"
+            or SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ):
+        return {}
+    classes = _nio_fs_classes()
+    if classes is None:
+        return {}
+    return {**_NIO_FS, **dict.fromkeys(_CLASSPATH_KEYS, classes)}
 
 
 def get_spark(
@@ -64,6 +173,12 @@ def get_spark(
     a cluster, the default parallelism counts only the executor cores
     registered when the session starts, so a streaming job there should
     pass its count explicitly.
+
+    A local master also gets the fork-free local filesystem (module
+    docstring). An explicit ``fs.file.impl`` or
+    ``fs.AbstractFileSystem.file.impl`` in ``extra_conf`` wins; an explicit
+    extra class path keeps its entries and gets the classes' directory
+    appended.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -79,8 +194,13 @@ def get_spark(
     conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = str(
         shuffle_partitions
     )
+    nio = _nio_fs_conf(master)
+    conf.update(nio)
     if extra_conf:
         conf.update(extra_conf)
+        for k in _CLASSPATH_KEYS:
+            if k in nio and k in extra_conf:
+                conf[k] = extra_conf[k] + os.pathsep + nio[k]
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

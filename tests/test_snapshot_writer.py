@@ -5,6 +5,9 @@ one-Spark-job commit, and crash safety of the driver-side log files."""
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
+import sys
 import time
 import uuid
 
@@ -314,3 +317,117 @@ def test_table_with_spark_written_logs_still_commits(spark, tmp_path):
         ("old", 12), ("new", 12)}
     assert mx.compact(w, spark, "old")["files_after"] == 3
     assert w.read(spark).count() == 24
+
+
+# ------------------------------------------------ the fork-free local filesystem
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_FORK_PROBE = """
+import os, sys
+import pyarrow as pa, pyarrow.parquet as pq
+from pyspark.sql import functions as F
+from amazon_security_lake_transformation_library_spark.plans.writer import SnapshotWriter
+from amazon_security_lake_transformation_library_spark.session import get_spark
+from amazon_security_lake_transformation_library_spark.streaming import pipeline as sp
+from amazon_security_lake_transformation_library_spark.synth.transcripts import gen_transcripts
+
+out, log = sys.argv[1], os.environ["FORK_LOG"]
+spark = get_spark("fork-probe", master="local[2]")
+pdf = gen_transcripts(n_convs=6, mean_turns=8, seed=3).sort_values("ts")
+os.makedirs(f"{out}/in")
+for i, part in enumerate((pdf.iloc[: len(pdf) // 2], pdf.iloc[len(pdf) // 2:])):
+    pq.write_table(pa.Table.from_pandas(part, preserve_index=False),
+                   f"{out}/in/part-{i}.parquet")
+    os.utime(f"{out}/in/part-{i}.parquet", (1_700_000_000 + i,) * 2)
+open(log, "w").close()  # what the launcher ran is not the engine's
+batch = spark.read.parquet(f"{out}/in").withColumn(
+    "eventday", F.date_format(F.col("ts").cast("timestamp"), "yyyyMMdd"))
+assert SnapshotWriter(f"{out}/batch").commit(
+    batch, "s1", partition_cols=["eventday"])
+feats = sp.stateful_turn_features(
+    sp.read_turn_stream(spark, f"{out}/in", max_files_per_trigger=1),
+    watermark="100 days")
+q = sp.incremental_feature_job(feats, f"{out}/stream", f"{out}/ckpt").trigger(
+    availableNow=True).start()
+q.awaitTermination(300)
+assert len(SnapshotWriter(f"{out}/stream").committed_snapshots(spark)) == 2
+spark.stop()
+"""
+
+
+def test_local_sessions_fork_no_chmod_or_readlink(tmp_path):
+    """A local session commits an eventday snapshot and drains a 2-batch
+    stateful stream (offsets, commits, state-store deltas) without starting
+    one chmod or readlink process. Hadoop's stock local filesystem without
+    libhadoop starts about 260 for the same work (session.py)."""
+    bin_dir, log = tmp_path / "bin", tmp_path / "forks.log"
+    bin_dir.mkdir()
+    for cmd in ("chmod", "readlink"):
+        wrapper = bin_dir / cmd
+        wrapper.write_text(
+            f'#!/bin/sh\necho "{cmd} $*" >> "$FORK_LOG"\n'
+            f'exec {shutil.which(cmd)} "$@"\n')
+        wrapper.chmod(0o755)
+    env = dict(os.environ, PYTHONPATH=ROOT, FORK_LOG=str(log),
+               PATH=f"{bin_dir}{os.pathsep}{os.environ['PATH']}")
+    out = subprocess.run(
+        [sys.executable, "-c", _FORK_PROBE, str(tmp_path / "work")],
+        capture_output=True, text=True, env=env, cwd=ROOT, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    forks = log.read_text().splitlines()
+    assert forks == [], f"{len(forks)} forks, first: {forks[:5]}"
+
+
+def test_local_filesystem_keeps_hadoop_semantics(spark, tmp_path):
+    """The session's local filesystem is the fork-free one, and it keeps
+    what the stock LocalFileSystem does: the same mode bits on the files
+    and directories it makes (under a setgid directory too), .crc sidecars
+    on a commit, and a checksum failure when a committed byte changes."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    stock = jvm.org.apache.hadoop.fs.LocalFileSystem()
+    stock.initialize(jvm.java.net.URI("file:///"), conf)
+    ours = jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    assert ours.getClass().getName() == "aslspark.fs.NioLocalFileSystem"
+
+    def modes(fs, name):
+        d = tmp_path / name
+        d.mkdir()
+        d.chmod(0o2775)  # setgid: chmod(1) keeps it on the new directories
+        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(str(d / "a" / "b")))
+        fs.create(jvm.org.apache.hadoop.fs.Path(str(d / "a" / "f"))).close()
+        return {p.relative_to(d).as_posix(): p.stat().st_mode
+                for p in sorted(d.rglob("*"))}
+
+    got, want = modes(ours, "nio"), modes(stock, "stock")
+    assert got == want and "a/.f.crc" in got
+
+    w = SnapshotWriter(str(tmp_path / "tbl"))
+    assert w.commit(spark.range(100).withColumn("eventday", F.lit("20240101")),
+                    "s1", partition_cols=["eventday"])
+    files = [os.path.join(d, f) for d, _, fs in os.walk(w.data_path) for f in fs]
+    data = [f for f in files if f.endswith(".parquet")]
+    assert data and all(
+        os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc") in files
+        for f in data)
+    with open(data[0], "r+b") as fh:
+        fh.seek(8)
+        b = fh.read(1)
+        fh.seek(8)
+        fh.write(bytes([b[0] ^ 0xFF]))
+    with pytest.raises(Exception, match="ChecksumException"):
+        w.read(spark).collect()
+
+
+def test_session_without_javac_keeps_stock_filesystem(tmp_path, monkeypatch, capsys):
+    """No javac: the classes are not built and stderr says why, so a
+    session keeps Hadoop's classes. A non-local master never gets the
+    swap."""
+    from amazon_security_lake_transformation_library_spark import session
+
+    monkeypatch.setenv("JAVA_HOME", str(tmp_path))  # holds no bin/javac
+    assert session._nio_fs_classes.__wrapped__() is None
+    assert "keep Hadoop's LocalFileSystem" in capsys.readouterr().err
+    assert session._nio_fs_conf("yarn") == {}

@@ -578,8 +578,11 @@ def test_incremental_dedup_job_stream_and_replay(spark, tmp_path):
     root = str(tmp_path / "ingest")
     os.makedirs(root)
     for i, part in enumerate((f1, f2)):
-        pq.write_table(pa.Table.from_pandas(part, preserve_index=False),
-                       os.path.join(root, f"part-{i}.parquet"))
+        path = os.path.join(root, f"part-{i}.parquet")
+        pq.write_table(pa.Table.from_pandas(part, preserve_index=False), path)
+        # the source orders by mtime: two writes in one millisecond tie,
+        # and a tie falls back to directory order, file 2 first here
+        os.utime(path, (1_700_000_000 + i,) * 2)
 
     index_root = str(tmp_path / "index")
     os.makedirs(index_root)

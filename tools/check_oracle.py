@@ -30,6 +30,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from amazon_security_lake_transformation_library_spark import caching  # noqa: E402
 from amazon_security_lake_transformation_library_spark.session import get_spark  # noqa: E402
 
 TABLES = [
@@ -107,6 +108,11 @@ def main() -> int:
                    f"spark {type(e).__name__}: {e}")
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             continue
+        finally:
+            # drop the query's persisted intermediates (LSH buckets, IVF
+            # assignments, ...), as bench.py does after each cell, so the
+            # next query neither reads them nor times their eviction
+            caching.release_all()
         if name not in oracles:
             print(f"ok    {name}: rows-only ({len(rows)} rows, "
                   f"spark {spark_s:.1f}s)")
