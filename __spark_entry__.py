@@ -368,7 +368,7 @@ def _q_asof_skinny_routed(spark, sf_dir):
 def _q_asof_skinny_stream_form(spark, sf_dir):
     """Fifth physical strategy over the same stacked oracle: the
     STREAMING skinny enrichment's exact composition
-    (streaming.pipeline.skinny_feature_intervals -> persisted widened
+    (operators.asof.skinny_to_intervals -> persisted widened
     table -> asof_enrich_stream_skinny(intervals=...), i.e. the
     stateless asof_join_over_intervals join) run in batch form — the
     live-tail path's correctness gate. The widened table is persisted
@@ -389,7 +389,7 @@ def _q_asof_skinny_stream_form(spark, sf_dir):
     )
     from amazon_security_lake_transformation_library_spark.caching import persist_tracked
 
-    iv = persist_tracked(stp.skinny_feature_intervals(
+    iv = persist_tracked(asof_ops.skinny_to_intervals(
         log, sources=["purchase", "error", "click"],
         source_col="event_type", value_col="val", on="user_id", ts="ts",
     ))
@@ -1792,9 +1792,10 @@ EWMA_HL_S = 3 * 86400.0  # 3-day halflife over the 30-day events fixture
 
 def _q_ewma_events(spark, sf_dir):
     """Time-decayed EWMA of event value per user (JVM window form): the
-    reference-weight cancellation makes it two running sums sharing one
-    Exchange+Sort — the feature-store 'decayed activity' op with zero
-    Python. Envelope: exact while an entity spans < ~1000 halflives."""
+    decay weights are rebased per time chunk, so the form is exact at any
+    time range — running sums within the chunk plus the previous chunk's
+    totals, one Exchange, no Python. ``ewma_events_grouped`` names this
+    same query."""
     ev = _t(spark, sf_dir, "events")
     out = feat.ewma_time_decay(
         ev, "user_id", "ts", "value", EWMA_HL_S, order_tiebreak="event_id"
@@ -1804,27 +1805,10 @@ def _q_ewma_events(spark, sf_dir):
     )
 
 
-def _q_ewma_events_grouped(spark, sf_dir):
-    """Same semantics via applyInPandas (grouped-map Arrow UDF surface):
-    pandas' renormalizing ewm(times=...) scan — numerically stable for
-    unbounded entity time ranges. Hash-checked against the SAME DuckDB
-    oracle as the JVM form: two independent algorithms, one answer."""
-    ev = _t(spark, sf_dir, "events")
-    out = feat.ewma_time_decay_grouped(
-        ev, "user_id", "ts", "value", EWMA_HL_S, order_tiebreak="event_id"
-    )
-    return out.select(
-        "event_id", "user_id", F.round(F.col("ewma"), 4).alias("ewma")
-    )
-
-
 def _q_iqr_by_user(spark, sf_dir):
-    """Grouped-agg pandas UDAF (operators/udx.iqr): whole-group Series
-    arrives via Arrow, no JVM Aggregator needed. The one driver query
-    where per-group assembly on a single task is the point (UDAF
-    surface); algebraic aggregates stay on builtins."""
-    from amazon_security_lake_transformation_library_spark.operators import udx
-    return udx.iqr_by_group(_t(spark, sf_dir, "events"), "value", "user_id")
+    """Interquartile range of event value per user from the builtin exact
+    ``percentile`` (operators/profiling.iqr_by_group)."""
+    return prof.iqr_by_group(_t(spark, sf_dir, "events"), "value", "user_id")
 
 
 def _q_doc_chunks_udtf(spark, sf_dir):
@@ -3760,7 +3744,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "iqr_value_by_user": _q_iqr_by_user,
         "doc_chunks_udtf": _q_doc_chunks_udtf,
         "ewma_events": _q_ewma_events,
-        "ewma_events_grouped": _q_ewma_events_grouped,
+        "ewma_events_grouped": _q_ewma_events,
         # dedup family
         "dedup_exact": _q_dedup_exact,
         "dedup_minhash_lsh": _q_minhash,
@@ -4812,7 +4796,9 @@ def _kmeans_oracle_sql(k: int = 8, iters: int = 2) -> str:
 
 _EWMA_ORACLE = f"""
     SELECT event_id, user_id,
-           round(sum(u * value) OVER w / sum(u) OVER w, 4) AS ewma
+           round(sum(u * value) OVER w
+                 / sum(CASE WHEN value IS NOT NULL THEN u END) OVER w, 4)
+             AS ewma
     FROM (
       SELECT event_id, value, ts, user_id,
              pow(2, (epoch_us(ts) - first_value(epoch_us(ts)) OVER w2)
@@ -6612,9 +6598,9 @@ def oracle_sql() -> dict[str, str]:
                          - quantile_cont(value, 0.25), 4) AS iqr_value
             FROM events GROUP BY user_id
         """,
-        # both EWMA forms (JVM window / applyInPandas) hash against this
-        # one oracle: adjusted ewm with halflife weights, reference weight
-        # cancelled (u_j = 2^((t_j - t_first)/halflife))
+        # both names run the one rebased JVM form against this oracle:
+        # adjusted ewm with halflife weights, reference weight cancelled
+        # (u_j = 2^((t_j - t_first)/halflife)), a NULL value adds no weight
         "ewma_events": _EWMA_ORACLE,
         "ewma_events_grouped": _EWMA_ORACLE,
         "kinesis_decode": """

@@ -22,6 +22,7 @@ a hot entity across tasks; its hot-entity rule decides when they pay.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
@@ -205,6 +206,13 @@ def rolling_time_window(
 
 # ------------------------------------------------ time-decayed EWMA features
 
+# Width of one EWMA rebase chunk, in halflives. Every weight is
+# 2^(offset/halflife) with the offset taken inside the row's chunk, so it
+# stays below 2^EWMA_CHUNK_HALFLIVES; a row two chunks back weighs less
+# than 2^-EWMA_CHUNK_HALFLIVES relative to the current row.
+EWMA_CHUNK_HALFLIVES = 512
+
+
 def ewma_time_decay(
     df: DataFrame,
     entity: str,
@@ -218,71 +226,66 @@ def ewma_time_decay(
     the standard "decayed activity" feature of a point-in-time feature
     store: ``ewma_i = Σ_j≤i w_j·x_j / Σ_j≤i w_j`` with
     ``w_j = 0.5^((t_i - t_j)/halflife)`` (pandas ``ewm(times=...)``
-    adjusted form).
+    adjusted form). A NULL value adds no weight, as in pandas: a NULL
+    row reads the mean of the rows before it, and rows before an
+    entity's first non-NULL value read NULL.
 
-    JVM scale path. The per-row reference weight cancels in the ratio:
-    with ``u_j = 2^((t_j - t_first)/h)`` (t_first = the entity's first
-    event), ``ewma_i = Σ u_j·x_j / Σ u_j`` over the RUNNING frame — two
-    cumulative sums sharing the block's one Exchange+Sort, zero Python.
+    The per-row reference weight cancels in the ratio, so the sums can
+    use any common reference. Time is cut into chunks of
+    :data:`EWMA_CHUNK_HALFLIVES` halflives (``C`` integer microseconds,
+    chunk start and offset exact ``long`` arithmetic), and each row
+    weighs ``u_j = 2^(offset_j/halflife)`` against its own chunk start,
+    which stays in ``[1, 2^512)``. A row's sums are the running sums of
+    ``u·x`` and ``u`` over its ``(entity, chunk)`` so far, plus the
+    previous chunk's totals scaled by ``2^(-C/halflife)``; chunks further
+    back weigh under ``2^-512`` and drop out. So the form is exact at any
+    entity time range. One Exchange on the entity key and two Sorts
+    (chunk totals over ``partitionBy(entity).orderBy(chunk)``, running
+    sums within the chunk), no Python. The one departure from pandas: a
+    NULL row more than one chunk (512 halflives) after its entity's last
+    non-NULL value reads NULL, where pandas carries the old mean.
 
-    Numerical envelope: ``u`` overflows double once an entity spans more
-    than ~1000 halflives (2^1023). Within that envelope (any bounded
-    feature window — days of events at an hours-scale halflife) this is
-    exact; beyond it use :func:`ewma_time_decay_grouped`, the
-    applyInPandas recurrence that renormalizes as it scans and has no
-    range limit. Both produce identical values (tests pin equality and
-    the overflow boundary).
+    Raises ``ValueError`` unless ``halflife_seconds`` is positive and
+    finite.
     """
-    order = [ts_col] + ([order_tiebreak] if order_tiebreak else [])
-    wc = cumulative_window(entity, order)
-    t = epoch_seconds(ts_col)
-    u = F.pow(F.lit(2.0), (t - F.first(t).over(wc)) / F.lit(float(halflife_seconds)))
-    return df.withColumn(
-        out_col,
-        F.sum(u * F.col(val_col)).over(wc) / F.sum(u).over(wc),
-    )
-
-
-def ewma_time_decay_grouped(
-    df: DataFrame,
-    entity: str,
-    ts_col: str,
-    val_col: str,
-    halflife_seconds: float,
-    order_tiebreak: str | None = None,
-    out_col: str = "ewma",
-) -> DataFrame:
-    """``applyInPandas`` form of :func:`ewma_time_decay` — the grouped-map
-    UDF surface (SURVEY.md §2.B): one Arrow batch per entity, pandas'
-    renormalizing ``ewm(times=...)`` scan inside. Numerically stable for
-    UNBOUNDED entity time ranges (no 2^(range/halflife) term), at the
-    cost of one Python stage; prefer the JVM form inside its envelope.
-
-    Scale shape: the same single hash-exchange on the entity key; each
-    group must fit one worker's memory (the constraint of every grouped
-    pandas op — hot entities beyond that belong to the salted paths).
-    """
-    import pandas as pd  # local import: executors need it, driver may not
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    order = [ts_col] + ([order_tiebreak] if order_tiebreak else [])
-    # copy, don't .add(): DataFrame caches its schema object and
-    # StructType.add mutates in place
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, DoubleType())]
-    )
-    hl = pd.Timedelta(seconds=float(halflife_seconds))
-
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(order)
-        pdf[out_col] = (
-            pdf[val_col]
-            .ewm(halflife=hl, times=pd.DatetimeIndex(pdf[ts_col]))
-            .mean()
+    h_us = float(halflife_seconds) * 1e6
+    if not 0.0 < h_us < math.inf:
+        raise ValueError(
+            f"halflife_seconds must be positive and finite, got {halflife_seconds!r}"
         )
-        return pdf
+    # at least 1 us; at most 2^60 us, wider than the whole Spark timestamp
+    # range, so even a capped chunk leaves no row two chunks back
+    c_us = min(max(1, round(EWMA_CHUNK_HALFLIVES * h_us)), 1 << 60)
+    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    off = F.pmod(ts_us, F.lit(c_us))
+    u = F.pow(F.lit(2.0), off / F.lit(h_us))
+    x = F.col(val_col)
+    staged = df.select(
+        "*",
+        (ts_us - off).alias("__ewma_chunk"),
+        (u * x).alias("__ewma_ux"),
+        F.when(x.isNotNull(), u).alias("__ewma_u"),
+    )
+    prev = (
+        Window.partitionBy(entity).orderBy("__ewma_chunk")
+        .rangeBetween(-c_us, -c_us)
+    )
+    run = cumulative_window(
+        [entity, "__ewma_chunk"],
+        [ts_col] + ([order_tiebreak] if order_tiebreak else []),
+    )
+    scale = F.lit(2.0 ** (-c_us / h_us))
 
-    return df.groupBy(entity).applyInPandas(fn, schema=schema)
+    def carried(c: str) -> Column:
+        return (
+            F.coalesce(F.sum(c).over(run), F.lit(0.0))
+            + scale * F.coalesce(F.sum(c).over(prev), F.lit(0.0))
+        )
+
+    # try_divide: NULL, not an ANSI error, before the first non-NULL value
+    return staged.withColumn(
+        out_col, F.try_divide(carried("__ewma_ux"), carried("__ewma_u"))
+    ).drop("__ewma_chunk", "__ewma_ux", "__ewma_u")
 
 
 # ------------------------------------------------ robust rolling features

@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["key_skew_profile", "mad_outliers", "column_profile",
-           "check_constraints"]
+__all__ = ["key_skew_profile", "mad_outliers", "iqr_by_group",
+           "column_profile", "check_constraints"]
 
 
 def key_skew_profile(
@@ -142,6 +142,18 @@ def mad_outliers(
                 F.abs(F.col(value_col) - F.col("med")) > scaled,
             ).otherwise(F.col(value_col) != F.col("med")),
         )
+    )
+
+
+def iqr_by_group(df: DataFrame, value_col: str, *group_cols: str) -> DataFrame:
+    """Per-group interquartile range ``iqr_value`` (4 dp) from the builtin
+    exact ``percentile`` with linear interpolation — ANSI
+    ``percentile_cont``, so DuckDB's ``quantile_cont(0.75) -
+    quantile_cont(0.25)`` agrees. NULL values are skipped; an all-NULL
+    group reads NULL. One hash aggregate on the group keys."""
+    q = F.expr(f"percentile({value_col}, array(0.25, 0.75))")
+    return df.groupBy(*group_cols).agg(
+        F.round(q[1] - q[0], 4).alias("iqr_value")
     )
 
 

@@ -1,5 +1,5 @@
-"""User-defined-function surface beyond scalar pandas_udfs: a grouped-agg
-pandas UDAF and a Python UDTF (table function).
+"""User-defined-function surface beyond scalar pandas_udfs: a Python
+UDTF (table function).
 
 The reference's only extension point is a scalar per-row dict->dict
 plugin (`preprocess_event`, transformation_function/app.py:59-60). The
@@ -7,64 +7,33 @@ rebuild's UDF story is tiered (SURVEY.md §2.B, UDF row):
 
   * scalar column math      -> JVM builtins (never Python)
   * batch text/vector ops   -> scalar pandas_udf / mapInPandas (Arrow)
-  * custom AGGREGATES       -> grouped-agg pandas_udf (this module):
-    the whole group's column arrives as ONE pandas Series per group via
-    Arrow — a distributed UDAF without writing a JVM Aggregator. Partial
-    aggregation does NOT apply (the group must assemble on one task), so
-    reserve it for metrics a builtin can't express and keep cardinality
-    per group bounded; for algebraic aggregates use builtins.
+  * AGGREGATES              -> JVM builtins; a statistic a builtin
+    already computes (the IQR is ``percentile(v, array(0.25, 0.75))``,
+    operators/profiling.iqr_by_group) never crosses into Python
   * custom TABLE FUNCTIONS  -> Python UDTF (this module): one row in,
     many rows out with its own output schema, composable in SQL via
     LATERAL. Arrow-batched when spark.sql.execution.pythonUDTF.arrow
-    .enabled is set; still per-row Python inside eval — the API-surface
-    demonstration. The production chunker stays the JVM explode plan
-    (operators/datasetops.chunk_tokens); both implementations are
-    hash-checked against ONE DuckDB oracle (the engine's
-    two-implementations-one-oracle pattern, like the EWMA pair).
+    .enabled is set; per-row Python inside eval. It is hash-checked
+    against the same DuckDB oracle as the JVM explode plan
+    (operators/datasetops.chunk_tokens), which stays the production
+    chunker.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf, udtf
-
-
-def iqr_udaf():
-    """Grouped-agg pandas UDAF: interquartile range with linear
-    interpolation — numpy's default, matching ANSI ``percentile_cont``
-    (the DuckDB oracle computes quantile_cont(0.75) - quantile_cont(0.25)
-    over the same groups). Built lazily: decorating at import time would
-    parse the DDL return type and demand an active SparkSession."""
-
-    @pandas_udf(T.DoubleType())
-    def iqr(v: pd.Series) -> float:
-        arr = v.dropna().to_numpy()
-        if arr.size == 0:
-            return None
-        q75, q25 = np.percentile(arr, [75.0, 25.0])
-        return float(q75 - q25)
-
-    return iqr
-
-
-def iqr_by_group(df: DataFrame, value_col: str, *group_cols: str) -> DataFrame:
-    return df.groupBy(*group_cols).agg(
-        F.round(iqr_udaf()(F.col(value_col)), 4).alias("iqr_value")
-    )
+from pyspark.sql.functions import udtf
 
 
 class ChunkTokensUDTF:
     """Python UDTF form of sliding-window chunking: identical row
     semantics to datasetops.chunk_tokens (same size/stride/ragged-tail
-    rules), emitted from Python instead of a JVM posexplode. Exists to
-    exercise the UDTF API path end-to-end against the same oracle.
-    Wrapped by :func:`register_chunk_udtf` (the ``@udtf`` decoration is
-    deferred for the same import-time reason as :func:`iqr_udaf`)."""
+    rules), emitted from Python instead of a JVM posexplode, and checked
+    against the same oracle.
+    Wrapped by :func:`register_chunk_udtf`: decorating with ``@udtf`` at
+    import time would parse the DDL return type and demand an active
+    SparkSession."""
 
     def eval(self, text: str, size: int, stride: int):
         if text is None:

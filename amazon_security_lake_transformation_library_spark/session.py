@@ -40,7 +40,8 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for every pandas_udf / applyInPandas / toPandas crossing.
+    # Arrow for every pandas_udf / mapInPandas / applyInPandasWithState /
+    # toPandas crossing.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Parquet vectorized reader + pushdown are on by default; keep explicit.
     "spark.sql.parquet.filterPushdown": "true",

@@ -332,42 +332,6 @@ def asof_enrich_stream(
     )
 
 
-def skinny_feature_intervals(
-    log: DataFrame,
-    sources: list[str],
-    source_col: str = "feature",
-    value_col: str = "value",
-    on: str = "conv_id",
-    ts: str = "ts",
-    asof_ts_suffix: str = "_asof_ts",
-) -> DataFrame:
-    """STATIC-side prep for :func:`asof_enrich_stream_skinny`: collapse a
-    skinny EAV feature log ``(entity, ts, feature, value)`` into
-    piecewise-constant K-VECTOR validity intervals — one row per
-    ``(entity, change_ts)`` carrying the current value (and its own
-    update ts) of EVERY source at that instant, valid over
-    ``[change_ts, __next_ts)``.
-
-    Thin delegate to ``operators.asof.skinny_to_intervals`` (shared with
-    the batch interval form ``asof_join_skinny_intervals`` — one
-    definition, two execution modes). Cost is |change points| rows and
-    K+2 columns.
-
-    **Caller contract for per-refresh (not per-batch) cost**: a
-    stream-static join re-executes the static side's PLAN on every
-    micro-batch, so pass the result through ``.persist()`` — or write it
-    to parquet and re-read — before handing it to the stream join;
-    otherwise the full window-heavy widening re-runs per micro-batch.
-    Refresh = unpersist, rebuild from the new log, persist again.
-    """
-    from ..operators.asof import skinny_to_intervals
-
-    return skinny_to_intervals(
-        log, sources, source_col=source_col, value_col=value_col,
-        on=on, ts=ts, asof_ts_suffix=asof_ts_suffix,
-    )
-
-
 def asof_enrich_stream_skinny(
     turns: DataFrame,
     log: DataFrame | None = None,
@@ -386,20 +350,21 @@ def asof_enrich_stream_skinny(
     runs over the probe side).
 
     Rewrite: the log is widened into piecewise-constant K-vector
-    validity intervals (:func:`skinny_feature_intervals`); each arriving
-    turn then takes a single STATELESS stream-static interval join
+    validity intervals (``operators.asof.skinny_to_intervals``, shared
+    with the batch interval form); each arriving turn then takes a
+    single STATELESS stream-static interval join
     (``operators.asof.asof_join_over_intervals``) — no watermark, no join
     state, exactly one matching interval per turn, regardless of K.
 
     Two calling modes. PER-REFRESH (preferred at scale): widen once with
-    :func:`skinny_feature_intervals`, ``.persist()`` or materialize the
-    result, and pass it as ``intervals=`` — the window-heavy widening is
-    then paid per feature-table refresh. CONVENIENCE: pass the raw
-    ``log`` + ``sources`` and the widening is folded into the static
-    plan — Spark re-executes an un-cached static plan on EVERY
-    micro-batch, so this mode pays the widening per batch (fine for
-    small logs, wrong at scale; see :func:`skinny_feature_intervals`'s
-    caller contract). The
+    ``skinny_to_intervals``, ``.persist()`` or materialize the result,
+    and pass it as ``intervals=`` — the window-heavy widening is then
+    paid per feature-table refresh (refresh = unpersist, rebuild from
+    the new log, persist again). CONVENIENCE: pass the raw ``log`` +
+    ``sources`` and the widening is folded into the static plan — Spark
+    re-executes an un-cached static plan on EVERY micro-batch, so this
+    mode pays the widening per batch (fine for small logs, wrong at
+    scale). The
     per-feature ``{s}{asof_ts_suffix}`` / ``{s}_{value_col}`` columns
     carried by the interval row are each feature's own latest update, so
     the output schema matches the batch form column-for-column (pinned
@@ -421,14 +386,14 @@ def asof_enrich_stream_skinny(
     static interval table (b_e rows), which is per-refresh widening
     cost, not stream state.
     """
-    from ..operators.asof import asof_join_over_intervals
+    from ..operators.asof import asof_join_over_intervals, skinny_to_intervals
 
     if intervals is None:
         if log is None or sources is None:
             raise ValueError(
                 "pass either a pre-widened intervals= table or log= + sources="
             )
-        intervals = skinny_feature_intervals(
+        intervals = skinny_to_intervals(
             log, sources, source_col=source_col, value_col=value_col,
             on=on, ts=ts, asof_ts_suffix=asof_ts_suffix,
         )

@@ -5,6 +5,10 @@ pandas ``merge_asof`` (latest-wins, <= semantics) and its strict variant.
 
 Examples are deliberately few (Spark round-trip per example) but each is
 dense with edge cases because timestamps draw from a tiny integer domain.
+
+The time-decayed EWMA gets the same treatment: timestamps drawn at and
+around its rebase-chunk boundaries, must match the EWMA's definition
+computed directly.
 """
 
 from __future__ import annotations
@@ -16,6 +20,10 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from amazon_security_lake_transformation_library_spark.operators.asof import asof_join
+from amazon_security_lake_transformation_library_spark.operators.features import (
+    EWMA_CHUNK_HALFLIVES,
+    ewma_time_decay,
+)
 
 ENTITIES = ["a", "b", "c"]
 
@@ -190,3 +198,59 @@ def test_asof_directional_matches_bruteforce(spark, fb):
         want["feature_val"].to_numpy(dtype="float64"),
         equal_nan=True,
     )
+
+
+@st.composite
+def ewma_frames(draw):
+    """Events whose timestamps sit on, just before and just after the
+    EWMA's rebase-chunk boundaries across eight chunks, so rows straddle
+    boundaries, skip whole chunks and tie exactly; entities may hold one
+    row."""
+    hl = draw(st.sampled_from([1.0, 2.5, 60.0, 3600.0]))
+    chunk = int(EWMA_CHUNK_HALFLIVES * hl)  # seconds
+    origin = -(-1_704_067_200 // chunk) * chunk  # first boundary after 2024-01-01
+    pool = [k * chunk + d for k in range(8) for d in (-1, 0, 1)]
+    n = draw(st.integers(1, 14))
+    secs = draw(st.lists(
+        st.one_of(st.sampled_from(pool), st.integers(0, 8 * chunk)),
+        min_size=n, max_size=n,
+    ))
+    pdf = pd.DataFrame({
+        "event_id": np.arange(n, dtype="int64"),
+        "user_id": draw(st.lists(st.sampled_from(ENTITIES), min_size=n, max_size=n)),
+        "ts": pd.to_datetime([origin + s for s in secs], unit="s"),
+        "value": draw(st.lists(st.integers(1, 100), min_size=n, max_size=n)),
+    })
+    return pdf.astype({"value": "float64"}), hl
+
+
+def _ewma_definition(pdf, hl):
+    """ewma_i = sum_j w_ij x_j / sum_j w_ij over the entity's rows j at or
+    before i in (ts, event_id) order, w_ij = 2^(-(t_i - t_j)/hl)."""
+    out = {}
+    for _, g in pdf.sort_values(["ts", "event_id"]).groupby("user_id"):
+        t = (g["ts"] - g["ts"].min()).dt.total_seconds().to_numpy()
+        x = g["value"].to_numpy()
+        for i, eid in enumerate(g["event_id"]):
+            w = np.exp2(-(t[i] - t[: i + 1]) / hl)
+            out[eid] = float((w * x[: i + 1]).sum() / w.sum())
+    return out
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(fh=ewma_frames())
+def test_ewma_matches_definition_across_chunks(spark, fh):
+    pdf, hl = fh
+    got = {
+        r["event_id"]: r["ewma"]
+        for r in ewma_time_decay(
+            spark.createDataFrame(pdf), "user_id", "ts", "value", hl,
+            order_tiebreak="event_id",
+        ).collect()
+    }
+    for eid, want in _ewma_definition(pdf, hl).items():
+        assert got[eid] == pytest.approx(want, rel=1e-12), eid

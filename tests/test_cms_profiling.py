@@ -1,5 +1,5 @@
-"""Count-min sketch (operators/sketch.py) + key-skew profiler
-(operators/profiling.py).
+"""Count-min sketch (operators/sketch.py) + key-skew profiler and
+per-group IQR (operators/profiling.py).
 
 CMS: overestimate-only guarantee, exactness at collision-free width,
 mergeability (union+re-sum of two disjoint halves == one build over the
@@ -97,3 +97,13 @@ def test_key_skew_profile_single_key(spark):
     assert r.top_share == pytest.approx(1.0)
     assert r.cv == pytest.approx(0.0)
     assert r.entropy_norm is None  # balance undefined for one key
+
+
+def test_iqr_all_null_group_is_null(spark):
+    df = spark.createDataFrame(
+        [("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 4.0), ("b", None)],
+        "g string, v double",
+    )
+    got = {r["g"]: r["iqr_value"] for r in prof.iqr_by_group(df, "v", "g").collect()}
+    assert got["a"] == 1.5  # percentile_cont([1,2,3,4]): 3.25 - 1.75
+    assert got["b"] is None

@@ -5,6 +5,8 @@ byte-equal under stable (conv_id, turn_idx) ordering.
 
 import numpy as np
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from amazon_security_lake_transformation_library_spark.operators.features import (
     build_turn_features,
@@ -91,8 +93,10 @@ def test_single_window_node_in_plan(spark, transcripts_df):
 
 # ------------------------------------------------ time-decayed EWMA features
 
-def _ewma_fixture(spark, day_span: float, n_users: int = 5, n_rows: int = 400):
-    """Deterministic irregular-timestamp events over `day_span` days."""
+def _ewma_fixture(spark, day_span: float, n_users: int = 5, n_rows: int = 400,
+                  null_every: int = 0):
+    """Deterministic irregular-timestamp events over `day_span` days;
+    every `null_every`-th value NULL when set."""
     rng = np.random.default_rng(3)
     base = pd.Timestamp("2024-01-01")
     pdf = pd.DataFrame({
@@ -102,61 +106,86 @@ def _ewma_fixture(spark, day_span: float, n_users: int = 5, n_rows: int = 400):
             np.sort(rng.uniform(0, day_span * 86400, n_rows)), unit="s"),
         "value": rng.normal(10, 3, n_rows).round(3),
     })
-    return spark.createDataFrame(pdf), pdf
+    if null_every:
+        pdf.loc[pdf.index % null_every == 0, "value"] = np.nan
+    sdf = spark.createDataFrame(pdf).withColumn(
+        "value", F.when(~F.isnan("value"), F.col("value")))  # NaN -> NULL
+    return sdf, pdf
 
 
-def test_ewma_jvm_and_grouped_agree_and_match_pandas(spark):
-    from amazon_security_lake_transformation_library_spark.operators.features import (
-        ewma_time_decay, ewma_time_decay_grouped)
-
-    sdf, pdf = _ewma_fixture(spark, day_span=30)
-    hl = 3 * 86400.0
-    jvm = {r["event_id"]: r["ewma"] for r in ewma_time_decay(
-        sdf, "user_id", "ts", "value", hl, order_tiebreak="event_id").collect()}
-    grp = {r["event_id"]: r["ewma"] for r in ewma_time_decay_grouped(
-        sdf, "user_id", "ts", "value", hl, order_tiebreak="event_id").collect()}
-    # independent pandas oracle
+def _pandas_ewma(pdf, hl: float) -> dict:
     want = {}
     for _, g in pdf.sort_values(["ts", "event_id"]).groupby("user_id"):
         e = g["value"].ewm(halflife=pd.Timedelta(seconds=hl),
                            times=pd.DatetimeIndex(g["ts"])).mean()
         want.update(dict(zip(g["event_id"], e)))
-    for k, w in want.items():
-        assert abs(jvm[k] - w) < 1e-8, k
-        assert abs(grp[k] - w) < 1e-8, k
+    return want
 
 
-def test_ewma_overflow_envelope_grouped_survives_jvm_does_not(spark):
-    """The documented trade: the JVM cancellation form overflows once an
-    entity spans ~1000+ halflives; the applyInPandas renormalizing scan
-    stays finite. This pins WHY both implementations exist."""
+def _ewma(sdf, hl: float) -> dict:
     from amazon_security_lake_transformation_library_spark.operators.features import (
-        ewma_time_decay, ewma_time_decay_grouped)
+        ewma_time_decay)
 
-    # 2000 days at a 1-hour halflife = 48,000 halflives >> envelope
-    sdf, _ = _ewma_fixture(spark, day_span=2000, n_users=1, n_rows=50)
+    return {r["event_id"]: r["ewma"] for r in ewma_time_decay(
+        sdf, "user_id", "ts", "value", hl, order_tiebreak="event_id").collect()}
+
+
+def test_ewma_matches_pandas(spark):
+    sdf, pdf = _ewma_fixture(spark, day_span=30)
+    hl = 3 * 86400.0
+    got = _ewma(sdf, hl)
+    for k, w in _pandas_ewma(pdf, hl).items():
+        assert abs(got[k] - w) < 1e-8, k
+
+
+def test_ewma_null_values_add_no_weight(spark):
+    """pandas' rule: a NULL value adds neither to the numerator nor to the
+    denominator, so a NULL row reads the mean of the rows before it and
+    rows before an entity's first value read NULL."""
+    sdf, pdf = _ewma_fixture(spark, day_span=30, null_every=7)
+    hl = 3 * 86400.0
+    got = _ewma(sdf, hl)
+    want = _pandas_ewma(pdf, hl)
+    assert any(np.isnan(w) for w in want.values())  # a leading NULL
+    for k, w in want.items():
+        if np.isnan(w):
+            assert got[k] is None, k
+        else:
+            assert abs(got[k] - w) < 1e-8, k
+
+
+def test_ewma_no_range_limit(spark):
+    """2000 days at a 1-hour halflife is 48,000 halflives: far past where
+    one 2^((t - t_first)/halflife) weight overflows a double. The per-chunk
+    rebase keeps every row finite and equal to pandas."""
+    sdf, pdf = _ewma_fixture(spark, day_span=2000, n_users=1)
     hl = 3600.0
-    jvm = [r["ewma"] for r in ewma_time_decay(
-        sdf, "user_id", "ts", "value", hl).collect()]
-    grp = [r["ewma"] for r in ewma_time_decay_grouped(
-        sdf, "user_id", "ts", "value", hl).collect()]
-    assert any(v is None or not np.isfinite(v) for v in jvm)  # overflowed
-    assert all(v is not None and np.isfinite(v) for v in grp)  # stable
+    got = _ewma(sdf, hl)
+    for k, w in _pandas_ewma(pdf, hl).items():
+        assert got[k] is not None and np.isfinite(got[k]), k
+        assert abs(got[k] - w) <= 1e-9 * abs(w), k
+
+
+def test_ewma_rejects_bad_halflife(spark):
+    from amazon_security_lake_transformation_library_spark.operators.features import (
+        ewma_time_decay)
+
+    sdf, _ = _ewma_fixture(spark, day_span=30)
+    for hl in (0.0, -3600.0, float("nan"), float("inf")):
+        with pytest.raises(ValueError, match="halflife"):
+            ewma_time_decay(sdf, "user_id", "ts", "value", hl)
 
 
 def test_ewma_plan_shapes(spark):
     from amazon_security_lake_transformation_library_spark.operators.features import (
-        ewma_time_decay, ewma_time_decay_grouped)
+        ewma_time_decay)
 
     sdf, _ = _ewma_fixture(spark, day_span=30)
-    jvm_plan = ewma_time_decay(
-        sdf, "user_id", "ts", "value", 1000.0
+    plan = ewma_time_decay(
+        sdf, "user_id", "ts", "value", 1000.0, order_tiebreak="event_id"
     )._jdf.queryExecution().executedPlan().toString()
-    # both running sums + the first_value share ONE exchange+sort window
-    assert jvm_plan.count("Exchange") == 1
-    assert "Python" not in jvm_plan
-    grp_plan = ewma_time_decay_grouped(
-        sdf, "user_id", "ts", "value", 1000.0
-    )._jdf.queryExecution().executedPlan().toString()
-    assert grp_plan.count("Exchange") == 1
-    assert "FlatMapGroupsInPandas" in grp_plan
+    # the chunk totals (partitionBy entity) and the in-chunk running sums
+    # (partitionBy entity, chunk) share ONE exchange on the entity key
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("+- Sort") == 2, plan
+    assert "Python" not in plan and "Pandas" not in plan, plan

@@ -56,6 +56,17 @@ def test_rolling_range_frame_single_window(spark):
     assert "Join" not in plan
 
 
+@pytest.mark.parametrize(
+    "query", ["ewma_events", "ewma_events_grouped", "iqr_value_by_user"]
+)
+def test_ewma_and_iqr_queries_stay_on_the_jvm(spark, query):
+    """Both EWMA names run the one rebased window form and the IQR runs
+    the builtin percentile: no Python node (FlatMapGroupsInPandas,
+    ArrowAggregatePython, ArrowEvalPython, ...) in the executed plan."""
+    plan = _plan(entrymod.queries()[query](spark, SF_DIR))
+    assert "Python" not in plan and "Pandas" not in plan, plan
+
+
 def test_sliding_window_is_expand_not_join(spark):
     """A 1h/15min sliding window assigns each event to its 4 windows via
     ONE Expand feeding a partial hash-agg — never a x4 self-join or

@@ -472,7 +472,8 @@ def test_skinny_enrich_stream_matches_batch(spark, stream_input, tmp_path, stric
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from amazon_security_lake_transformation_library_spark.operators.asof import asof_join_skinny
+    from amazon_security_lake_transformation_library_spark.operators.asof import (
+        asof_join_skinny, skinny_to_intervals)
 
     root, pdf = stream_input
     sources = ["f0", "f1", "f2"]
@@ -520,7 +521,7 @@ def test_skinny_enrich_stream_matches_batch(spark, stream_input, tmp_path, stric
 
     # the PER-REFRESH calling mode (pre-widened persisted intervals=) must
     # produce the same rows as the convenience log= mode
-    iv = sp.skinny_feature_intervals(log, sources).persist()
+    iv = skinny_to_intervals(log, sources).persist()
     try:
         stream2 = sp.read_turn_stream(spark, root, max_files_per_trigger=1)
         enriched2 = sp.asof_enrich_stream_skinny(

@@ -1,23 +1,11 @@
-"""UDAF/UDTF surface edge cases (operators/udx.py) — the driver oracle
-covers the happy path at sf0.01 (iqr_value_by_user, doc_chunks_udtf);
-these pin the NULL/empty behaviors an oracle diff can miss."""
+"""UDTF surface edge cases (operators/udx.py) — the driver oracle
+covers the happy path at sf0.01 (doc_chunks_udtf); these pin the
+NULL/empty behaviors an oracle diff can miss."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from amazon_security_lake_transformation_library_spark.operators import udx
 from amazon_security_lake_transformation_library_spark.operators.datasetops import chunk_tokens
-
-
-def test_iqr_all_null_group_is_null(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 4.0), ("b", None)],
-        "g string, v double",
-    )
-    got = {r["g"]: r["iqr_value"] for r in udx.iqr_by_group(df, "v", "g").collect()}
-    assert got["a"] == 1.5  # percentile_cont([1,2,3,4]): 3.25 - 1.75
-    assert got["b"] is None
 
 
 def test_chunk_udtf_null_text_and_short_doc(spark):

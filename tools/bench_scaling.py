@@ -100,9 +100,10 @@ def worker(args) -> None:
         # plain JSON so tools/stage_report.py can read it offline (no
         # zstd codec available outside the JVM in this sandbox)
         extra["spark.eventLog.compress"] = "false"
+    master = f"local-cluster[{workers},{min(args.cpus, 4)},12288]"
     spark = get_spark(
         f"scaling-{workers}w",
-        master=f"local-cluster[{workers},{min(args.cpus, 4)},12288]",
+        master=master,
         shuffle_partitions=2 * args.cpus,
         extra_conf=extra,
     )
@@ -217,7 +218,7 @@ def worker(args) -> None:
         rows = job()
         walls.append(time.time() - t0)
     warm = walls[1:] or walls
-    print(json.dumps({"cpus": args.cpus, "rows": rows,
+    print(json.dumps({"cpus": args.cpus, "master": master, "rows": rows,
                       "cold": round(walls[0], 3),
                       "wall": round(statistics.median(warm[len(warm) // 2:]), 3),
                       "walls": [round(w, 3) for w in walls]}))
@@ -308,7 +309,7 @@ def main() -> None:
             walls[cpus] = rec["wall"]
             colds[cpus] = rec["cold"]
             runs[cpus] = rec["walls"]
-            print(f"# {strat} local[{cpus}]: {rec['wall']}s "
+            print(f"# {strat} {rec['master']}: {rec['wall']}s "
                   f"({rec['rows'] / rec['wall']:.0f} turns/s)", file=sys.stderr)
         lo, hi = min(levels), max(levels)
         speedup = walls[lo] / walls[hi]
