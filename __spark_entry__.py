@@ -1725,7 +1725,8 @@ def _q_pack_sequences(spark, sf_dir):
 
 def _q_doc_chunks(spark, sf_dir):
     """Sliding-window context chunking (size 64 tokens, stride 48): the
-    long-document preparation step. Explode-only plan — no shuffle."""
+    long-document preparation step. Explode-only plan — no shuffle.
+    ``doc_chunks_udtf`` names this same query."""
     return dso.chunk_tokens(_t(spark, sf_dir, "documents"), size=64, stride=48)
 
 
@@ -1809,20 +1810,6 @@ def _q_iqr_by_user(spark, sf_dir):
     """Interquartile range of event value per user from the builtin exact
     ``percentile`` (operators/profiling.iqr_by_group)."""
     return prof.iqr_by_group(_t(spark, sf_dir, "events"), "value", "user_id")
-
-
-def _q_doc_chunks_udtf(spark, sf_dir):
-    """Python-UDTF form of doc_chunks — same rows, same oracle as the
-    JVM posexplode plan (two implementations, one oracle)."""
-    from amazon_security_lake_transformation_library_spark.operators import udx
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-    udx.register_chunk_udtf(spark)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__docs_udtf")
-    return spark.sql(
-        "SELECT d.doc_id, t.chunk_idx, t.chunk_start, t.chunk_len, "
-        "t.chunk_text FROM __docs_udtf d, "
-        "LATERAL chunk_tokens_udtf(d.text, 64, 48) t"
-    )
 
 
 def _q_doc_quantiles(spark, sf_dir):
@@ -3742,7 +3729,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate_docs": _q_decontaminate,
         "doc_length_quantiles": _q_doc_quantiles,
         "iqr_value_by_user": _q_iqr_by_user,
-        "doc_chunks_udtf": _q_doc_chunks_udtf,
+        "doc_chunks_udtf": _q_doc_chunks,
         "ewma_events": _q_ewma_events,
         "ewma_events_grouped": _q_ewma_events,
         # dedup family

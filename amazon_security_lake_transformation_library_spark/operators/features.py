@@ -239,11 +239,13 @@ def ewma_time_decay(
     ``u·x`` and ``u`` over its ``(entity, chunk)`` so far, plus the
     previous chunk's totals scaled by ``2^(-C/halflife)``; chunks further
     back weigh under ``2^-512`` and drop out. So the form is exact at any
-    entity time range. One Exchange on the entity key and two Sorts
-    (chunk totals over ``partitionBy(entity).orderBy(chunk)``, running
-    sums within the chunk), no Python. The one departure from pandas: a
-    NULL row more than one chunk (512 halflives) after its entity's last
-    non-NULL value reads NULL, where pandas carries the old mean.
+    entity time range. A NULL row more than one chunk after its entity's
+    last non-NULL value holds no weight in either chunk; it reads the
+    last non-NULL mean before it, carried by a running ``last`` over
+    ``partitionBy(entity).orderBy(chunk, ts)``, as pandas carries it.
+    One Exchange on the entity key and two Sorts (chunk totals over
+    ``partitionBy(entity).orderBy(chunk)``, then running sums and the
+    carry, which share the ``(entity, chunk, ts)`` order), no Python.
 
     Raises ``ValueError`` unless ``halflife_seconds`` is positive and
     finite.
@@ -270,10 +272,9 @@ def ewma_time_decay(
         Window.partitionBy(entity).orderBy("__ewma_chunk")
         .rangeBetween(-c_us, -c_us)
     )
-    run = cumulative_window(
-        [entity, "__ewma_chunk"],
-        [ts_col] + ([order_tiebreak] if order_tiebreak else []),
-    )
+    order = [ts_col] + ([order_tiebreak] if order_tiebreak else [])
+    run = cumulative_window([entity, "__ewma_chunk"], order)
+    carry = cumulative_window(entity, ["__ewma_chunk", *order])
     scale = F.lit(2.0 ** (-c_us / h_us))
 
     def carried(c: str) -> Column:
@@ -282,10 +283,13 @@ def ewma_time_decay(
             + scale * F.coalesce(F.sum(c).over(prev), F.lit(0.0))
         )
 
-    # try_divide: NULL, not an ANSI error, before the first non-NULL value
-    return staged.withColumn(
-        out_col, F.try_divide(carried("__ewma_ux"), carried("__ewma_u"))
-    ).drop("__ewma_chunk", "__ewma_ux", "__ewma_u")
+    # try_divide: NULL, not an ANSI error, where no weight is in reach
+    ratio = F.try_divide(carried("__ewma_ux"), carried("__ewma_u"))
+    return (
+        staged.withColumn("__ewma_r", ratio)
+        .withColumn(out_col, F.last("__ewma_r", ignorenulls=True).over(carry))
+        .drop("__ewma_chunk", "__ewma_ux", "__ewma_u", "__ewma_r")
+    )
 
 
 # ------------------------------------------------ robust rolling features

@@ -72,10 +72,12 @@ def append_log(directory: str, stem: str, table: pa.Table) -> None:
     name that every reader skips and then renamed into place, so a reader
     sees all of its rows or none. Statistics and the Arrow schema blob are
     left out: log files are read whole, and those bytes would make each
-    small file larger than the rows it holds."""
+    small file larger than the rows it holds. The codec is zstd, the one
+    the session writes data files in (``session._DEFAULTS``)."""
     os.makedirs(directory, exist_ok=True)
     tmp = os.path.join(directory, f".{stem}.parquet.tmp")
-    pq.write_table(table, tmp, store_schema=False, write_statistics=False)
+    pq.write_table(table, tmp, store_schema=False, write_statistics=False,
+                   compression="zstd")
     os.replace(tmp, os.path.join(directory, f"part-{stem}.parquet"))
 
 

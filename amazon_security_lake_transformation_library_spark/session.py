@@ -53,6 +53,23 @@ _DEFAULTS = {
     # 2.6x wall on the shuffle-bound window stage at 4 executors
     # (BASELINE.md §4.2); worth its small CPU premium on this data shape.
     "spark.io.compression.codec": "zstd",
+    # zstd parquet for every file the engine keeps (snapshot data,
+    # compaction, bucketed tables, dedup index, graph checkpoints), for
+    # the same text-heavy rows: a feature_build commit stores ~24% fewer
+    # bytes than snappy (BASELINE.md §15), bytes every as-of read,
+    # time-travel read and compaction scans again. The codec is recorded
+    # per column chunk, so snappy files already written keep reading.
+    # plans/writer.append_log writes the driver-side logs in zstd too.
+    "spark.sql.parquet.compression.codec": "zstd",
+    # pyspark wraps every functions.* / DataFrame call to capture its
+    # Python call site for error contexts: a stack walk and ~5 py4j
+    # round-trips per call, about half the py4j calls of a warm
+    # feature_build op (BASELINE.md §15). Off, an analysis error names
+    # the failing expression but not the Python line that built it; to
+    # debug, pass {"spark.python.sql.dataFrameDebugging.enabled": "true"}
+    # through get_spark's extra_conf in a fresh process (pyspark reads the
+    # flag once per process).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }

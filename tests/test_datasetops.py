@@ -168,6 +168,32 @@ def test_chunk_tokens_coverage_and_reconstruction(spark):
         assert all(b - a == 48 for a, b in zip(starts, starts[1:]))
 
 
+def test_chunk_tokens_null_text_and_short_doc(spark):
+    df = spark.createDataFrame(
+        [("d1", "one two three"), ("d2", None)], "doc_id string, text string")
+    rows = D.chunk_tokens(df, size=4, stride=2).collect()
+    # NULL text emits nothing; a short doc emits exactly one ragged chunk
+    assert [(r.doc_id, r.chunk_idx, r.chunk_start, r.chunk_len, r.chunk_text)
+            for r in rows] == [("d1", 0, 0, 3, "one two three")]
+
+
+def test_chunk_tokens_window_boundaries(spark):
+    """Docs of exactly size, size+1 and size plus a stride multiple."""
+    words = [f"w{i}" for i in range(8)]
+    df = spark.createDataFrame(
+        [("e1", " ".join(words[:4])), ("e2", " ".join(words[:5])),
+         ("e3", " ".join(words))], "doc_id string, text string")
+    rows = D.chunk_tokens(df, size=4, stride=2).orderBy("doc_id", "chunk_idx")
+    assert [tuple(r) for r in rows.collect()] == [
+        ("e1", 0, 0, 4, "w0 w1 w2 w3"),
+        ("e2", 0, 0, 4, "w0 w1 w2 w3"),
+        ("e2", 1, 2, 3, "w2 w3 w4"),
+        ("e3", 0, 0, 4, "w0 w1 w2 w3"),
+        ("e3", 1, 2, 4, "w2 w3 w4 w5"),
+        ("e3", 2, 4, 4, "w4 w5 w6 w7"),
+    ]
+
+
 def test_chunk_tokens_rejects_bad_params(spark):
     df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
     with pytest.raises(ValueError):

@@ -166,6 +166,22 @@ def test_ewma_no_range_limit(spark):
         assert abs(got[k] - w) <= 1e-9 * abs(w), k
 
 
+def test_ewma_null_after_long_gap_carries_last_mean(spark):
+    """2000 days at a 1-hour halflife over two users leaves NULL rows more
+    than one 512-halflife chunk after their user's last value: no weight
+    is in reach, and pandas carries the old mean. Every row matches."""
+    sdf, pdf = _ewma_fixture(spark, day_span=2000, n_users=2, null_every=7)
+    hl = 3600.0
+    got = _ewma(sdf, hl)
+    want = _pandas_ewma(pdf, hl)
+    assert len(got) == len(want) == 400
+    for k, w in want.items():
+        if np.isnan(w):
+            assert got[k] is None, k
+        else:
+            assert got[k] is not None and abs(got[k] - w) <= 1e-9 * abs(w), k
+
+
 def test_ewma_rejects_bad_halflife(spark):
     from amazon_security_lake_transformation_library_spark.operators.features import (
         ewma_time_decay)

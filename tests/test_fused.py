@@ -149,6 +149,24 @@ def test_hybrid_no_hot_plans_single_exchange(spark, transcripts_df, conv_feature
     )))
 
 
+def test_building_the_block_captures_no_call_site(
+    spark, transcripts_df, conv_features_df, monkeypatch
+):
+    """get_spark turns off pyspark's per-call call-site capture: building
+    and planning the flagship block walks no Python stack for error
+    contexts (each capture also costs py4j round-trips)."""
+    from pyspark.errors import utils
+
+    calls = []
+    real = utils._capture_call_site
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)  # re-read the conf
+    monkeypatch.setattr(
+        utils, "_capture_call_site", lambda depth: calls.append(depth) or real(depth))
+    _plan(asof_turn_features_hybrid(
+        transcripts_df, conv_features_df, time_chunk(chunk_seconds=3600)))
+    assert calls == []
+
+
 @pytest.mark.parametrize("seed", [1, 101])
 def test_feature_build_input_keeps_plain_plan(spark, seed):
     """The feature_build benchmark's input (40k turns, 13-14% in the

@@ -230,6 +230,88 @@ def test_metadata_reads_run_no_spark_job(spark, tmp_path):
     assert at_s2.count() == 40
 
 
+# ------------------------------------------------ parquet codec
+
+
+def _codecs(root: str) -> dict[str, set[str]]:
+    """Column-chunk codecs of every parquet file under ``root``, by file
+    (``.crc`` sidecars, ``_SUCCESS`` and temp files skipped)."""
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            if f.startswith(("_", ".")):
+                continue
+            meta = pq.ParquetFile(os.path.join(d, f)).metadata
+            out[os.path.join(d, f)] = {
+                meta.row_group(g).column(c).compression
+                for g in range(meta.num_row_groups) for c in range(meta.num_columns)}
+    return out
+
+
+def _codec_frame(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("v"),
+        F.concat(F.lit("turn text "), F.col("id").cast("string")).alias("text"),
+        (F.col("id") % 3).cast("string").alias("day"))
+
+
+def test_commit_writes_zstd_data_and_log_files(spark, tmp_path):
+    w = SnapshotWriter(str(tmp_path / "tbl"))
+    assert w.commit(_codec_frame(spark, 0, 300), "s1", partition_cols=["day"])
+    for path in (w.data_path, w.manifest_path, w.schema_path):
+        codecs = _codecs(path)
+        assert codecs, path
+        assert all(c == {"ZSTD"} for c in codecs.values()), codecs
+
+
+def _snappy_commit(w, df, snapshot_id, partition_cols):
+    """A commit as snappy-writing code wrote it: data files in the
+    session's codec set to snappy, both log files rewritten in snappy."""
+    spark = df.sparkSession
+    key = "spark.sql.parquet.compression.codec"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+        assert w.commit(df, snapshot_id, partition_cols=partition_cols)
+    finally:
+        spark.conf.set(key, prev)
+    for log in (w.manifest_path, w.schema_path):
+        path = os.path.join(log, f"part-{snapshot_id}.parquet")
+        pq.write_table(pq.read_table(path), path, compression="snappy")
+
+
+def test_snappy_snapshot_reads_and_compacts_beside_zstd(spark, tmp_path):
+    """The codec is recorded per column chunk: a table holding a snappy
+    snapshot and a zstd one reads the same rows through read, read_at and
+    row_count, and compact rewrites the snappy snapshot in zstd."""
+    w = SnapshotWriter(str(tmp_path / "tbl"))
+    old, new = _codec_frame(spark, 0, 200), _codec_frame(spark, 200, 260)
+    _snappy_commit(w, old, "s1", ["day"])
+    assert w.commit(new, "s2", partition_cols=["day"])
+    codecs = {os.path.relpath(p, w.root): c
+              for log in (w.data_path, w.manifest_path, w.schema_path)
+              for p, c in _codecs(log).items()}
+    assert {frozenset(c) for p, c in codecs.items() if "s1" in p} == {
+        frozenset({"SNAPPY"})}
+    assert {frozenset(c) for p, c in codecs.items() if "s2" in p} == {
+        frozenset({"ZSTD"})}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("v", "text", "day").collect())
+
+    def check():
+        assert rows(w.read(spark)) == rows(old.union(new))
+        assert rows(w.read_at(spark, "s1")) == rows(old)
+        assert rows(w.read_at(spark, "s2")) == rows(old.union(new))
+        assert (w.row_count("s1"), w.row_count("s2")) == (200, 60)
+
+    check()
+    mx.compact(w, spark, "s1")
+    compacted = _codecs(w.snapshot_dir("s1"))
+    assert compacted and all(c == {"ZSTD"} for c in compacted.values()), compacted
+    check()
+
+
 # ------------------------------------------------ crash safety and old tables
 
 
