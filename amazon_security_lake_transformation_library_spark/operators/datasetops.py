@@ -396,8 +396,9 @@ def decontaminate_bloom(
     depends on the bitmap at all — pinned by the shared oracle with
     :func:`decontaminate`.
 
-    Regime (measured, BASELINE.md §8 + tools/bench_bloom_crossover.py):
-    on a SINGLE NODE this variant strictly loses — the shuffle it
+    Regime (measured, BASELINE.md §8.1; its harness,
+    tools/bench_bloom_crossover.py, is in git at commit 2e3aaa3): on a
+    SINGLE NODE this variant strictly loses — the shuffle it
     eliminates is a memcpy (the sf0.1 exact join moves its 117k-row gram
     stream in 0.28 s while gram GENERATION, paid by both variants, costs
     1.3 s), so the prefilter's fixed costs (bitmap agg + k broadcast

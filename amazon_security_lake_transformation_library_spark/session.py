@@ -197,7 +197,20 @@ def get_spark(
     ``fs.AbstractFileSystem.file.impl`` in ``extra_conf`` wins; an explicit
     extra class path keeps its entries and gets the classes' directory
     appended.
+
+    A call that finds a session already running returns it with only
+    ``extra_conf`` applied. The master, the partition counts and the
+    defaults stay as the starting call set them, and so does any conf the
+    caller changed since (jobs call ``get_spark`` once per run, in-process
+    under the benchmark and the tests).
     """
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        builder = SparkSession.builder
+        for k, v in (extra_conf or {}).items():
+            builder = builder.config(k, v)
+        return builder.getOrCreate()
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:

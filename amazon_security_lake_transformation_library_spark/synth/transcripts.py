@@ -241,10 +241,8 @@ def gen_feature_log(
     frame: every ``every``-th turn emits an update for one of the
     rotating ``features``, value = text length; deduped to unique
     ``(conv_id, feature, ts)`` — asof_join_skinny's precondition.
-    Single definition shared by jobs/assemble_features.py (--synth) and
-    the streaming batch-equivalence tests (a third, per-bucket Spark
-    derivation lives in tools/bench_scaling_sharded.ensure_skinny_layout
-    to keep conv-disjoint sharding — keep its rule in sync)."""
+    Single definition shared by jobs/assemble_features.py (--synth),
+    tools/bench_scaling.py and the streaming batch-equivalence tests."""
     upd = pdf[pdf["turn_idx"] % every == 0].copy()
     upd["feature"] = [
         features[int(i / every) % len(features)] for i in upd["turn_idx"]

@@ -25,6 +25,9 @@ import __spark_entry__ as entrymod
 from amazon_security_lake_transformation_library_spark import caching
 from amazon_security_lake_transformation_library_spark.session import get_spark
 
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+from membw_probe import probe_window  # noqa: E402
+
 # Headline set: every driver query except the intentionally-quadratic
 # all-pairs embedding verifier (it exists as the exact baseline for the
 # blocked path; at sf0.1 it is 12.5M pairs and would dominate the suite).
@@ -61,36 +64,10 @@ HEADLINE = [
 ]
 
 
-def _probe_window() -> dict:
-    """One ALU + one membw reading (tools/cpu_probe, tools/membw_probe —
-    the BASELINE.md §5.1 bracketing method) so every committed bench
-    artifact is self-describing about its host window: a slow suite inside
-    a low-ratio window is host contention, not an engine regression.
-    Healthy: alu_ratio_16_4 ~3-4, membw ratio ≥~1.5. Costs ~6 s total."""
-    try:
-        sys.path.insert(0, os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "tools"))
-        from cpu_probe import aggregate_rate
-        from membw_probe import aggregate_gbps
-
-        a4 = aggregate_rate(4, 1.0)
-        a16 = aggregate_rate(16, 1.0)
-        g4 = aggregate_gbps(4, 128, 2)
-        g16 = aggregate_gbps(16, 128, 2)
-        return {
-            "alu_ratio_16_4": round(a16 / a4, 2),
-            "membw_p4_gbps": round(g4, 1),
-            "membw_p16_gbps": round(g16, 1),
-            "membw_ratio_16_4": round(g16 / g4, 2),
-        }
-    except Exception as ex:  # never fail the bench over a probe
-        return {"error": str(ex)[:200]}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    probe_before = _probe_window()
+    probe_before = probe_window()
     spark = get_spark("bench")
     qs = entrymod.queries()
 
@@ -132,7 +109,7 @@ def main() -> None:
             flagship_rows = n
 
     total = round(sum(times.values()), 3)
-    probe_after = _probe_window()
+    probe_after = probe_window()
     out = {
         "metric": "headline_suite_seconds",
         "value": total,

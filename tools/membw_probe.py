@@ -22,6 +22,8 @@ from __future__ import annotations
 import argparse
 import json
 import multiprocessing as mp
+import os
+import sys
 import time
 
 
@@ -49,6 +51,31 @@ def aggregate_gbps(procs: int, mb: int, iters: int) -> float:
     for p in ps:
         p.join()
     return total / 1e9
+
+
+def probe_window() -> dict:
+    """One ALU + one membw reading (tools/cpu_probe and this module — the
+    BASELINE.md §5.1 bracketing method), taken before and after a
+    measurement so its record says what window it ran in: a slow cell
+    inside a low-ratio window is host contention, not an engine
+    regression. Healthy: alu_ratio_16_4 ~3-4, membw ratio >= ~1.5.
+    Costs ~6 s; a probe that fails returns its error, never raises."""
+    try:
+        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+        from cpu_probe import aggregate_rate
+
+        a4 = aggregate_rate(4, 1.0)
+        a16 = aggregate_rate(16, 1.0)
+        g4 = aggregate_gbps(4, 128, 2)
+        g16 = aggregate_gbps(16, 128, 2)
+        return {
+            "alu_ratio_16_4": round(a16 / a4, 2),
+            "membw_p4_gbps": round(g4, 1),
+            "membw_p16_gbps": round(g16, 1),
+            "membw_ratio_16_4": round(g16 / g4, 2),
+        }
+    except Exception as ex:
+        return {"error": str(ex)[:200]}
 
 
 def main() -> None:
