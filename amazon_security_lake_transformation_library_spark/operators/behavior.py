@@ -298,7 +298,8 @@ def rolling_distinct_kmv(
     :func:`rolling_distinct`).
 
     At 100 TB: every corpus scan is a map-side bounded reduction (the
-    k-min pass emits <= |buckets| x k rows per partition; the
+    k-min pass emits <= |buckets| x k distinct fractions, plus their
+    repeats, per partition; the
     observed-bucket branch is a partial-agg distinct of one long column);
     everything after is |buckets|-scale. Explode volume is
     |buckets| x k x W synopsis rows — independent of corpus size.
@@ -317,7 +318,7 @@ def rolling_distinct_kmv(
         ).alias("g"),
         "frac",
     )
-    merge_w = Window.partitionBy("g").orderBy("frac")
+    merge_w = Window.partitionBy("g").orderBy(F.col("frac").asc_nulls_last())
     ranked = (
         covered.distinct()
         .withColumn("rn", F.row_number().over(merge_w))

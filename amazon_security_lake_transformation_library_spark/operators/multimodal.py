@@ -7,8 +7,11 @@ Container constraint: no image/audio codec LIBRARIES are installed, so
 :func:`decode_image` ships its own pure-numpy 24-bit BMP / binary-P6 PPM
 decoder (``backend='auto'`` uses Pillow when importable and falls back to
 numpy; only ``backend='pillow'`` without Pillow raises
-``NotImplementedError``), and :func:`fake_decode_meta` remains the
-deterministic stand-in for codec-only formats (JPEG/PNG/audio/video).
+``NotImplementedError``). :func:`fake_decode_meta` and
+:func:`fake_frame_sample` remain the deterministic stand-ins for
+codec-only formats (JPEG/PNG/audio/video); their outputs are pure
+functions of the payload length, so they are plain JVM expressions
+(``length``, ``sequence`` + ``explode``) and start no Python worker.
 Everything Spark-side is real and tested:
 schema, Arrow batch shape, partition-preserving plumbing, and the pattern
 of keeping the big binary column OUT of the returned frame (decode emits
@@ -30,85 +33,49 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-DECODE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-    ]
-)
 
 
 def fake_decode_meta(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """'Decode' each binary payload into typed metadata over Arrow batches.
+    """'Decode' each binary payload into typed metadata
+    ``(doc_id, n_bytes, width, height, n_frames)``, all longs.
 
-    Stands in for a real image/audio decoder: same signature, same batch
-    shape, same schema discipline (drops the binary column on output).
+    Stands in for a real image/audio decoder: same schema discipline
+    (drops the binary column on output). A NULL payload gives NULL
+    metadata for its ``doc_id``.
     """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf[payload_col].map(len).astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": n,
-                    "width": 64 + n % 512,
-                    "height": 64 + (n * 7) % 512,
-                    "n_frames": 1 + n % 8,
-                }
-            )
-
-    return df.mapInPandas(decode, schema=DECODE_META_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("frame_off", T.LongType()),
-    ]
-)
+    n = F.length(F.col(payload_col)).cast("long")
+    return df.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        n.alias("n_bytes"),
+        (64 + n % 512).alias("width"),
+        (64 + (n * 7) % 512).alias("height"),
+        (1 + n % 8).alias("n_frames"),
+    )
 
 
 def fake_frame_sample(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """One-to-many 'frame sampling' over Arrow batches: each payload
-    expands into its n_frames rows (stand-in for video frame extraction —
-    the real decoder plugs into the same mapInPandas shape). Frame
-    metadata is a pure function of (payload length, frame index) so the
-    SQL oracle can recompute it."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            n = pdf[payload_col].map(len).to_numpy(dtype="int64")
-            n_frames = 1 + n % 8
-            doc_ids = pdf[id_col].to_numpy(dtype="int64")
-            # Vectorized one-to-many expansion: repeat per-doc values,
-            # ragged arange for frame_idx (global arange minus each row's
-            # repeated segment start) — no Python loop in the batch body.
-            total = int(n_frames.sum())
-            starts = np.repeat(np.cumsum(n_frames) - n_frames, n_frames)
-            frame_idx = np.arange(total, dtype="int64") - starts
-            nb_rep = np.repeat(n, n_frames)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(doc_ids, n_frames),
-                    "frame_idx": frame_idx,
-                    "frame_off": (nb_rep * (frame_idx + 1)) % 997,
-                }
-            )
-
-    return df.mapInPandas(sample, schema=FRAME_SCHEMA)
+    """One-to-many 'frame sampling': each payload of ``n`` bytes expands
+    into its ``1 + n % 8`` rows ``(doc_id, frame_idx, frame_off)`` with
+    ``frame_off = n * (frame_idx + 1) % 997`` (stand-in for video frame
+    extraction). Frame metadata is a pure function of (payload length,
+    frame index) so the SQL oracle can recompute it. A NULL payload gives
+    no frame rows."""
+    n = F.length(F.col(payload_col)).cast("long")
+    return df.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        n.alias("_n"),
+        F.explode(F.sequence(F.lit(0).cast("long"), n % 8)).alias("frame_idx"),
+    ).select(
+        "doc_id",
+        "frame_idx",
+        (F.col("_n") * (F.col("frame_idx") + 1) % 997).alias("frame_off"),
+    )
 
 
 IMAGE_FEATURES_SCHEMA = T.StructType(

@@ -9,19 +9,29 @@ stream", RANDOM'02) keeps only the k smallest *unique* hash values per
 group: if the k-th smallest normalized hash is ``h_k``, the distinct
 count is ≈ (k-1)/h_k. The sketch is distributive — per-partition k-min
 sets merge by taking the k smallest of the union — so the shuffle
-carries at most ``n_partitions * n_groups * k`` rows regardless of data
-volume.
+carries at most ``n_partitions * n_groups * k`` distinct values (plus
+their repeats) regardless of data volume.
 
-Shape here (Spark-first, no custom UDAF needed):
+Shape here (Spark-first, no custom UDAF and no Python worker):
 
 1. a JVM projection computes a [0,1) fraction from the md5 of the value
    (first 8 hex nibbles, exact binary fractions — reproducible in ANSI
    SQL, so the DuckDB differential gate can recompute it bit-for-bit);
-2. ``mapInPandas`` reduces each PARTITION to its per-group k smallest
-   unique fractions (bounded state: a dict of ≤ k-element arrays; Arrow
-   batches in, one small batch out per partition);
-3. a grouped window takes the k-th smallest distinct fraction of the
-   merged candidates and applies the estimator.
+2. ``dense_rank()`` over ``(g ORDER BY frac ASC NULLS LAST)`` filtered to
+   ``rn <= k``: Catalyst plans a ``WindowGroupLimit … Partial`` BELOW the
+   Exchange, so each map partition ships only the rows holding its k
+   smallest distinct fractions per group (≤ k values plus their repeats,
+   not ≤ k rows — repeats of a kept value pass the partial limit);
+   ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000) must
+   be ≥ k, else the limit is not planned and every row is shuffled;
+3. after the Exchange the final window re-ranks the merged candidates
+   and ``dropDuplicates`` keeps one row per distinct fraction, so ``rn``
+   is the 1-based rank of the k smallest distinct fractions.
+
+A NULL value hashes to a NULL fraction, which sorts last and so counts
+as one candidate only while the group holds fewer than k distinct
+values — the same order and count the DuckDB oracle's ``NULLS LAST``
+gives.
 
 Groups with fewer than k distinct hashes hold their ENTIRE hash set, so
 the "estimate" is exact there (n_seen < k ⇒ estimate = n_seen) — the
@@ -31,7 +41,7 @@ oracle.
 Determinism: md5 is seedless, the fraction is a sum of exact powers of
 16, and ties cannot occur between distinct hashes — the result is a pure
 function of the value set, independent of partitioning (property-tested
-under repartition in tests/test_sketch.py).
+under repartition in tests/test_sketch_merge.py).
 
 The reference has no aggregation surface at all; this is part of the
 LLM-pipeline extension (corpus stats: distinct users/URLs/shingles per
@@ -74,32 +84,6 @@ def hash_frac(value: Column) -> Column:
     return out
 
 
-def _partition_kmin(k: int):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[object, set] = {}
-        for b in batches:
-            for g, fr in zip(b["g"].values, b["frac"].values):
-                s = state.setdefault(g, set())
-                if len(s) < k:
-                    s.add(fr)
-                elif fr < max(s):
-                    s.add(fr)
-                    if len(s) > k:
-                        s.discard(max(s))
-        rows = [(g, fr) for g, s in state.items() for fr in s]
-        if rows:
-            yield pd.DataFrame(rows, columns=["g", "frac"])
-        else:  # keep Arrow dtypes stable on empty partitions
-            yield pd.DataFrame(
-                {
-                    "g": pd.Series([], dtype=object),
-                    "frac": pd.Series([], dtype="float64"),
-                }
-            )
-
-    return fn
-
-
 def kmv_synopsis(
     df: DataFrame,
     group_col: str,
@@ -119,19 +103,13 @@ def kmv_synopsis(
         F.col(group_col).cast("string").alias("g"),
         hash_frac(F.col(value_col)).alias("frac"),
     )
-    # per-partition bounded reduction: <= n_groups * k rows out per
-    # partition, regardless of partition size
-    candidates = hashed.mapInPandas(
-        _partition_kmin(k), schema="g string, frac double"
-    )
-    # merge: k smallest DISTINCT fractions across partitions
     from pyspark.sql import Window
 
-    w = Window.partitionBy("g").orderBy("frac")
+    w = Window.partitionBy("g").orderBy(F.col("frac").asc_nulls_last())
     return (
-        candidates.distinct()
-        .withColumn("rn", F.row_number().over(w))
+        hashed.withColumn("rn", F.dense_rank().over(w))
         .where(F.col("rn") <= k)
+        .dropDuplicates(["g", "frac"])
     )
 
 
@@ -494,7 +472,7 @@ def kmv_set_overlap(
         b.select(F.lit("b").alias("side"), F.col(value_col).alias("val"))
     )
     syn = kmv_synopsis(tagged, "side", "val", k)
-    w = Window.orderBy("frac")
+    w = Window.orderBy(F.col("frac").asc_nulls_last())
     union_syn = (
         syn.select("frac")
         .distinct()

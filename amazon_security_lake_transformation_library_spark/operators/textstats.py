@@ -208,30 +208,27 @@ def normalize_text(
     ``changed`` flag (normalization touched the string) — the flag lets
     a pipeline route only mutated docs into re-tokenization.
 
-    NFC runs in an Arrow-batched pandas UDF (pandas ``str.normalize`` is
-    vectorized C under the hood; Spark has no built-in Unicode
-    normalizer) — per-batch, zero per-row Python. The whitespace
-    collapse stays JVM-side regexp so codegen fuses it with neighboring
-    projections. Deterministic per-row function: partitioning-immune,
-    and the DuckDB oracle replays it with nfc_normalize + regexp.
+    NFC runs on the JVM: ``java_method`` calls ICU4J's
+    ``Normalizer.compose`` (icu4j ships in Spark's own jars), then the
+    builtin ``lower`` — no Python worker, no Arrow transfer. ICU throws
+    on a NULL argument, so a NULL text skips the call and stays NULL.
+    The whitespace collapse is JVM-side regexp as well. Deterministic
+    per-row function: partitioning-immune, and the DuckDB oracle replays
+    it with nfc_normalize + regexp; the NFC + lowercase result is checked
+    against Python's ``unicodedata`` on a batch of casing and
+    composition edge cases (tests/test_quality_ops.py).
     """
-    from pyspark.sql.functions import pandas_udf
-
-    # NOTE: type hints are spelled against the module-global `pandas`
-    # import — this module uses `from __future__ import annotations`, so
-    # pyspark resolves the (stringified) hints via get_type_hints in
-    # module globals; a function-local import would raise
-    # UNSUPPORTED_SIGNATURE.
-    @pandas_udf("string")
-    def _nfc(s: pandas.Series) -> pandas.Series:
-        out = s.str.normalize("NFC")
-        if lowercase:
-            out = out.str.lower()
-        return out
-
-    collapsed = F.trim(
-        F.regexp_replace(_nfc(F.col(text_col)), "[ \\t\\n\\r]+", " ")
+    t = F.col(text_col)
+    nfc = F.when(
+        t.isNotNull(),
+        F.java_method(
+            F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), t,
+            F.lit(False),
+        ),
     )
+    if lowercase:
+        nfc = F.lower(nfc)
+    collapsed = F.trim(F.regexp_replace(nfc, "[ \\t\\n\\r]+", " "))
     return df.withColumn(out_col, collapsed).withColumn(
         "changed", F.col(out_col) != F.col(text_col)
     )

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "consecutive_turn_similarity",
-    "similarity_projection",
     "tool_loop_runs",
 ]
 
@@ -90,43 +89,23 @@ def consecutive_turn_similarity(
         .withColumn("_prev_text", F.lag("text").over(w))
         .filter(F.col("_prev_idx").isNotNull())
     )
-    return similarity_projection(
-        t, prev_idx_col="_prev_idx", prev_text_col="_prev_text",
-        max_chars=max_chars,
-    )
-
-
-def similarity_projection(
-    paired: DataFrame,
-    prev_idx_col: str = "prev_turn_idx",
-    prev_text_col: str = "prev_text",
-    max_chars: int = 512,
-) -> DataFrame:
-    """The similarity math of :func:`consecutive_turn_similarity` as a
-    standalone JVM projection over an already-paired frame
-    ``(conv_id, turn_idx, <prev idx>, <prev text>, text)``.
-
-    Factored out so the STREAMING pairing (streaming/pipeline.py's
-    stateful last-assistant-turn carry) reuses the identical expressions
-    — batch/stream value equality holds by construction, not by a
-    reimplementation staying in sync."""
     cur = F.substring("text", 1, max_chars)
-    prev = F.substring(prev_text_col, 1, max_chars)
+    prev = F.substring("_prev_text", 1, max_chars)
     maxlen = F.greatest(F.length(cur), F.length(prev))
     lev_ratio = F.when(maxlen == 0, F.lit(1.0)).otherwise(
         1.0 - F.levenshtein(prev, cur) / maxlen.cast("double")
     )
-    a, b = _token_set(F.col("text")), _token_set(F.col(prev_text_col))
+    a, b = _token_set(F.col("text")), _token_set(F.col("_prev_text"))
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
     jac = F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-    return paired.select(
+    return t.select(
         "conv_id",
         "turn_idx",
-        F.col(prev_idx_col).alias("prev_turn_idx"),
+        F.col("_prev_idx").alias("prev_turn_idx"),
         (F.round(lev_ratio, 4) + 0.0).alias("lev_ratio"),
         (F.round(jac, 4) + 0.0).alias("jaccard"),
-        (F.col("text") == F.col(prev_text_col)).alias("exact_repeat"),
+        (F.col("text") == F.col("_prev_text")).alias("exact_repeat"),
     )
 
 

@@ -33,7 +33,13 @@ semantics are expressed natively:
 
 Batch/stream unification: ``sessionized_stream``'s aggregation body is the
 same expression used by the batch ``session_window`` query in
-``__spark_entry__`` — one definition, two execution modes.
+``__spark_entry__`` — one definition, two execution modes. The live-tail
+flagship is the composition ``stateful_turn_features`` ->
+``asof_enrich_stream`` (stateless, so it follows the stateful operator in
+append mode); tests/test_streaming.py::test_flagship_stream_matches_batch
+pins it column for column against the batch ``fused.asof_turn_features``.
+Agent-loop detection has no streaming form: it is the batch
+``operators/turnsim.consecutive_turn_similarity``.
 """
 
 from __future__ import annotations
@@ -402,26 +408,6 @@ def asof_enrich_stream_skinny(
     )
 
 
-def flagship_stream(
-    turns: DataFrame,
-    features: DataFrame,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """The full north-rule pipeline in live-tail mode: per-conversation
-    stateful features (sessionize + cumulative user turns + tool
-    forward-fill, O(1) state per entity, applyInPandasWithState) followed
-    by point-in-time enrichment against the static feature table (the
-    stream-static interval as-of — stateless, so it composes after the
-    stateful operator in append mode). Batch/stream unification contract:
-    on the same rows, output columns match operators/fused
-    .asof_turn_features column-for-column on the shared schema (pinned by
-    tests/test_streaming.py::test_flagship_stream_matches_batch).
-    Chain into ``incremental_feature_job``'s foreachBatch sink for
-    exactly-once output keyed by micro-batch id."""
-    feats = stateful_turn_features(turns, watermark=watermark)
-    return asof_enrich_stream(feats, features, build_cols=["feature_val"])
-
-
 def incremental_dedup_job(
     docs: DataFrame,
     index_root: str,
@@ -555,114 +541,3 @@ def incremental_feature_job(
         turns.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
     )
-
-
-# ------------------------------------------------ streaming loop detection
-
-LOOP_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_idx", T.IntegerType()),
-        T.StructField("last_text", T.StringType()),
-    ]
-)
-
-LOOP_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("prev_turn_idx", T.IntegerType()),
-        T.StructField("prev_text", T.StringType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
-
-
-def _pair_assistant_with_state(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-conversation O(1) state = (last assistant turn_idx, its text).
-    Emits each assistant turn PAIRED with its predecessor; the first
-    assistant turn of a conversation emits nothing (matching the batch
-    lag-window semantics). Out-of-order rows (turn_idx <= carried last)
-    are dropped deterministically — the same late-data policy as
-    :func:`_turn_features_with_state`. The pairing is the only stateful
-    part; all similarity math runs downstream in the shared JVM
-    projection (operators/turnsim.similarity_projection)."""
-    if state.exists:
-        last_idx, last_text = state.get
-    else:
-        last_idx, last_text = None, None
-
-    out = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values("turn_idx", kind="mergesort")
-        if last_idx is not None:
-            pdf = pdf[pdf["turn_idx"] > last_idx]
-        if len(pdf) == 0:
-            continue
-        prev_idx = pdf["turn_idx"].shift(1)
-        prev_text = pdf["text"].shift(1)
-        if last_idx is not None:
-            prev_idx.iloc[0] = last_idx
-            prev_text.iloc[0] = last_text
-        mask = prev_idx.notna().to_numpy()
-        out.append(
-            pd.DataFrame(
-                {
-                    "conv_id": key[0],
-                    "turn_idx": pdf["turn_idx"].to_numpy()[mask],
-                    # shift() upcasts to float64 (NaN hole) — restore int
-                    # AFTER masking the hole out
-                    "prev_turn_idx": prev_idx.to_numpy()[mask].astype(
-                        "int32"
-                    ),
-                    "prev_text": prev_text.to_numpy()[mask],
-                    "text": pdf["text"].to_numpy()[mask],
-                }
-            )
-        )
-        last_idx = int(pdf["turn_idx"].iloc[-1])
-        last_text = pdf["text"].iloc[-1]
-
-    if last_idx is not None:
-        state.update((last_idx, last_text))
-    yield from out
-
-
-def loop_detect_stream(
-    turns: DataFrame,
-    role: str = "assistant",
-    max_chars: int = 512,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming agent-loop detector: the live-tail form of
-    operators/turnsim.consecutive_turn_similarity.
-
-    The role filter runs JVM-side BEFORE the stateful operator (state and
-    Arrow traffic carry only the role's turns); the stateful part is the
-    minimal one — carry (last turn_idx, last text) per conversation and
-    emit (prev, cur) pairs across micro-batch boundaries; the
-    Levenshtein/Jaccard/exact-repeat math is the SAME
-    ``similarity_projection`` Column expressions the batch operator
-    compiles, so batch/stream value equality is structural
-    (pinned by tests/test_streaming.py's multi-micro-batch equivalence).
-
-    Scale: O(1) state per live conversation (one capped string), output
-    rows only for the filtered role — this is a latency surface; bulk
-    recomputation stays on the batch window form.
-    """
-    from ..operators.turnsim import similarity_projection
-
-    paired = (
-        turns.filter(F.col("role") == role)
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _pair_assistant_with_state,
-            outputStructType=LOOP_PAIR_SCHEMA,
-            stateStructType=LOOP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    return similarity_projection(paired, max_chars=max_chars)

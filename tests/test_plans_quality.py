@@ -57,14 +57,81 @@ def test_rolling_range_frame_single_window(spark):
 
 
 @pytest.mark.parametrize(
-    "query", ["ewma_events", "ewma_events_grouped", "iqr_value_by_user"]
+    "query", ["ewma_events", "ewma_events_grouped", "iqr_value_by_user",
+              "kmv_distinct_users", "corpus_overlap_kmv",
+              "rolling_distinct_kmv_users", "normalize_text_docs",
+              "multimodal_meta", "multimodal_frames"]
 )
 def test_ewma_and_iqr_queries_stay_on_the_jvm(spark, query):
     """Both EWMA names run the one rebased window form and the IQR runs
-    the builtin percentile: no Python node (FlatMapGroupsInPandas,
-    ArrowAggregatePython, ArrowEvalPython, ...) in the executed plan."""
+    the builtin percentile; the KMV reducer is a ranked window, NFC is
+    ICU via ``java_method`` and the stand-in decoders are ``length``
+    arithmetic: no Python node (FlatMapGroupsInPandas, MapInPandas,
+    ArrowEvalPython, ...) in the executed plan."""
     plan = _plan(entrymod.queries()[query](spark, SF_DIR))
     assert "Python" not in plan and "Pandas" not in plan, plan
+
+
+def test_kmv_synopsis_limits_each_group_before_the_exchange(spark):
+    """The KMV reducer's per-partition bound: a Partial WindowGroupLimit
+    (dense_rank, k) sits BELOW the Exchange, so the map side ships only
+    each partition's k smallest distinct fractions per group."""
+    plan = _plan(entrymod.queries()["kmv_distinct_users"](spark, SF_DIR))
+    exchange = plan.find("Exchange hashpartitioning(g#")
+    partial = re.search(r"WindowGroupLimit \[g#\d+\], \[frac#\d+ ASC NULLS "
+                        r"LAST\], dense_rank\(frac#\d+\), 64, Partial", plan)
+    assert exchange >= 0 and partial and partial.start() > exchange, plan
+    assert plan.count("Exchange") == 1, plan
+
+
+# (module, top-level function) of every Python crossing the package
+# plans: each starts Python workers and ships rows over Arrow.
+PYTHON_CROSSINGS = [
+    ("operators/bpe.py", "bpe_subword_count"),
+    ("operators/embedx.py", "gram_partials"),
+    ("operators/langid.py", "lang_id_ngram"),
+    ("operators/multimodal.py", "decode_audio"),
+    ("operators/multimodal.py", "decode_image"),
+    ("operators/multimodal.py", "resize_nearest"),
+    ("operators/sketch.py", "mg_candidates"),
+    ("operators/textstats.py", "char_entropy_arrow"),
+    ("streaming/pipeline.py", "stateful_turn_features"),
+]
+
+
+def test_python_crossings_are_the_listed_ones():
+    """AST inventory of the package's Python crossings (mapInPandas,
+    mapInArrow, applyInPandas*, applyInArrow, transformWithState*,
+    pandas_udf, udf — as a call or a decorator): a new one, or one
+    moved to the JVM, must update PYTHON_CROSSINGS."""
+    import ast
+    import pathlib
+
+    import amazon_security_lake_transformation_library_spark as pkg
+
+    def crossing(node) -> bool:
+        name = getattr(node, "attr", getattr(node, "id", ""))
+        return (name in ("mapInPandas", "mapInArrow", "applyInArrow",
+                         "pandas_udf", "udf")
+                or name.startswith(("applyInPandas", "transformWithState")))
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    sites = [node.func]
+                elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    sites = [d for d in node.decorator_list
+                             if not isinstance(d, ast.Call)]  # bare @udf
+                else:
+                    continue
+                found += [(path.relative_to(root).as_posix(),
+                           getattr(top, "name", "<module>"))
+                          for site in sites if crossing(site)]
+    assert sorted(found) == PYTHON_CROSSINGS
 
 
 def test_sliding_window_is_expand_not_join(spark):

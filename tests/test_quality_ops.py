@@ -3,6 +3,7 @@
 (chatprep.response_latency_profile)."""
 
 import datetime
+import unicodedata
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,6 +46,27 @@ def test_normalize_text_nfc_and_whitespace(spark):
     assert out[2].changed is False
     assert out[3].text_norm == "upper case"
     assert out[3].changed is True
+
+    # casing and composition edge cases, against Python's NFC + lower()
+    # (whitespace-free, so the collapse/trim step is the identity)
+    edge = [
+        "İstanbul",          # dotted capital I: lowercases to i + U+0307
+        "ΟΔΟΣ",              # Greek capital sigma at word end: final ς
+        "ΣΟΦΟΣ",
+        "STRAẞE",            # capital sharp s
+        "ǅemal",             # titlecase digraph
+        "\u2126\u212b\u212a",   # ohm, angstrom and kelvin signs
+        "ﬁle",               # ligature: NFC leaves it alone
+        "\U00010400",        # Deseret capital, outside the BMP
+        "A\u030a",           # A + combining ring -> Å
+        "e\u0301\u0323",     # combining marks reordered by NFC
+        "\u1100\u1161\u11a8",  # conjoining jamo -> one Hangul syllable
+    ]
+    edf = spark.createDataFrame(list(enumerate(edge)), ["doc_id", "text"])
+    got = {r.doc_id: r.text_norm for r in ts_ops.normalize_text(edf).collect()}
+    assert got == {
+        i: unicodedata.normalize("NFC", s).lower() for i, s in enumerate(edge)
+    }
 
 
 def test_normalize_text_no_lowercase(spark):

@@ -67,6 +67,60 @@ def test_kmv_accuracy_within_bound(spark):
     assert 2000 * 0.5 < est < 2000 * 1.5
 
 
+def test_kmv_nulls_sort_last_like_the_oracle(spark):
+    """NULL user_ids: a NULL arriving first in a partition must not push
+    a real fraction out of the k-min set (the estimate equals the
+    NULL-free one), and in the exact regime the NULL counts as one more
+    candidate (5 values plus NULLs give 6) — both as the DuckDB oracle,
+    which orders NULLS LAST."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    users = [None] + list(range(200)) + [1, None, 2, 3, None, 4, 5, 1]
+    types = ["big"] * 201 + ["small"] * 8
+    events = pd.DataFrame(
+        {"event_type": types, "user_id": pd.array(users, dtype="Int64")}
+    )
+    df = spark.createDataFrame(
+        list(zip(types, users)), "event_type string, user_id long"
+    ).coalesce(1)
+    got = {
+        r["event_type"]: (r["n_candidates"], r["estimate"])
+        for r in sk.kmv_distinct(df, "event_type", "user_id", k=64).collect()
+    }
+    hk = sorted(_frac(v) for v in range(200))[63]
+    assert got["big"] == (64, round(63 / hk, 4))
+    assert got["small"] == (6, 6.0)
+    con = duckdb.connect()
+    con.register("events", events)
+    oracle = con.sql(entrymod.oracle_sql()["kmv_distinct_users"]).fetchall()
+    assert got == {g: (n, est) for g, n, est in oracle}
+
+
+def test_kmv_merges_rank_null_last(spark):
+    """The synopsis merges re-rank NULL last as well: a NULL kept by an
+    unsaturated side (or bucket) must not take rank 1 of the saturated
+    union."""
+    import datetime as dt
+
+    from amazon_security_lake_transformation_library_spark.operators import (
+        behavior as bhv,
+    )
+
+    k = 16
+    union_est = round((k - 1) / sorted(_frac(v) for v in range(20))[k - 1], 4)
+    a = spark.createDataFrame([(None,)] + [(i,) for i in range(10)], "v long")
+    b = spark.createDataFrame([(None,)] + [(i,) for i in range(10, 20)], "v long")
+    assert sk.kmv_set_overlap(a, b, "v", k=k).collect()[0]["est_union"] == union_est
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(None, t0)] + [(u, t0 + dt.timedelta(hours=u // 10)) for u in range(20)]
+    ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
+    out = bhv.rolling_distinct_kmv(ev, "user_id", "ts", 3600, 2, k=k).collect()
+    assert max(r["estimate"] for r in out) == union_est
+
+
 def test_hash_frac_range(spark):
     df = spark.range(0, 1000).select(sk.hash_frac(F.col("id")).alias("f"))
     row = df.agg(F.min("f"), F.max("f")).first()

@@ -408,10 +408,11 @@ def test_asof_enrich_stream_matches_batch(spark, stream_input, tmp_path):
 
 
 def test_flagship_stream_matches_batch(spark, stream_input, tmp_path):
-    """The composed live-tail flagship (stateful features -> stream-static
-    as-of) equals the batch fused flagship on the shared columns, across
-    micro-batch boundaries (files split mid-conversation, so both the
-    per-entity state carry AND the as-of must be correct)."""
+    """The composed live-tail flagship (stateful_turn_features ->
+    stream-static asof_enrich_stream) equals the batch fused flagship on
+    the shared columns, across micro-batch boundaries (files split
+    mid-conversation, so both the per-entity state carry AND the as-of
+    must be correct)."""
     import os
 
     import pyarrow as pa
@@ -434,7 +435,8 @@ def test_flagship_stream_matches_batch(spark, stream_input, tmp_path):
     features = spark.read.parquet(fdir)
 
     stream = sp.read_turn_stream(spark, root, max_files_per_trigger=1)
-    out = sp.flagship_stream(stream, features, watermark="100 days")
+    feats = sp.stateful_turn_features(stream, watermark="100 days")
+    out = sp.asof_enrich_stream(feats, features, build_cols=["feature_val"])
     _run_to_memory(out, "flagship_stream", str(tmp_path))
 
     cols = ["conv_id", "turn_idx", "session_id", "user_turn_cum",
@@ -643,31 +645,3 @@ def test_incremental_dedup_job_stream_and_replay(spark, tmp_path):
     assert {r["doc_new"] for r in cand2.read(spark).collect()} == {307, 308, 309}
     assert len(clean2.committed_snapshots(spark)) == 2
     assert len(cand2.committed_snapshots(spark)) == 2  # incl. the empty one
-
-
-def test_loop_detect_stream_matches_batch(spark, stream_input, tmp_path):
-    """Streaming loop detector == batch consecutive_turn_similarity,
-    column for column, across REAL micro-batch boundaries (state carries
-    the last assistant turn between files)."""
-    from amazon_security_lake_transformation_library_spark.operators import (
-        turnsim as tsim,
-    )
-
-    root, pdf = stream_input
-    stream = sp.read_turn_stream(spark, root, max_files_per_trigger=1)
-    sim = sp.loop_detect_stream(stream, watermark="100 days")
-    _run_to_memory(sim, "loop_stream", str(tmp_path))
-    got = (
-        spark.sql("SELECT * FROM loop_stream")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    want = (
-        tsim.consecutive_turn_similarity(spark.createDataFrame(pdf))
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want) and len(got) > 0
-    pd.testing.assert_frame_equal(got[want.columns], want)

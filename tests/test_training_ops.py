@@ -368,6 +368,23 @@ def test_fake_frame_sample_expansion(spark):
     assert row.iloc[0]["frame_off"] == (4 * 3) % 997
 
 
+def test_fake_decoders_null_payload(spark):
+    """A NULL payload decodes to NULL metadata for its doc_id and samples
+    no frames; the other rows are unaffected."""
+    df = spark.createDataFrame(
+        [(1, None), (2, b"abcd")], "doc_id long, payload binary"
+    )
+    meta = {r.doc_id: r for r in mm.fake_decode_meta(df).collect()}
+    assert set(meta) == {1, 2}
+    assert all(meta[1][c] is None
+               for c in ("n_bytes", "width", "height", "n_frames"))
+    assert meta[2].n_bytes == 4 and meta[2].n_frames == 5
+    frames = mm.fake_frame_sample(df).collect()
+    assert sorted((r.doc_id, r.frame_idx) for r in frames) == [
+        (2, i) for i in range(5)
+    ]
+
+
 def test_decode_image_backend_gate(spark):
     """backend='pillow' still gates on the library; 'auto' must NOT —
     it falls back to the numpy BMP/PPM decoder (r5: the env-gate only

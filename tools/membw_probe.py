@@ -59,16 +59,22 @@ def probe_window() -> dict:
     measurement so its record says what window it ran in: a slow cell
     inside a low-ratio window is host contention, not an engine
     regression. Healthy: alu_ratio_16_4 ~3-4, membw ratio >= ~1.5.
-    Costs ~6 s; a probe that fails returns its error, never raises."""
+    The first ALU reading in a process can read ~4x low, so a half-second
+    4-process warm-up runs first; it stays out of the ratio and is
+    recorded as ``alu_warmup_p4`` beside ``alu_p4`` (hashes/s).
+    Costs ~7 s; a probe that fails returns its error, never raises."""
     try:
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from cpu_probe import aggregate_rate
 
+        warm = aggregate_rate(4, 0.5)
         a4 = aggregate_rate(4, 1.0)
         a16 = aggregate_rate(16, 1.0)
         g4 = aggregate_gbps(4, 128, 2)
         g16 = aggregate_gbps(16, 128, 2)
         return {
+            "alu_warmup_p4": round(warm),
+            "alu_p4": round(a4),
             "alu_ratio_16_4": round(a16 / a4, 2),
             "membw_p4_gbps": round(g4, 1),
             "membw_p16_gbps": round(g16, 1),
