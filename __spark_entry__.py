@@ -14,6 +14,8 @@ normalizes IEEE negative zero, so Spark and DuckDB agree bit-for-bit.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 from collections.abc import Callable
 
@@ -3614,104 +3616,38 @@ def _q_trimmed_mean(spark, sf_dir):
     )
 
 
-# ORDERING CONTRACT: the driver's differential gate records rows for the
-# FIRST 50 dict entries only. _GATE_FRONT lists, explicitly, every entry
-# that has no driver-green row in any earlier round's CORRECTNESS artifact
-# (57 as of late r4; the seven past the 50-cap have local check_oracle evidence and rotate into the r5 gate) followed by prior-green re-pin anchors (the four
-# §7.2-regressed cells + the flagship pair) up to the 50-slot budget;
-# _gate_order() moves them to the front so the official artifact covers
-# them. Across the r2+r3+r4 artifacts every entry then has at least one
-# driver-green row. When adding a query, ALSO add its name to _GATE_FRONT
-# (new entries are by definition never-checked). See README 'driver gate
-# coverage'.
-_GATE_FRONT = [
-    # --- never driver-checked before the r5 gate runs: the seven r4
-    # additions that landed past the r4 50-slot cap (local check_oracle
-    # evidence in CORRECTNESS_LOCAL_r04.json), rotated to the head so the
-    # official r5 artifact covers them ---
-    "curriculum_docs", "repair_turns", "negative_samples_docs",
-    "materialize_mixture_docs", "positive_pairs_docs",
-    "conv_quality_filter", "contrastive_triples",
-    # --- new r5 queries (never checked, by definition) ---
-    "asof_join_events_skinny_stream_form",
-    "multimodal_decode_image",
-    "decontaminate_docs_bloom_forced",
-    "dedup_incremental_docs",
-    "semdedup_docs",
-    "funnel_steps_events", "funnel_reach_events",
-    "cohort_retention_events", "rolling_distinct_users",
-    "rolling_distinct_kmv_users",
-    "bm25_topk_docs", "knn_label_metrics",
-    "cms_freq_users", "key_skew_profile_events",
-    "mad_outliers_value", "normalize_text_docs", "conv_latency_profile",
-    "pagerank_event_graph", "corpus_overlap_kmv",
-    "rolling_median_value", "rolling_zscore_value", "throttle_events_hourly",
-    "length_bucket_batches", "column_profile_events",
-    "scale_features_events", "scale_features_grouped",
-    "lm_perplexity_docs", "kfold_users_events", "tscv_folds_events",
-    "hashed_features_events", "hashed_features_vec_events", "multihot_docs",
-    "resample_ffill_users", "calendar_features_events",
-    "rolling_corr_value", "cusum_value_by_user", "doc_entropy_gate",
-    "auc_value_events", "calibration_events",
-    "rolling_slope_value", "quantile_bin_value", "ks_drift_value",
-    "scd2_user_state", "snapshot_diff_events",
-    "ngram_containment_docs", "pmi_collocations_docs",
-    "cohen_kappa_raters", "fleiss_kappa_items",
-    "bradley_terry_models", "conv_tree_paths", "gold_labels_items",
-    "ranking_metrics_docs", "turn_self_similarity", "tool_loop_runs",
-    "dedup_jaccard_exact", "zorder_events", "bm25_multi_docs",
-    "split_by_cluster_docs", "zorder_spans_events",
-    "interval_overlap_sessions", "embedding_covariance",
-    "embedding_pca_project", "decontaminate_semantic",
-    "role_transitions", "select_budget_docs", "epoch_shard_docs",
-    "quality_linear_score", "triangle_counts_docs",
-    "twa_value_by_user", "assoc_rules_events",
-    "multimodal_resize_image", "multimodal_audio_features",
-    "kcore_docs", "dq_checks_orders", "ann_srp_topk",
-    "collapse_bursts_events", "bootstrap_sample_docs",
-    "trimmed_mean_value_by_user",
-    # --- prior-green re-pin anchors: r4-green rows (CORRECTNESS_r04.json,
-    # 50/50 green) re-pinned up to the 50-slot budget; entries past the cap
-    # already have driver-green rows in r2/r3/r4 ---
-    "kmv_distinct_users", "merge_orders_cdc",
-    "dataset_split_events", "split_temporal_events",
-    "sample_stratified_docs", "pack_sequences", "doc_chunks",
-    "decontaminate_docs", "doc_length_quantiles", "iqr_value_by_user",
-    "doc_chunks_udtf", "ewma_events", "ewma_events_grouped",
-    "dedup_clusters", "flagship_transcripts_bucketed",
-    "dedup_stream_batch", "stream_interval_join_batch",
-    "duplicate_ngram_spans", "scrub_duplicate_spans",
-    "label_horizon_events", "sample_topn_per_group",
-    "domain_mixture_docs", "importance_weights_docs",
-    "psi_value_by_split", "target_encode_events",
-    "frequency_encode_events", "zscore_value_by_type",
-    "mutual_info_type_value", "chat_render", "chat_loss_spans",
-    "conv_prefix_dedup", "validate_turns", "context_budget",
-    "sample_weighted_docs", "boilerplate_assistant_turns",
-    "conv_profile", "conv_profile_incremental", "hot_conversations",
-    "heavy_users_events", "sft_pairs", "tool_chains",
-    "decontaminate_docs_bloom", "conv_near_dup_minhash",
-    "asof_join_events_stacked", "asof_join_events_skinny",
-    "asof_join_events_skinny_iv", "asof_join_events_skinny_routed",
-    "asof_join_events_forward", "asof_join_events_nearest",
-    "preference_pairs",
-    # --- older anchors (past the 50-slot budget once the list above
-    # fills; each has driver-green rows in r2/r3) ---
-    "ann_kmeans_centroids", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "flagship_transcripts",
-]
+_ROOT = os.path.dirname(os.path.abspath(__file__))
 
 
-def _gate_order(d: dict) -> dict:
-    front = [k for k in _GATE_FRONT if k in d]
-    rest = {k: v for k, v in d.items() if k not in set(front)}
-    return {**{k: d[k] for k in front}, **rest}
+def _last_green_round() -> dict[str, int]:
+    """Entry name -> the latest round N whose gate artifact
+    ``CORRECTNESS_r<N>.json`` (next to this file) has a ``hash_match``
+    row for it. The ``CORRECTNESS_LOCAL_*`` files are local evidence and
+    do not count."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        n = os.path.basename(path).removeprefix("CORRECTNESS_r").removesuffix(".json")
+        if not n.isdigit():
+            continue
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if row.get("hash_match") is True:
+                last[name] = max(last.get(name, 0), int(n))
+    return last
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """See the _GATE_FRONT ordering contract above."""
-    return _gate_order({
-        # ---- r4 front block: entries the r1-r3 driver gates never reached
+    """Every gated query, least recently gate-green first.
+
+    The round's differential gate records rows for the first 50 entries
+    only. So the dict is stably sorted by the latest round in which each
+    entry had a green row (never green sorts as round 0): entries
+    the gate has never passed come first, then the stalest, and each
+    round's artifact rotates the order on its own. With no artifacts
+    present, the order is the dict order below."""
+    last = _last_green_round()
+    d = {
         # sketch / CDC merge
         "kmv_distinct_users": _q_kmv_distinct_users,
         "merge_orders_cdc": _q_merge_orders_cdc,
@@ -3741,7 +3677,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_jaccard_exact": _q_jaccard_exact,
         "zorder_events": _q_zorder_events,
         "zorder_spans_events": _q_zorder_spans,
-        # r5 second wave: interval algebra, embedding matrix analytics,
+        # interval algebra, embedding matrix analytics,
         # semantic decontamination, transition profiles, budgeted
         # selection, epoch sharding, classifier inference
         "interval_overlap_sessions": _q_interval_overlap,
@@ -3781,7 +3717,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "flagship_transcripts_bucketed": _q_flagship_bucketed,
         "flagship_transcripts_salted": _q_flagship_salted,
         "flagship_transcripts_hybrid": _q_flagship_hybrid,
-        # behavioral analytics family (new r5): funnel / cohort / rolling
+        # behavioral analytics: funnel / cohort / rolling
         "funnel_steps_events": _q_funnel_steps,
         "funnel_reach_events": _q_funnel_reach,
         "cohort_retention_events": _q_cohort_retention,
@@ -3812,36 +3748,36 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hashed_features_events": _q_hashed_features,
         "hashed_features_vec_events": _q_hashed_features_vec,
         "multihot_docs": _q_multihot_docs,
-        # temporal feature surface (new r5): grid resampling, calendar,
+        # temporal features: grid resampling, calendar,
         # rolling correlation, CUSUM drift
         "resample_ffill_users": _q_resample_ffill,
         "calendar_features_events": _q_calendar_features,
         "rolling_corr_value": _q_rolling_corr,
         "cusum_value_by_user": _q_cusum_value,
-        # quality + evaluation surface (new r5)
+        # quality + evaluation
         "doc_entropy_gate": _q_entropy_gate,
         "auc_value_events": _q_roc_auc,
         "calibration_events": _q_calibration,
         "rolling_slope_value": _q_rolling_slope,
         "quantile_bin_value": _q_quantile_bin,
         "ks_drift_value": _q_ks_drift,
-        # data-versioning surface (new r5): SCD2 dimension build + CDC diff
+        # data versioning: SCD2 dimension build + CDC diff
         "scd2_user_state": _q_scd2,
         "snapshot_diff_events": _q_snapshot_diff,
-        # annotation-QA / preference analytics (new r5)
+        # annotation QA / preference analytics
         "cohen_kappa_raters": _q_cohen_kappa,
         "fleiss_kappa_items": _q_fleiss_kappa,
         "bradley_terry_models": _q_bradley_terry,
         "conv_tree_paths": _q_conv_tree_paths,
         "gold_labels_items": _q_gold_labels,
         "rolling_distinct_kmv_users": _q_rolling_distinct_kmv,
-        # streaming operators under the batch-form differential gate (new r4)
+        # streaming operators under the batch-form differential gate
         "dedup_stream_batch": _q_dedup_stream_batch,
         "stream_interval_join_batch": _q_stream_interval_join_batch,
-        # cross-doc exact-substring dedup (new r4)
+        # cross-doc exact-substring dedup
         "duplicate_ngram_spans": _q_duplicate_spans,
         "scrub_duplicate_spans": _q_scrub_duplicate_spans,
-        # curation surface (new r4): labels / sampling / mixing / drift
+        # curation: labels / sampling / mixing / drift
         "label_horizon_events": _q_label_horizon,
         "sample_topn_per_group": _q_sample_topn_per_group,
         "curriculum_docs": _q_curriculum,
@@ -3850,27 +3786,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "materialize_mixture_docs": _q_materialize_mixture,
         "importance_weights_docs": _q_importance_weights,
         "psi_value_by_split": _q_psi_by_split,
-        # encoder surface (new r4): leakage-free target stats + diagnostics
+        # encoders: leakage-free target stats + diagnostics
         "target_encode_events": _q_target_encode,
         "frequency_encode_events": _q_frequency_encode,
         "zscore_value_by_type": _q_zscore_by_type,
         "mutual_info_type_value": _q_mutual_info,
-        # training-example assembly over transcripts (new r4)
+        # training-example assembly over transcripts
         "chat_render": _q_chat_render,
         "chat_loss_spans": _q_chat_loss_spans,
         "conv_prefix_dedup": _q_conv_prefix_dedup,
         "validate_turns": _q_validate_turns,
         "context_budget": _q_context_budget,
-        # weighted sampling + transcript hygiene (new r4)
+        # weighted sampling + transcript hygiene
         "sample_weighted_docs": _q_sample_weighted,
         "boilerplate_assistant_turns": _q_boilerplate_turns,
         "conv_profile": _q_conv_profile,
         "conv_profile_incremental": _q_conv_profile_incremental,
-        # exact heavy hitters via Misra-Gries candidates (new r4)
+        # exact heavy hitters via Misra-Gries candidates
         "hot_conversations": _q_hot_conversations,
         "heavy_users_events": _q_heavy_users_events,
-        # late-r4 additions (past this round's 50-entry gate cap — local
-        # check_oracle evidence now, r5 rotates them in)
+        # SFT / preference pairs, repairs, tool chains, Bloom decontamination
         "sft_pairs": _q_sft_pairs,
         "tool_chains": _q_tool_chains,
         "decontaminate_docs_bloom": _q_decontaminate_bloom,
@@ -3878,9 +3813,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conv_near_dup_minhash": _q_conv_near_dup,
         "preference_pairs": _q_preference_pairs,
         "repair_turns": _q_repair_turns,
-        # ---- tail: driver-green rows in CORRECTNESS_r02/r03 ----
-        # variants whose sibling stayed in the gate (simhash_hamming,
-        # ivf_topk, cosine_blocked cover the same code paths)
+        # plain variants of simhash_hamming, ivf_topk, cosine_blocked
         "dedup_simhash": _q_simhash,
         "ann_ivf_assign": _q_ivf_assign,
         "dedup_embedding_cosine": _q_embedding_near_dup,
@@ -3911,8 +3844,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "eventday_counts": _q_eventday,
         "alb_parse": _q_alb_parse,
         "sysmon_description_kv": _q_sysmon_kv,
-        # ---- entries 51+: driver-green in r3 (beyond the 50-entry cap
-        # this round; every entry still runs under bench.py and pytest)
+        # mapping-config dispatch
         "mapping_dispatch": _q_mapping_dispatch,
         "mapping_rejects": _q_mapping_rejects,
         # ingest I/O surface (A1-A6) under the differential gate
@@ -3951,7 +3883,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_filter": _q_corpus_filter,
         "scrub_pii": _q_scrub_pii,
         "doc_lang_trigram": _q_doc_lang_trigram,
-    })
+    }
+    return dict(sorted(d.items(), key=lambda kv: last.get(kv[0], 0)))
 
 
 # ---------------------------------------------------------------- oracle SQL

@@ -14,6 +14,7 @@ Writes EMPTYCHECK.json {name: {"ok": bool, "rows": n, "err": str|None}}.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -25,19 +26,15 @@ sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
 from amazon_security_lake_transformation_library_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> int:
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("empty-check", master="local[8]")
     tmp = tempfile.mkdtemp(prefix="sf_empty_")
-    for t in TABLES:
-        df = spark.read.parquet(f"{base}/{t}.parquet")
-        df.limit(0).write.mode("overwrite").parquet(f"{tmp}/{t}.parquet")
+    for path in glob.glob(f"{base}/*.parquet"):
+        df = spark.read.parquet(path)
+        df.limit(0).write.mode("overwrite").parquet(
+            os.path.join(tmp, os.path.basename(path)))
 
     # fixture-keyed oracles read $SPARK_GRAFT_ORACLE_SF; irrelevant here
     # (we never run oracles) but some queries branch on it for fixture

@@ -19,6 +19,7 @@ EVERY checked entry — including the ones past the driver gate's
 from __future__ import annotations
 
 import fnmatch
+import glob
 import os
 import re
 import sys
@@ -32,11 +33,6 @@ sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
 from amazon_security_lake_transformation_library_spark import caching  # noqa: E402
 from amazon_security_lake_transformation_library_spark.session import get_spark  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 
 def norm_cell(v):
@@ -74,10 +70,9 @@ def main() -> int:
             os.environ["SPARK_GRAFT_ORACLE_SF"] = m.group(1)
 
     con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    for path in glob.glob(f"{sf_dir}/*.parquet"):
+        t = os.path.basename(path).removesuffix(".parquet")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
     spark = get_spark("oracle-check")
     qs = entrymod.queries()

@@ -1,166 +1,125 @@
-"""Regenerate PLANS.md: `.explain("formatted")` of representative queries.
+"""Pin the physical plan of ``entry()`` and of every ``queries()`` entry.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage:
+  python tools/dump_plans.py           rewrite PLANS.md
+  python tools/dump_plans.py NAME ...  print the normalized plans of the
+                                       named queries (``entry`` names the
+                                       flagship)
+
+PLANS.md holds one line per query, sorted by name: the number of
+Exchange (shuffle), Sort, Window, BroadcastHashJoin, SortMergeJoin and
+Python-eval nodes in its physical plan, then a short sha256 of its
+normalized ``explain("formatted")`` text. Normalizing masks what a new
+planning of the same code renumbers: expression ids, lambda variable
+ids, RDD ids, plan ids and temp-dir paths. Plans are taken at sf0.001 in
+a ``local[4]`` session with 8 shuffle partitions, the test session's
+settings, so they do not depend on the host's core count.
+
+A fresh process plans every query in the same order, so two runs write
+the same file. One plan also depends on what ran before it in the
+process: Spark's rewrite of several DISTINCT aggregates in one
+aggregate (``column_profile_events``) orders its groups by a hash of
+their expression ids. Its node counts are stable, but its sha256 can
+change when a query planned before it in the same process starts
+allocating a different number of expression ids.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-import __spark_entry__ as entrymod
-from amazon_security_lake_transformation_library_spark.session import get_spark
+import __spark_entry__ as entrymod  # noqa: E402
+from amazon_security_lake_transformation_library_spark import caching  # noqa: E402
+from amazon_security_lake_transformation_library_spark.session import get_spark  # noqa: E402
 
-PICKS = [
-    "lag_lead_events",
-    "asof_join_events",
-    "asof_join_events_interval",
-    "asof_join_events_multi",
-    "tumbling_hourly_events",
-    "q3_top_orders",
-    "doc_stats",
-    "dedup_minhash_lsh",
-    "ann_cosine_topk",
-    "flagship_transcripts",
-    "flagship_transcripts_hybrid",
-    "flagship_transcripts_bucketed",
-    "alb_parse",
-    "dataset_split_events",
-    "pack_sequences",
-    "doc_chunks",
-    "decontaminate_docs",
-    "repetition_stats",
-    "tfidf_top_terms",
-    "scrub_pii",
-    "rolling_1h_events",
-    "ewma_events",
-    "kmv_distinct_users",
-    "merge_orders_cdc",
-    "dedup_clusters",
-    "grouping_sets_orders",
-    "pivot_status_by_priority",
-    "full_outer_daily_activity",
-    "duplicate_ngram_spans",
-    "label_horizon_events",
-    "sample_topn_per_group",
-    "importance_weights_docs",
-    "psi_value_by_split",
-    "target_encode_events",
-    "zscore_value_by_type",
-    "chat_render",
-    "chat_loss_spans",
-    "conv_prefix_dedup",
-    "context_budget",
-    "sample_weighted_docs",
-    "conv_profile",
-    "hot_conversations",
-    "sft_pairs",
-    "tool_chains",
-    "decontaminate_docs_bloom",
-    "conv_near_dup_minhash",
-    "asof_join_events_stacked",
-    "conv_profile_incremental",
-    "split_temporal_events",
-    "asof_join_events_forward",
-    "asof_join_events_nearest",
-    "preference_pairs",
-    "curriculum_docs",
-    "asof_join_events_skinny_iv",
-    "asof_join_events_skinny_routed",
-    "asof_join_events_skinny_stream_form",
-    "multimodal_decode_image",
-    "decontaminate_docs_bloom_forced",
-    "dedup_incremental_docs",
-    "semdedup_docs",
-    "funnel_steps_events",
-    "cohort_retention_events",
-    "rolling_distinct_users",
-    "rolling_distinct_kmv_users",
-    "bm25_topk_docs",
-    "cms_freq_users",
-    "pagerank_event_graph",
-    "rolling_median_value",
-    "rolling_zscore_value",
-    "length_bucket_batches",
-    "column_profile_events",
-    "scale_features_events",
-    "lm_perplexity_docs",
-    "tscv_folds_events",
-    "hashed_features_vec_events",
-    "multihot_docs",
-    "resample_ffill_users",
-    "calendar_features_events",
-    "rolling_corr_value",
-    "cusum_value_by_user",
-    "doc_entropy_gate",
-    "auc_value_events",
-    "quantile_bin_value",
-    "ks_drift_value",
-    "rolling_slope_value",
-    "scd2_user_state",
-    "snapshot_diff_events",
-    "ngram_containment_docs",
-    "pmi_collocations_docs",
-    "cohen_kappa_raters",
-    "fleiss_kappa_items",
-    "gold_labels_items",
-    "turn_self_similarity",
-    "tool_loop_runs",
-    "ranking_metrics_docs",
-    "dedup_jaccard_exact",
-    "zorder_events",
-    "interval_overlap_sessions",
-    "embedding_covariance",
-    "embedding_pca_project",
-    "decontaminate_semantic",
-    "select_budget_docs",
-    "epoch_shard_docs",
-    "quality_linear_score",
-    "triangle_counts_docs",
-    "twa_value_by_user",
-    "assoc_rules_events",
-    "dq_checks_orders",
-    "ann_srp_topk",
-    "collapse_bursts_events",
-    "bootstrap_sample_docs",
-]
+SF_DIR = "/root/testdata/sf0.001"
+COUNTED = ("Exchange", "Sort", "Window", "BroadcastHashJoin", "SortMergeJoin")
+PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
 
-HEADER = """# PLANS — physical plans of representative queries (round 5)
+HEADER = """# PLANS — physical-plan fingerprints of `entry()` and every `queries()` entry
 
-Generated by `.explain('formatted')` at sf0.001; regenerate with
-`python tools/dump_plans.py`. What to look for: `PushedFilters` /
-`ReadSchema` on every FileScan (pushdown + pruning), one Exchange
-per window block, `BroadcastHashJoin` on dim joins, no
-`BatchEvalPython` in JVM-only pipelines.
+Generated by `python tools/dump_plans.py` (sf0.001, local[4], 8 shuffle
+partitions); `tests/test_plans_pinned.py` requires a fresh run to match
+this file. Columns count nodes of the physical plan (`Exchange` is a
+shuffle; `Python` is any Python-eval node); `sha256` is the first 12 hex
+digits of the normalized `explain("formatted")` text. To read a plan, run
+`python tools/dump_plans.py NAME`.
+
+| query | Exchange | Sort | Window | BroadcastHashJoin | SortMergeJoin | Python | sha256 |
+|---|---|---|---|---|---|---|---|
 """
 
+_TMP = "|".join(sorted({"/tmp", re.escape(tempfile.gettempdir())}))
+_MASKS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(rf"(?:{_TMP})/[^\s,\]]*"), "<tmp>"),
+)
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plans", master="local[8]")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
 
-    sections = [HEADER]
-    df = entrymod.entry(spark)
-    sections.append(
-        "## entry_flagship\n\n```\n"
-        + df._jdf.queryExecution().explainString(mode).strip()
-        + "\n```\n"
-    )
-    qs = entrymod.queries()
-    for name in PICKS:
-        df = qs[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(mode).strip()
-        sections.append(f"## {name}\n\n```\n{plan}\n```\n")
+def normalized_plan(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    text = df._jdf.queryExecution().explainString(mode.fromString("formatted"))
+    for pattern, repl in _MASKS:
+        text = pattern.sub(repl, text)
+    return text.strip()
+
+
+def fingerprint(plan: str) -> tuple[tuple[int, ...], str]:
+    """Node counts (``COUNTED`` then Python-eval) and the short sha256."""
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
+    counts = tuple(nodes.count(n) for n in COUNTED)
+    counts += (sum(1 for n in nodes if PYTHON_NODE.search(n)),)
+    return counts, hashlib.sha256(plan.encode()).hexdigest()[:12]
+
+
+def session():
+    return get_spark("plans", master="local[4]", shuffle_partitions=8)
+
+
+def plan_of(spark, name: str) -> str:
+    """Build the named query, normalize its plan, and release whatever the
+    query cached, so the next query plans as it would alone."""
+    if name == "entry":
+        df = entrymod.entry(spark)
+    else:
+        df = entrymod.queries()[name](spark, SF_DIR)
+    try:
+        return normalized_plan(df)
+    finally:
+        caching.release_all()
+
+
+def render(spark) -> str:
+    """The text of PLANS.md."""
+    rows = []
+    for name in ["entry", *sorted(entrymod.queries())]:
+        counts, sha = fingerprint(plan_of(spark, name))
+        rows.append(f"| {name} | {' | '.join(map(str, counts))} | {sha} |\n")
+    return HEADER + "".join(rows)
+
+
+def main() -> int:
+    spark = session()
+    if sys.argv[1:]:
+        for name in sys.argv[1:]:
+            print(f"## {name}\n\n{plan_of(spark, name)}\n")
+        return 0
+    text = render(spark)
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
-        f.write("\n".join(sections))
-    print(f"PLANS.md: {len(sections) - 1} plans")
+        f.write(text)
+    print(f"PLANS.md: {len(entrymod.queries()) + 1} plans")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
